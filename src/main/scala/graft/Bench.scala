@@ -1,22 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata tables are single small parquet files; without a small
-      // split size every scan is one partition and the whole pipeline
-      // runs on one core of the 32
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build(cpus)
     // box-weather instrumentation (r18): same-binary solo draws on this
     // box swing 1.5-3x at the 272-query-sum level (PERF.md r15-r17 all
     // paid probe protocols to re-conclude "coherent box state, not a
@@ -66,10 +53,13 @@ object Bench {
     // median-of-3 per query: single-iteration timings swing ±30% with
     // environment noise (PERF.md), which made the round-over-round 2×
     // regression gate untrustworthy; the median is the reported figure,
-    // the min is the best-observed floor. Caveat for queries with
-    // persistent staging (q50, x38 via stagedLshScoredPairs, x48, and
-    // x108/x111 via stagedAdcTopK/stagedExactTop5): iteration 1 may pay
-    // the staging build,
+    // the min is the best-observed floor. Caveat for queries that read a
+    // graft.ops.Staged artifact — q50, x45, x48, x85; the near-dup pair
+    // consumers x38/x56/x70/x90/x96/x103 (stagedLshScoredPairs); the
+    // word-frequency consumers x61/x65/x67/x84/x93/x100 (stagedWordFreq);
+    // the bigram-tf consumers x53/x107/x113/x120 (stagedBigramTf); the PQ
+    // consumers x108/x111/x113/x120/x121 (stagedAdcTopK, stagedExactTop5):
+    // iteration 1 may pay the staging build,
     // iterations 2+ hit the session-catalog/on-disk reuse path, so the
     // MEDIAN reports the warm (reuse) cost — the steady-state figure;
     // the cold build cost shows up only in a fresh application's first

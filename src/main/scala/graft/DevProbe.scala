@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only stage profiler for the optimization rounds. Not part of the
   * library surface; run via
@@ -17,16 +16,7 @@ object DevProbe {
     val names = args.drop(2)
     val iters = sys.env.get("SPARK_GRAFT_BENCH_ITERS")
       .flatMap(_.toIntOption).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build(cpus)
 
     // aggregate task metrics between marks
     val nTasks = new java.util.concurrent.atomic.AtomicLong

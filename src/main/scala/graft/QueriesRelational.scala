@@ -3672,40 +3672,25 @@ object QueriesRelational {
     * (each task merges bucket i of both sides; PlanShapeSpec asserts it).
     * The only shuffle in the whole query is the final low-cardinality
     * re-aggregation. Oracle = the plain join: bucketing must be invisible
-    * to results, exactly like q46's salting. */
-  /** Staging identity for q50: the CONTENT of the two input tables
-    * (paths + sizes + mtimes, digested). Unchanged data → same key →
-    * staged files legally reused across applications (a fresh app pays a
-    * metadata-only external CREATE TABLE, not a rewrite); changed data →
-    * new key, and the stale staging for this dataset is deleted. */
-  def q50StagingNames(dir: String): (String, String, java.io.File) = {
-    val key = graft.ops.Bucketing.datasetKey(
-      dir, Seq("lineitem.parquet", "orders.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_bucketed_$key")
-    (s"graft_b_lineitem_$key", s"graft_b_orders_$key", stage)
-  }
-
+    * to results, exactly like q46's salting. Both sides are staged once
+    * per dataset and build; [[graft.ops.Staged]] owns the lifecycle. */
   def q50_bucketed_join(spark: SparkSession, dir: String): DataFrame = {
-    val (lTable, oTable, stage) = q50StagingNames(dir)
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName)
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
-    val nb = 8
-    graft.ops.Bucketing.ensureStaged(spark,
-      lineitem(spark, dir).select(col("l_orderkey"), col("l_quantity")),
-      lTable, new java.io.File(stage, "lineitem").getAbsolutePath,
-      nb, "l_orderkey")
-    graft.ops.Bucketing.ensureStaged(spark,
-      orders(spark, dir).select(col("o_orderkey"), col("o_orderpriority")),
-      oTable, new java.io.File(stage, "orders").getAbsolutePath,
-      nb, "o_orderkey")
-    graft.ops.Bucketing
-      .bucketedJoin(spark, lTable, oTable, "l_orderkey", "o_orderkey")
+    val stage = q50Stage(dir)
+    graft.ops.Staged.tables(spark, stage)(
+      new graft.ops.Staged.Table("lineitem", 8, "l_orderkey",
+        lineitem(spark, dir).select(col("l_orderkey"), col("l_quantity"))),
+      new graft.ops.Staged.Table("orders", 8, "o_orderkey",
+        orders(spark, dir).select(col("o_orderkey"), col("o_orderpriority")))): Unit
+    graft.ops.Bucketing.bucketedJoin(spark, stage.table("lineitem"),
+        stage.table("orders"), "l_orderkey", "o_orderkey")
       .groupBy(col("o_orderpriority"))
       .agg(
         sum(col("l_quantity").cast(Money)).cast(DoubleType).as("sum_qty"),
         count(lit(1)).as("n_lines"))
   }
+
+  private[graft] def q50Stage(dir: String): graft.ops.Staged.Stage =
+    graft.ops.Staged.Stage("bucketed", dir, Seq("lineitem.parquet", "orders.parquet"))
 
   val q50Oracle: String =
     """SELECT o_orderpriority,

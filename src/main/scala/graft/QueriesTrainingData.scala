@@ -2,6 +2,7 @@ package graft
 
 import graft.dedup.DedupOps
 import graft.multimodal.MultimodalOps
+import graft.ops.Staged
 import graft.sim.SimilarityOps
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -2091,31 +2092,18 @@ object QueriesTrainingData {
       |  CAST(list_sum(list_transform(qv, v -> CAST(v AS BIGINT) * v)) AS BIGINT) AS q_norm2
       |FROM q""".stripMargin
 
-  /** x06's scored near-dup pairs behind content-keyed staging — the
+  /** x06's scored near-dup pairs behind [[graft.ops.Staged]] — the
     * production shape for every AUDIT over the near-dup relation: the
-    * minhash+LSH+verify pipeline runs once per (dataset content, LSH
-    * params) and lands as a bucketed parquet staging (the q50/x45
-    * `ops.Bucketing.ensureStaged` lifecycle: atomic publish, catalog-loss
-    * recovery, stale-generation cleanup); each downstream audit is then
+    * minhash+LSH+verify pipeline runs once per (dataset content, build)
+    * and lands as a bucketed parquet staging; each downstream audit is then
     * one scan + aggregate over id-pair rows. At 100 TB this converts
     * every additional integrity report from a full corpus re-shingle
     * into a read of the (tiny: candidate survivors only) pair frame.
     * Bucketed by `doc_a` so pair-graph joins back to per-doc frames can
     * co-locate without an exchange on the staged side. */
-  def stagedLshScoredPairs(spark: SparkSession, dir: String): DataFrame = {
-    // key = dataset content + LSH params: changed data OR changed
-    // signature geometry must restage, never silently reuse
-    val key = "b2r4s3_" + graft.ops.Bucketing.datasetKey(dir, Seq("documents.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_lshpairs_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_lshpairs_")
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
-    graft.ops.Bucketing.ensureStaged(spark,
-      x06_dedup_minhash_lsh(spark, dir),
-      s"graft_lsh_pairs_$key", new java.io.File(stage, "pairs").getAbsolutePath,
-      8, "doc_a")
-  }
+  def stagedLshScoredPairs(spark: SparkSession, dir: String): DataFrame =
+    Staged.tables(spark, Staged.Stage("lshpairs", dir, Seq("documents.parquet")))(
+      new Staged.Table("pairs", 8, "doc_a", x06_dedup_minhash_lsh(spark, dir))).head
 
   /** Split-leakage audit — measures the contamination x36 exists to
     * prevent: take the near-dup pairs ([[stagedLshScoredPairs]],
@@ -2397,34 +2385,25 @@ object QueriesTrainingData {
   /** x40's snapshot diff with ZERO exchanges — the nightly-diff shape a
     * long-lived corpus should actually run: each generation's
     * fingerprint index is MATERIALIZED bucketed by doc id at ingest
-    * (`ops.Bucketing.ensureStaged` — the q50 lifecycle: content-keyed
-    * staging, catalog-loss recovery, stale cleanup), so the full-outer
+    * ([[graft.ops.Staged]]), so the full-outer
     * diff join co-locates by bucket and the plan contains no Exchange at
     * all. At 100 TB that converts the diff from a 2×-corpus-fingerprint
     * shuffle into a per-bucket merge — the write-once/diff-nightly
     * amortization. Output ≡ x40 (same oracle); the zero-Exchange plan is
     * asserted in PlanShapeSpec. */
   def x45_bucketed_snapshot_diff(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.ops.Bucketing.datasetKey(dir, Seq("documents.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_diffstage_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_diffstage_")
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
-    val (oldT, newT) = (s"graft_b_docs_old_$key", s"graft_b_docs_new_$key")
-    val d = documents(spark, dir)
-    graft.ops.Bucketing.ensureStaged(spark,
-      d.filter(pmod(col("doc_id"), lit(10)) =!= 7)
-        .select(col("doc_id"), TextOps.fingerprint64(col("text")).as("fp")),
-      oldT, new java.io.File(stage, "old").getAbsolutePath, 8, "doc_id")
-    graft.ops.Bucketing.ensureStaged(spark,
-      d.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-        .select(col("doc_id"), TextOps.fingerprint64(
-          when(pmod(col("doc_id"), lit(5)) === 0, concat(col("text"), lit(" rev2")))
-            .otherwise(col("text"))).as("fp")),
-      newT, new java.io.File(stage, "new").getAbsolutePath, 8, "doc_id")
-    graft.text.CorpusOps.snapshotDiff(
-        spark.table(oldT), spark.table(newT), "doc_id", "fp")
+    lazy val d = documents(spark, dir) // read only when a table is built
+    val Seq(oldT, newT) =
+      Staged.tables(spark, Staged.Stage("diffstage", dir, Seq("documents.parquet")))(
+        new Staged.Table("old", 8, "doc_id",
+          d.filter(pmod(col("doc_id"), lit(10)) =!= 7)
+            .select(col("doc_id"), TextOps.fingerprint64(col("text")).as("fp"))),
+        new Staged.Table("new", 8, "doc_id",
+          d.filter(pmod(col("doc_id"), lit(10)) =!= 3)
+            .select(col("doc_id"), TextOps.fingerprint64(
+              when(pmod(col("doc_id"), lit(5)) === 0, concat(col("text"), lit(" rev2")))
+                .otherwise(col("text"))).as("fp"))))
+    graft.text.CorpusOps.snapshotDiff(oldT, newT, "doc_id", "fp")
       .filter(col("status") =!= "unchanged")
   }
 
@@ -2545,33 +2524,28 @@ object QueriesTrainingData {
 
   /** x11's IVF search through a PERSISTED index — the train-once /
     * probe-nightly amortization: the first run fits the quantizer and
-    * writes (centroids, cell-partitioned assignments) under a
-    * content-keyed staging dir (the q50 lifecycle); every later run —
+    * writes (centroids, cell-partitioned assignments) as a
+    * [[graft.ops.Staged]] artifact; every later run —
     * including bench iterations 2+ and fresh sessions over the same
     * data — loads and searches with NO KMeans fit, and a sub-full probe
     * opens only its nProbe cells' files (partition pruning,
     * spec-asserted). Gate runs the full probe, so the result is exact —
     * the same brute-force oracle as x11. */
   def x48_ann_ivf_persisted(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.ops.Bucketing.datasetKey(dir, Seq("embeddings.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_ivf_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_ivf_")
-    val built = new java.io.File(stage, "_built")
-    if (!built.exists()) {
-      graft.ops.Bucketing.writeSourceMarker(stage, dir)
+    val index = Staged.artifact(x48Stage(dir)) { path =>
       val emb = embeddings(spark, dir)
         .repartition(spark.sparkContext.defaultParallelism)
-      val model = graft.sim.IvfIndex.build(emb, "vec_id", "embedding", k = 16)
-      graft.sim.IvfIndex.save(model, stage.getAbsolutePath)
-      built.createNewFile(): Unit
+      graft.sim.IvfIndex.save(
+        graft.sim.IvfIndex.build(emb, "vec_id", "embedding", k = 16), path)
     }
-    val model = graft.sim.IvfIndex.load(spark, stage.getAbsolutePath)
+    val model = graft.sim.IvfIndex.load(spark, index)
     graft.sim.IvfIndex.search(spark, model,
       embeddings(spark, dir).filter(col("vec_id") < 10),
       "vec_id", "embedding", k = 5, nProbe = 16)
   }
+
+  private[graft] def x48Stage(dir: String): Staged.Stage =
+    Staged.Stage("ivf", dir, Seq("embeddings.parquet"))
 
   /** Incremental IVF delta-APPEND — the x72/x42 incremental contract on
     * the ANN plane: the base index is trained and persisted over the
@@ -2588,22 +2562,14 @@ object QueriesTrainingData {
     * projection); the search join shuffles on `cell`, never the cross
     * product; re-clustering cost is amortized to zero per batch. */
   def x85_ivf_delta_append(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.ops.Bucketing.datasetKey(dir, Seq("embeddings.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_ivfd_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_ivfd_")
-    val built = new java.io.File(stage, "_built")
-    if (!built.exists()) {
-      graft.ops.Bucketing.writeSourceMarker(stage, dir)
+    val index = Staged.artifact(x85Stage(dir)) { path =>
       val base = embeddings(spark, dir)
         .filter(pmod(col("vec_id"), lit(10L)) =!= 7)
         .repartition(spark.sparkContext.defaultParallelism)
-      val model = graft.sim.IvfIndex.build(base, "vec_id", "embedding", k = 16)
-      graft.sim.IvfIndex.save(model, stage.getAbsolutePath)
-      built.createNewFile(): Unit
+      graft.sim.IvfIndex.save(
+        graft.sim.IvfIndex.build(base, "vec_id", "embedding", k = 16), path)
     }
-    val model = graft.sim.IvfIndex.load(spark, stage.getAbsolutePath)
+    val model = graft.sim.IvfIndex.load(spark, index)
     val delta = embeddings(spark, dir)
       .filter(pmod(col("vec_id"), lit(10L)) === 7)
     val appended = graft.sim.IvfIndex.assign(delta, "embedding", model)
@@ -2615,6 +2581,9 @@ object QueriesTrainingData {
         "vec_id", "embedding", k = 5, nProbe = 16)
       .withColumn("from_delta", pmod(col("neighbor_id"), lit(10L)) === 7)
   }
+
+  private[graft] def x85Stage(dir: String): Staged.Stage =
+    Staged.Stage("ivfd", dir, Seq("embeddings.parquet"))
 
   val x85Oracle: String =
     """WITH q AS (
@@ -3336,25 +3305,17 @@ object QueriesTrainingData {
       .select(col("doc_id"), col("source"), col("n_chars"), col("pct"), col("keep"))
   }
 
-  /** The corpus word-frequency table as a content-keyed bucketed staging
-    * — the TOKENIZER-ARTIFACT lifecycle: the corpus is tokenized once per
-    * (dataset content), and every consumer after that (merge learning,
-    * vocabulary encoding, per-doc subword counting) reads the staged
-    * vocabulary instead of re-exploding the token stream. Bucketed and
-    * bucket-sorted on `w` so corpus-token → vocabulary joins co-locate
-    * without an exchange on the staged side (the q50/x45 machinery). */
-  def stagedWordFreq(spark: SparkSession, dir: String): DataFrame = {
-    val key = "wf8w_" + graft.ops.Bucketing.datasetKey(dir, Seq("documents.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_wordfreq_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_wordfreq_")
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
-    graft.ops.Bucketing.ensureStaged(spark,
-      graft.text.Bpe.wordFrequency(documents(spark, dir)),
-      s"graft_wordfreq_$key", new java.io.File(stage, "wf").getAbsolutePath,
-      8, "w")
-  }
+  /** The corpus word-frequency table as a [[graft.ops.Staged]] bucketed
+    * table — the TOKENIZER-ARTIFACT lifecycle: the corpus is tokenized
+    * once per (dataset content, build), and every consumer after that
+    * (merge learning, vocabulary encoding, per-doc subword counting)
+    * reads the staged vocabulary instead of re-exploding the token
+    * stream. Bucketed and bucket-sorted on `w` so corpus-token →
+    * vocabulary joins co-locate without an exchange on the staged side. */
+  def stagedWordFreq(spark: SparkSession, dir: String): DataFrame =
+    Staged.tables(spark, Staged.Stage("wordfreq", dir, Seq("documents.parquet")))(
+      new Staged.Table("wf", 8, "w",
+        graft.text.Bpe.wordFrequency(documents(spark, dir)))).head
 
   /** BPE merge APPLY — closes the tokenization loop x55 opened: learn the
     * top-24 merge ranks from the staged vocabulary's pair statistics
@@ -4161,8 +4122,8 @@ object QueriesTrainingData {
     * candidate (delta × corpus) pairs verify with exact shingle jaccard,
     * and every delta document gets a verdict row (candidates found,
     * near-dups ≥ .5, best score). The asymmetric join is the point: the
-    * corpus contributes its band index once (in production the staged/
-    * bucketed artifact, the x45/x48 lifecycle), per-batch work scales
+    * corpus contributes its band index once (in production a
+    * [[graft.ops.Staged]] bucketed artifact), per-batch work scales
     * with the DELTA — never a corpus self-join per batch.
     * Scale shape: band-bucket equi-join (delta-sided), shingle
     * verification only for candidate endpoints (the x06 candSh rule,
@@ -5549,8 +5510,8 @@ object QueriesTrainingData {
     stagedAdcTopK(spark, dir, "m32_d2_k64", 32, 2, 64)
       .filter(col("rank") <= 5)
 
-  /** Content-keyed staging of one PQ config's ADC top-k (the x48/x38
-    * lifecycle): train/encode/rank ONCE per (corpus, config), read the
+  /** [[graft.ops.Staged]] staging of one PQ config's ADC top-k:
+    * train/encode/rank ONCE per (corpus, config, build), read the
     * bucketed artifact afterwards. The fine m32 config stages the ADC
     * top-100 — the single deepest consumer (x121's re-rank candidate
     * pool) sets the staged depth, and every shallower consumer (x108's
@@ -5559,28 +5520,19 @@ object QueriesTrainingData {
     * ADC ranking is deterministic (adc_dist, neighbor_id), so a prefix
     * of the top-100 IS the top-5/top-10. The coarser frontier configs
     * stage at 5 (no deeper consumer). A tuning rerun costs a scan, not
-    * a pipeline; the stale-cleanup prefix carries the config tag +
-    * depth so sibling stagings never evict each other. */
+    * a pipeline; the family carries the config tag + depth so sibling
+    * stagings never evict each other. */
   private def stagedAdcTopK(spark: SparkSession, dir: String, tag: String,
       m: Int, sd: Int, ncw: Int): DataFrame = {
     val k = if (tag == "m32_d2_k64") 100 else 5
-    val key = s"${tag}_k${k}_" +
-      graft.ops.Bucketing.datasetKey(dir, Seq("embeddings.parquet"))
-    val prefix = s"graft_adc_${tag}_k${k}_"
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), prefix + key)
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = prefix)
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
-    graft.ops.Bucketing.ensureStaged(spark,
-      graft.sim.PqIndex.adcTopK(embeddings(spark, dir), "vec_id",
-        "embedding", queryPred = col("vec_id") < 10, k = k,
-        m = m, subDim = sd, nCw = ncw),
-      s"graft_adc_topk_$key",
-      new java.io.File(stage, "topk").getAbsolutePath, 4, "query_id")
+    Staged.tables(spark, Staged.Stage(s"adc_${tag}_k$k", dir, Seq("embeddings.parquet")))(
+      new Staged.Table("topk", 4, "query_id",
+        graft.sim.PqIndex.adcTopK(embeddings(spark, dir), "vec_id",
+          "embedding", queryPred = col("vec_id") < 10, k = k,
+          m = m, subDim = sd, nCw = ncw))).head
   }
 
-  /** Content-keyed staging of the EXACT integer-L2 top-5 ground truth
+  /** [[graft.ops.Staged]] staging of the EXACT integer-L2 top-5 ground truth
     * for the vec_id < 10 query set — the |Q|×N ranking every recall
     * audit scores against (x111's frontier, SourcesAndIvfSpec's x108
     * audit). Computed once per corpus; query-bounded (|Q| = 10), so the
@@ -5588,13 +5540,6 @@ object QueriesTrainingData {
     * the table, never N×N. */
   def stagedExactTop5(spark: SparkSession, dir: String): DataFrame = {
     import graft.sim.SimilarityOps
-    val key = "l2top5_" +
-      graft.ops.Bucketing.datasetKey(dir, Seq("embeddings.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_exacttop5_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_exacttop5_")
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
     def build: DataFrame = {
       val qv = embeddings(spark, dir).select(col("vec_id"),
         SimilarityOps.quantize(col("embedding")).as("qv"))
@@ -5610,12 +5555,11 @@ object QueriesTrainingData {
         .filter(col("rnk") <= 5)
         .select(col("query_id"), col("neighbor_id"))
     }
-    graft.ops.Bucketing.ensureStaged(spark, build,
-      s"graft_exact_top5_$key",
-      new java.io.File(stage, "top5").getAbsolutePath, 4, "query_id")
+    Staged.tables(spark, Staged.Stage("exacttop5", dir, Seq("embeddings.parquet")))(
+      new Staged.Table("top5", 4, "query_id", build)).head
   }
 
-  /** Content-keyed staging of the bigram term-frequency table
+  /** [[graft.ops.Staged]] staging of the bigram term-frequency table
     * `(doc_id, term, tf)` — the inverted-index build every sparse
     * retrieval consumer shares (x107's BM25, x113's sparse leg,
     * x120's ablation sparse leg). Tokenize + explode + count runs
@@ -5629,21 +5573,13 @@ object QueriesTrainingData {
     * the single most expensive map in this plane. */
   private[graft] def stagedBigramTf(spark: SparkSession,
       dir: String): DataFrame = {
-    val key = "bigramtf_" +
-      graft.ops.Bucketing.datasetKey(dir, Seq("documents.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_bigramtf_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_bigramtf_")
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
     def build: DataFrame = documents(spark, dir)
       .select(col("doc_id"),
         explode(TextOps.ngrams(TextOps.tokens(col("text")), 2)).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
-    graft.ops.Bucketing.ensureStaged(spark, build,
-      s"graft_bigram_tf_$key",
-      new java.io.File(stage, "tf").getAbsolutePath, 4, "term")
+    Staged.tables(spark, Staged.Stage("bigramtf", dir, Seq("documents.parquet")))(
+      new Staged.Table("tf", 4, "term", build)).head
   }
 
   /** The shared doc-to-doc BM25 sparse leg over [[stagedBigramTf]]
@@ -5933,7 +5869,7 @@ object QueriesTrainingData {
     * construction, query-bounded); each config is x108's broadcast
     * shapes; report rows are 3. */
   def x111_pq_frontier(spark: SparkSession, dir: String): DataFrame = {
-    // every leg reads content-keyed staging: the exact ground truth is
+    // every leg reads a staged artifact: the exact ground truth is
     // the shared [[stagedExactTop5]] artifact (the same |Q|×N ranking
     // the x108 recall audit scores against), and each config's ADC
     // top-5 stages through [[stagedAdcTopK]] — the fine config IS

@@ -1,242 +1,20 @@
 package graft.ops
 
-import java.io.File
-import java.nio.charset.StandardCharsets
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Bucketed staging — the shuffle-elimination tool for repeated joins.
+/** Bucketed joins — the shuffle-elimination tool for repeated joins.
   *
   * A join between two tables bucketed into the same number of buckets on
   * the join key needs NO Exchange: each task reads bucket i of both sides
-  * and merges. Pay the partitioning once at staging time, then every
-  * downstream join on that key is co-located — the difference between one
-  * shuffle per run and one shuffle per INGEST at 100 TB. (The reference's
-  * analog is the indexed staging table its generated DDL creates before
-  * fact loads — reference `src/validation/validator.py` staging compare;
-  * dbt `{{ config(materialized='table') }}` + warehouse-side clustering.)
-  *
-  * Staging lifecycle: staging is keyed by DATASET CONTENT (file paths +
-  * sizes + mtimes), so a re-run over unchanged data legally reuses the
-  * staged files — a fresh application pays only a metadata-only external
-  * CREATE TABLE, not a rewrite. When the dataset changes, the key changes
-  * and `cleanupStale` removes the previous staging for that same source,
-  * so tmpdir holds at most one staging per dataset, never an unbounded
-  * run-over-run accumulation.
+  * and merges. Pay the partitioning once at staging time ([[Staged.tables]]
+  * writes and registers the bucketed tables), then every downstream join
+  * on that key is co-located — the difference between one shuffle per run
+  * and one shuffle per INGEST at 100 TB. (The reference's analog is the
+  * indexed staging table its generated DDL creates before fact loads —
+  * reference `src/validation/validator.py` staging compare; dbt
+  * `{{ config(materialized='table') }}` + warehouse-side clustering.)
   */
 object Bucketing {
-
-  /** Stage `df` as a bucketed, bucket-sorted external parquet table.
-    * Overwrites any previous staging at the same name/path. */
-  def stageBucketed(df: DataFrame, table: String, path: String,
-      nBuckets: Int, key: String): DataFrame = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    df.write.mode("overwrite").format("parquet")
-      .option("path", path)
-      .bucketBy(nBuckets, key)
-      .sortBy(key)
-      .saveAsTable(table)
-    spark.table(table)
-  }
-
-  private val LayoutMarker = "_graft_layout"
-
-  /** The physical contract staged files were written under: reuse is only
-    * legal when schema, bucket count, AND bucket key all still match —
-    * `_SUCCESS` alone says the write completed, not that it matches the
-    * CURRENT build's expectations. */
-  private def layoutOf(schemaDdl: String, nBuckets: Int, key: String): String =
-    s"$schemaDdl|buckets=$nBuckets|key=$key"
-
-  /** Idempotent staging with content-addressed reuse:
-    *   1. table already in this session's catalog → reuse as-is (free);
-    *   2. staged files on disk, complete (`_SUCCESS`) AND written under
-    *      the same layout (schema + bucket count + key, `_graft_layout`
-    *      marker) → register a metadata-only external bucketed table over
-    *      them — no data rewrite (this is what a fresh application pays);
-    *   3. otherwise → write + register. The write goes to a unique
-    *      scratch path and is PUBLISHED by an atomic directory rename, so
-    *      two applications racing to stage the same dataset converge on
-    *      one complete staging instead of corrupting each other's files.
-    *      A loser of the publish race re-reads the winner's
-    *      `_graft_layout` marker and only registers over it when the
-    *      layout matches its own expectations — a racer from a DIFFERENT
-    *      build could have published a different schema/bucketing, which
-    *      must trigger a restage, never a blind register (bounded
-    *      retries, then fail loudly).
-    * Replace window caveat: a CHANGED dataset is published by delete +
-    * atomic move. An application already scanning the old files (content
-    * keys normally differ per dataset, but a q50-style caller reuses one
-    * path per dataset identity) can observe FileNotFoundException
-    * mid-scan during that window — the same contract as overwriting any
-    * external table's location while a reader is live.
-    * `build` is by-name and planned at most once (analysis only on the
-    * reuse path — `.schema` needs no job).
-    */
-  def ensureStaged(spark: SparkSession, build: => DataFrame, table: String,
-      path: String, nBuckets: Int, key: String): DataFrame = {
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val df = build
-    val layout = layoutOf(df.schema.toDDL, nBuckets, key)
-    def registerExternal(): DataFrame = {
-      spark.sql(
-        s"""CREATE TABLE `$table` (${df.schema.toDDL})
-           |USING PARQUET
-           |CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $nBuckets BUCKETS
-           |LOCATION '$path'""".stripMargin)
-      spark.table(table)
-    }
-    val marker = new File(path, LayoutMarker)
-    // a concurrent restager can delete the marker between isFile and the
-    // read (TOCTOU) — an IO failure here means "not reusable right now",
-    // which sends the loop around to restage, never an escaped exception
-    def publishedLayoutMatches(): Boolean =
-      try
-        new File(path, "_SUCCESS").isFile && marker.isFile &&
-          new String(Files.readAllBytes(marker.toPath), StandardCharsets.UTF_8) == layout
-      catch { case _: java.io.IOException => false }
-    if (publishedLayoutMatches()) return registerExternal()
-    // stage into a scratch path, publish with an atomic rename; on a
-    // lost race, reuse the winner's staging ONLY if it was written under
-    // OUR layout — otherwise restage (bounded attempts)
-    val maxAttempts = 3
-    var attempt = 0
-    var published = false
-    while (!published && attempt < maxAttempts) {
-      attempt += 1
-      val scratch = new File(path + ".tmp-" + java.util.UUID.randomUUID)
-      val scratchTable = table + "_tmp"
-      stageBucketed(df, scratchTable, scratch.getAbsolutePath, nBuckets, key)
-      spark.sql(s"DROP TABLE IF EXISTS `$scratchTable`")
-      Files.write(new File(scratch, LayoutMarker).toPath,
-        layout.getBytes(StandardCharsets.UTF_8))
-      deleteRecursively(new File(path)) // stale layout (no-op when absent)
-      try {
-        Files.move(scratch.toPath, new File(path).toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        published = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException |
-            _: java.nio.file.DirectoryNotEmptyException =>
-          // lost the publish race; the winner's staging is complete, but
-          // only a layout-verified match may be registered
-          deleteRecursively(scratch)
-          published = publishedLayoutMatches()
-      }
-    }
-    if (!published)
-      throw new IllegalStateException(
-        s"could not publish staging at $path under layout [$layout] after " +
-          s"$maxAttempts attempts — a concurrent application keeps publishing " +
-          "a different layout; use distinct staging paths per build")
-    registerExternal()
-  }
-
-  /** Collision-resistant suffix for staging table names/paths derived
-    * from a source identity string (e.g. the dataset directory): two
-    * concurrent sessions or two datasets must never overwrite/reuse each
-    * other's staging. SHA-256 prefix, not `hashCode` — 32 bits of a Java
-    * string hash collide in practice. */
-  def stagingKey(sourceId: String): String = {
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(sourceId.getBytes("UTF-8"))
-    digest.take(8).map(b => f"$b%02x").mkString
-  }
-
-  /** CRC32 of a file's first and last 64 KiB — the cheap content signal
-    * folded into [[datasetKey]]. length+mtime alone miss a same-length
-    * replace landing within the filesystem's mtime granularity (1 s on
-    * many filesystems); the edge blocks catch it without data-sized
-    * reads, and for parquet specifically the tail block covers the
-    * footer (schema + column stats), which virtually any content change
-    * perturbs.
-    *
-    * A file that vanishes or shrinks between the directory walk and the
-    * open/read here (another writer swapping a generation in) yields the
-    * `missing` sentinel instead of throwing: a changed key just restages,
-    * the same TOCTOU posture as `publishedLayoutMatches`. */
-  private def edgeBlockCrc(f: File): String = {
-    val block = 64 * 1024
-    val crc = new java.util.zip.CRC32()
-    try {
-      val raf = new java.io.RandomAccessFile(f, "r")
-      try {
-        val len = raf.length()
-        val head = new Array[Byte](math.min(block.toLong, len).toInt)
-        raf.readFully(head)
-        crc.update(head)
-        if (len > block) {
-          raf.seek(len - block)
-          val tail = new Array[Byte](block)
-          raf.readFully(tail)
-          crc.update(tail)
-        }
-        crc.getValue.toString
-      } finally raf.close()
-    } catch {
-      case _: java.io.IOException => "missing"
-    }
-  }
-
-  /** Content fingerprint of the input files backing a staging: path,
-    * length, mtime AND an edge-block CRC of every file under each input,
-    * walked RECURSIVELY (a partitioned dataset keeps its data in
-    * subdirectories — a top-level-only listing would miss every
-    * partition-file change). Same bytes on disk → same key → staging
-    * legally reused across applications; touched/replaced data → new
-    * key → restaged. */
-  def datasetKey(dir: String, inputs: Seq[String]): String = {
-    def walk(f: File): Seq[File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName).toSeq.flatMap(walk)
-      else Seq(f)
-    val stats = inputs.sorted.flatMap(in => walk(new File(dir, in)))
-      .map(f => s"${f.getAbsolutePath}:${f.length}:${f.lastModified}:${edgeBlockCrc(f)}")
-    stagingKey(dir + "|" + stats.mkString(","))
-  }
-
-  private val SourceMarker = "_graft_source"
-
-  /** Record which dataset a staging dir was built from, so stale stagings
-    * of the SAME dataset (older fingerprints) can be identified later. */
-  def writeSourceMarker(stageDir: File, sourceDir: String): Unit = {
-    stageDir.mkdirs()
-    Files.write(new File(stageDir, SourceMarker).toPath,
-      sourceDir.getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** Delete sibling staging dirs under `prefix` that are (a) built
-    * from `sourceDir` under a different (now stale) content key, or
-    * (b) marker-less legacy orphans from before content-keyed staging.
-    * Bounds tmpdir growth to one live staging per dataset. The prefix
-    * defaults to the bucketed-join family; other staging families
-    * (x45's `graft_diffstage_`, x48's `graft_ivf_`) pass their own so
-    * each family cleans ONLY its own stale generations — a shared glob
-    * would let one operator delete another's live staging. */
-  def cleanupStale(tmpRoot: File, sourceDir: String, currentName: String,
-      prefix: String = "graft_bucketed_"): Unit = {
-    val siblings = Option(tmpRoot.listFiles()).getOrElse(Array.empty)
-    siblings.filter { d =>
-      d.isDirectory && d.getName.startsWith(prefix) &&
-        d.getName != currentName && {
-          val m = new File(d, SourceMarker)
-          !m.isFile || new String(Files.readAllBytes(m.toPath),
-            StandardCharsets.UTF_8) == sourceDir
-        }
-    }.foreach(deleteRecursively)
-  }
-
-  /** Shared recursive delete for the ops package ([[Compaction]] reuses
-    * the same generation-swap idiom). */
-  private[ops] def deleteDirRecursively(f: File): Unit = deleteRecursively(f)
-
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty)
-      .foreach(deleteRecursively)
-    f.delete(): Unit
-  }
 
   /** Inner equi-join of two staged bucketed tables. With equal bucket
     * counts on the join keys Spark plans a sort-merge join with ZERO

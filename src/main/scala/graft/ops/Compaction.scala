@@ -52,7 +52,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * exactly one, and total output stays ~bytes/target.
   *
   * The rewrite is published with the same rename idiom as
-  * [[Bucketing.ensureStaged]] so a reader on a rename-atomic store sees
+  * [[Staged]] publication so a reader on a rename-atomic store sees
   * either the old files or the new, never a half-written mix. Between
   * the two renames there is a window where the path does not exist
   * (readers get ENOENT-and-retry, never partial data); if the second

@@ -1,5 +1,6 @@
 package graft.parser
 
+import graft.Json.{obj, q}
 import graft.expr.SsisExprCompiler
 import graft.ir.Ir._
 import graft.patterns.LoadPatterns
@@ -430,19 +431,6 @@ object MigrationMapping {
   }
 
   // ----------------------------------------------------------- artifacts
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  private def obj(fields: (String, String)*): String =
-    fields.map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}")
 
   private def arr(items: Seq[String]): String = items.mkString("[", ", ", "]")
 

@@ -1,5 +1,6 @@
 package graft.parser
 
+import graft.Json.{obj, q}
 import graft.ir.Ir._
 import graft.types.SsisTypes
 
@@ -11,19 +12,6 @@ import graft.types.SsisTypes
   * library adds no JSON dependency for one export.
   */
 object PackageJson {
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  private def obj(fields: (String, String)*): String =
-    fields.map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}")
 
   private def arr(items: Seq[String]): String = items.mkString("[", ", ", "]")
 

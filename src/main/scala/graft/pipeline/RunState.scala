@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Json.q
 import graft.pipeline.PackageRunner.{PackageRun, TaskRun, TaskStatus}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
@@ -37,16 +38,6 @@ object RunState {
         TaskStatus.SkippedNotConverted => true
     case _ => false
   }
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   def toJson(run: PackageRun): String = {
     val tasks = run.tasks.map { t =>

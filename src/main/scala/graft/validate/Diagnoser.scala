@@ -1,5 +1,6 @@
 package graft.validate
 
+import graft.Json.q
 import graft.validate.ValidationJson.ModelValidation
 import graft.validate.ValidationSuite.CheckResult
 
@@ -176,16 +177,6 @@ object Diagnoser {
   }
 
   // ----------------------------------------------------------- exports
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   private def arr(items: Seq[String]): String = items.mkString("[", ", ", "]")
 

@@ -1,5 +1,6 @@
 package graft.validate
 
+import graft.Json.{obj, q}
 import graft.validate.ValidationSuite.CheckResult
 
 /** `validation_log.json` / `validation_report.md` artifact export —
@@ -24,19 +25,6 @@ object ValidationJson {
       results: List[CheckResult],
       errors: List[String] = Nil,
       warnings: List[String] = Nil)
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  private def obj(fields: (String, String)*): String =
-    fields.map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}")
 
   private def arr(items: Seq[String]): String = items.mkString("[", ", ", "]")
 

@@ -511,11 +511,11 @@ class ExtendedComponentsSpec extends AnyFunSuite {
     // a dangling symlink models a file deleted between the walk and the
     // content-crc open: the open throws, the key must fold a sentinel
     java.nio.file.Files.createSymbolicLink(t.resolve("ghost.parquet"), t.resolve("gone"))
-    val withGhost = graft.ops.Bucketing.datasetKey(d.toString, Seq("t"))
+    val withGhost = graft.ops.Staged.datasetKey(d.toString, Seq("t"))
     assert(withGhost.nonEmpty)
     // the vanished file still participates in the key: removing it restages
     java.nio.file.Files.delete(t.resolve("ghost.parquet"))
-    assert(graft.ops.Bucketing.datasetKey(d.toString, Seq("t")) !== withGhost)
+    assert(graft.ops.Staged.datasetKey(d.toString, Seq("t")) !== withGhost)
   }
 
   test("bloom prefilter with mixed INT/BIGINT keys equals the plain join (no false negatives)") {

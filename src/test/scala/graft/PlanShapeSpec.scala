@@ -312,9 +312,9 @@ class PlanShapeSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       QueriesRelational.q50_bucketed_join(spark, sf).count() // stages tables
-      val (lTable, oTable, _) = QueriesRelational.q50StagingNames(sf)
+      val stage = QueriesRelational.q50Stage(sf)
       val join = graft.ops.Bucketing.bucketedJoin(
-        spark, lTable, oTable, "l_orderkey", "o_orderkey")
+        spark, stage.table("lineitem"), stage.table("orders"), "l_orderkey", "o_orderkey")
       val plan = join.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"))
       assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
@@ -323,12 +323,14 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("q50: staged files survive catalog loss — fresh app reuses them metadata-only") {
     // simulate a NEW application over unchanged data: same staged files on
-    // disk, empty catalog. ensureStaged must register an external bucketed
+    // disk, empty catalog. Staged must register an external bucketed
     // table over the existing files (no rewrite) and the join must still
     // plan with zero Exchange and produce the same rows.
     val before = QueriesRelational.q50_bucketed_join(spark, sf)
       .collect().map(_.toSeq).toSet
-    val (lTable, oTable, stage) = QueriesRelational.q50StagingNames(sf)
+    val staged = QueriesRelational.q50Stage(sf)
+    val (lTable, oTable, stage) =
+      (staged.table("lineitem"), staged.table("orders"), staged.path)
     val lMtime = new java.io.File(stage, "lineitem/_SUCCESS").lastModified
     spark.sql(s"DROP TABLE IF EXISTS `$lTable`")
     spark.sql(s"DROP TABLE IF EXISTS `$oTable`")
@@ -347,33 +349,51 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("q50: staged files under a DIFFERENT layout are restaged, not blindly reused") {
-    // simulate files written by an older build: same dataset key, but the
-    // on-disk layout marker no longer matches the current schema/buckets —
-    // reuse would plan a bucketed read over mismatched files
-    QueriesRelational.q50_bucketed_join(spark, sf).count()
-    val (lTable, oTable, stage) = QueriesRelational.q50StagingNames(sf)
-    val marker = new java.io.File(stage, "lineitem/_graft_layout")
-    assert(marker.isFile, "staging must record its layout")
-    java.nio.file.Files.write(marker.toPath, "stale-layout".getBytes)
-    val dataMtime = new java.io.File(stage, "lineitem/_SUCCESS").lastModified
-    spark.sql(s"DROP TABLE IF EXISTS `$lTable`")
-    spark.sql(s"DROP TABLE IF EXISTS `$oTable`")
-    QueriesRelational.q50_bucketed_join(spark, sf).count()
-    // restaged: fresh files, marker rewritten to the current layout
-    assert(new String(java.nio.file.Files.readAllBytes(marker.toPath)) != "stale-layout")
-    assert(new java.io.File(stage, "lineitem/_SUCCESS").lastModified >= dataMtime)
+  test("q50: a different build's staging is neither served nor left on disk") {
+    // another build published q50's tables for the SAME data — with
+    // different content, as a changed staged query would. The current
+    // build must restage under its own key, return the true join, and
+    // evict the other build's generation.
+    val mine = QueriesRelational.q50Stage(sf)
+    val other = mine.copy(build = "another-build")
+    assert(other.path != mine.path, "the build must be part of the staging key")
+    val li = Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_quantity"))
+    val od = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_orderpriority"))
+    graft.ops.Staged.tables(spark, other)(
+      new graft.ops.Staged.Table("lineitem", 8, "l_orderkey", li.limit(3)),
+      new graft.ops.Staged.Table("orders", 8, "o_orderkey", od.limit(3))): Unit
+    assert(other.path.isDirectory)
+    Seq(mine.table("lineitem"), mine.table("orders")).foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    }
+    rm(mine.path)
+    val got = QueriesRelational.q50_bucketed_join(spark, sf)
+      .select(col("o_orderpriority"), col("n_lines")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val expect = li.join(od, col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_orderpriority")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got === expect, "served another build's staged rows")
+    assert(mine.path.isDirectory, "the current build did not publish its own staging")
+    assert(!other.path.exists, "another build's staging for the same data was left on disk")
+    Seq(other.table("lineitem"), other.table("orders")).foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
 
   test("q50: staging for a changed dataset replaces the stale staging dir") {
-    // a stale sibling staging for the SAME dataset (different content key)
-    // must be deleted by the next run — tmpdir holds one staging per dataset
-    val (_, _, stage) = QueriesRelational.q50StagingNames(sf)
-    val stale = new java.io.File(stage.getParentFile, "graft_bucketed_deadbeef00000000")
-    graft.ops.Bucketing.writeSourceMarker(stale, sf)
+    // a stale generation for the SAME dataset (an older content key) must
+    // be deleted by the next run — tmpdir holds one staging per dataset.
+    // Its inputs list names a file absent from the dataset, so it digests
+    // to a different key, as changed data would.
+    val stage = QueriesRelational.q50Stage(sf)
+    val stale = stage.copy(inputs = stage.inputs :+ "gone.parquet")
+    graft.ops.Staged.artifact(stale)(_ => ()): Unit
+    assert(stale.path.isDirectory && stale.path != stage.path)
     QueriesRelational.q50_bucketed_join(spark, sf).count()
-    assert(!stale.exists, "stale staging dir for the same dataset not cleaned up")
-    assert(stage.exists)
+    assert(!stale.path.exists, "stale staging dir for the same dataset not cleaned up")
+    assert(stage.path.exists)
   }
 
   test("x18: ordering test leads the join condition, ahead of the levenshtein bound") {
@@ -667,7 +687,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the audit must scan the content-keyed staging, not re-run the LSH
     // pipeline: no signature expression, no shingle explode, no LSH
     // bucket self-join anywhere in its executed plan
-    assert(plan.contains("graft_lsh_pairs_") || plan.contains("graft_lshpairs_"),
+    assert(plan.contains("graft_lshpairs_pairs_"),
       s"expected a scan of the staged pair table:\n$plan")
     assert(!plan.contains("graft_minhash_sig"), s"minhash recomputed:\n$plan")
     assert(!plan.contains("explode"), s"shingle explode in audit plan:\n$plan")
@@ -710,7 +730,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the corpus (documents.parquet) is never scanned and the token
     // stream is never re-exploded at encode time; merge learning ran as
     // a separate bounded job over the same staging
-    assert(plan.contains("graft_wordfreq_"),
+    assert(plan.contains("graft_wordfreq_wf_"),
       s"expected a scan of the staged word-frequency table:\n$plan")
     assert(!plan.contains("documents.parquet"),
       s"encode must not rescan the corpus:\n$plan")
@@ -728,7 +748,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // plain scan of the published staging, not a pipeline re-run
     val plan = QueriesTrainingData.stagedLshScoredPairs(spark, sf)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("graft_lsh_pairs_") || plan.contains("graft_lshpairs_"),
+    assert(plan.contains("graft_lshpairs_pairs_"),
       s"expected a scan of the staged pair table:\n$plan")
     assert(!plan.contains("graft_minhash_sig"), s"minhash recomputed:\n$plan")
     assert(!plan.contains("explode"), s"shingle explode in staged read:\n$plan")
@@ -999,7 +1019,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "tf/df tables must map-side combine")
     // the exploded bigram tf table is the staged inverted-index
     // artifact, shared with x113/x120 — never re-exploded per consumer
-    assert(plan.contains("graft_bigram_tf"),
+    assert(plan.contains("graft_bigramtf_tf_"),
       s"x107 not reading the staged bigram tf:\n$plan")
     assert(!plan.contains("documents.parquet"),
       s"x107 must not re-tokenize the documents corpus:\n$plan")
@@ -1128,7 +1148,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // a bucketed scan of the artifact — no codebook training, no ADC
     // aggregation, no join
     val plan = executedPlan("x108_pq_ann")
-    assert(plan.contains("graft_adc_"),
+    assert(plan.contains("graft_adc_m32_d2_k64_k100_topk_"),
       s"x108 not reading the staged ADC artifact:\n$plan")
     assert(!plan.contains("HashAggregate") && !plan.contains("Join"),
       s"PQ pipeline recomputed instead of the staged read:\n$plan")
@@ -1136,7 +1156,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the one staged table, not a re-ranked cross join
     val exactPlan = QueriesTrainingData.stagedExactTop5(spark, sf)
       .queryExecution.executedPlan.toString
-    assert(exactPlan.contains("graft_exact"),
+    assert(exactPlan.contains("graft_exacttop5_top5_"),
       s"exact GT not reading its staging:\n$exactPlan")
     assert(!exactPlan.contains("Window") && !exactPlan.contains("Join"),
       s"exact ranking recomputed instead of the staged read:\n$exactPlan")
@@ -1197,7 +1217,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // no join, no embeddings scan
     val plan = QueriesTrainingData.x113dense(spark, sf)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("graft_adc_"),
+    assert(plan.contains("graft_adc_m32_d2_k64_k100_topk_"),
       s"x113 dense leg not reading the staged ADC artifact:\n$plan")
     assert(!plan.contains("HashAggregate") && !plan.contains("Join"),
       s"x113 dense leg recomputed the PQ pipeline:\n$plan")
@@ -1209,7 +1229,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // ensure the staging exists (first toucher builds it)
     SparkEntry.queries("x107_sparse_retrieval")(spark, sf).collect()
     val plan = executedPlan("x53_inverted_index")
-    assert(plan.contains("graft_bigram_tf_"),
+    assert(plan.contains("graft_bigramtf_tf_"),
       s"x53 not reading the staged bigram-tf artifact:\n$plan")
     assert(!plan.contains("documents.parquet"),
       s"x53 must not re-tokenize the corpus:\n$plan")
@@ -1221,7 +1241,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // ensure the staging exists (first toucher builds it)
     SparkEntry.queries("x108_pq_ann")(spark, sf).collect()
     val plan = executedPlan("x121_ann_rerank")
-    assert(plan.contains("graft_adc_"),
+    assert(plan.contains("graft_adc_m32_d2_k64_k100_topk_"),
       s"candidates must come from the staged artifact:\n$plan")
     assert(plan.contains("BroadcastHashJoin"),
       s"the |Q|x100 candidate frame must broadcast into the corpus scan:\n$plan")

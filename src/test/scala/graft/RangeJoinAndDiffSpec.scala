@@ -99,32 +99,6 @@ class RangeJoinAndDiffSpec extends AnyFunSuite {
       12L -> "dup_in_delta", 13L -> "new"))
   }
 
-  // ------------------------------------------------- staging-family cleanup
-  test("cleanupStale scopes to its prefix family — never another family's staging") {
-    val root = java.nio.file.Files.createTempDirectory("graft-clean-spec").toFile
-    try {
-      def mk(name: String, src: String): java.io.File = {
-        val d = new java.io.File(root, name)
-        graft.ops.Bucketing.writeSourceMarker(d, src)
-        d
-      }
-      val staleDiff = mk("graft_diffstage_old", "/data/a")
-      val liveDiff = mk("graft_diffstage_new", "/data/a")
-      val otherFamily = mk("graft_ivf_old", "/data/a")     // same source, other family
-      val otherSource = mk("graft_diffstage_b", "/data/b") // same family, other source
-      graft.ops.Bucketing.cleanupStale(root, "/data/a", "graft_diffstage_new",
-        prefix = "graft_diffstage_")
-      assert(!staleDiff.exists(), "stale same-family dir survived")
-      assert(liveDiff.exists() && otherFamily.exists() && otherSource.exists(),
-        "cleanup crossed its family or source boundary")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(root)
-    }
-  }
-
   // --------------------------------------------------------- semanticDedup
   test("semanticDedup drops the larger id of a planted duplicate pair") {
     // two tight clusters in 64-dim space; vecs 10/11 identical (dup),

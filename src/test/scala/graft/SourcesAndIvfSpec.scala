@@ -208,11 +208,11 @@ class SourcesAndIvfSpec extends AnyFunSuite {
   test("x48: persisted IVF staging reuses — second call never rebuilds (no KMeans)") {
     val sf = "/root/testdata/sf0.001"
     SparkEntry.queries("x48_ann_ivf_persisted")(spark, sf).count(): Unit
-    val key = graft.ops.Bucketing.datasetKey(sf, Seq("embeddings.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_ivf_$key")
-    val built = new java.io.File(stage, "_built")
-    assert(built.exists(), "first call must leave the _built marker")
+    val stage = QueriesTrainingData.x48Stage(sf).path
+    assert(new java.io.File(stage, "_graft_stage").isFile,
+      "first call must publish the index with its staging marker")
+    assert(new java.io.File(stage, "centroids").isDirectory &&
+      new java.io.File(stage, "assigned").isDirectory, "published index is incomplete")
     def mtimes() = {
       def walk(f: java.io.File): Seq[(String, Long)] =
         if (f.isDirectory)
@@ -407,9 +407,7 @@ class SourcesAndIvfSpec extends AnyFunSuite {
         pmod(col("neighbor_id"), lit(10L)) =!= 7).count() === 0)
       // the assign path is the KMeans L2 rule: every delta vector lands
       // in the cell of its nearest centroid
-      val key = graft.ops.Bucketing.datasetKey(sf, Seq("embeddings.parquet"))
-      val stage = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_ivfd_$key")
+      val stage = QueriesTrainingData.x85Stage(sf).path
       val model = graft.sim.IvfIndex.load(spark, stage.getAbsolutePath)
       val delta = Tables.embeddings(spark, sf)
         .filter(pmod(col("vec_id"), lit(10L)) === 7)

@@ -297,4 +297,24 @@ class SqlRewriteAndJsonSpec extends AnyFunSuite {
     assert(md.contains("- warnings:"))
     assert(!md.toLowerCase.contains("password="))
   }
+
+  test("Json.q: Jackson parses every quoted string back to itself") {
+    import org.scalacheck.Gen
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def roundTrips(s: String): Unit =
+      assert(mapper.readValue(Json.q(s), classOf[String]) === s, s"q(${s.map(_.toInt)})")
+    // every char below 0x20, the two JSON metachars and a surrogate pair,
+    // all at once
+    roundTrips((0 until 0x20).map(_.toChar).mkString + "\"\\" + "\uD83D\uDE00")
+    val unit: Gen[String] = Gen.frequency(
+      4 -> Gen.choose(0, 0x1f).map(_.toChar.toString),
+      2 -> Gen.oneOf("\"", "\\", "/", "\u007f", "\u00e9", "\u2028"),
+      2 -> Gen.alphaNumChar.map(_.toString),
+      // a valid surrogate pair: one supplementary code point
+      2 -> Gen.choose(0x10000, 0x10ffff).map(cp => new String(Character.toChars(cp))))
+    val gen = Gen.listOf(unit).map(_.mkString)
+    (0 until 300).foreach { i =>
+      gen.apply(Gen.Parameters.default, org.scalacheck.rng.Seed(31L + i)).foreach(roundTrips)
+    }
+  }
 }

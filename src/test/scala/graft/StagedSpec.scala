@@ -1,0 +1,128 @@
+package graft
+
+import java.io.File
+import java.nio.file.{Files, Paths}
+
+import graft.ops.Staged
+import graft.ops.Staged.{Stage, Table}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The staging primitive's lifecycle: reuse paths, stale-generation
+  * eviction, and the scratch dirs eviction must never touch. The
+  * query-level reuse, restage and zero-Exchange properties are pinned in
+  * PlanShapeSpec (q50) and SourcesAndIvfSpec (x48/x85). */
+class StagedSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.get
+  import spark.implicits._
+
+  private def rm(f: File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+  }
+
+  /** A one-input dataset dir of its own: its path is the staging source. */
+  private def source(): File = {
+    val d = Files.createTempDirectory("graft-staged-src")
+    Files.write(Files.createDirectory(d.resolve("t")).resolve("a.bin"), "x".getBytes)
+    d.toFile
+  }
+
+  private def publish(st: Stage): File = {
+    Staged.artifact(st)(p => Files.write(Paths.get(p, "data.bin"), "d".getBytes): Unit)
+    st.path
+  }
+
+  test("cleanup matches the exact family and source, never a name prefix") {
+    val (a, b) = (source(), source())
+    val stale = publish(Stage("specfam", a.toString, Seq("t"), build = "old"))
+    val otherSource = publish(Stage("specfam", b.toString, Seq("t"), build = "old"))
+    // graft_specfam_x_<key> starts with graft_specfam_: only the marker
+    // tells the two families apart
+    val otherFamily = publish(Stage("specfam_x", a.toString, Seq("t"), build = "old"))
+    val live = publish(Stage("specfam", a.toString, Seq("t")))
+    try {
+      assert(!stale.exists, "stale same-family, same-source generation survived")
+      assert(live.isDirectory && otherSource.isDirectory && otherFamily.isDirectory,
+        "cleanup crossed its family or source boundary")
+    } finally Seq(stale, otherSource, otherFamily, live, a, b).foreach(rm)
+  }
+
+  test("cleanup leaves another application's in-flight scratch dir alone") {
+    val a = source()
+    val old = publish(Stage("specscratch", a.toString, Seq("t"), build = "old"))
+    // another application mid-publish: a scratch dir holding everything a
+    // generation of the same family and source holds, marker included,
+    // not yet renamed into place
+    val scratch = new File(old.getParentFile, s".graft-scratch-${java.util.UUID.randomUUID}")
+    scratch.mkdirs()
+    old.listFiles().foreach(f => Files.copy(f.toPath, new File(scratch, f.getName).toPath))
+    val live = publish(Stage("specscratch", a.toString, Seq("t")))
+    try {
+      assert(!old.exists, "the stale published generation survived")
+      assert(new File(scratch, "data.bin").isFile && new File(scratch, "_graft_stage").isFile,
+        "cleanup touched an in-flight scratch dir")
+    } finally Seq(old, scratch, live, a).foreach(rm)
+  }
+
+  test("a lost publish race serves the winner's copy and drops the scratch dir") {
+    val a = source()
+    val st = Stage("specrace", a.toString, Seq("t"))
+    var loser = ""
+    // the same build publishes the same artifact while this write is in flight
+    val got = Staged.artifact(st) { p =>
+      loser = p
+      Files.write(Paths.get(p, "data.bin"), "loser".getBytes)
+      Staged.artifact(st)(q => Files.write(Paths.get(q, "data.bin"), "winner".getBytes): Unit): Unit
+    }
+    try {
+      assert(got === st.path.getAbsolutePath)
+      assert(new String(Files.readAllBytes(Paths.get(got, "data.bin"))) === "winner")
+      assert(!new File(loser).exists, "the losing scratch dir was left behind")
+    } finally Seq(st.path, a).foreach(rm)
+  }
+
+  test("a catalog hit never evaluates the build; a published dir re-registers with no job") {
+    val a = source()
+    val st = Stage("spectables", a.toString, Seq("t"))
+    var builds = 0
+    def table = new Table("t", 2, "k", {
+      builds += 1; Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v")
+    })
+    // jobs started by this thread, counted per job group; a marker job in
+    // another group flushes the listener queue before the count is read
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobs.add)
+    }
+    def jobsIn[A](group: String)(f: => A): (A, Int) = {
+      spark.sparkContext.setJobGroup(group, group)
+      val out = try f finally spark.sparkContext.clearJobGroup()
+      spark.sparkContext.setJobGroup(group + "-flush", "flush")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!jobs.contains(group + "-flush") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(jobs.contains(group + "-flush"), "listener never saw the flush job")
+      (out, jobs.toArray.count(_ == group))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val first = Staged.tables(spark, st)(table).head
+      assert(builds === 1 && st.path.isDirectory)
+      assert(first.as[(Int, String)].collect().toSet === Set((1, "a"), (2, "b"), (3, "c")))
+      Staged.tables(spark, st)(table): Unit
+      assert(builds === 1, "a catalog hit evaluated the build")
+      // a fresh application: the files are published, the catalog is empty
+      spark.sql(s"DROP TABLE `${st.table("t")}`")
+      val (again, n) = jobsIn("staged-spec-register")(Staged.tables(spark, st)(table).head)
+      assert(n === 0, "re-registering a published staging ran a job")
+      assert(builds === 2, "the build is analyzed once for its schema")
+      assert(again.as[(Int, String)].collect().toSet === Set((1, "a"), (2, "b"), (3, "c")))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.sql(s"DROP TABLE IF EXISTS `${st.table("t")}`")
+      Seq(st.path, a).foreach(rm)
+    }
+  }
+}
