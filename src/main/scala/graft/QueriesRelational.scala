@@ -82,7 +82,7 @@ object QueriesRelational {
             .map(_.group(1)).toSet
           require(tables.nonEmpty,
             s"no [schema].[table] in: ${t.sqlStatement}")
-          tables.foreach(tbl => spark.read.parquet(s"$dir/$tbl.parquet")
+          tables.foreach(tbl => load(spark, dir, tbl)
             .createOrReplaceTempView(tbl))
           val df = spark.sql(tableRe.replaceAllIn(t.sqlStatement,
             m => m.group(1)))
@@ -1236,7 +1236,7 @@ object QueriesRelational {
       targetFileBytes = 64L * 1024 * 1024)
     require(stats.filesAfter < stats.filesBefore,
       s"compaction did not reduce the file count: $stats")
-    spark.read.parquet(out)
+    Tables.open(spark, out)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts_us"), col("value"),
         col("day").cast(StringType).as("day"))
@@ -3788,7 +3788,7 @@ object QueriesRelational {
       // write mistake); with it each month's rows land in one task
       .repartition(col("o_month"))
       .write.mode("overwrite").partitionBy("o_month").parquet(stage)
-    spark.read.parquet(stage)
+    Tables.open(spark, stage)
       .filter(col("o_month") === "1997-03")
       .groupBy(col("o_orderstatus"))
       .agg(
@@ -4679,7 +4679,7 @@ object QueriesRelational {
       tableRe.findAllMatchIn(sql).map(_.group(1)).toSet[String].foreach { t =>
         written.get(t).orElse {
           val f = new java.io.File(s"$dir/$t.parquet")
-          if (f.exists) Some(spark.read.parquet(f.getAbsolutePath)) else None
+          if (f.exists) Some(Tables.open(spark, f.getAbsolutePath)) else None
         }.foreach { df => df.createOrReplaceTempView(t); boundViews += t }
       }
       tableRe.replaceAllIn(sql, m => m.group(1))
@@ -4695,7 +4695,7 @@ object QueriesRelational {
             // them with only the appended frame
             written.get(bare).orElse {
               val f = new java.io.File(s"$dir/$bare.parquet")
-              if (f.exists) Some(spark.read.parquet(f.getAbsolutePath))
+              if (f.exists) Some(Tables.open(spark, f.getAbsolutePath))
               else None
             }.map(_.unionByName(df)).getOrElse(df)
           case _ => df

@@ -58,7 +58,7 @@ object QueriesStreaming {
         java.nio.file.Files.copy(src, p.resolve(s"events_$i.parquet")))
       p
     })
-    val schema = spark.read.parquet(src.toString).schema
+    val schema = Tables.open(spark, src.toString).schema
     Tables.withEventTimeCols(
       StreamingOps.fileStream(spark, stage.toString, schema))
   }
@@ -264,7 +264,7 @@ object QueriesStreaming {
         .write.mode("overwrite").parquet(p.toString)
       p
     })
-    val schema = spark.read.parquet(stage.toString).schema
+    val schema = Tables.open(spark, stage.toString).schema
     StreamingOps.fileStream(spark, stage.toString, schema)
   }
 
@@ -291,7 +291,7 @@ object QueriesStreaming {
     * apply joins against. */
   def q81_stream_cdc_compaction(spark: SparkSession, dir: String): DataFrame = {
     val stage = stagedCdcFeed(spark, dir)
-    val schema = spark.read.parquet(stage).schema
+    val schema = Tables.open(spark, stage).schema
     val compacted = StreamingOps.fileStream(spark, stage, schema)
       .groupBy(col("c_custkey"))
       .agg(max(struct(col("seq"), col("op"), col("c_name"), col("c_acctbal")))
@@ -388,7 +388,7 @@ object QueriesStreaming {
       val q = StreamingOps.toPartitionedParquet(src, out, ckpt(), Seq("day"))
       q.awaitTermination()
     }
-    spark.read.parquet(out)
+    Tables.open(spark, out)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts_us"), col("value"),
         col("day").cast(StringType).as("day"))

@@ -20,7 +20,19 @@ import org.apache.spark.sql.types._
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    open(spark, s"$dir/$name.parquet")
+
+  /** Open a parquet file or directory with the schema Spark's inference
+    * would give it, read from one footer on the driver
+    * ([[org.apache.spark.sql.execution.datasources.parquet.FooterSchema]]):
+    * no schema-inference job. Partition columns are still discovered from
+    * the directory names. Nothing is memoized — every call reads the
+    * footer again, so a rewritten path is never opened with a stale
+    * schema. A missing path or one with no data file falls back to
+    * Spark's read and its error. */
+  def open(spark: SparkSession, path: String): DataFrame =
+    org.apache.spark.sql.execution.datasources.parquet.FooterSchema.of(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   /** `events.ts` is parquet TIMESTAMP(NANOS). How Spark surfaces that type
     * is runtime-dependent: Spark ≤4.0 with

@@ -1,5 +1,6 @@
 package graft.patterns
 
+import graft.expr.LocalEval
 import graft.ir.Ir.ExecuteSqlTask
 import graft.pipeline.PackageRunner.SqlOutcome
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -23,7 +24,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * eagerly and collects ONE value (the q13 bounded-driver-fact
   * convention — guard counts are scalars by construction); the IF
   * predicate evaluates with the collected values substituted as typed
-  * literals through a FROM-less `spark.sql` CASE (so any SQL predicate
+  * literals through a driver-local [[LocalEval]] CASE (so any SQL predicate
   * the author wrote — OR chains, comparisons, NULL checks — keeps SQL
   * semantics, including UNKNOWN ≠ TRUE). A tripped guard with severity
   * ≥ 11 throws — the task fails exactly like SSIS failing the
@@ -40,6 +41,9 @@ object GuardBlockSqlCompiler {
     "(?is)^if\\s+(.+?)\\s+(?:begin\\s+)?raiserror\\s*\\((.+?)\\)\\s*(?:;?\\s*end)?\\s*$".r
   private val bareEndRe = "(?is)^end\\s*$".r
   private val declaredVarRe = "@(\\w+)".r
+  // an assign carrying its own FROM (or WHERE) is a query; any other is
+  // one scalar expression the driver folds ([[LocalEval]])
+  private val queryClauseRe = "(?i)\\b(?:from|where)\\b".r
 
   private final case class Assign(name: String, expr: String)
   private final case class Guard(pred: String, args: String)
@@ -139,14 +143,16 @@ object GuardBlockSqlCompiler {
       }.mkString
       try {
         assigns.foreach { a =>
-          val rows = spark.sql("SELECT " + bind(a.expr)).limit(1).collect()
-          vals(a.name) = rows.headOption.map(_.get(0)).orNull
+          val e = bind(a.expr)
+          vals(a.name) =
+            if (queryClauseRe.findFirstIn(UpdateSqlCompiler.masked(e)).isDefined)
+              spark.sql("SELECT " + e).limit(1).collect()
+                .headOption.map(_.get(0)).orNull
+            else LocalEval.sql(spark, e)
         }
         guards.foreach { g =>
-          val bound = bind(g.pred)
-          val fired = spark
-            .sql(s"SELECT CASE WHEN $bound THEN true ELSE false END")
-            .head().getBoolean(0)
+          val fired = LocalEval.sql(spark,
+            s"CASE WHEN ${bind(g.pred)} THEN true ELSE false END") == true
           if (fired) {
             val args = MergeSqlCompiler.splitTop(g.args)
             val severity = args.lift(1).flatMap(_.trim.toIntOption).getOrElse(16)

@@ -109,11 +109,8 @@ object IfScalarSqlCompiler {
       chain: ExecuteSqlTask => Option[SqlOutcome]): Option[SqlOutcome] = {
     val text = SqlText.stripComments(task.sqlStatement)
     parse(text).flatMap { case (pred, thenStmt, elseStmt) =>
-      // CASE folds T-SQL's three-valued IF exactly: UNKNOWN is
-      // not-true, so a NULL predicate drops to ELSE
-      val fired = SqlPatternRewriter.runSelect(spark,
-        s"SELECT CASE WHEN ($pred) THEN true ELSE false END AS p")
-        .head().getBoolean(0)
+      // a NULL predicate drops to ELSE
+      val fired = SqlPatternRewriter.predicateHolds(spark, pred)
       (if (fired) Some(thenStmt) else elseStmt) match {
         case None => Some(SqlOutcome(None, None)) // branch skipped
         case Some(s) => chain(task.copy(sqlStatement = s))

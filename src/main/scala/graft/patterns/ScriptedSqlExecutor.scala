@@ -742,7 +742,7 @@ object ScriptedSqlExecutor {
           })
       }.mkString
       def evalScalar(boundExpr: String): Any =
-        spark.sql("SELECT " + boundExpr).head().get(0)
+        graft.expr.LocalEval.sql(spark, boundExpr)
       // T-SQL `+` over string fragments is CONCATENATION; Spark's `+`
       // is arithmetic (ANSI error on strings). A bound RHS that folds
       // as a constant string concat ([[TsqlConcatFold]] — the
@@ -818,9 +818,7 @@ object ScriptedSqlExecutor {
                     Some((!SqlPatternRewriter.runSelect(spark, b)
                       .limit(1).isEmpty) != neg)
                   case _: IfLadderSqlCompiler.ScalarPred =>
-                    Some(SqlPatternRewriter.runSelect(spark,
-                      s"SELECT CASE WHEN ($b) THEN true ELSE false END AS p")
-                      .head().getBoolean(0))
+                    Some(SqlPatternRewriter.predicateHolds(spark, b))
                 }
               }
               // first-match cascade: probe legs in order until one

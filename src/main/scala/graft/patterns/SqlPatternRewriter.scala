@@ -78,6 +78,13 @@ object SqlPatternRewriter {
     WindowSqlLowering.lower(spark, s).getOrElse(spark.sql(s))
   }
 
+  /** Fold a FROM-less T-SQL predicate on the driver ([[graft.expr.LocalEval]],
+    * no job) with [[runSelect]]'s CONVERT/GETDATE translation. CASE folds
+    * T-SQL's three-valued IF exactly: UNKNOWN is not-true. */
+  private[patterns] def predicateHolds(spark: SparkSession, pred: String): Boolean =
+    graft.expr.LocalEval.sql(spark, SqlText.translateGetdate(SqlText.translateConvert(
+      s"CASE WHEN ($pred) THEN true ELSE false END"))) == true
+
   /** Resolve a T-SQL APPLY before compiling: `Some(text)` = use this
     * text (translated, or untouched when no APPLY), `None` = an APPLY
     * is present but off-shape — the task must decline (raw APPLY is

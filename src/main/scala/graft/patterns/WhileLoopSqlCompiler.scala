@@ -1,5 +1,6 @@
 package graft.patterns
 
+import graft.expr.LocalEval
 import org.apache.spark.sql.SparkSession
 
 /** T-SQL counter `WHILE` loop → macro-expansion — the batch-backfill
@@ -18,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   *
   * [[unroll]] DRIVER-EVALUATES the control flow — predicate and SET
   * expressions must be FROM-less arithmetic over the declared variables
-  * (each evaluation is one `spark.sql` over a literal row, no job) —
+  * (each evaluation is a driver-local [[LocalEval]] fold, no job) —
   * and emits the body's non-SET statements once per iteration with the
   * variables substituted as typed literals. The flat statement list
   * then executes through [[ScriptedSqlExecutor]]'s shadow overlay, so
@@ -162,11 +163,9 @@ object WhileLoopSqlCompiler {
           java.util.regex.Matcher.quoteReplacement(
             SqlText.sqlLitOrDecline(vals(m.group(1).toLowerCase))))
     }.mkString
-    def eval(e: String): Any =
-      spark.sql("SELECT " + bind(e)).head().get(0)
-    def predTrue: Boolean = spark
-      .sql(s"SELECT CASE WHEN ${bind(p.pred)} THEN true ELSE false END")
-      .head().getBoolean(0)
+    def eval(e: String): Any = LocalEval.sql(spark, bind(e))
+    def predTrue: Boolean = LocalEval.sql(spark,
+      s"CASE WHEN ${bind(p.pred)} THEN true ELSE false END") == true
 
     try {
       // preamble: DECLARE inits and SETs in order

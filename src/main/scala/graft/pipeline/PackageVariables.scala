@@ -1,10 +1,10 @@
 package graft.pipeline
 
-import graft.expr.SsisExprCompiler
+import graft.expr.{LocalEval, SsisExprCompiler}
 import graft.ir.Ir._
 import graft.types.SsisTypes
 import graft.types.SsisTypes.SsisColumnType
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -72,7 +72,7 @@ object PackageVariables {
     try {
       val compiled = SsisExprCompiler.compile(v.expression.get, exprEnv(resolved))
       val target = SsisTypes.toSpark(SsisColumnType(v.ssisType))
-      Some(evalLocal(spark, compiled.cast(target)))
+      Some(LocalEval(spark, compiled.cast(target)))
     } catch {
       // unbound @[ns::name] → dependency not resolved yet; retry next pass
       case e: IllegalArgumentException if e.getMessage != null &&
@@ -92,31 +92,16 @@ object PackageVariables {
           s"unbound SSIS variable @[$ns::$n]")
       })
 
-  /** Evaluate a literal-only Column entirely in-process: project it over a
-    * one-row `LocalRelation`. Catalyst's `ConvertToLocalRelation` folds
-    * the (deterministic, literal-only) projection at optimization time and
-    * `LocalTableScanExec.executeTake` returns the row driver-side, so
-    * control-flow expression evaluation launches ZERO Spark jobs — a
-    * ForLoop of N iterations costs N in-process Catalyst evals, not 2N
-    * one-row cluster jobs (asserted in PrecedenceAndVariablesSpec). */
-  private def evalLocal(spark: SparkSession, c: Column): Any = {
-    val oneRow = spark.createDataFrame(
-      java.util.Collections.singletonList(org.apache.spark.sql.Row()),
-      StructType(Nil))
-    val row = oneRow.select(c.as("v")).head()
-    if (row.isNullAt(0)) null else row.get(0)
-  }
-
   /** Evaluate a precedence-constraint expression to a Boolean over the
     * evaluated package variables (models.py:158-163 Expression kind). */
   def evalBoolean(spark: SparkSession, expr: String, values: Map[String, Any]): Boolean =
-    evalLocal(spark,
+    LocalEval(spark,
       SsisExprCompiler.compile(expr, exprEnv(values)).cast(BooleanType)) == true
 
   /** Evaluate an SSIS expression over the evaluated variables to a plain
     * value (same local constant-fold as variable expressions). */
   def evalAny(spark: SparkSession, expr: String, values: Map[String, Any]): Any =
-    evalLocal(spark, SsisExprCompiler.compile(expr, exprEnv(values)))
+    LocalEval(spark, SsisExprCompiler.compile(expr, exprEnv(values)))
 
   private val AssignLhs = """^\s*@\[?(?:(\w+)::)?(\w+)\]?\s*=(?!=)([\s\S]*)$""".r
 

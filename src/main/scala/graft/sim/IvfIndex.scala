@@ -70,10 +70,10 @@ object IvfIndex {
     * partition-discovered `cell` column, so filters on it reach
     * `PartitionFilters` (spec-asserted). */
   def load(spark: SparkSession, dir: String): Model = {
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = graft.Tables.open(spark, s"$dir/centroids")
       .collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-    Model(cents, spark.read.parquet(s"$dir/assigned")
+    Model(cents, graft.Tables.open(spark, s"$dir/assigned")
       .withColumn("cell", col("cell").cast(IntegerType)))
   }
 

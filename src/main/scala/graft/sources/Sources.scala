@@ -124,7 +124,7 @@ object Sources {
       // intra-package tables (a prior task's destination) take precedence
       // over the external catalog — multi-task pipelines compose plans
       def scanOf(t: String) =
-        staged(t).getOrElse(spark.read.parquet(s"$dir/$t.parquet"))
+        staged(t).getOrElse(graft.Tables.load(spark, dir, t))
       val scan = scanOf(table)
       def fullSqlNeeded(stmt: String): Boolean =
         tables.length > 1 || (stmt match {

@@ -1,6 +1,6 @@
 package graft.validate
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,7 +13,9 @@ import org.apache.spark.sql.types._
   * 100 TB posture: every check is a single distributed aggregation
   * returning scalars — no data ever collects to the driver, and multi-
   * metric checks fuse into one pass (e.g. PK nulls+dups+count is one
-  * groupBy).
+  * groupBy). Two-sided checks read both sides in that one pass: the
+  * actual and expected rows, tagged by side, are unioned and each side
+  * is a conditional aggregate ([[bothSides]]).
   */
 object ValidationSuite {
 
@@ -31,7 +33,8 @@ object ValidationSuite {
     * reported in details like the reference's validator (validator.py:254-260). */
   def rowCountMatch(actual: DataFrame, expected: DataFrame, target: String,
       tol: Tolerances = Tolerances()): CheckResult = {
-    val a = actual.count(); val e = expected.count()
+    val r = bothSides(actual, expected)(count_if)
+    val a = r.getLong(0); val e = r.getLong(1)
     val pct = if (e == 0) (if (a == 0) 0.0 else 100.0) else math.abs(a - e) * 100.0 / e
     CheckResult("row_count", target, pct <= tol.rowCountPct, e.toString, a.toString,
       f"variance $pct%.4f%%" + (if (pct > tol.rowCountPct && pct <= 2 * tol.rowCountPct)
@@ -64,14 +67,10 @@ object ValidationSuite {
     * the reference (`SUM(CAST(col AS FLOAT))`, sql_server.py:156-254). */
   def checksum(actual: DataFrame, expected: DataFrame, column: String, target: String,
       tol: Tolerances = Tolerances()): List[CheckResult] = {
-    def sums(df: DataFrame) = {
-      val r = df.agg(
-        sum(col(column).cast(DoubleType)).as("s"),
-        avg(col(column).cast(DoubleType)).as("a")).head()
-      (Option(r.get(0)).fold(0.0)(_.toString.toDouble),
-        Option(r.get(1)).fold(0.0)(_.toString.toDouble))
-    }
-    val (sa, aa) = sums(actual); val (se, ae) = sums(expected)
+    val r = bothSides(actual, expected, col(column).cast(DoubleType))(
+      side => sum(when(side, col("v"))), side => avg(when(side, col("v"))))
+    val Seq(sa, aa, se, ae) = (0 until 4).map(i =>
+      Option(r.get(i)).fold(0.0)(_.toString.toDouble))
     def pct(a: Double, e: Double) = if (e == 0.0) (if (a == 0.0) 0.0 else 100.0)
       else math.abs(a - e) * 100.0 / math.abs(e)
     List(
@@ -79,6 +78,21 @@ object ValidationSuite {
         se.toString, sa.toString, f"variance ${pct(sa, se)}%.6f%%"),
       CheckResult(s"checksum_avg($column)", target, pct(aa, ae) <= tol.checksumPct,
         ae.toString, aa.toString, f"variance ${pct(aa, ae)}%.6f%%"))
+  }
+
+  /** ONE aggregation over both sides: each side's rows, tagged
+    * `is_actual` and projected to `v` (a checksum's DOUBLE, so a decimal
+    * side and a double side union), then every aggregate once per side,
+    * conditioned on the tag. Row: the actual side's aggregates, then the
+    * expected side's, in `aggs` order. */
+  private def bothSides(actual: DataFrame, expected: DataFrame, value: Column = lit(null))(
+      aggs: (Column => Column)*): Row = {
+    def tagged(df: DataFrame, isActual: Boolean) =
+      df.select(lit(isActual).as("is_actual"), value.as("v"))
+    val side = col("is_actual")
+    val perSide = aggs.map(_(side)) ++ aggs.map(_(!side))
+    tagged(actual, isActual = true).union(tagged(expected, isActual = false))
+      .agg(perSide.head, perSide.tail: _*).head()
   }
 
   // ---- dbt-style declarative data tests (schema.yml semantics) ----

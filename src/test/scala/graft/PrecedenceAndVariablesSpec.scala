@@ -513,31 +513,22 @@ class PrecedenceAndVariablesSpec extends AnyFunSuite {
     // a 1000-iteration ForLoop (eval + assign per round) plus expression-
     // variable evaluation must never touch the cluster: scalar expressions
     // fold in-process over a one-row LocalRelation
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
+    val vars = List(
+      Variable("User", "i", "DT_I4", "0"),
+      Variable("User", "Doubled", "DT_I4", "0",
+        expression = Some("@[User::i] + 2")))
+    val loop = ContainerTask("Loop", None, "ForLoop", List(sqlTask("Step")),
+      forLoop = Some(ForLoopSpec(
+        initExpression = Some("@[User::i] = 0"),
+        evalExpression = "@[User::i] < 1000",
+        assignExpression = Some("@[User::i] = @[User::i] + 1"))))
+    val (run, jobs) = SparkTestSession.jobsIn("control-flow") {
+      PackageRunner.run(spark, pkg(List(loop), Nil, vars), env(Set.empty))
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val vars = List(
-        Variable("User", "i", "DT_I4", "0"),
-        Variable("User", "Doubled", "DT_I4", "0",
-          expression = Some("@[User::i] + 2")))
-      val loop = ContainerTask("Loop", None, "ForLoop", List(sqlTask("Step")),
-        forLoop = Some(ForLoopSpec(
-          initExpression = Some("@[User::i] = 0"),
-          evalExpression = "@[User::i] < 1000",
-          assignExpression = Some("@[User::i] = @[User::i] + 1"))))
-      val run = PackageRunner.run(spark, pkg(List(loop), Nil, vars), env(Set.empty))
-      assert(!run.failed)
-      val container = run.tasks.find(_.taskName == "Loop").get
-      assert(container.notes.length === 1000)
-      Thread.sleep(1000) // let any stray job events drain to the listener
-      assert(jobs.get() === 0,
-        s"control flow launched ${jobs.get()} Spark job(s); expected none")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(!run.failed)
+    val container = run.tasks.find(_.taskName == "Loop").get
+    assert(container.notes.length === 1000)
+    assert(jobs === 0, s"control flow launched $jobs Spark job(s); expected none")
   }
 
   test("container-INTERNAL constraints order and gate children (not declaration order)") {

@@ -393,6 +393,60 @@ class SourcesAndIvfSpec extends AnyFunSuite {
       s"√N cells did not bound pair volume: frac($n1)=$f1, frac($n2)=$f2")
   }
 
+  /** `Tables.open` has Spark's inferred schema and runs no job. */
+  private def footerParity(path: String): Unit = {
+    val (df, jobs) = SparkTestSession.jobsIn("footer-open")(Tables.open(spark, path))
+    assert(df.schema === spark.read.parquet(path).schema, path)
+    assert(jobs === 0, s"opening $path ran $jobs Spark job(s)")
+  }
+
+  test("footer-schema opens: the ten testdata tables, events.ts both ways") {
+    val sf = "/root/testdata/sf0.01"
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val prior = spark.conf.getOption(nanos)
+    spark.conf.unset(nanos)
+    try {
+      Seq("lineitem", "orders", "customer", "supplier", "part", "nation", "region",
+        "events", "documents", "embeddings").foreach(t => footerParity(s"$sf/$t.parquet"))
+      // eventsNs sets the legacy nanos conf before its read
+      val events = Tables.eventsNs(spark, sf)
+      assert(spark.conf.get(nanos) === "true")
+      footerParity(s"$sf/events.parquet")
+      assert(events.schema("ts").dataType ===
+        spark.read.parquet(s"$sf/events.parquet").schema("ts").dataType)
+    } finally prior.fold(spark.conf.unset(nanos))(spark.conf.set(nanos, _))
+  }
+
+  test("footer-schema opens: a Spark-written artifact and the IVF partitioned dir") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-footer-spec").toString
+    try {
+      // nested, decimal, timestamp and non-nullable fields, several files
+      spark.range(0, 40, 1, 4)
+        .select(col("id"), (col("id") * 1.5).cast(DecimalType(12, 2)).as("amt"),
+          timestamp_seconds(col("id")).as("ts"),
+          struct(col("id").as("k"), array(lit("a"), col("id").cast(StringType)).as("tags"))
+            .as("s"),
+          map(lit("m"), col("id")).as("m"))
+        .write.parquet(s"$dir/artifact")
+      footerParity(s"$dir/artifact")
+      // a missing path fails as Spark's own read does
+      val missing = intercept[org.apache.spark.sql.AnalysisException](
+        Tables.open(spark, s"$dir/absent"))
+      assert(missing.getCondition === "PATH_NOT_FOUND", missing.getMessage)
+      val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      IvfIndex.save(IvfIndex.build(emb, "vec_id", "embedding", k = 8), s"$dir/ivf")
+      footerParity(s"$dir/ivf/centroids")
+      footerParity(s"$dir/ivf/assigned")
+      val cell = Tables.open(spark, s"$dir/ivf/assigned").schema("cell")
+      assert(cell.dataType === IntegerType, "the partition column keeps its inferred type")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+      }
+      rm(new java.io.File(dir))
+    }
+  }
+
   test("x85: IVF delta append serves delta neighbors without re-training") {
     val sf = "/root/testdata/sf0.001"
     import spark.implicits._

@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for the whole test run. */
 object SparkTestSession {
@@ -14,5 +21,65 @@ object SparkTestSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  // the job group of every job started, in listener-bus order
+  private val startedGroups = new ConcurrentLinkedQueue[String]()
+  private lazy val groupListener: Unit = get.sparkContext.addSparkListener(
+    new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(startedGroups.add)
+    })
+  private val groupSeq = new AtomicInteger()
+
+  /** Run `f` in a job group of its own and count the Spark jobs it
+    * started (threads it spawns inherit the group). A marker job in a
+    * second group then flushes the listener bus, so a start event that
+    * arrives late is still counted, not missed. */
+  def jobsIn[A](label: String)(f: => A): (A, Int) = {
+    groupListener
+    val sc = get.sparkContext
+    val group = s"$label-${groupSeq.incrementAndGet()}"
+    sc.setJobGroup(group, label)
+    val out = try f finally sc.clearJobGroup()
+    sc.setJobGroup(group + "-flush", "flush")
+    try get.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 10000000000L
+    while (!startedGroups.contains(group + "-flush") && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    if (!startedGroups.contains(group + "-flush"))
+      throw new AssertionError("the job listener never saw the flush job")
+    (out, startedGroups.toArray.count(_ == group))
+  }
+
+  // the output columns of every query execution that ended, in order
+  private val endedQueries = new ConcurrentLinkedQueue[Seq[String]]()
+  private lazy val queryListener: Unit = get.listenerManager.register(
+    new QueryExecutionListener {
+      private def seen(qe: QueryExecution): Unit =
+        endedQueries.add(qe.analyzed.output.map(_.name))
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(qe)
+    })
+
+  /** Run `f` and count the query executions (actions) it made, as a
+    * `QueryExecutionListener` sees them. A marker query before and after
+    * `f` flushes the listener bus, as in [[jobsIn]]; the count assumes
+    * nothing else runs queries on this session meanwhile. */
+  def queriesIn[A](f: => A): (A, Int) = {
+    queryListener
+    def flush(): Int = {
+      val marker = s"graft_query_marker_${groupSeq.incrementAndGet()}"
+      def at = endedQueries.toArray.indexWhere(_ == Seq(marker))
+      get.range(1).select(lit(1).as(marker)).collect(): Unit
+      val deadline = System.nanoTime() + 10000000000L
+      while (at < 0 && System.nanoTime() < deadline) Thread.sleep(10)
+      if (at < 0) throw new AssertionError("the query listener never saw the marker")
+      at
+    }
+    val before = flush()
+    val out = f
+    (out, flush() - before - 1)
   }
 }

@@ -87,26 +87,6 @@ class StagedSpec extends AnyFunSuite {
     def table = new Table("t", 2, "k", {
       builds += 1; Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v")
     })
-    // jobs started by this thread, counted per job group; a marker job in
-    // another group flushes the listener queue before the count is read
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(jobs.add)
-    }
-    def jobsIn[A](group: String)(f: => A): (A, Int) = {
-      spark.sparkContext.setJobGroup(group, group)
-      val out = try f finally spark.sparkContext.clearJobGroup()
-      spark.sparkContext.setJobGroup(group + "-flush", "flush")
-      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 10000000000L
-      while (!jobs.contains(group + "-flush") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(jobs.contains(group + "-flush"), "listener never saw the flush job")
-      (out, jobs.toArray.count(_ == group))
-    }
-    spark.sparkContext.addSparkListener(listener)
     try {
       val first = Staged.tables(spark, st)(table).head
       assert(builds === 1 && st.path.isDirectory)
@@ -115,12 +95,12 @@ class StagedSpec extends AnyFunSuite {
       assert(builds === 1, "a catalog hit evaluated the build")
       // a fresh application: the files are published, the catalog is empty
       spark.sql(s"DROP TABLE `${st.table("t")}`")
-      val (again, n) = jobsIn("staged-spec-register")(Staged.tables(spark, st)(table).head)
+      val (again, n) = SparkTestSession.jobsIn("staged-spec-register")(
+        Staged.tables(spark, st)(table).head)
       assert(n === 0, "re-registering a published staging ran a job")
       assert(builds === 2, "the build is analyzed once for its schema")
       assert(again.as[(Int, String)].collect().toSet === Set((1, "a"), (2, "b"), (3, "c")))
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       spark.sql(s"DROP TABLE IF EXISTS `${st.table("t")}`")
       Seq(st.path, a).foreach(rm)
     }
