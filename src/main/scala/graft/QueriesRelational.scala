@@ -1536,10 +1536,12 @@ object QueriesRelational {
 
   /** The reference SalesFactETL GUARD BLOCK executed — `GuardedFactETL
     * .dtsx` (q99): the `DECLARE / SELECT @x = COUNT(*) / IF … RAISERROR`
-    * pre-ETL verification task runs through
-    * [[graft.patterns.GuardBlockSqlCompiler]] (scalar collects +
-    * FROM-less predicate evaluation; a tripped severity-16 guard fails
-    * the task exactly like SSIS), and only then the guarded fact load
+    * pre-ETL verification task runs through the script executor
+    * ([[graft.patterns.ScriptedSqlExecutor]]: scalar collects bind as
+    * typed literals, the `IF … RAISERROR` is an
+    * [[graft.patterns.IfLadderSqlCompiler]] guard leg; a tripped
+    * severity-16 guard fails the task exactly like SSIS), and only
+    * then the guarded fact load
     * executes. This was the LAST statement class in the reference's own
     * sample packages that only classified instead of executing. */
   def q99_dtsx_guard_block(spark: SparkSession, dir: String): DataFrame =
@@ -1715,7 +1717,8 @@ object QueriesRelational {
     * conditional-load idiom [[graft.patterns.SqlPatternRewriter]]
     * deliberately disqualifies (its embedded-UPDATE rule exists so the
     * IF-EXISTS upsert is never HALF-executed — now the whole statement
-    * executes via [[graft.patterns.IfExistsSqlCompiler]]). The gate
+    * executes as an [[graft.patterns.IfLadderSqlCompiler]] ladder in
+    * the script executor). The gate
     * drives a THEN branch, a BEGIN/END-dressed ELSE branch, and a
     * NOT-EXISTS vacuous skip; the probe is a LIMIT-1 driver fact, the
     * untaken branch must still be ownable (a data flip next run cannot
@@ -1820,8 +1823,7 @@ object QueriesRelational {
     * [[graft.patterns.ScriptedSqlExecutor]]'s overlay (so #temp /
     * @@ROWCOUNT compose inside branches); the same statement
     * re-evaluated after the flip takes the ELSE branch — both paths
-    * gate in one run. Single-statement branches stay with the q105
-    * chain member. Scale shape: one LIMIT-1 probe per evaluation; the
+    * gate in one run. Scale shape: one LIMIT-1 probe per evaluation; the
     * branch statements plan as q-native. */
   def q109_dtsx_if_exists_block(spark: SparkSession, dir: String): DataFrame = {
     val (w, _) = runDtsxWarehousePackage(spark, dir, "ConditionalReloadETL.dtsx")
@@ -3085,14 +3087,13 @@ object QueriesRelational {
     * …; IF @hi > 0 <load>`, the conditional-load idiom over script
     * variables (r17; the reference sends ALL control flow to manual
     * review, `analyzer.py:137-156`).
-    * [[graft.patterns.IfScalarSqlCompiler]] folds the predicate
-    * eagerly as one driver fact — script @vars arrive literal-bound,
-    * NULL takes the ELSE like T-SQL's UNKNOWN — and the taken branch
-    * runs through the statement chain (the package's second IF is
-    * false and exercises the ELSE leg). Branches must be single
-    * ownable statements; nested control flow and conditional SET
-    * assignment decline. Scale: the guard is one scalar aggregate
-    * job; the branch plans exactly its inline spelling. */
+    * The script executor's [[graft.patterns.IfLadderSqlCompiler]]
+    * handler folds the predicate eagerly as one driver fact — script
+    * @vars bind as typed literals, NULL takes the ELSE like T-SQL's
+    * UNKNOWN — and runs the taken branch through the same sequencer
+    * (the package's second IF is false and exercises the ELSE leg);
+    * nested control flow declines. Scale: the guard is one scalar
+    * aggregate job; the branch plans exactly its inline spelling. */
   def q148_dtsx_if_scalar(spark: SparkSession, dir: String): DataFrame = {
     val (w, _) = runDtsxWarehousePackage(spark, dir, "IfScalarETL.dtsx")
     w("ord_if").select(
@@ -3116,8 +3117,8 @@ object QueriesRelational {
     * `analyzer.py:137-156`). [[graft.patterns.IfLadderSqlCompiler]]
     * re-joins the fragments the `;` splitter shreds a block into and
     * parses the ladder; the script sequencer folds each predicate
-    * eagerly (variables are in reach at the dispatcher — the r17
-    * chain-member restriction is gone) and runs the taken block's
+    * eagerly (variables are in reach in the sequencer) and runs the
+    * taken block's
     * statement LIST through its own compileOne, so a later block
     * statement sees an earlier one's staging and a conditional
     * `SET @v = …` feeds statements after the IF. The false guard's
@@ -3272,19 +3273,15 @@ object QueriesRelational {
       |WHERE CAST(o_totalprice AS DECIMAL(12,2)) >= 2000""".stripMargin
 
   /** RAISERROR legs in mid-script IF ladders through the dtsx
-    * frontend (`GuardLadderETL.dtsx`) — the validation guard BEYOND
-    * the whole-text DECLARE/assign/guard-only block q15/q99 own
-    * (r18): a guard sharing its script with real DML, an
+    * frontend (`GuardLadderETL.dtsx`) — the validation guard beside
+    * real DML, beyond the guard-only block of q15/q99 (r18): an
     * informational (severity 1) ELSE leg that fires and CONTINUES,
     * and a severity-16 guard inside a TRY whose CATCH handles the
     * abort — the statement after the fired guard provably never runs
     * (the oracle would read 'NEVER' on every row otherwise) and the
     * CATCH's flag lands instead. [[graft.patterns.IfLadderSqlCompiler]]
-    * parses the leg; the sequencer fires it with
-    * [[graft.patterns.GuardBlockSqlCompiler]]'s exact severity/message
-    * contract (≥ 11 throws a T-SQL-catchable abort, ≤ 10 passes).
-    * GuardBlock's lazy predicate capture is now verb-gated so ladders
-    * ending in RAISERROR route here instead of mis-parsing. Scale:
+    * parses the leg; the sequencer fires it (≥ 11 throws a
+    * T-SQL-catchable abort, ≤ 10 passes). Scale:
     * the guard is one scalar aggregate; a fired abort costs nothing
     * downstream — later statements never plan. */
   def q154_dtsx_guard_ladder(spark: SparkSession, dir: String): DataFrame = {
@@ -4705,7 +4702,7 @@ object QueriesRelational {
         // stateless across tasks — build once, bind per task
         val exec = graft.patterns.ScriptedSqlExecutor.executor(
           spark,
-          resolveFrame = name => written.getOrElse(name, spark.table(name)),
+          written = written.get,
           bareName = name => tableRe.findFirstMatchIn(name)
             .map(_.group(1)).getOrElse(name),
           commit = (k, v) => written(k) = v)

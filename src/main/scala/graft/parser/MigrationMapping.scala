@@ -159,16 +159,16 @@ object MigrationMapping {
     val insertSelect = "(?is)insert\\s+into\\s+(\\S+)[\\s(].*?select\\b".r
     val insertValues = "(?is)insert\\s+into\\s+(\\S+)\\s*\\([^)]*\\)\\s*values\\b".r
 
-    if (graft.patterns.GuardBlockSqlCompiler.shapeMatches(sql))
+    if (upper.contains("RAISERROR"))
       TaskMapping(t.name, "ExecuteSQLTask", "converted_to_tests", None,
-        Some("pre-ETL guard block EXECUTES (patterns/GuardBlockSqlCompiler: " +
-          "scalar collects + IF predicate, RAISERROR severity >= 11 fails " +
-          "the task like SSIS); also expressible as validate/ValidationSuite " +
-          "checks"), Nil, signals)
-    else if (upper.contains("RAISERROR"))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted_to_tests", None,
-        Some("validation aggregate guard (validate/ValidationSuite) — " +
-          "RAISERROR becomes a failed check"), Nil, signals)
+        Some(
+          if (graft.patterns.ScriptedSqlExecutor.statements(sql)._1.exists(s =>
+              graft.patterns.IfLadderSqlCompiler.parse(s).exists(_.raises)))
+            "validation guard executes (patterns/IfLadderSqlCompiler " +
+              "RAISERROR legs: severity >= 11 fails the task like SSIS); " +
+              "also expressible as validate/ValidationSuite checks"
+          else "validation aggregate guard (validate/ValidationSuite) — " +
+            "RAISERROR becomes a failed check"), Nil, signals)
     else if ("(?i)\\bmerge\\b\\s+(into\\s+)?\\S+".r.findFirstIn(sql).isDefined &&
         upper.contains("USING"))
       TaskMapping(t.name, "ExecuteSQLTask", "converted",
@@ -195,19 +195,6 @@ object MigrationMapping {
           "effects first — the all-or-nothing idiom; any other " +
           "rollback placement stays manual review)"),
         Nil, signals)
-    else if (graft.patterns.IfExistsSqlCompiler.shapeMatches(sql))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("IF [NOT] EXISTS branch executes (patterns/" +
-          "IfExistsSqlCompiler — LIMIT-1 probe decides, the taken " +
-          "branch runs through the statement chain; both branches must " +
-          "be single ownable statements)"), Nil, signals)
-    else if (graft.patterns.IfScalarSqlCompiler.shapeMatches(sql))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("scalar-predicate IF branch executes (patterns/" +
-          "IfScalarSqlCompiler — the predicate folds eagerly as one " +
-          "driver fact, NULL takes the ELSE like T-SQL's UNKNOWN; the " +
-          "taken branch runs through the statement chain; both " +
-          "branches must be single ownable statements)"), Nil, signals)
     else if (graft.patterns.IfLadderSqlCompiler.ownsWholeText(sql))
       TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
         Some("IF ladder executes (patterns/IfLadderSqlCompiler — " +

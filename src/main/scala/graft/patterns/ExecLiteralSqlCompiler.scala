@@ -92,9 +92,10 @@ object ExecLiteralSqlCompiler {
     singleLiteral(sql.substring(m.start(1), m.end(1))).filter(noExecTower)
   }
 
+  private[patterns] val execHeadRe = "(?is)^\\s*exec(?:ute)?\\b".r
+
   private def noExecTower(inner: String): Boolean =
-    "(?is)^\\s*exec(?:ute)?\\b".r
-      .findFirstIn(UpdateSqlCompiler.masked(inner)).isEmpty
+    execHeadRe.findFirstIn(UpdateSqlCompiler.masked(inner)).isEmpty
 
   // the parameterized frame, matched on the MASKED twin (masked string
   // literals carry no quotes, so lazy spans cannot leak across them):
@@ -387,11 +388,15 @@ object ExecLiteralSqlCompiler {
     TsqlConcatFold.fold(argRaw).filter(noExecTower)
   }
 
+  /** The statically known inner text of a literal, parameterized or
+    * constant-concatenated EXEC — None when the text is none of them. */
+  private[patterns] def inner(sqlRaw: String): Option[String] =
+    unwrap(sqlRaw).orElse(bindParameterized(sqlRaw))
+      .orElse(foldConcatenated(sqlRaw))
+
   def rewrite(spark: SparkSession, task: ExecuteSqlTask,
       resolve: String => DataFrame,
       chain: ExecuteSqlTask => Option[SqlOutcome]): Option[SqlOutcome] =
-    unwrap(task.sqlStatement)
-      .orElse(bindParameterized(task.sqlStatement))
-      .orElse(foldConcatenated(task.sqlStatement))
-      .flatMap(inner => chain(task.copy(sqlStatement = inner)))
+    inner(task.sqlStatement)
+      .flatMap(s => chain(task.copy(sqlStatement = s)))
 }

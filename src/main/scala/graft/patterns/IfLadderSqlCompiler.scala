@@ -2,24 +2,19 @@ package graft.patterns
 
 import scala.collection.mutable.ListBuffer
 
-/** T-SQL `IF … [ELSE IF …]* [ELSE …]` LADDERS with multi-statement
-  * `BEGIN … END` branches, conditional assignment legs, and the
-  * top-level early-exit `RETURN` leg — the dispatcher-level promotion
-  * of the r17 single-statement chain members ([[IfExistsSqlCompiler]],
-  * [[IfScalarSqlCompiler]]). The reference's analyzer routes ALL
-  * control flow to manual review (ssis-to-dbt
-  * `src/agents/analyzer.py:137-156`); here the ladder is a first-match
-  * CASCADE of the same eager driver probes the chain members run —
-  * never nested control: each predicate folds to one boolean fact, the
-  * first true leg's statement LIST executes through the script
-  * sequencer's own `compileOne` (so `SET @v = …` reaches the
-  * executor's variable state — the restriction that kept conditional
-  * assignment out of the r17 chain member, `IfScalarSqlCompiler`
-  * scaladoc), and `RETURN` as an entire leg exits the batch: the
-  * remaining script statements are skipped and everything staged
-  * commits (T-SQL batch-exit semantics; the executor keeps declining
-  * RETURN inside an explicit `BEGIN TRAN` bracket — commit/rollback
-  * placement there is ambiguous — and everywhere mid-body).
+/** T-SQL `IF … [ELSE IF …]* [ELSE …]` LADDERS — the one parser of a
+  * T-SQL IF. The reference's analyzer routes ALL control flow to manual
+  * review (ssis-to-dbt `src/agents/analyzer.py:137-156`); here the
+  * ladder is a first-match CASCADE of eager driver probes — never
+  * nested control: each predicate folds to one boolean fact, the first
+  * true leg's statement LIST executes through the script sequencer's
+  * own `compileOne` (so `SET @v = …` reaches the executor's variable
+  * state), a `RAISERROR` leg is the validation guard, and `RETURN` as
+  * an entire leg exits the batch: the remaining script statements are
+  * skipped and everything staged commits (T-SQL batch-exit semantics;
+  * the executor keeps declining RETURN inside an explicit `BEGIN TRAN`
+  * bracket — commit/rollback placement there is ambiguous — and
+  * everywhere mid-body).
   *
   * This object is PARSE-ONLY — classification and structure. The
   * evaluation (predicate binding via the executor's `bindVars`, branch
@@ -28,22 +23,15 @@ import scala.collection.mutable.ListBuffer
   * variable state and the staging overlay in reach.
   *
   * Predicates: `[NOT] EXISTS (SELECT …)` legs probe LIMIT-1-bounded;
-  * scalar legs fold as `SELECT CASE WHEN (<pred>) THEN …` — NULL is
-  * not-true (T-SQL UNKNOWN), exactly the chain members' contracts.
-  * Both kinds mix freely in one ladder. Branch statements must each be
-  * an ownable head (INSERT/UPDATE/DELETE/TRUNCATE/MERGE/SELECT/SET)
-  * with no nested control flow (IF/WHILE/BEGIN/GOTO/BREAK/CONTINUE
-  * and mid-body RETURN all decline — a block that could never compile
-  * declines the WHOLE ladder, so a data flip next run cannot turn a
-  * working package into a failing one — the shared branch contract).
-  *
-  * Single-leg ladders whose branches are one plain statement
-  * ([[Ladder.chainEquivalent]]) are NOT owned here: they keep the r17
-  * chain-member path byte-for-byte (q148/q109 regression surface) —
-  * EXCEPT assignment-shaped branches (`IF p SELECT @v = …`), which the
-  * chain would mis-read after literal binding (`SELECT <lit> = …` is a
-  * valid boolean projection in Spark, a silent divergence) and the
-  * ladder therefore claims even single-leg. */
+  * scalar legs fold as `CASE WHEN (<pred>) THEN …` — NULL is not-true
+  * (T-SQL UNKNOWN). Both kinds mix freely in one ladder. Branch
+  * statements must each be an ownable head (INSERT/UPDATE/DELETE/
+  * TRUNCATE/MERGE/SELECT/SET) with no nested control flow
+  * (IF/WHILE/BEGIN/GOTO/BREAK/CONTINUE and mid-body RETURN all decline
+  * — a block that could never compile declines the WHOLE ladder, so a
+  * data flip next run cannot turn a working package into a failing
+  * one). Keyword scans run on a twin with string literals AND
+  * `[bracketed]` identifiers masked: their content is data. */
 object IfLadderSqlCompiler {
 
   sealed trait Pred
@@ -55,47 +43,70 @@ object IfLadderSqlCompiler {
   sealed trait Branch
   /** A bare `RETURN` leg — batch exit. */
   case object ReturnExit extends Branch
-  /** A `RAISERROR(<args>)` leg — the mid-script validation guard.
-    * Severity ≥ 11 aborts the task exactly like
-    * [[GuardBlockSqlCompiler]]'s whole-text form (and is T-SQL-
-    * catchable, so a TRY/CATCH script catches it); ≤ 10 is
+  /** A `RAISERROR(<args>)` leg, bare or as the whole of a `BEGIN … END`
+    * body — the validation guard. Severity ≥ 11 aborts the task (and
+    * is T-SQL-catchable, so a TRY/CATCH script catches it); ≤ 10 is
     * informational and the batch continues. */
   final case class Raise(args: String) extends Branch
-  /** One or more ownable statements (BEGIN…END stripped). `hadSemi`
-    * records a `;` inside the BEGIN…END body — the chain members'
-    * single-statement contract declines those even when the body holds
-    * only one statement (`BEGIN x; END`), so the ladder owns them. */
-  final case class Stmts(stmts: List[String],
-      hadSemi: Boolean = false) extends Branch
+  /** One or more ownable statements (BEGIN…END stripped). */
+  final case class Stmts(stmts: List[String]) extends Branch
 
   final case class Ladder(legs: List[(Pred, Branch)],
       otherwise: Option[Branch]) {
     def hasReturn: Boolean =
       (legs.map(_._2) ++ otherwise).contains(ReturnExit)
-    /** Would the r17 chain members own this shape identically? True for
-      * a single leg whose branches are each ONE plain (non-assignment)
-      * statement with no `;` inside its block dressing — those keep
-      * the existing path untouched. An EXISTS-HEADED compound scalar
-      * predicate (`IF EXISTS (…) AND @n > 0 …`) is NOT chain-ownable:
-      * IfExists can't parse past its first close paren and IfScalar
-      * declines EXISTS heads outright — the ladder folds it (r18). */
-    def chainEquivalent: Boolean = legs.size == 1 &&
-      (legs.head._1 match {
-        case ScalarPred(e) => existsHeadRe
-          .findFirstIn(UpdateSqlCompiler.masked(e).trim).isEmpty
-        case _: ExistsPred => true
-      }) &&
-      (legs.map(_._2) ++ otherwise).forall {
-        case Stmts(List(s), hadSemi) => !hadSemi && assignHeadRe
-          .findFirstIn(UpdateSqlCompiler.masked(s)).isEmpty
-        case _ => false
-      }
+    def raises: Boolean =
+      (legs.map(_._2) ++ otherwise).exists(_.isInstanceOf[Raise])
+  }
+
+  /** Render a RAISERROR message argument: `[N]'…'` literals unquote
+    * and unescape (T-SQL reports the bare text); anything else passes
+    * through verbatim. */
+  private[patterns] def raiseMsg(arg: String): String = {
+    val t = arg.trim
+    if (t.matches("(?is)^N?'.*'$")) {
+      val body = t.replaceFirst("(?is)^N", "")
+      body.substring(1, body.length - 1).replace("''", "'")
+    } else t
   }
 
   // `SET @v = …` / `SELECT @v = …` heads: the executor's assignment
   // machinery must see these UNBOUND (binding the target turns the
   // assignment into a literal comparison)
   private val assignHeadRe = "(?is)^\\s*(?:set|select)\\s+@\\w+\\s*=".r
+
+  private val ifHeadRe = "(?is)^\\s*if\\b".r
+
+  /** Is the statement IF-headed (comments and literals aside)? */
+  private[patterns] def isIf(stmt: String): Boolean =
+    ifHeadRe.findFirstIn(UpdateSqlCompiler.masked(
+      SqlText.stripComments(stmt))).isDefined
+
+  /** The literal-masked twin with `[bracketed]` identifier content
+    * masked too (length-preserving; `]]` is the escaped bracket). */
+  private def mask(s: String): String =
+    "\\[(?:[^\\]]|\\]\\])*\\]".r.replaceAllIn(UpdateSqlCompiler.masked(s),
+      b => "[" + "x" * (b.matched.length - 2) + "]")
+
+  /** Index just past the paren matching the one before `from`, or -1. */
+  private def closeParen(msk: String, from: Int): Int = {
+    var depth = 1
+    var j = from
+    while (j < msk.length && depth > 0) {
+      val c = msk.charAt(j)
+      if (c == '(') depth += 1 else if (c == ')') depth -= 1
+      j += 1
+    }
+    if (depth == 0) j else -1
+  }
+
+  /** Split on the `;`s of the masked twin (none inside literals or
+    * brackets), slicing the original. */
+  private def splitMasked(text: String, msk: String): List[String] = {
+    val cuts = -1 +: msk.indices.filter(msk.charAt(_) == ';') :+ msk.length
+    cuts.sliding(2).map { case Seq(a, b) => text.substring(a + 1, b).trim }
+      .filter(_.nonEmpty).toList
+  }
 
   private val existsHeadRe = "(?is)^(not\\s+)?exists\\s*\\(".r
   private val selectHeadRe = "(?is)^\\s*select\\b".r
@@ -135,13 +146,13 @@ object IfLadderSqlCompiler {
     d
   }
 
-  private val ifHeadRe = "(?is)^\\s*if\\b".r
   private val elseHeadRe = "(?is)^\\s*else\\b".r
 
   /** A TRUNCATE/DELETE head followed by a depth-0 INSERT token: two
-    * statements fused by a missing `;` (shared decline with the chain
-    * members' branch contract — see [[IfExistsSqlCompiler.branch]]). */
-  private[patterns] def fusedDml(msk: String): Boolean =
+    * statements fused by a missing `;` — the order-blind rewriter
+    * downstream would compile both under the guard where T-SQL guards
+    * only the first: decline, never a silent divergence. */
+  private def fusedDml(msk: String): Boolean =
     "(?is)^\\s*(truncate|delete)\\b".r.findFirstIn(msk).isDefined &&
       "(?i)\\binsert\\b".r.findAllMatchIn(msk)
         .exists(m => WindowSqlLowering.depthAt(msk, m.start) == 0)
@@ -159,13 +170,12 @@ object IfLadderSqlCompiler {
     val out = ListBuffer.empty[String]
     stmts.foreach { s =>
       val joined = out.lastOption.flatMap { prev =>
-        val pm = UpdateSqlCompiler.masked(prev)
+        val pm = mask(prev)
         if (ifHeadRe.findFirstIn(pm).isEmpty) None
         else {
           val b = balance(pm)
           if (b > 0) Some(prev + "; " + s)
-          else if (b == 0 && elseHeadRe
-              .findFirstIn(UpdateSqlCompiler.masked(s)).isDefined)
+          else if (b == 0 && elseHeadRe.findFirstIn(mask(s)).isDefined)
             Some(prev + " " + s)
           else None
         }
@@ -180,11 +190,11 @@ object IfLadderSqlCompiler {
 
   /** Parse one statement text (comments already stripped) as an IF
     * ladder. None = not a shape this compiler can state — the caller
-    * falls through to the r17 chain members (which own or decline). */
+    * declines the statement to manual review. */
   def parse(text: String): Option[Ladder] = {
-    val msk = UpdateSqlCompiler.masked(text)
-    // the whole text must be ONE ladder: a trailing `;` is tolerated
-    // (stripped below); any other trailing content declines
+    val msk = mask(text)
+    // the whole text must be ONE ladder: a trailing `;` is tolerated;
+    // any other trailing content declines
     var i = 0
     def ws(): Unit = {
       while (i < msk.length && msk.charAt(i).isWhitespace) i += 1 }
@@ -221,8 +231,7 @@ object IfLadderSqlCompiler {
         // control-flow keywords inside the predicate span mean the
         // text is NOT `IF <expr> <branch>` — decline, never hand
         // spark.sql an unevaluable predicate (CASE…END predicates
-        // included: their END token lands here — the chain member's
-        // exact gate)
+        // included: their ELSE/END tokens land here)
         if (predControlRe.findFirstIn(
             msk.substring(i, verb.start)).isDefined) return None
         i = verb.start
@@ -230,14 +239,8 @@ object IfLadderSqlCompiler {
       }
       existsHeadRe.findFirstMatchIn(msk.substring(i)) match {
         case Some(h) =>
-          var depth = 1
-          var j = i + h.end
-          while (j < msk.length && depth > 0) {
-            val c = msk.charAt(j)
-            if (c == '(') depth += 1 else if (c == ')') depth -= 1
-            j += 1
-          }
-          if (depth != 0) None
+          val j = closeParen(msk, i + h.end)
+          if (j < 0) None
           else {
             // peek past the close paren: a branch opener means the
             // predicate was EXACTLY the EXISTS probe (the LIMIT-1
@@ -250,12 +253,10 @@ object IfLadderSqlCompiler {
             if (!branchFollows) scalarPred()
             else {
               val probe = text.substring(i + h.end, j - 1).trim
-              if (selectHeadRe.findFirstIn(
-                  UpdateSqlCompiler.masked(probe)).isEmpty) None
+              if (selectHeadRe.findFirstIn(mask(probe)).isEmpty) None
               else {
-                val neg = h.group(1) != null
                 i = j
-                Some(ExistsPred(neg, probe))
+                Some(ExistsPred(h.group(1) != null, probe))
               }
             }
           }
@@ -264,41 +265,30 @@ object IfLadderSqlCompiler {
     }
 
     // one branch statement: ownable head, no nested control flow, no
-    // fused-refresh text (a TRUNCATE/DELETE head with a depth-0 INSERT
-    // token is two statements fused by a missing `;` — the order-blind
-    // rewriter downstream would compile both under the guard where
-    // T-SQL guards only the first: decline, never a silent divergence)
+    // fused-refresh text
     def stmtOk(s: String): Boolean = {
-      val m = UpdateSqlCompiler.masked(s)
+      val m = mask(s)
       stmtHeadRe.findFirstIn(m).isDefined &&
         stmtControlRe.findFirstIn(m).isEmpty && !fusedDml(m)
+    }
+
+    // `RAISERROR(args)` at `i`: paren-matched args, i moves past the
+    // call (trailing content falls to the caller's checks)
+    def raiseCall(): Option[Raise] = {
+      i += "raiserror".length; ws()
+      if (i >= msk.length || msk.charAt(i) != '(') return None
+      val j = closeParen(msk, i + 1)
+      if (j < 0) None
+      else {
+        val args = text.substring(i + 1, j - 1).trim
+        if (args.isEmpty) None else { i = j; Some(Raise(args)) }
+      }
     }
 
     def parseBranch(): Option[Branch] = {
       ws()
       if (kwAt("return")) { i += "return".length; Some(ReturnExit) }
-      else if (kwAt("raiserror")) {
-        // RAISERROR('msg', severity, state) — paren-matched args; the
-        // leg must be exactly the call (trailing content beyond the
-        // close paren falls to the end-of-branch checks)
-        val open = msk.indexOf('(', i + "raiserror".length)
-        if (open < 0 || msk.substring(i + "raiserror".length, open)
-            .exists(!_.isWhitespace)) None
-        else {
-          var depth = 1
-          var j = open + 1
-          while (j < msk.length && depth > 0) {
-            val c = msk.charAt(j)
-            if (c == '(') depth += 1 else if (c == ')') depth -= 1
-            j += 1
-          }
-          if (depth != 0) None
-          else {
-            val args = text.substring(open + 1, j - 1).trim
-            if (args.isEmpty) None else { i = j; Some(Raise(args)) }
-          }
-        }
-      }
+      else if (kwAt("raiserror")) raiseCall()
       else if (kwAt("begin") &&
           tranDressRe.findFirstIn(msk.substring(i + 5)).isEmpty) {
         // match this block's END by token walk (BEGIN/CASE push, END
@@ -319,19 +309,24 @@ object IfLadderSqlCompiler {
             }
           }
         endTok.flatMap { e =>
-          val body = text.substring(bodyStart, e.start)
-          val stmts = SqlText.splitStatements(body)
-          if (stmts.nonEmpty && stmts.forall(stmtOk)) {
-            i = e.end
-            Some(Stmts(stmts, hadSemi =
-              msk.substring(bodyStart, e.start).contains(';')))
-          } else None
+          // a body that is exactly one RAISERROR call is the guard leg
+          i = bodyStart; ws()
+          val raise =
+            if (!kwAt("raiserror")) None
+            else raiseCall().filter(_ => i <= e.start && msk.substring(
+              i, e.start).forall(c => c == ';' || c.isWhitespace))
+          val stmts = splitMasked(text.substring(bodyStart, e.start),
+            msk.substring(bodyStart, e.start))
+          i = e.end
+          raise.orElse(
+            if (stmts.nonEmpty && stmts.forall(stmtOk)) Some(Stmts(stmts))
+            else None)
         }
       } else {
         // single unwrapped statement: extends to the next depth-0 ELSE
         // token or the end of the text (a CASE expression's depth-0
-        // ELSE mis-cuts here and the ladder then fails to parse — the
-        // chain members' exact behavior: decline, wrap in BEGIN…END)
+        // ELSE mis-cuts here and the ladder then fails to parse —
+        // decline; wrap it in BEGIN…END)
         val cut = elseTokRe.findAllMatchIn(msk)
           .find(m => m.start >= i &&
             WindowSqlLowering.depthAt(msk, m.start) == 0)
@@ -375,44 +370,37 @@ object IfLadderSqlCompiler {
     parse(SqlText.stripComments(stmt)).exists { l =>
       !(l.legs.map(_._2) ++ l.otherwise).exists {
         case ReturnExit => true
-        case Stmts(ss, _) => ss.exists(s =>
+        case Stmts(ss) => ss.exists(s =>
           assignHeadRe.findFirstIn(UpdateSqlCompiler.masked(s)).isDefined)
         case _ => false
       }
     }
 
-  /** Parse-only classification twin: does this STATEMENT text parse as
-    * a ladder the dispatcher owns beyond the r17 chain members? */
-  private[graft] def ownsBeyondChain(stmt: String): Boolean =
-    parse(SqlText.stripComments(stmt)).exists(l => !l.chainEquivalent)
-
   /** Whole-TASK twin for the migration ledger: comments stripped, GO/;
     * split, shredded blocks regrouped — True when the task is exactly
-    * one ladder statement owned beyond the chain AND free of `@tokens`
-    * / `@@reads`: a one-statement task has no DECLARE to bind them and
-    * no countable predecessor, so the executor would decline at run —
-    * the ledger must not overclaim conversion for that class
-    * (IfScalarSqlCompiler's top-level gate, mirrored). */
+    * one ladder statement free of `@tokens` / predicate `@@reads` and
+    * inside the executor's #temp scope: a one-statement task has no
+    * DECLARE to bind them and no countable predecessor, and a temp it
+    * does not create is another task's, so the executor would decline
+    * at run — the ledger must not overclaim conversion for that class. */
   private[graft] def ownsWholeText(sqlRaw: String): Boolean = {
     val text = SqlText.stripComments(sqlRaw)
     val stmts = regroup(
       SqlText.splitBatches(text).flatMap(SqlText.splitStatements))
-    stmts.length == 1 &&
+    stmts.length == 1 && !ScriptedSqlExecutor.outOfTempScope(text) &&
       // no scalar @tokens anywhere (unbindable without a DECLARE) —
       // but @@ROWCOUNT is allowed INSIDE branches, where it composes
       // off an earlier branch statement's count at run time
       "(?<!@)@\\w+".r.findFirstIn(
         UpdateSqlCompiler.masked(stmts.head)).isEmpty &&
-      parse(SqlText.stripComments(stmts.head)).exists { l =>
-        !l.chainEquivalent && l.legs.forall { case (p, _) =>
-          val predTxt = p match {
-            case ExistsPred(_, probe) => probe
-            case ScalarPred(e) => e
-          }
-          // a PREDICATE @@read has no countable predecessor at
-          // whole-task level — the executor declines it
-          !UpdateSqlCompiler.masked(predTxt).contains("@@")
+      parse(stmts.head).exists(_.legs.forall { case (p, _) =>
+        val predTxt = p match {
+          case ExistsPred(_, probe) => probe
+          case ScalarPred(e) => e
         }
-      }
+        // a PREDICATE @@read has no countable predecessor at
+        // whole-task level — the executor declines it
+        !UpdateSqlCompiler.masked(predTxt).contains("@@")
+      })
   }
 }

@@ -50,9 +50,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `DROP TABLE [IF EXISTS] #t`, and NEVER commits — script end IS the
   * T-SQL scope exit, mirroring tempdb session scope. Re-creating a live
   * `#t` aborts (T-SQL 2714), `##global` temps decline (cross-session
-  * state this replay does not model), and a `#t` referenced OUTSIDE a
-  * script declines — temp state never crosses task boundaries. The
-  * reference classifies exactly this surface as complex/manual
+  * state this replay does not model), and a task reading a `#t` none of
+  * its own statements creates, or one plain statement naming a `#t`,
+  * declines — temp state never crosses task boundaries
+  * ([[outOfTempScope]]). The reference classifies exactly this surface
+  * as complex/manual
   * (ssis-to-dbt `src/agents/analyzer.py:469-479`; its identifier
   * validator rejects `#`/`@` outright, `src/parser/utils.py:30-32`).
   *
@@ -75,7 +77,6 @@ object ScriptedSqlExecutor {
   // `#name` / `##name` reference (scans run on the masked twin so a '#'
   // inside a string literal is data, not a temp reference)
   private val tempRefRe = "#{1,2}[A-Za-z_][A-Za-z0-9_]*".r
-  private val globalTempRe = "##[A-Za-z_]".r
   private val rowcountRe = "(?i)@@rowcount".r
 
   // ---- script-scoped scalar @variables (the in-script watermark
@@ -101,6 +102,55 @@ object ScriptedSqlExecutor {
   /** Does the statement reference a `#temp` (outside literals)? */
   private def hasTempRef(s: String): Boolean =
     tempRefRe.findFirstIn(UpdateSqlCompiler.masked(s)).isDefined
+
+  // temp-table DDL heads over a name pattern: `#\w+` for the task's
+  // scope scan ([[outOfTempScope]]), [[TempPrefix]]`\w+` for the
+  // sequencer's handlers after [[detemp]]
+  private def createTableHead(name: String) =
+    s"\\bcreate\\s+table\\s+($name)"
+  private def dropTableHead(name: String) =
+    s"\\bdrop\\s+table\\s+(?:(if\\s+exists)\\s+)?($name)"
+
+  // the statements that CREATE a `#temp`: SELECT … INTO #t (not INSERT/
+  // MERGE INTO), CREATE TABLE #t, and the INSERT INTO #t … VALUES
+  // bootstrap (table variables are declared in-task by construction)
+  private val tempCreatorRes = List(
+    "(?is)(?<!(?:insert|merge)\\s{1,32})\\binto\\s+(#\\w+)",
+    "(?is)" + createTableHead("#\\w+"),
+    "(?is)\\binsert\\s+into\\s+(#\\w+)\\s*(?:\\([^)]*\\))?\\s*values\\b").map(_.r)
+
+  private val dropTempClauseRe = ("(?is)" + dropTableHead("#\\w+")).r
+
+  /** The task-scope rule for `#temp`s: temp state may cross tasks on a
+    * retained connection, and this replay scopes every temp to one
+    * task. A task declines when it reads a `#temp` none of its own
+    * statements creates (`##global`s never are), or when it is ONE
+    * plain statement naming a temp — a lone creator's temp dies unread
+    * at task end, and a lone reader or DROP has no creator. An IF is
+    * no plain statement: its branches sequence like a script's. Inside
+    * a script a DROP is no read: a never-created temp is absent there
+    * (plain DROP aborts with 3701, IF EXISTS is a no-op). */
+  private[patterns] def outOfTempScope(text: String): Boolean = {
+    val msk = UpdateSqlCompiler.masked(text)
+    tempRefRe.findFirstIn(msk).isDefined && {
+      val made = tempCreatorRes
+        .flatMap(_.findAllMatchIn(msk).map(_.group(1).toLowerCase)).toSet
+      (statements(text)._1 match {
+        case List(s) => !IfLadderSqlCompiler.isIf(s)
+        case _ => false
+      }) || tempRefRe.findAllIn(dropTempClauseRe.replaceAllIn(msk, ""))
+        .exists(r => !made(r.toLowerCase))
+    }
+  }
+
+  /** The IF text a statement runs: the statement itself when it is
+    * IF-headed, else the inner text of a literal, parameterized or
+    * constant-concatenated EXEC whose inner text is an IF (one level:
+    * [[ExecLiteralSqlCompiler]] bans EXEC towers). */
+  private def runsIf(stmt: String): Option[String] =
+    if (IfLadderSqlCompiler.isIf(stmt)) Some(stmt)
+    else ExecLiteralSqlCompiler.inner(stmt).map(SqlText.stripComments)
+      .filter(IfLadderSqlCompiler.isIf)
 
   /** Rewrite every `#name` to [[TempPrefix]]`name` (case-folded — T-SQL
     * temp names are case-insensitive), splicing at masked-twin spans so
@@ -269,15 +319,14 @@ object ScriptedSqlExecutor {
   /** `DROP TABLE [IF EXISTS] graft_tmp_x` (post-[[detemp]] spelling) —
     * the early-free statement real temp-table scripts end with. */
   private val dropTempRe =
-    ("(?is)^\\s*drop\\s+table\\s+(?:(if\\s+exists)\\s+)?(" +
-      TempPrefix + "\\w+)\\s*;?\\s*$").r
+    ("(?is)^\\s*" + dropTableHead(TempPrefix + "\\w+") + "\\s*;?\\s*$").r
 
   /** `CREATE TABLE graft_tmp_x (col TYPE [NOT NULL], …)` — the other
     * canonical temp-table creation beside SELECT INTO. Scoped to TEMPS:
     * creating a real warehouse table by DDL stays manual review. */
   private val createTempRe =
-    ("(?is)^\\s*create\\s+table\\s+(" + TempPrefix +
-      "\\w+)\\s*\\((.*)\\)\\s*;?\\s*$").r
+    ("(?is)^\\s*" + createTableHead(TempPrefix + "\\w+") +
+      "\\s*\\((.*)\\)\\s*;?\\s*$").r
 
   /** T-SQL column type → Spark SQL type for the temp-DDL compile and
     * the CONVERT translation ([[SqlText.translateConvert]]); None
@@ -415,7 +464,7 @@ object ScriptedSqlExecutor {
     def raw(body: String) = SqlText.splitBatches(body)
       .flatMap(SqlText.splitStatements)
     // positions are taken over the REGROUPED list — the same list
-    // stmtsOf hands the sequencer (r18: IF blocks in TRY bodies
+    // [[statements]] hands the sequencer (r18: IF blocks in TRY bodies
     // regroup; a SAVE TRAN fragment can only merge into a block when
     // it sits textually INSIDE one, and then saveTranStmtRe no longer
     // matches it → saves.size != 1 → decline, never a misaligned index)
@@ -506,6 +555,22 @@ object ScriptedSqlExecutor {
           savepointSuffixOwned(text, msk, m).isDefined))
   }
 
+  /** A task text's executable statements — GO batches and `;`s split,
+    * IF…BEGIN…END blocks the splitter shredded regrouped into one
+    * statement (their internal `;`s are body separators), BEGIN TRAN/
+    * COMMIT/NOCOUNT dressing dropped — and whether an explicit
+    * transaction bracket was among them. */
+  private[graft] def statements(text: String): (List[String], Boolean) = {
+    val regrouped = IfLadderSqlCompiler.regroup(
+      SqlText.splitBatches(text).flatMap(SqlText.splitStatements))
+    val hadTxn = regrouped.exists(s =>
+      beginTranStmtRe.findFirstMatchIn(s).isDefined ||
+        beginTranPrefixRe.findFirstMatchIn(s).isDefined ||
+        commitStmtRe.findFirstMatchIn(s).isDefined)
+    (regrouped.map(s => beginTranPrefixRe.replaceFirstIn(s, ""))
+      .filterNot(s => txnNoopRe.findFirstMatchIn(s).isDefined), hadTxn)
+  }
+
   /** Parse-only classification twin of the script dispatcher for the
     * migration-mapping ledger / dry run: Some(description) when the
     * text is a multi-statement script using the `#temp` and/or
@@ -517,19 +582,12 @@ object ScriptedSqlExecutor {
     val text = SqlText.stripComments(sqlRaw)
     if (rollbackRe.findFirstIn(UpdateSqlCompiler.masked(text)).isDefined)
       return None
-    val regrouped = IfLadderSqlCompiler.regroup(
-      SqlText.splitBatches(text).flatMap(SqlText.splitStatements))
-    val hadTxn = regrouped.exists(s =>
-      beginTranStmtRe.findFirstMatchIn(s).isDefined ||
-        beginTranPrefixRe.findFirstMatchIn(s).isDefined ||
-        commitStmtRe.findFirstMatchIn(s).isDefined)
-    val stmts = regrouped
-      .map(s => beginTranPrefixRe.replaceFirstIn(s, ""))
-      .filterNot(s => txnNoopRe.findFirstMatchIn(s).isDefined)
+    if (outOfTempScope(text)) return None
+    val (stmts, hadTxn) = statements(text)
     if (stmts.length < 2) return None
     def m(s: String) = UpdateSqlCompiler.masked(s)
-    if (stmts.exists(s => globalTempRe.findFirstIn(m(s)).isDefined) ||
-      stmts.exists(s => otherSysVarRe.findFirstIn(m(s)).isDefined)) return None
+    if (stmts.exists(s => otherSysVarRe.findFirstIn(m(s)).isDefined))
+      return None
     val temp = stmts.exists(hasTempRef)
     val rc = stmts.exists(s => rowcountRe.findFirstIn(m(s)).isDefined)
     val sv = stmts.exists(s =>
@@ -542,19 +600,11 @@ object ScriptedSqlExecutor {
       tableVarDeclRe.findFirstMatchIn(m(s)).isDefined)
     val spOut = stmts.exists(s =>
       ExecLiteralSqlCompiler.ownsOutputShape(s))
-    // IF-scalar statements whose predicate needs the executor's
-    // binding carry @tokens here (shapeMatches declines those at the
-    // statement level) — the sv feature already covers that pairing;
-    // this flag claims the variable-free subquery-comparison form
-    val ifs = stmts.exists(s => IfScalarSqlCompiler.shapeMatches(s))
-    // ladder statements beyond the chain members (q149–q151): multi-
-    // statement branches, conditional assignment, ELSE IF cascades,
-    // the RETURN early-exit (which stays manual review under an
-    // explicit transaction bracket — mirror the executor's gate)
+    // IF ladders — the RETURN early-exit stays manual review under an
+    // explicit transaction bracket (mirror the executor's gate)
     val ladder = stmts.exists(s =>
-      IfLadderSqlCompiler.parse(SqlText.stripComments(s)).exists(l =>
-        !l.chainEquivalent && !(hadTxn && l.hasReturn)))
-    if (!temp && !rc && !sv && !ddl && !tv && !spOut && !ifs && !ladder)
+      IfLadderSqlCompiler.parse(s).exists(l => !(hadTxn && l.hasReturn)))
+    if (!temp && !rc && !sv && !ddl && !tv && !spOut && !ladder)
       None
     else Some(List(
       if (temp) Some("#temp scope (script-lifetime overlay tables)") else None,
@@ -567,8 +617,6 @@ object ScriptedSqlExecutor {
       else None,
       if (spOut) Some("sp_executesql OUTPUT (scalar copy-out write-back)")
       else None,
-      if (ifs) Some("scalar-predicate IF branches (eager driver fold)")
-      else None,
       if (ladder) Some("IF ladders (BEGIN…END branches / ELSE IF " +
         "cascade / conditional assignment / RETURN early-exit / " +
         "RAISERROR guards)")
@@ -576,16 +624,28 @@ object ScriptedSqlExecutor {
       .flatten.mkString(" + "))
   }
 
-  /** Build a task executor over the caller's written-state:
-    * `resolveFrame` maps a table name to its current frame (throwing
-    * for unknown names), `bareName` strips schema/bracket decoration,
-    * `commit` lands a frame into the written state. Statement text must
-    * already be parameter-bound and bracket-translated by the caller. */
+  /** Build a task executor over the caller's written-state: `written`
+    * maps a table name to the frame the caller holds for it (None when
+    * it holds none — the session catalog is consulted next), `bareName`
+    * strips schema/bracket decoration, `commit` lands a frame into the
+    * written state. Statement text must already be parameter-bound and
+    * bracket-translated by the caller. */
   def executor(spark: SparkSession,
-      resolveFrame: String => DataFrame,
+      written: String => Option[DataFrame],
       bareName: String => String,
       commit: (String, DataFrame) => Unit)
       : ExecuteSqlTask => Option[SqlOutcome] = {
+
+    // existence is asked of the catalog, never by analysing a missing
+    // name: a failed analysis reaches every QueryExecutionListener
+    // (Spark's ObservationManager then logs it as an ERROR)
+    def lookup(name: String): Option[DataFrame] = written(name).orElse(
+      if (scala.util.Try(spark.catalog.tableExists(name)).getOrElse(false))
+        Some(spark.table(name))
+      else None)
+    def resolveFrame(name: String): DataFrame =
+      lookup(name).getOrElse(throw new org.apache.spark.sql.AnalysisException(
+        "TABLE_OR_VIEW_NOT_FOUND", Map("relationName" -> s"`$name`")))
 
     def chain(stmt: ExecuteSqlTask,
         resolve: String => DataFrame): Option[SqlOutcome] =
@@ -606,26 +666,16 @@ object ScriptedSqlExecutor {
         // physical-tuning DDL (CREATE/DROP INDEX, UPDATE STATISTICS):
         // zero relational content in a columnar engine — executed no-op
         .orElse(NoopDdlSqlCompiler.rewrite(stmt))
-        // the taken IF-EXISTS branch re-enters this chain (branches are
-        // single statements by contract, so the recursion is one level)
-        .orElse(IfExistsSqlCompiler.rewrite(spark, stmt,
-          s => chain(s, resolve)))
-        // scalar-predicate IF (r17): script @vars arrive literal-bound,
-        // so the predicate folds eagerly — same one-level recursion
-        .orElse(IfScalarSqlCompiler.rewrite(spark, stmt,
-          s => chain(s, resolve)))
         // literal sp_executesql / EXEC('…') unwraps and re-enters (the
-        // compiler bans EXEC towers, so this too is one level)
+        // compiler bans EXEC towers, so this is one level)
         .orElse(ExecLiteralSqlCompiler.rewrite(spark, stmt, resolve,
           s => chain(s, resolve)))
-        // an IF-headed statement EVERY IF owner above declined must not
-        // fall to the order-blind rewriter: its anywhere-matchers would
-        // compile the branch patterns while ignoring the guard (a false
-        // guard would then silently skip — or a true one run — text the
-        // owners refused to state). Manual review, never a half-read.
+        // IFs are the script sequencer's (compileOne's ladder handler):
+        // one reaching here must not fall to the order-blind rewriter,
+        // whose anywhere-matchers would compile the branch patterns
+        // while ignoring the guard. Manual review, never a half-read.
         .orElse {
-          if ("(?is)^\\s*if\\b".r.findFirstIn(UpdateSqlCompiler.masked(
-              SqlText.stripComments(stmt.sqlStatement))).isDefined) None
+          if (IfLadderSqlCompiler.isIf(stmt.sqlStatement)) None
           else SqlPatternRewriter.rewrite(spark, stmt)
         }
 
@@ -670,7 +720,7 @@ object ScriptedSqlExecutor {
         snapshot(bare)
         overlay(bare) = mode match {
           case SaveMode.Append =>
-            scala.util.Try(res(bare)).toOption
+            overlay.get(bare).orElse(lookup(bare))
               .map(_.unionByName(df)).getOrElse(df)
           case _ => df
         }
@@ -767,28 +817,40 @@ object ScriptedSqlExecutor {
         // @@IDENTITY/@@ERROR/@@TRANCOUNT…: state this replay cannot
         // produce — decline the whole script, never substitute garbage
         if (otherSysVarRe.findFirstIn(msk0).isDefined) return None
-        // IF LADDERS (q149–q151): multi-statement BEGIN…END branches,
-        // conditional SET/SELECT-assign legs, ELSE IF cascades, and
-        // the top-level early-exit RETURN leg — the dispatcher-level
-        // promotion of the r17 chain members. HERE the executor's
-        // variable state is in reach: each predicate folds eagerly
-        // through bindVars (an unfoldable predicate — a surviving
-        // @token — declines the whole script, never guesses), and the
-        // first true leg's statements run through this same compileOne
-        // so assignments mutate `vars` and DML stages through the
-        // overlay. This handler parses the RAW text and runs BEFORE
-        // the whole-statement @@ROWCOUNT substitution: a PREDICATE
-        // read substitutes the pre-IF count below, while a read inside
-        // a branch statement substitutes at ITS point in the branch
-        // sequence via the recursion — a branch DML between them must
-        // be visible to the later read, T-SQL point-of-read semantics.
-        // Single-simple IFs keep their r17 chain path (chainEquivalent
-        // — zero behavioral delta for q148/q109), EXCEPT assignment-
-        // shaped branches, which literal binding would silently turn
-        // into a boolean projection.
-        if ("(?is)^\\s*if\\b".r.findFirstIn(msk0).isDefined) {
+        // dynamic SQL whose text is an IF (`EXEC('IF …')`, the
+        // parameterized sp_executesql form): unwrap it — declared @vars
+        // bound first, as the arguments need — and run the inner text
+        // through the IF handler below (one level: no EXEC towers)
+        if (ExecLiteralSqlCompiler.execHeadRe.findFirstIn(msk0).isDefined)
+          runsIf(bindVars(s0)).foreach { in =>
+            // the dynamic batch is its own scope: the caller's @vars
+            // are not visible in it (T-SQL Msg 137), and its RETURN
+            // ends only the dynamic batch — an inner text naming any
+            // @variable or @@read, or carrying a RETURN leg, declines:
+            // never the caller's state, never the caller's batch exit
+            if (UpdateSqlCompiler.masked(in).contains('@') ||
+                IfLadderSqlCompiler.parse(in).forall(_.hasReturn))
+              return None
+            return compileOne(in)
+          }
+        // IF LADDERS — every IF: ELSE IF cascades, BEGIN…END branch
+        // lists, conditional SET/SELECT-assign legs, RAISERROR guards
+        // and the top-level early-exit RETURN leg. Each predicate folds
+        // eagerly through bindVars (an unfoldable predicate — a
+        // surviving @token — declines the whole script, never
+        // guesses), and the first true leg's statements run through
+        // this same compileOne so assignments mutate `vars` and DML
+        // stages through the overlay. This handler parses the RAW text
+        // and runs BEFORE the whole-statement @@ROWCOUNT substitution:
+        // a PREDICATE read substitutes the pre-IF count below, while a
+        // read inside a branch statement substitutes at ITS point in
+        // the branch sequence via the recursion — a branch DML between
+        // them must be visible to the later read, T-SQL point-of-read
+        // semantics. An IF the ladder cannot parse declines.
+        if (IfLadderSqlCompiler.isIf(s0)) {
           IfLadderSqlCompiler.parse(s0) match {
-            case Some(l) if !l.chainEquivalent =>
+            case None => return None
+            case Some(l) =>
               // a RETURN leg under an explicit transaction bracket (or
               // in a TRY body / emitted loop body, where batch exit is
               // not this script's to decide) declines SHAPE-level:
@@ -837,19 +899,17 @@ object ScriptedSqlExecutor {
               taken match {
                 case None =>
                   // untaken with no ELSE: vacuous success; the count is
-                  // not this replay's to state (chain-member parity)
+                  // not this replay's to state
                   lastAffected = None
                   return Some(SqlOutcome(None, None))
                 case Some(IfLadderSqlCompiler.ReturnExit) =>
                   earlyExit = true
                   return Some(SqlOutcome(None, None))
                 case Some(IfLadderSqlCompiler.Raise(args)) =>
-                  // the mid-script validation guard — GuardBlock's
-                  // fired-guard contract verbatim: severity ≥ 11
-                  // aborts the task (T-SQL-catchable, so a TRY/CATCH
-                  // script catches it and ERROR_MESSAGE binds the
-                  // text); ≤ 10 is informational and the batch
-                  // continues
+                  // the validation guard: severity ≥ 11 aborts the
+                  // task (T-SQL-catchable, so a TRY/CATCH script
+                  // catches it and ERROR_MESSAGE binds the text); ≤ 10
+                  // is informational and the batch continues
                   val bound = bindVars(args)
                   if (scalarVarRe.findFirstIn(
                       UpdateSqlCompiler.masked(bound)).isDefined)
@@ -860,11 +920,11 @@ object ScriptedSqlExecutor {
                   if (severity >= 11)
                     throw new IllegalArgumentException(
                       "RAISERROR: " + parts.headOption
-                        .map(GuardBlockSqlCompiler.raiseMsg).getOrElse("")
+                        .map(IfLadderSqlCompiler.raiseMsg).getOrElse("")
                         + s" (severity $severity)")
                   lastAffected = None
                   return Some(SqlOutcome(None, None))
-                case Some(IfLadderSqlCompiler.Stmts(ss, _)) =>
+                case Some(IfLadderSqlCompiler.Stmts(ss)) =>
                   var lastDf: Option[DataFrame] = None
                   ss.foreach { s =>
                     compileOne(s) match {
@@ -886,7 +946,6 @@ object ScriptedSqlExecutor {
                   // wrapper cannot know its frame was the last forced
                   return Some(SqlOutcome(lastDf, None))
               }
-            case _ => () // chain-equivalent or unparseable: r17 paths
           }
         }
         val sRc =
@@ -1148,7 +1207,7 @@ object ScriptedSqlExecutor {
         createTempRe.findFirstMatchIn(UpdateSqlCompiler.masked(s)) match {
           case Some(c) if tempNames(c.group(1).toLowerCase) =>
             val nm = c.group(1).toLowerCase
-            require(scala.util.Try(res(nm)).isFailure,
+            require(!overlay.contains(nm),
               s"CREATE TABLE ${nm}: there is already an object named " +
                 s"'${nm}' (T-SQL error 2714)")
             return emptyFrameFor(spark, s.substring(c.start(2), c.end(2)))
@@ -1271,12 +1330,8 @@ object ScriptedSqlExecutor {
 
     bound => {
       val text = SqlText.stripComments(bound.sqlStatement)
-      // the DECLARE/assign/IF-RAISERROR guard block is a WHOLE-text
-      // shape — it must be recognized before statement splitting would
-      // shred it into unconvertible pieces
-      val guard = GuardBlockSqlCompiler.rewrite(spark,
-        bound.copy(sqlStatement = text), resolveFrame)
-      if (guard.isDefined) guard
+      // temp state never crosses task boundaries
+      if (outOfTempScope(text)) None
       // conditional undo is control flow — manual review, EXCEPT the
       // two owned shapes: a TRY/CATCH whose CATCH leads with a bare
       // ROLLBACK (the all-or-nothing + log idiom — a caught abort
@@ -1305,10 +1360,7 @@ object ScriptedSqlExecutor {
           // the sequencer. RETURN legs still decline here — script()
           // is called without allowEarlyExit, because a batch exit
           // from inside a TRY is not this replay's to arbitrate.
-          def stmtsOf(body: String) = IfLadderSqlCompiler.regroup(
-            SqlText.splitBatches(body).flatMap(SqlText.splitStatements))
-            .map(s => beginTranPrefixRe.replaceFirstIn(s, ""))
-            .filterNot(s => txnNoopRe.findFirstMatchIn(s).isDefined)
+          def stmtsOf(body: String) = statements(body)._1
           val savepoint = savepointSuffixOwned(text, msk, m)
           val ts0 = stmtsOf(tryBody)
           // in the owned savepoint form the SAVE TRAN marker leaves
@@ -1367,23 +1419,12 @@ object ScriptedSqlExecutor {
         case Some(unrolled) => script(bound, unrolled)
         case None =>
         // GO batch separators split exactly like ';' — a batch boundary
-        // is always a statement boundary. IF…BEGIN…END blocks the `;`
-        // splitter shredded regroup back into one statement (q149–
-        // q151: the block's internal `;`s are body separators, not
-        // script boundaries) — non-IF scripts regroup to themselves.
-        val regrouped = IfLadderSqlCompiler.regroup(
-          SqlText.splitBatches(text).flatMap(SqlText.splitStatements))
-        // an explicit transaction bracket anywhere bars the RETURN
-        // early-exit leg: whether staged state commits at the exit
-        // point is the bracket's call, not this replay's (q151 keeps
-        // that decline) — NOCOUNT dressing does not count
-        val hadTxn = regrouped.exists(s =>
-          beginTranStmtRe.findFirstMatchIn(s).isDefined ||
-            beginTranPrefixRe.findFirstMatchIn(s).isDefined ||
-            commitStmtRe.findFirstMatchIn(s).isDefined)
-        val stmts = regrouped
-          .map(s => beginTranPrefixRe.replaceFirstIn(s, ""))
-          .filterNot(s => txnNoopRe.findFirstMatchIn(s).isDefined)
+        // is always a statement boundary; IF…BEGIN…END blocks regroup
+        // (q149–q151). An explicit transaction bracket anywhere bars
+        // the RETURN early-exit leg: whether staged state commits at
+        // the exit point is the bracket's call, not this replay's
+        // (q151 keeps that decline) — NOCOUNT dressing does not count
+        val (stmts, hadTxn) = statements(text)
         // a statement text that DIVERGED from the whole stripped text —
         // by the transaction strip OR by GO-separator splitting — must
         // be what the chain compiles (a trailing lone `GO` would fail
@@ -1395,36 +1436,17 @@ object ScriptedSqlExecutor {
         if (stmts.isEmpty)
           // a script of only BEGIN TRAN/COMMIT/NOCOUNT: vacuous success
           Some(SqlOutcome(None, None))
-        // ##global temps are cross-session state; a #temp OUTSIDE a
-        // script (single statement) was created by some OTHER task this
-        // replay does not model; a lone @@ read has no predecessor; all
-        // other @@vars are unproducible — manual review, never a guess
-        else if (stmts.exists(s =>
-            globalTempRe.findFirstIn(UpdateSqlCompiler.masked(s)).isDefined))
-          None
-        else if (stmts.length == 1) {
-          // a whole-task IF ladder beyond the chain members (the q109
-          // multi-statement IF-EXISTS class, a subquery-comparison
-          // multi-branch, an ELSE IF cascade) routes through the
-          // script overlay, where the ladder handler lives — the chain
-          // would decline it. This runs BEFORE the temp/@@ gates:
-          // branch-scoped #temps detemp inside script() and branch
-          // @@ROWCOUNT reads compose through the sequencer exactly as
-          // the statements would in an unwrapped script
-          if (IfLadderSqlCompiler.ownsBeyondChain(stmts.head))
-            script(bound, stmts, allowEarlyExit = !hadTxn)
-          else {
-            val msk = UpdateSqlCompiler.masked(stmts.head)
-            if (tempRefRe.findFirstIn(msk).isDefined ||
-              "@@".r.findFirstIn(msk).isDefined) None
-            else single(stmts.head)
-          }
+        // one plain statement runs through the chain; a lone @@ read has
+        // no predecessor and every other @@var is unproducible — manual
+        // review, never a guess. An IF (bare or EXEC-wrapped) runs
+        // through the script overlay instead, where the ladder lives.
+        else if (stmts.length == 1 && runsIf(stmts.head).isEmpty) {
+          if (UpdateSqlCompiler.masked(stmts.head).contains("@@")) None
+          else single(stmts.head)
         }
         // a #temp-bearing refresh shape must still run SEQUENTIALLY
         // (the INSERT…SELECT reads a temp an earlier statement creates)
-        else if (stmts.exists(hasTempRef))
-          script(bound, stmts, allowEarlyExit = !hadTxn)
-        else if (isRefreshShape(stmts))
+        else if (!stmts.exists(hasTempRef) && isRefreshShape(stmts))
           single(stmts.mkString(";\n"))
             .orElse(script(bound, stmts, allowEarlyExit = !hadTxn))
         else script(bound, stmts, allowEarlyExit = !hadTxn)

@@ -70,18 +70,14 @@ object WhileLoopSqlCompiler {
       // regroup like everywhere else (r18), then validate PER
       // STATEMENT — an IF-headed statement must be a loop-body-safe
       // ladder (no RETURN, no conditional assignment the driver's
-      // variable model could not see; the chain-ownable single IF the
-      // body always allowed parses as a ladder too); any other
-      // statement keeps the original no-BEGIN/no-WHILE nested-control
-      // decline
+      // variable model could not see); any other statement keeps the
+      // original no-BEGIN/no-WHILE nested-control decline
       val body = graft.patterns.IfLadderSqlCompiler.regroup(
         SqlText.splitStatements(g(3)))
-      def bodyStmtOk(s: String): Boolean = {
-        val sm = UpdateSqlCompiler.masked(s)
-        if ("(?is)^\\s*if\\b".r.findFirstIn(sm).isDefined)
-          IfLadderSqlCompiler.loopBodySafe(s)
-        else "(?i)\\b(begin|while)\\b".r.findFirstIn(sm).isEmpty
-      }
+      def bodyStmtOk(s: String): Boolean =
+        if (IfLadderSqlCompiler.isIf(s)) IfLadderSqlCompiler.loopBodySafe(s)
+        else "(?i)\\b(begin|while)\\b".r
+          .findFirstIn(UpdateSqlCompiler.masked(s)).isEmpty
       if (body.isEmpty || !body.forall(bodyStmtOk)) None
       else Some(Parsed(preamble, g(2), body))
     }

@@ -14,7 +14,7 @@ class IfLadderSpec extends AnyFunSuite {
   private def mkExec(
       written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
     graft.patterns.ScriptedSqlExecutor.executor(spark,
-      resolveFrame = n => written.getOrElse(n, spark.table(n)),
+      written = written.get,
       bareName = identity,
       commit = (k, v) => written(k) = v)
   private def task(sql: String) =
@@ -56,7 +56,7 @@ class IfLadderSpec extends AnyFunSuite {
 
   // ---- parse shapes ---------------------------------------------------
 
-  test("parse: ladders, mixed predicates, chain equivalence, declines") {
+  test("parse: ladders, mixed predicates, RAISERROR blocks, declines") {
     val l1 = IfLadderSqlCompiler.parse(
       "IF @n > 0 BEGIN TRUNCATE TABLE t; INSERT INTO t SELECT 1 AS a; END " +
         "ELSE IF EXISTS (SELECT 1 FROM u) UPDATE t SET a = 0 " +
@@ -66,38 +66,53 @@ class IfLadderSpec extends AnyFunSuite {
     assert(l1.legs(1)._1 ===
       IfLadderSqlCompiler.ExistsPred(false, "SELECT 1 FROM u"))
     assert(l1.legs.head._2 === IfLadderSqlCompiler.Stmts(List(
-      "TRUNCATE TABLE t", "INSERT INTO t SELECT 1 AS a"), hadSemi = true))
+      "TRUNCATE TABLE t", "INSERT INTO t SELECT 1 AS a")))
     assert(l1.otherwise === Some(IfLadderSqlCompiler.Stmts(
       List("SET @s = 'none'"))))
     // a single-statement block whose body carries a `;` (`BEGIN x; END`
-    // — the regrouped spelling) is NOT chain-equivalent: the chain's
-    // single-statement contract declines the internal `;`
-    assert(!IfLadderSqlCompiler.parse(
-      "IF @n > 0 BEGIN DELETE FROM t WHERE v < 1; END").get.chainEquivalent)
-    // fused TRUNCATE+INSERT text (missing `;`) declines in both owners
+    // — the regrouped spelling) is the same one-statement branch
+    assert(IfLadderSqlCompiler.parse(
+      "IF @n > 0 BEGIN DELETE FROM t WHERE v < 1; END").get.legs.head._2 ===
+      IfLadderSqlCompiler.Stmts(List("DELETE FROM t WHERE v < 1")))
+    // fused TRUNCATE+INSERT text (missing `;`) declines
     assert(IfLadderSqlCompiler.parse(
       "IF @n > 0 BEGIN TRUNCATE TABLE t INSERT INTO t SELECT 1; " +
         "UPDATE t SET a = 1; END").isEmpty)
-    assert(!l1.chainEquivalent && !l1.hasReturn)
+    assert(!l1.hasReturn)
     // RETURN as an entire leg
     val l2 = IfLadderSqlCompiler.parse("IF @n = 0 RETURN").get
     assert(l2.legs === List((IfLadderSqlCompiler.ScalarPred("@n = 0"),
       IfLadderSqlCompiler.ReturnExit)) && l2.hasReturn)
-    // the r17 chain shapes stay chain-equivalent (they keep their path)
+    // single-statement legs: plain and assignment-shaped branches
     assert(IfLadderSqlCompiler.parse(
-      "IF @n > 0 UPDATE t SET a = 1 ELSE UPDATE t SET a = 0")
-      .get.chainEquivalent)
+      "IF @n > 0 UPDATE t SET a = 1 ELSE UPDATE t SET a = 0").get ===
+      IfLadderSqlCompiler.Ladder(List((IfLadderSqlCompiler.ScalarPred("@n > 0"),
+        IfLadderSqlCompiler.Stmts(List("UPDATE t SET a = 1")))),
+        Some(IfLadderSqlCompiler.Stmts(List("UPDATE t SET a = 0")))))
     assert(IfLadderSqlCompiler.parse(
-      "IF EXISTS (SELECT 1 FROM u) DELETE FROM t").get.chainEquivalent)
-    // …but assignment-shaped single branches are NOT (binding the
-    // target would silently turn `SELECT @v = 1` into a projection)
-    assert(!IfLadderSqlCompiler.parse(
-      "IF @n > 0 SELECT @v = MAX(a) FROM t").get.chainEquivalent)
-    assert(!IfLadderSqlCompiler.parse(
-      "IF @n > 0 SET @v = 1").get.chainEquivalent)
+      "IF EXISTS (SELECT 1 FROM u) DELETE FROM t").get.legs ===
+      List((IfLadderSqlCompiler.ExistsPred(false, "SELECT 1 FROM u"),
+        IfLadderSqlCompiler.Stmts(List("DELETE FROM t")))))
+    assert(IfLadderSqlCompiler.parse(
+      "IF @n > 0 SELECT @v = MAX(a) FROM t").get.legs.head._2 ===
+      IfLadderSqlCompiler.Stmts(List("SELECT @v = MAX(a) FROM t")))
+    assert(IfLadderSqlCompiler.parse(
+      "IF @n > 0 SET @v = 1").get.legs.head._2 ===
+      IfLadderSqlCompiler.Stmts(List("SET @v = 1")))
+    // a BEGIN…END body that is exactly one RAISERROR call is the guard
+    // leg, with or without the `;` before END; anything beside it in
+    // the block declines
+    for (body <- Seq("RAISERROR('m', 16, 1)", "RAISERROR('m', 16, 1);",
+        " RAISERROR ('m', 16, 1) ; "))
+      assert(IfLadderSqlCompiler.parse(s"IF @n = 0 BEGIN $body END").get.legs ===
+        List((IfLadderSqlCompiler.ScalarPred("@n = 0"),
+          IfLadderSqlCompiler.Raise("'m', 16, 1"))), body)
+    assert(IfLadderSqlCompiler.parse(
+      "IF @n = 0 BEGIN RAISERROR('m', 16, 1); UPDATE t SET a = 1; END").isEmpty)
+    assert(IfLadderSqlCompiler.parse(
+      "IF @n = 0 BEGIN RAISERROR('m', 16, 1 END").isEmpty)
     // compound predicates (r18): an EXISTS tail rides the scalar fold;
-    // an EXISTS-HEADED compound is scalar too — and NOT chain-ownable
-    // (IfExists stops at its close paren, IfScalar declines the head)
+    // an EXISTS-HEADED compound is scalar too
     assert(IfLadderSqlCompiler.parse(
       "IF @n > 0 AND EXISTS (SELECT 1 FROM u) UPDATE t SET a = 1")
       .get.legs.head._1 === IfLadderSqlCompiler.ScalarPred(
@@ -106,9 +121,8 @@ class IfLadderSpec extends AnyFunSuite {
       "IF EXISTS (SELECT 1 FROM u) AND @n > 0 UPDATE t SET a = 1").get
     assert(cmp.legs.head._1 === IfLadderSqlCompiler.ScalarPred(
       "EXISTS (SELECT 1 FROM u) AND @n > 0"))
-    assert(!cmp.chainEquivalent)
     // …while a PURE EXISTS head with a branch right after stays the
-    // LIMIT-1 ExistsPred (and chain-equivalent for plain branches)
+    // LIMIT-1 ExistsPred
     assert(IfLadderSqlCompiler.parse(
       "IF NOT EXISTS (SELECT 1 FROM u) DELETE FROM t").get.legs.head._1
       === IfLadderSqlCompiler.ExistsPred(true, "SELECT 1 FROM u"))
@@ -408,7 +422,7 @@ class IfLadderSpec extends AnyFunSuite {
       w
     }
     // fired guard (severity 16) aborts the task — nothing commits,
-    // GuardBlock's exact message contract
+    // and the message reads `RAISERROR: <text> (severity n)`
     val w1 = fresh()
     val e = intercept[IllegalArgumentException] {
       mkExec(w1)(task(
@@ -444,10 +458,9 @@ class IfLadderSpec extends AnyFunSuite {
     val logs = w3("gl").as[String].collect().toList
     assert(logs.head === "start" && logs(1).contains("guard tripped"))
     // the guard-only script with an ELSE RAISERROR leg (`IF p
-    // RAISERROR(a) ELSE RAISERROR(b)`): GuardBlock's lazy captures
-    // must NOT swallow the ELSE into the args (the review's regex-
-    // backtracking hazard) — the ladder owns it and fires the RIGHT
-    // leg; an N'…' message reports its bare text like T-SQL
+    // RAISERROR(a) ELSE RAISERROR(b)`): the ELSE must not leak into
+    // the first leg's args — the ladder fires the RIGHT leg; an N'…'
+    // message reports its bare text like T-SQL
     val wEl = fresh()
     val eEl = intercept[IllegalArgumentException] {
       mkExec(wEl)(task(
@@ -468,6 +481,168 @@ class IfLadderSpec extends AnyFunSuite {
     }
     assert(e4.getMessage.contains("low count"))
     dropViews("gt", "gl")
+  }
+
+  test("guard block in a DML script: BEGIN…END RAISERROR aborts; TRY catches it") {
+    import spark.implicits._
+    def fresh() = {
+      val w = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame](
+        "gd_t" -> Seq((1L, 5.0)).toDF("id", "v"),
+        "gd_u" -> Seq((1L, 5.0)).toDF("id", "v"),
+        "gd_l" -> Seq.empty[String].toDF("s"))
+      w.foreach { case (k, f) => f.createOrReplaceTempView(k) }
+      w
+    }
+    // both spellings of the block body; the UPDATE before the guard
+    // must not commit
+    for (end <- Seq(" END", "; END")) {
+      val w = fresh()
+      val e = intercept[IllegalArgumentException] {
+        mkExec(w)(task("UPDATE gd_u SET v = 7; DECLARE @n INT; " +
+          "SELECT @n = COUNT(*) FROM gd_t WHERE 1=0; " +
+          s"IF @n = 0 BEGIN RAISERROR('m', 16, 1)$end"))
+      }
+      assert(e.getMessage === "RAISERROR: m (severity 16)")
+      assert(w("gd_u").as[(Long, Double)].collect().toList === List((1L, 5.0)),
+        "nothing may commit")
+    }
+    // inside TRY…CATCH the fired block is caught: the pre-failure
+    // UPDATE stays staged, the statement after the guard never runs,
+    // and ERROR_MESSAGE() binds the guard's text
+    val w = fresh()
+    mkExec(w)(task("BEGIN TRY UPDATE gd_u SET v = 7; DECLARE @n INT; " +
+      "SELECT @n = COUNT(*) FROM gd_t WHERE 1=0; " +
+      "IF @n = 0 BEGIN RAISERROR('m', 16, 1) END; UPDATE gd_u SET v = 9; " +
+      "END TRY BEGIN CATCH INSERT INTO gd_l (s) VALUES (ERROR_MESSAGE()); " +
+      "END CATCH")).getOrElse(fail("TRY-wrapped guard block did not compile"))
+    assert(w("gd_u").as[(Long, Double)].collect().toList === List((1L, 7.0)))
+    assert(w("gd_l").as[String].collect().toList === List("RAISERROR: m (severity 16)"))
+    dropViews("gd_t", "gd_u", "gd_l")
+  }
+
+  test("EXEC-wrapped IFs: literal and parameterized, top level and in-script") {
+    import spark.implicits._
+    def fresh() = {
+      val w = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame](
+        "ex_t" -> Seq((1L, 5.0)).toDF("id", "v"),
+        "ex_u" -> Seq((1L, 5.0)).toDF("id", "v"))
+      w.foreach { case (k, f) => f.createOrReplaceTempView(k) }
+      w
+    }
+    def rows(w: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame],
+        t: String) = w(t).as[(Long, Double)].collect().toList
+    def run(sql: String) = {
+      val w = fresh()
+      val o = mkExec(w)(task(sql)).getOrElse(fail(s"declined: $sql"))
+      (o, w)
+    }
+    // top level: the taken leg commits; untaken with no ELSE is a
+    // vacuous success; the ELSE leg runs when the probe is false
+    val (o1, w1) = run("EXEC('IF EXISTS (SELECT 1 FROM ex_t) DELETE FROM ex_t')")
+    assert(rows(w1, "ex_t") === Nil && o1.df.exists(_.isEmpty))
+    val (o2, w2) = run(
+      "EXEC('IF EXISTS (SELECT 1 FROM ex_t WHERE v > 100) DELETE FROM ex_t')")
+    assert(rows(w2, "ex_t") === List((1L, 5.0)) && o2.df.isEmpty)
+    val (_, w3) = run("EXEC('IF EXISTS (SELECT 1 FROM ex_t WHERE v > 100) " +
+      "DELETE FROM ex_t ELSE UPDATE ex_t SET v = 1')")
+    assert(rows(w3, "ex_t") === List((1L, 1.0)))
+    val (_, w4) = run(
+      "EXEC sp_executesql N'IF @p > 0 DELETE FROM ex_t', N'@p INT', @p = 1")
+    assert(rows(w4, "ex_t") === Nil)
+    val (_, w5) = run(
+      "EXEC sp_executesql N'IF @p > 0 DELETE FROM ex_t', N'@p INT', @p = 0")
+    assert(rows(w5, "ex_t") === List((1L, 5.0)))
+    // in-script: the statement before it commits with the taken leg;
+    // a declared @var reaches the parameterized form's arguments
+    val (_, w6) = run("UPDATE ex_u SET v = 8; " +
+      "EXEC('IF EXISTS (SELECT 1 FROM ex_t) DELETE FROM ex_t')")
+    assert(rows(w6, "ex_t") === Nil && rows(w6, "ex_u") === List((1L, 8.0)))
+    val (_, w7) = run("UPDATE ex_u SET v = 8; " +
+      "EXEC('IF EXISTS (SELECT 1 FROM ex_t WHERE v > 100) DELETE FROM ex_t')")
+    assert(rows(w7, "ex_t") === List((1L, 5.0)) && rows(w7, "ex_u") === List((1L, 8.0)))
+    val (_, w8) = run("DECLARE @n INT = 3; EXEC sp_executesql " +
+      "N'IF @p > 2 DELETE FROM ex_t', N'@p INT', @p = @n")
+    assert(rows(w8, "ex_t") === Nil)
+    val (_, w9) = run("DECLARE @n INT = 1; EXEC sp_executesql " +
+      "N'IF @p > 2 DELETE FROM ex_t', N'@p INT', @p = @n")
+    assert(rows(w9, "ex_t") === List((1L, 5.0)))
+    dropViews("ex_t", "ex_u")
+  }
+
+  test("EXEC-wrapped IFs are their own batch: caller @vars and RETURN decline") {
+    import spark.implicits._
+    // the dynamic batch cannot see the caller's @n (T-SQL Msg 137) nor
+    // assign the caller's @v, and its RETURN would end only the dynamic
+    // batch — binding or exiting the caller's scope would diverge
+    for (sql <- Seq(
+      "DECLARE @n INT = 5; EXEC('IF @n > 0 DELETE FROM ex_t')",
+      "DECLARE @v INT = 0; EXEC('IF 1 = 1 SET @v = 1'); " +
+        "UPDATE ex_t SET v = @v",
+      "EXEC('IF 1 = 1 RETURN'); DELETE FROM ex_t",
+      "UPDATE ex_t SET v = 1; EXEC('IF @@ROWCOUNT > 0 DELETE FROM ex_t')",
+      "EXEC('IF 1 = 1 RETURN')")) {
+      val w = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame](
+        "ex_t" -> Seq((1L, 5.0)).toDF("id", "v"))
+      w.foreach { case (k, f) => f.createOrReplaceTempView(k) }
+      assert(mkExec(w)(task(sql)).isEmpty, s"should decline: $sql")
+      assert(w("ex_t").as[(Long, Double)].collect().toList === List((1L, 5.0)),
+        s"declined task committed: $sql")
+    }
+    dropViews("ex_t")
+  }
+
+  test("a task reading a #temp none of its statements creates declines") {
+    import spark.implicits._
+    def fresh() = {
+      val w = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame](
+        "ft_t" -> Seq((1L, 5.0)).toDF("id", "v"),
+        "ft_u" -> Seq((1L, 5.0)).toDF("id", "v"))
+      w.foreach { case (k, f) => f.createOrReplaceTempView(k) }
+      w
+    }
+    // a one-statement ladder, a two-statement script, a one-statement
+    // IF and a plain statement: each reads #stage, which another task
+    // on the connection would have to have created
+    for (sql <- Seq(
+      "IF EXISTS (SELECT 1 FROM ft_t) BEGIN INSERT INTO ft_u SELECT * " +
+        "FROM #stage; DELETE FROM ft_t; END",
+      "INSERT INTO ft_u SELECT * FROM #stage; DELETE FROM ft_t",
+      "IF EXISTS (SELECT 1 FROM ft_t) INSERT INTO ft_u SELECT * FROM #stage",
+      "INSERT INTO ft_u SELECT * FROM #stage",
+      "INSERT INTO ft_u SELECT * FROM ##shared; DELETE FROM ft_t")) {
+      val w = fresh()
+      assert(mkExec(w)(task(sql)).isEmpty, s"should decline: $sql")
+      assert(w("ft_t").count() === 1L && w("ft_u").count() === 1L)
+    }
+    // each creator makes the temp the task's own: SELECT INTO, CREATE
+    // TABLE, the INSERT…VALUES bootstrap
+    for (sql <- Seq(
+      "SELECT * INTO #s FROM ft_t; INSERT INTO ft_u SELECT * FROM #s",
+      "CREATE TABLE #s (id BIGINT, v FLOAT); INSERT INTO #s (id, v) " +
+        "VALUES (2, 1.0); INSERT INTO ft_u SELECT * FROM #S",
+      "INSERT INTO #s (id, v) VALUES (2, 1.0); INSERT INTO ft_u SELECT * FROM #s")) {
+      val w = fresh()
+      assert(mkExec(w)(task(sql)).nonEmpty, s"should run: $sql")
+      assert(w("ft_u").count() === 2L, sql)
+      assert(w.keySet === Set("ft_t", "ft_u"), "a temp never commits")
+    }
+    dropViews("ft_t", "ft_u")
+  }
+
+  test("no listener failure from existence probes: append to a new table, create a #temp") {
+    import spark.implicits._
+    val w = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame](
+      "lp_src" -> Seq((1L, 5.0)).toDF("id", "v"))
+    w.foreach { case (k, f) => f.createOrReplaceTempView(k) }
+    val (out, failures) = SparkTestSession.failuresIn {
+      mkExec(w)(task("INSERT INTO lp_new SELECT * FROM lp_src; " +
+        "CREATE TABLE #t (id BIGINT); INSERT INTO #t VALUES (2); " +
+        "INSERT INTO lp_new SELECT id, 1.0 AS v FROM #t"))
+    }
+    assert(out.nonEmpty)
+    assert(w("lp_new").as[(Long, Double)].collect().toSet === Set((1L, 5.0), (2L, 1.0)))
+    assert(failures === 0, "an existence probe analysed a missing name")
+    dropViews("lp_src")
   }
 
   // ---- invariant: the IF-EXISTS probe sees STAGED state ---------------
@@ -493,11 +668,13 @@ class IfLadderSpec extends AnyFunSuite {
 
   // ---- ledger twins ----------------------------------------------------
 
-  test("ledger twins: ownsBeyondChain / ownsWholeText / scriptFeatures") {
-    assert(IfLadderSqlCompiler.ownsBeyondChain(
-      "IF @n > 0 BEGIN TRUNCATE TABLE t; INSERT INTO t SELECT 1; END"))
-    assert(!IfLadderSqlCompiler.ownsBeyondChain(
-      "IF @n > 0 UPDATE t SET a = 1")) // chain-equivalent stays chain
+  test("ledger twins: ownsWholeText / scriptFeatures") {
+    // a one-statement IF with no @tokens owns whole-text, single-leg
+    // plain branches included; an unbindable @predicate does not
+    assert(IfLadderSqlCompiler.ownsWholeText(
+      "IF EXISTS (SELECT 1 FROM u) DELETE FROM t"))
+    assert(!IfLadderSqlCompiler.ownsWholeText(
+      "IF @n > 0 UPDATE t SET a = 1"))
     assert(IfLadderSqlCompiler.ownsWholeText(
       "IF (SELECT COUNT(*) FROM t) > 0 BEGIN TRUNCATE TABLE u; " +
         "INSERT INTO u SELECT * FROM t; END"))
@@ -509,5 +686,30 @@ class IfLadderSpec extends AnyFunSuite {
     assert(graft.patterns.ScriptedSqlExecutor.scriptFeatures(
       "BEGIN TRAN; DECLARE @n INT = 0; IF @n = 0 RETURN; " +
         "INSERT INTO t SELECT 1 AS a; COMMIT").isEmpty)
+    // a #temp the task does not create is another task's: the executor
+    // declines, so neither twin claims the task
+    assert(!IfLadderSqlCompiler.ownsWholeText(
+      "IF EXISTS (SELECT 1 FROM u) INSERT INTO t SELECT * FROM #stage"))
+    assert(graft.patterns.ScriptedSqlExecutor.scriptFeatures(
+      "INSERT INTO t SELECT * FROM #stage; DELETE FROM u").isEmpty)
+    assert(graft.patterns.ScriptedSqlExecutor.scriptFeatures(
+      "SELECT * INTO #stage FROM u; INSERT INTO t SELECT * FROM #stage")
+      .exists(_.contains("#temp scope")))
+  }
+
+  test("ledger note: only a RAISERROR ladder leg claims the guard executes") {
+    def note(sql: String) = graft.parser.MigrationMapping.mapTask(
+      graft.ir.Ir.ExecuteSqlTask("g", None, "conn", sql), Nil).strategy.get
+    assert(note("DECLARE @n INT; SELECT @n = COUNT(*) FROM t; " +
+      "IF @n = 0 BEGIN RAISERROR('m', 16, 1) END").contains("guard executes"))
+    // a CATCH re-raise is no ladder leg; neither is RAISERROR text in a
+    // literal — the ValidationSuite wording stays
+    for (sql <- Seq(
+      "BEGIN TRY DELETE FROM t END TRY BEGIN CATCH " +
+        "RAISERROR('failed', 16, 1) END CATCH",
+      "INSERT INTO log (msg) VALUES ('RAISERROR skipped')")) {
+      assert(note(sql).contains("validation aggregate guard"), sql)
+      assert(!note(sql).contains("executes"), sql)
+    }
   }
 }

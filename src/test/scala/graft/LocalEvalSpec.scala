@@ -16,7 +16,7 @@ class LocalEvalSpec extends AnyFunSuite {
 
   private def mkExec(written: scala.collection.mutable.Map[String, DataFrame]) =
     ScriptedSqlExecutor.executor(spark,
-      resolveFrame = n => written.getOrElse(n, spark.table(n)),
+      written = written.get,
       bareName = identity,
       commit = (k, v) => written(k) = v)
   private def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("le", None, "conn", sql)

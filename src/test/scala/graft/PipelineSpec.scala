@@ -903,7 +903,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("so", None, "conn", sql)
@@ -931,7 +931,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("sv", None, "conn", sql)
@@ -1083,13 +1083,17 @@ class PipelineSpec extends AnyFunSuite {
       plan.contains("LeftAnti"), s"join-delete must be one anti join:\n$plan")
   }
 
-  test("GuardBlockSqlCompiler: pre-ETL guard executes; trips fail; off-shape None") {
+  test("pre-ETL guard block: executes through the script executor; trips fail") {
     import spark.implicits._
     Seq((1L, 5.0), (2L, -3.0)).toDF("id", "v").createOrReplaceTempView("gb_dim")
     spark.emptyDataFrame.createOrReplaceTempView("gb_unused")
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("g", None, "conn", sql)
-    def run(sql: String) = graft.patterns.GuardBlockSqlCompiler
-      .rewrite(spark, task(sql), _ => sys.error("no resolve"))
+    var w = scala.collection.mutable.Map.empty[String, org.apache.spark.sql.DataFrame]
+    def run(sql: String) = {
+      w = scala.collection.mutable.Map("gb_dim" -> spark.table("gb_dim"))
+      graft.patterns.ScriptedSqlExecutor.executor(spark, written = w.get,
+        bareName = identity, commit = (k, v) => w(k) = v)(task(sql))
+    }
     // passing guard: success outcome, nothing written
     val ok = run(
       "DECLARE @A INT, @B INT;" +
@@ -1103,7 +1107,7 @@ class PipelineSpec extends AnyFunSuite {
         "SELECT @A = COUNT(*) FROM gb_dim WHERE v > 100;" +
         "IF @A = 0 RAISERROR('no big rows', 16, 1);")
     }
-    assert(err.getMessage.contains("no big rows"))
+    assert(err.getMessage === "RAISERROR: no big rows (severity 16)")
     // severity <= 10 is informational in T-SQL: the guard passes
     assert(run("DECLARE @A INT;" +
       "SELECT @A = COUNT(*) FROM gb_dim WHERE v > 100;" +
@@ -1113,22 +1117,36 @@ class PipelineSpec extends AnyFunSuite {
     assert(run("DECLARE @A INT, @B INT;" +
       "SELECT @A = COUNT(*) FROM gb_dim;" +
       "IF @B > 0 RAISERROR('null fired', 16, 1);").nonEmpty)
-    // off-shape declines: an undeclared variable, a foreign statement
-    // in the block, no guard, no assign
+    // an undeclared variable declines the whole task
     assert(run("DECLARE @A INT;" +
       "SELECT @A = COUNT(*) FROM gb_dim;" +
       "IF @Z = 0 RAISERROR('x', 16, 1);").isEmpty)
+    // a foreign statement in the block is one more script statement:
+    // the passing guard lets the DELETE commit, a tripped one aborts
+    // the task before anything commits
     assert(run("DECLARE @A INT;" +
       "SELECT @A = COUNT(*) FROM gb_dim;" +
       "DELETE FROM gb_dim;" +
-      "IF @A = 0 RAISERROR('x', 16, 1);").isEmpty)
-    assert(run("DECLARE @A INT; SELECT @A = COUNT(*) FROM gb_dim;").isEmpty)
-    assert(run("IF 1 = 0 RAISERROR('x', 16, 1);").isEmpty)
+      "IF @A = 0 RAISERROR('x', 16, 1);").nonEmpty)
+    assert(w("gb_dim").count() === 0L)
+    intercept[IllegalArgumentException] {
+      run("DECLARE @A INT;" +
+        "SELECT @A = COUNT(*) FROM gb_dim WHERE v > 100;" +
+        "DELETE FROM gb_dim WHERE id = 2;" +
+        "IF @A = 0 RAISERROR('x', 16, 1);")
+    }
+    assert(w("gb_dim").count() === 2L, "a tripped guard commits nothing")
+    // no guard, or no assign: plain scripts that run
+    assert(run("DECLARE @A INT; SELECT @A = COUNT(*) FROM gb_dim;").nonEmpty)
+    assert(run("IF 1 = 0 RAISERROR('x', 16, 1);").nonEmpty)
     // BEGIN ... END wrapper around the RAISERROR is equally canonical;
     // a ';' inside the block orphans the END into its own fragment
     assert(run("DECLARE @A INT;" +
       "SELECT @A = COUNT(*) FROM gb_dim;" +
       "IF @A = 0 BEGIN RAISERROR('x', 16, 1) END").nonEmpty)
+    assert(run("DECLARE @A INT;" +
+      "SELECT @A = COUNT(*) FROM gb_dim;" +
+      "IF @A = 0 BEGIN RAISERROR('x', 16, 1); END").nonEmpty)
     // a DATE-valued guard variable binds as a DATE literal, so a
     // staleness guard actually FIRES (a toString splice evaluates the
     // date as integer arithmetic and the guard silently never trips)
@@ -1140,9 +1158,6 @@ class PipelineSpec extends AnyFunSuite {
         "IF @maxd < '2030-01-01' RAISERROR('stale feed', 16, 1);")
     }
     assert(derr.getMessage.contains("stale feed"))
-    assert(run("DECLARE @A INT;" +
-      "SELECT @A = COUNT(*) FROM gb_dim;" +
-      "IF @A = 0 BEGIN RAISERROR('x', 16, 1); END").nonEmpty)
     // chained assignment: a later SELECT @B = @A + 1 sees @A's value
     val chained = intercept[IllegalArgumentException] {
       run("DECLARE @A INT, @B INT;" +
@@ -1157,7 +1172,6 @@ class PipelineSpec extends AnyFunSuite {
       "SELECT @A = @Missing + 1;" +
       "IF @A = 0 RAISERROR('x', 16, 1);").isEmpty)
     // the reference SalesFactETL block shape (three assigns, OR chain)
-    // is exactly the accepted class
     Seq((1L, 1)).toDF("k", "IsCurrent").createOrReplaceTempView("gb_c")
     Seq((1L, 1)).toDF("k", "IsActive").createOrReplaceTempView("gb_p")
     Seq(Tuple1(1L)).toDF("k").createOrReplaceTempView("gb_d")
@@ -1391,7 +1405,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("s", None, "conn", sql)
@@ -1474,7 +1488,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("s", None, "conn", sql)
@@ -1559,7 +1573,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("s", None, "conn", sql)
@@ -1616,7 +1630,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("s", None, "conn", sql)
@@ -1689,11 +1703,11 @@ class PipelineSpec extends AnyFunSuite {
       List("2024-01-01", "2024-01-08", "2024-01-15", "2024-01-22"))
   }
 
-  test("IfExistsSqlCompiler: the probe decides, untaken branches stay ownable") {
+  test("IF EXISTS: the probe decides, untaken branches stay ownable") {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("s", None, "conn", sql)
@@ -1772,7 +1786,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("s", None, "conn", sql)
@@ -1834,7 +1848,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("s", None, "conn", sql)
@@ -1865,7 +1879,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("s", None, "conn", sql)
@@ -1908,7 +1922,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("s", None, "conn", sql)
@@ -1929,7 +1943,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("s", None, "conn", sql)
@@ -1990,7 +2004,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("cur", None, "conn", sql)
@@ -2254,7 +2268,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("bp", None, "conn", sql)
@@ -2347,7 +2361,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("alt", None, "conn", sql)
@@ -2486,7 +2500,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("ifs", None, "conn", sql)
@@ -2536,8 +2550,7 @@ class PipelineSpec extends AnyFunSuite {
       "IF (SELECT COUNT(*) FROM ift WHERE tag = 'B') > 1 " +
         "BEGIN UPDATE ift SET v = 0 WHERE tag = 'B' END"))
       .getOrElse(fail("subquery-predicate IF did not compile"))
-    // single statement: the RUNNER commits the outcome frame
-    assert(o5.target.contains("ift") &&
+    assert(w5("ift").filter("v = 0").count() === 2L &&
       o5.df.get.filter("v = 0").count() === 2L)
     // …@@ROWCOUNT composes: the substitution runs before the chain
     val w6 = fresh()
@@ -2598,7 +2611,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("pe", None, "conn", sql)
@@ -2886,7 +2899,7 @@ class PipelineSpec extends AnyFunSuite {
       "EXEC sp_executesql N'a' + 'b', N'@p INT', @p = 1").isEmpty)
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("cd", None, "conn", sql)
@@ -2953,7 +2966,7 @@ class PipelineSpec extends AnyFunSuite {
         ("4-NOT SPECIFIED", 7.0)).toDF("prio", "amt"))
     w.foreach { case (k, f) => f.createOrReplaceTempView(k) }
     val exec = graft.patterns.ScriptedSqlExecutor.executor(spark,
-      resolveFrame = n => w.getOrElse(n, spark.table(n)),
+      written = w.get,
       bareName = identity,
       commit = (k, v) => w(k) = v)
     exec(graft.ir.Ir.ExecuteSqlTask("dp", None, "conn",
@@ -2975,7 +2988,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("pi", None, "conn", sql)
@@ -3649,7 +3662,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     val w = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame](
@@ -3670,7 +3683,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("rb", None, "conn", sql)
@@ -3763,7 +3776,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("sp", None, "conn", sql)
@@ -3843,7 +3856,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def mkExec(written: scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]) =
       graft.patterns.ScriptedSqlExecutor.executor(spark,
-        resolveFrame = n => written.getOrElse(n, spark.table(n)),
+        written = written.get,
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("tv", None, "conn", sql)

@@ -53,21 +53,23 @@ object SparkTestSession {
     (out, startedGroups.toArray.count(_ == group))
   }
 
-  // the output columns of every query execution that ended, in order
+  // the output columns of every query execution that ended, in order;
+  // a failed one is recorded as Failed (its plan may not even analyse)
+  private val Failed = Seq("<failed>")
   private val endedQueries = new ConcurrentLinkedQueue[Seq[String]]()
   private lazy val queryListener: Unit = get.listenerManager.register(
     new QueryExecutionListener {
-      private def seen(qe: QueryExecution): Unit =
-        endedQueries.add(qe.analyzed.output.map(_.name))
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(qe)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        endedQueries.add(qe.analyzed.output.map(_.name)): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        endedQueries.add(Failed): Unit
     })
 
-  /** Run `f` and count the query executions (actions) it made, as a
+  /** The query executions that ended while `f` ran, as a
     * `QueryExecutionListener` sees them. A marker query before and after
-    * `f` flushes the listener bus, as in [[jobsIn]]; the count assumes
+    * `f` flushes the listener bus, as in [[jobsIn]]; this assumes
     * nothing else runs queries on this session meanwhile. */
-  def queriesIn[A](f: => A): (A, Int) = {
+  private def endedIn[A](f: => A): (A, Seq[Seq[String]]) = {
     queryListener
     def flush(): Int = {
       val marker = s"graft_query_marker_${groupSeq.incrementAndGet()}"
@@ -80,6 +82,21 @@ object SparkTestSession {
     }
     val before = flush()
     val out = f
-    (out, flush() - before - 1)
+    val after = flush()
+    (out, endedQueries.toArray.slice(before + 1, after).toSeq
+      .map(_.asInstanceOf[Seq[String]]))
+  }
+
+  /** Run `f` and count the query executions (actions) it made. */
+  def queriesIn[A](f: => A): (A, Int) = {
+    val (out, ended) = endedIn(f)
+    (out, ended.size)
+  }
+
+  /** Run `f` and count the query executions that FAILED while it ran
+    * (a failed analysis counts: Spark posts it to every listener). */
+  def failuresIn[A](f: => A): (A, Int) = {
+    val (out, ended) = endedIn(f)
+    (out, ended.count(_ == Failed))
   }
 }

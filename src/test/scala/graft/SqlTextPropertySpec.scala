@@ -240,7 +240,7 @@ class SqlTextPropertySpec extends AnyFunSuite {
       assert(g.length === 1, s"shredded block failed to rejoin: $payload")
       val l = IfLadderSqlCompiler.parse(g.head)
       assert(l.exists(_.legs.head._2 match {
-        case IfLadderSqlCompiler.Stmts(ss, _) => ss.length == 2
+        case IfLadderSqlCompiler.Stmts(ss) => ss.length == 2
         case _ => false
       }), s"block body mis-parsed for payload: $payload")
     }
@@ -267,6 +267,35 @@ class SqlTextPropertySpec extends AnyFunSuite {
             s"predicate slice corrupted for payload: $payload")
         case None => fail(s"ladder failed to parse on literal payload: $payload")
       }
+    }
+  }
+  test("IfLadder parse: keywords and `;` in literals and [bracketed] identifiers never change the legs") {
+    // the soup generator above plus the block/ladder keywords; a
+    // literal escapes its quotes, an identifier drops them (a quote
+    // inside brackets is outside what the literal masker models) and
+    // escapes `]` as `]]`
+    val hostile: Gen[String] = Gen.listOfN(6, Gen.oneOf(genPiece,
+      Gen.oneOf("IF", "else", "BEGIN", "end", "RAISERROR(", "raiserror",
+        ";", "exists (", "case", "return", "]", "[")))
+      .map(_.mkString(" "))
+    forAll(Gen.zip(hostile, hostile)) { case (litRaw, brRaw) =>
+      val lit = litRaw.replace("'", "''")
+      val br = brRaw.replace("'", "").replace("]", "]]")
+      val text = s"IF @s = '$lit' AND [$br] = 1 BEGIN UPDATE t SET [$br] = " +
+        s"'$lit'; DELETE FROM t WHERE c = '$lit'; END " +
+        s"ELSE IF EXISTS (SELECT 1 FROM u WHERE [$br] = '$lit') " +
+        s"BEGIN RAISERROR('$lit', 16, 1); END " +
+        s"ELSE IF @n > 1 RAISERROR('$lit', 10, 1) " +
+        s"ELSE UPDATE t SET c = '$lit'"
+      import IfLadderSqlCompiler._
+      assert(parse(text) === Some(Ladder(List(
+        (ScalarPred(s"@s = '$lit' AND [$br] = 1"), Stmts(List(
+          s"UPDATE t SET [$br] = '$lit'", s"DELETE FROM t WHERE c = '$lit'"))),
+        (ExistsPred(false, s"SELECT 1 FROM u WHERE [$br] = '$lit'"),
+          Raise(s"'$lit', 16, 1")),
+        (ScalarPred("@n > 1"), Raise(s"'$lit', 10, 1"))),
+        Some(Stmts(List(s"UPDATE t SET c = '$lit'"))))),
+        s"legs changed for literal <$lit> / identifier [$br]")
     }
   }
 }
