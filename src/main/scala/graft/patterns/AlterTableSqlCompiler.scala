@@ -68,7 +68,7 @@ object AlterTableSqlCompiler {
   /** Parse-only classification twin (no frames touched). */
   private[graft] def shapeMatches(sqlRaw: String): Boolean = {
     val sql = SqlText.stripComments(sqlRaw)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     dropRe.findFirstMatchIn(msk).isDefined ||
       addRe.findFirstMatchIn(msk).exists(m =>
         ScriptedSqlExecutor.sparkDdlType(
@@ -81,7 +81,7 @@ object AlterTableSqlCompiler {
   def rewrite(spark: SparkSession, task: ExecuteSqlTask,
       resolve: String => DataFrame): Option[SqlOutcome] = {
     val sql = SqlText.stripComments(task.sqlStatement)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     dropRe.findFirstMatchIn(msk).map { m =>
       def g(i: Int): String = sql.substring(m.start(i), m.end(i))
       val (tgtName, colName) = (g(1), g(2))

@@ -59,34 +59,12 @@ object ApplySql {
   private val bodyKeywordRe =
     "(?i)\\b(select|insert|update|delete|merge|join|union|group|having)\\b".r
 
-  /** Split a predicate on top-level `AND` (outside parens and string
-    * literals). Scans the literal-masked twin for positions, cuts the
-    * ORIGINAL text. */
-  private def splitTopAnd(raw: String): List[String] = {
-    val msk = UpdateSqlCompiler.masked(raw)
-    val depth = new Array[Int](msk.length + 1)
-    var d = 0
-    var i = 0
-    while (i < msk.length) {
-      if (msk.charAt(i) == '(') d += 1
-      else if (msk.charAt(i) == ')') d -= 1
-      depth(i + 1) = d
-      i += 1
-    }
-    val cuts = "(?i)\\band\\b".r.findAllMatchIn(msk)
-      .filter(m => depth(m.start) == 0).map(m => (m.start, m.end)).toList
-    val bounds = (0, 0) :: cuts ::: List((raw.length, raw.length))
-    bounds.sliding(2).map { case List((_, from), (to, _)) =>
-      raw.substring(from, to).trim
-    }.toList.filter(_.nonEmpty)
-  }
-
   /** `None` — no APPLY in the text, use it as-is. `Some(Right(t))` —
     * canonical, `t` is the translated SQL. `Some(Left(reason))` — an
     * APPLY is present but off-shape: the CALLER must decline the task
     * (compiling the raw text would hand Spark syntax it cannot parse). */
   def translate(select: String): Option[Either[String, String]] = {
-    val msk = UpdateSqlCompiler.masked(select)
+    val msk = SqlLex.mask(select)
     if (applyKwRe.findFirstIn(msk).isEmpty) None
     else Some(doTranslate(select, msk))
   }
@@ -99,9 +77,10 @@ object ApplySql {
     val (aTbl, aA, dir) =
       (sql.substring(m.start(1), m.end(1)), sql.substring(m.start(2), m.end(2)),
         msk.substring(m.start(3), m.end(3)).toLowerCase)
-    val (bodyRaw, after) = MergeSqlCompiler.balanced(sql, m.end).getOrElse(
-      return Left("unbalanced APPLY body"))
-    val bodyMsk = UpdateSqlCompiler.masked(bodyRaw)
+    val close = SqlLex.close(msk, m.end)
+    if (close < 0) return Left("unbalanced APPLY body")
+    val (bodyRaw, after) = (sql.substring(m.end, close), close + 1)
+    val bodyMsk = msk.substring(m.end, close)
     val bm = bodyRe.findFirstMatchIn(bodyMsk).getOrElse(
       return Left("APPLY body is not SELECT TOP n … FROM <one table> " +
         "<alias> WHERE … ORDER BY …"))
@@ -116,12 +95,13 @@ object ApplySql {
     val q = java.util.regex.Pattern.quote _
     val outerRef = ("(?i)\\b" + q(aA) + "\\.").r
     def refsOuter(s: String): Boolean =
-      outerRef.findFirstIn(UpdateSqlCompiler.masked(s)).isDefined
+      outerRef.findFirstIn(SqlLex.mask(s)).isDefined
     // classify WHERE conjuncts: correlated equalities become join keys,
     // b-local predicates stay inside the derived table
     val corr = List.newBuilder[(String, String)] // (bCol, aCol)
     val locals = List.newBuilder[String]
-    splitTopAnd(whereB).foreach { c =>
+    // conjuncts: split on top-level AND (outside parens and literals)
+    SqlLex.splitTop(whereB, "(?i)\\band\\b".r).foreach { c =>
       if (!refsOuter(c)) locals += c
       else c match {
         case eqRe(la, lc, ra, rc)
@@ -145,7 +125,7 @@ object ApplySql {
       return Left("APPLY clause bodies must stay expression-only")
     // the outer select list may not be * / x.* — they would leak the
     // synthetic rank/key columns into the output
-    val head = UpdateSqlCompiler.masked(sql.substring(0, m.start))
+    val head = SqlLex.mask(sql.substring(0, m.start))
     if (("(?i)(?:^|[\\s,(])\\*".r.findFirstIn(head).isDefined) ||
       ("(?i)\\b" + q(xA) + "\\s*\\.\\s*\\*").r.findFirstIn(head).isDefined)
       return Left("star select with APPLY would leak synthetic columns")

@@ -148,7 +148,7 @@ object BatchedDmlLoopSqlCompiler {
     * set-based fixpoint, or None (manual review). */
   private[graft] def rewriteToStatement(textRaw: String): Option[String] = {
     val text = SqlText.stripComments(textRaw)
-    val msk = UpdateSqlCompiler.masked(text)
+    val msk = SqlLex.mask(text)
     deleteLoopRe.findFirstMatchIn(msk).flatMap { m =>
       def g(i: Int) = text.substring(m.start(i), m.end(i))
       val (tgt, where) = (g(1), g(2))
@@ -166,8 +166,8 @@ object BatchedDmlLoopSqlCompiler {
         else {
           // every rhs a literal, checked on the MASKED item (string
           // content cannot fake a literal shape)
-          val items = MergeSqlCompiler.splitTop(sets)
-          val itemsMsk = MergeSqlCompiler.splitTop(setsMsk)
+          val items = SqlLex.splitTop(sets)
+          val itemsMsk = SqlLex.splitTop(setsMsk)
           val parsed = items.zip(itemsMsk).map { case (it, itM) =>
             val i = itM.indexOf('=')
             if (i <= 0) None

@@ -163,12 +163,9 @@ object CursorLoopSqlCompiler {
   /** Substitute `@var` → `__s.__gc<i>` at masked spans (literal text
     * containing an @token is data, not a reference). */
   private def substVars(s: String, idx: Map[String, Int]): String =
-    MergeSqlCompiler.segments(s).map {
-      case (seg, true) => seg
-      case (seg, false) => scalarVarRe.replaceAllIn(seg, m =>
-        idx.get(m.group(1).toLowerCase)
-          .map(i => s"__s.__gc$i").getOrElse(m.matched))
-    }.mkString
+    SqlLex.mapCode(s)(scalarVarRe.replaceAllIn(_, m =>
+      idx.get(m.group(1).toLowerCase)
+        .map(i => s"__s.__gc$i").getOrElse(m.matched)))
 
   /** A WHERE that is a pure conjunction of `col = @var` / `@var = col`
     * terms — the self-row shape where a default dynamic cursor and the
@@ -184,10 +181,10 @@ object CursorLoopSqlCompiler {
   /** Strip a top-level trailing `AS alias` / bare `ident alias` from a
     * select item — the rewrite re-aliases every item positionally. */
   private def stripAlias(item: String): String = {
-    val msk = UpdateSqlCompiler.masked(item)
+    val msk = SqlLex.mask(item)
     val asRe = "(?is)^(.+?)\\s+as\\s+(\\w+)\\s*$".r
     asRe.findFirstMatchIn(msk) match {
-      case Some(m) if WindowSqlLowering.depthAt(msk, m.end(1)) == 0 =>
+      case Some(m) if SqlLex.depths(msk)(m.end(1)) == 0 =>
         item.substring(0, m.end(1)).trim
       case _ =>
         val bareRe = "(?is)^([\\w.\\[\\]]+)\\s+(\\w+)\\s*$".r
@@ -200,7 +197,7 @@ object CursorLoopSqlCompiler {
     * equivalent two-statement #temp script, or None (manual review). */
   private[graft] def rewriteToScript(textRaw: String): Option[List[String]] = {
     val text = SqlText.stripComments(textRaw)
-    val msk = UpdateSqlCompiler.masked(text)
+    val msk = SqlLex.mask(text)
     val declM = cursorDeclRe.findAllMatchIn(msk).toList match {
       case one :: Nil => one
       case _ => return None // no cursor, or a second/nested cursor
@@ -213,7 +210,7 @@ object CursorLoopSqlCompiler {
     val preStmts = SqlText.splitStatements(text.substring(0, declM.start))
     if (!preStmts.forall(s => varDeclStmtRe.pattern.matcher(s).matches))
       return None
-    val preNames = preStmts.flatMap(s => MergeSqlCompiler.splitTop(
+    val preNames = preStmts.flatMap(s => SqlLex.splitTop(
         s.replaceFirst("(?is)^declare\\s+", ""))
       .map(i => varNameRe.findFirstMatchIn(i).map(_.group(1).toLowerCase)))
     if (preNames.exists(_.isEmpty)) return None
@@ -232,13 +229,13 @@ object CursorLoopSqlCompiler {
     // before any parsing (it is not Spark SQL either)
     val select = {
       val s0 = selStmts.head
-      val m0 = UpdateSqlCompiler.masked(s0)
+      val m0 = SqlLex.mask(s0)
       ("(?is)\\bfor\\s+update(?:\\s+of\\s+[\\w.,\\s\\[\\]]+?)?\\s*;?\\s*$").r
         .findFirstMatchIn(m0)
-        .filter(m => WindowSqlLowering.depthAt(m0, m.start) == 0)
+        .filter(m => SqlLex.depths(m0)(m.start) == 0)
         .map(m => s0.substring(0, m.start).trim).getOrElse(s0)
     }
-    val selMsk = UpdateSqlCompiler.masked(select)
+    val selMsk = SqlLex.mask(select)
     // the cursor SELECT must be variable-free: the rewrite drops the
     // preamble DECLAREs, so a @reference here would reach the emitted
     // script unbound — ScriptedSqlExecutor would decline AFTER the
@@ -259,10 +256,11 @@ object CursorLoopSqlCompiler {
     val headM = "(?is)^select\\s+(distinct\\s+)?".r
       .findPrefixMatchOf(select).getOrElse(return None)
     val distinct = headM.group(1) != null
+    val selDepth = SqlLex.depths(selMsk)
     val fromM = "(?i)\\bfrom\\b".r.findAllMatchIn(selMsk)
-      .find(m => WindowSqlLowering.depthAt(selMsk, m.start) == 0)
+      .find(m => selDepth(m.start) == 0)
       .getOrElse(return None)
-    val items = MergeSqlCompiler.splitTop(
+    val items = SqlLex.splitTop(
       select.substring(headM.end, fromM.start))
     if (items.isEmpty || items.exists(i => i.isEmpty ||
         i.trim == "*" || i.trim.matches("(?s)\\w+\\.\\*")))
@@ -270,11 +268,12 @@ object CursorLoopSqlCompiler {
     // ORDER BY drops UNLESS it selects rows (TOP / OFFSET…FETCH)
     var selTail = select.substring(fromM.start).trim
     val tailMsk = selMsk.substring(fromM.start)
+    val tailDepth = SqlLex.depths(tailMsk)
     val rowSelecting =
       "(?i)\\b(top|offset)\\b".r.findFirstIn(selMsk).isDefined
     if (!rowSelecting)
       "(?i)\\border\\s+by\\b".r.findAllMatchIn(tailMsk)
-        .find(m => WindowSqlLowering.depthAt(tailMsk, m.start) == 0)
+        .find(m => tailDepth(m.start) == 0)
         .foreach(m => selTail = selTail.substring(0, m.start).trim)
 
     // positioned-DML metadata over the ORIGINAL tail: the cursor must
@@ -283,9 +282,9 @@ object CursorLoopSqlCompiler {
     // cursor's own WHERE
     val tail0 = select.substring(fromM.start)
     val whereM0 = "(?i)\\bwhere\\b".r.findAllMatchIn(tailMsk)
-      .find(m => WindowSqlLowering.depthAt(tailMsk, m.start) == 0)
+      .find(m => tailDepth(m.start) == 0)
     val orderM0 = "(?i)\\border\\s+by\\b".r.findAllMatchIn(tailMsk)
-      .find(m => WindowSqlLowering.depthAt(tailMsk, m.start) == 0)
+      .find(m => tailDepth(m.start) == 0)
     val fromTblEnd = List(whereM0.map(_.start), orderM0.map(_.start))
       .flatten.sorted.headOption.getOrElse(tailMsk.length)
     val cursorTable: Option[String] = {
@@ -345,7 +344,7 @@ object CursorLoopSqlCompiler {
     val bodyStmts = SqlText.splitStatements(body)
     if (bodyStmts.isEmpty) return None
     for (b <- bodyStmts) {
-      val bMsk = UpdateSqlCompiler.masked(b)
+      val bMsk = SqlLex.mask(b)
       if (bodyBanRe.findFirstIn(bMsk).isDefined) return None
       if (!varsOf(bMsk).toSet.subsetOf(fetchVars.toSet)) return None
       if (MergeSqlCompiler.hasQuotedIdentifier(b)) return None
@@ -367,8 +366,10 @@ object CursorLoopSqlCompiler {
     // declines. INSERT gets no WHERE exemption: appending into the
     // cursor's source under a dynamic cursor can even loop forever.
     val selFromMsk = selMsk.substring(fromM.start)
+    // the last name part as the mask spells it, so a `[bracketed]` name
+    // compares equal to its masked occurrences in the cursor's text
     def bareOf(tgt: String): String =
-      tgt.split('.').last.replaceAll("[\\[\\]]", "").toLowerCase
+      SqlLex.mask(tgt).split('.').last.replaceAll("[\\[\\]]", "").toLowerCase
     def sourceSafe(tgt: String, whereMskOpt: Option[String]): Boolean = {
       val inFrom = ("(?i)\\b" + q(bareOf(tgt)) + "\\b").r
         .findFirstIn(selFromMsk).isDefined
@@ -380,14 +381,12 @@ object CursorLoopSqlCompiler {
     // UPDATE/DELETE's RHS reads the same pre-statement row values the
     // per-row FETCH read (no cross-row writes exist: positioned DML
     // touches only the current row)
-    def substItems(s: String): String = MergeSqlCompiler.segments(s).map {
-      case (seg, true) => seg
-      case (seg, false) => scalarVarRe.replaceAllIn(seg, m =>
+    def substItems(s: String): String =
+      SqlLex.mapCode(s)(scalarVarRe.replaceAllIn(_, m =>
         vIdx.get(m.group(1).toLowerCase)
           .map(i => java.util.regex.Matcher
             .quoteReplacement("(" + stripAlias(items(i)) + ")"))
-          .getOrElse(m.matched))
-    }.mkString
+          .getOrElse(m.matched)))
     val posWhere = cursorWhere.map(w => s" WHERE $w").getOrElse(" WHERE 1 = 1")
     // positioned preconditions shared by UPDATE and DELETE: updatable
     // cursor, one bare-table scan, no DISTINCT (cursor rows would not
@@ -400,7 +399,7 @@ object CursorLoopSqlCompiler {
 
     // one compiled statement per body DML, each carrying its target
     def compileBody(b: String): Option[(String, String)] = {
-      val bMsk = UpdateSqlCompiler.masked(b)
+      val bMsk = SqlLex.mask(b)
       def g(m: Regex.Match, i: Int): String = b.substring(m.start(i), m.end(i))
       def gm(m: Regex.Match, i: Int): String = bMsk.substring(m.start(i), m.end(i))
       // `CURRENT OF` anywhere routes to the positioned branches ONLY —
@@ -413,7 +412,7 @@ object CursorLoopSqlCompiler {
           // reads can re-position the current row mid-scan — T-SQL may
           // re-visit it, the one-shot never does. KEYSET freezes
           // membership and order at OPEN, so the gate lifts.
-          val setCols = MergeSqlCompiler.splitTop(sets).map(c =>
+          val setCols = SqlLex.splitTop(sets).map(c =>
             "(?is)^\\s*([\\w.\\[\\]]+)\\s*=".r.findFirstMatchIn(c)
               .map(cm => bareOf(cm.group(1))))
           if (setCols.exists(_.isEmpty)) None
@@ -452,8 +451,8 @@ object CursorLoopSqlCompiler {
           if (!clauseOk(vals) || colList.trim.isEmpty ||
             !sourceSafe(tgt, None)) None
           else {
-            val cols = MergeSqlCompiler.splitTop(colList)
-            val exprs = MergeSqlCompiler.splitTop(vals)
+            val cols = SqlLex.splitTop(colList)
+            val exprs = SqlLex.splitTop(vals)
             if (cols.size != exprs.size ||
               !cols.forall(_.matches("[A-Za-z_]\\w*"))) None
             else Some((s"INSERT INTO $tgt SELECT " +

@@ -65,7 +65,7 @@ object DeleteFromSqlCompiler {
   /** Parse-only classification twin of [[rewrite]] (no frames touched). */
   private[graft] def shapeMatches(sqlRaw: String): Boolean = {
     val sql = SqlText.stripComments(sqlRaw)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     if (offShapeJoinRe.findFirstIn(msk).isDefined) return false
     deleteFromRe.findFirstMatchIn(msk).exists { m =>
       def g(i: Int): String = sql.substring(m.start(i), m.end(i))
@@ -84,7 +84,7 @@ object DeleteFromSqlCompiler {
   def rewrite(spark: SparkSession, task: ExecuteSqlTask,
       resolve: String => DataFrame): Option[SqlOutcome] = {
     val sql = SqlText.stripComments(task.sqlStatement)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     if (offShapeJoinRe.findFirstIn(msk).isDefined) return None
     deleteFromRe.findFirstMatchIn(msk).flatMap { m =>
       def g(i: Int): String = sql.substring(m.start(i), m.end(i))

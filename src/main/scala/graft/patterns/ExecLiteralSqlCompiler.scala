@@ -68,7 +68,7 @@ object ExecLiteralSqlCompiler {
     * `+` outside the literal means params/concatenation. */
   private def singleLiteral(arg: String): Option[String] = {
     val body = arg.replaceFirst("(?is)^\\s*N", "")
-    val msk = UpdateSqlCompiler.masked(body)
+    val msk = SqlLex.mask(body)
     val t = msk.trim
     if (!(t.startsWith("'") && t.endsWith("'"))) return None
     // everything between the outer quotes must still be INSIDE the
@@ -85,7 +85,7 @@ object ExecLiteralSqlCompiler {
   /** Parse-only classification twin (ledger / dry run). */
   private[graft] def unwrap(sqlRaw: String): Option[String] = {
     val sql = SqlText.stripComments(sqlRaw)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     val m = spExecRe.findFirstMatchIn(msk)
       .orElse(execParenRe.findFirstMatchIn(msk))
       .getOrElse(return None)
@@ -95,7 +95,7 @@ object ExecLiteralSqlCompiler {
   private[patterns] val execHeadRe = "(?is)^\\s*exec(?:ute)?\\b".r
 
   private def noExecTower(inner: String): Boolean =
-    execHeadRe.findFirstIn(UpdateSqlCompiler.masked(inner)).isEmpty
+    execHeadRe.findFirstIn(SqlLex.mask(inner)).isEmpty
 
   // the parameterized frame, matched on the MASKED twin (masked string
   // literals carry no quotes, so lazy spans cannot leak across them):
@@ -144,13 +144,13 @@ object ExecLiteralSqlCompiler {
     * must be a declared parameter. */
   private[graft] def bindParameterized(sqlRaw: String): Option[String] = {
     val sql = SqlText.stripComments(sqlRaw)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     val m = spExecParamRe.findFirstMatchIn(msk).getOrElse(return None)
     def g(i: Int): String = sql.substring(m.start(i), m.end(i))
     val inner = singleLiteral(g(1)).filter(noExecTower).getOrElse(return None)
     val declsTxt = singleLiteral(g(2)).getOrElse(return None)
     // parameter declarations: @name <mapped type> per comma item
-    val decls = MergeSqlCompiler.splitTop(declsTxt).map(d =>
+    val decls = SqlLex.splitTop(declsTxt).map(d =>
       paramDeclRe.findFirstMatchIn(d.trim).flatMap { dm =>
         val rawType = d.trim.substring(dm.start(2), dm.end(2))
         ScriptedSqlExecutor.sparkDdlType(rawType)
@@ -160,8 +160,8 @@ object ExecLiteralSqlCompiler {
     val types = decls.flatten.toMap
     if (types.size != decls.size) return None // duplicate declaration
     // named literal arguments, one per declared parameter
-    val argsRaw = MergeSqlCompiler.splitTop(g(3))
-    val argsMsk = MergeSqlCompiler.splitTop(msk.substring(m.start(3), m.end(3)))
+    val argsRaw = SqlLex.splitTop(g(3))
+    val argsMsk = SqlLex.splitTop(msk.substring(m.start(3), m.end(3)))
     if (argsRaw.size != argsMsk.size) return None
     val bound = argsRaw.zip(argsMsk).map { case (raw, am) =>
       argRe.findFirstMatchIn(am.trim).flatMap { an =>
@@ -194,15 +194,12 @@ object ExecLiteralSqlCompiler {
     if (byName.keySet != types.keySet) return None // missing binding
     // bind into the inner text at masked spans; any surviving @token
     // is not a declared parameter — session state, decline
-    val replaced = MergeSqlCompiler.segments(inner).map {
-      case (seg, true) => seg
-      case (seg, false) => "@(\\w+)".r.replaceAllIn(seg, rm =>
-        byName.get(rm.group(1).toLowerCase) match {
-          case Some(b) => java.util.regex.Matcher.quoteReplacement(b)
-          case None => rm.matched
-        })
-    }.mkString
-    if ("@\\w+".r.findFirstIn(UpdateSqlCompiler.masked(replaced)).isDefined)
+    val replaced = SqlLex.mapCode(inner)("@(\\w+)".r.replaceAllIn(_, rm =>
+      byName.get(rm.group(1).toLowerCase) match {
+        case Some(b) => java.util.regex.Matcher.quoteReplacement(b)
+        case None => rm.matched
+      }))
+    if ("@\\w+".r.findFirstIn(SqlLex.mask(replaced)).isDefined)
       None
     else Some(replaced)
   }
@@ -228,12 +225,12 @@ object ExecLiteralSqlCompiler {
   private[graft] def parseParameterizedOutput(
       sqlRaw: String): Option[SpExecOutput] = {
     val sql = SqlText.stripComments(sqlRaw)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     val m = spExecParamRe.findFirstMatchIn(msk).getOrElse(return None)
     def g(i: Int): String = sql.substring(m.start(i), m.end(i))
     val inner = singleLiteral(g(1)).filter(noExecTower).getOrElse(return None)
     val declsTxt = singleLiteral(g(2)).getOrElse(return None)
-    val decls = MergeSqlCompiler.splitTop(declsTxt).map { d0 =>
+    val decls = SqlLex.splitTop(declsTxt).map { d0 =>
       val d = d0.trim
       val (core, isOut) = outSuffixRe.findFirstMatchIn(d) match {
         case Some(om) => (d.substring(0, om.end(1)).trim, true)
@@ -249,8 +246,8 @@ object ExecLiteralSqlCompiler {
     val ds = decls.flatten
     if (!ds.exists(_._4)) return None // no OUTPUT: the literal path
     if (ds.map(_._1).distinct.size != ds.size) return None
-    val argsRaw = MergeSqlCompiler.splitTop(g(3))
-    val argsMsk = MergeSqlCompiler.splitTop(msk.substring(m.start(3), m.end(3)))
+    val argsRaw = SqlLex.splitTop(g(3))
+    val argsMsk = SqlLex.splitTop(msk.substring(m.start(3), m.end(3)))
     if (argsRaw.size != argsMsk.size) return None
     val args = argsRaw.zip(argsMsk).map { case (raw, am0) =>
       val am = am0.trim
@@ -288,25 +285,14 @@ object ExecLiteralSqlCompiler {
   private[graft] def parseOutputInner(
       inner: String): Option[(List[(String, String)], Option[String])] = {
     if (SqlText.splitStatements(inner).size != 1) return None
-    val msk = UpdateSqlCompiler.masked(inner)
+    val msk = SqlLex.mask(inner)
     val selM = "(?is)^\\s*select\\s+(.+?)\\s*;?\\s*$".r
       .findFirstMatchIn(msk).getOrElse(return None)
     val bodyMsk = msk.substring(selM.start(1), selM.end(1))
     val bodyRaw = inner.substring(selM.start(1), selM.end(1))
-    val depthAt = new Array[Int](bodyMsk.length)
-    var d = 0
-    var k = 0
-    while (k < bodyMsk.length) {
-      depthAt(k) = d
-      bodyMsk.charAt(k) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ => ()
-      }
-      k += 1
-    }
+    val depth = SqlLex.depths(bodyMsk)
     val fromIdx = "(?i)\\bfrom\\b".r.findAllMatchIn(bodyMsk)
-      .find(fm => depthAt(fm.start) == 0).map(_.start)
+      .find(fm => depth(fm.start) == 0).map(_.start)
     val (listMsk, listRaw, fromRaw) = fromIdx match {
       case Some(i) => (bodyMsk.substring(0, i), bodyRaw.substring(0, i),
         Some(bodyRaw.substring(i)))
@@ -314,8 +300,8 @@ object ExecLiteralSqlCompiler {
     }
     // top-level commas sit outside literals, so the masked and raw
     // splits align item-for-item and span-for-span
-    val itemsMsk = MergeSqlCompiler.splitTop(listMsk)
-    val itemsRaw = MergeSqlCompiler.splitTop(listRaw)
+    val itemsMsk = SqlLex.splitTop(listMsk)
+    val itemsRaw = SqlLex.splitTop(listRaw)
     if (itemsMsk.isEmpty || itemsMsk.size != itemsRaw.size) return None
     val assignRe = "(?is)^\\s*@(\\w+)\\s*=\\s*(.+?)\\s*$".r
     val assigns = itemsMsk.zip(itemsRaw).map { case (im, ir) =>
@@ -328,7 +314,7 @@ object ExecLiteralSqlCompiler {
     if (names.distinct.size != names.size) return None
     val nameSet = names.toSet
     val crossRef = as.exists { case (nm, rhs) =>
-      "@(\\w+)".r.findAllMatchIn(UpdateSqlCompiler.masked(rhs)).exists { rm =>
+      "@(\\w+)".r.findAllMatchIn(SqlLex.mask(rhs)).exists { rm =>
         val t = rm.group(1).toLowerCase
         t != nm && nameSet(t)
       }
@@ -361,7 +347,7 @@ object ExecLiteralSqlCompiler {
       pe.args.forall(a => outNames(a._1) ||
         a._2.matches("(?s)^@\\w+$") ||
         litArgMskRe.findFirstIn(
-          UpdateSqlCompiler.masked(a._2).trim).isDefined) &&
+          SqlLex.mask(a._2).trim).isDefined) &&
       parseOutputInner(pe.inner).exists { case (assigns, _) =>
         assigns.map(_._1).toSet == outNames }
     }
@@ -379,12 +365,12 @@ object ExecLiteralSqlCompiler {
     * Single-literal arguments stay [[unwrap]]'s class. */
   private[graft] def foldConcatenated(sqlRaw: String): Option[String] = {
     val sql = SqlText.stripComments(sqlRaw)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     val m = spExecAnyRe.findFirstMatchIn(msk)
       .orElse(execParenAnyRe.findFirstMatchIn(msk))
       .getOrElse(return None)
     val argRaw = sql.substring(m.start(1), m.end(1))
-    if (MergeSqlCompiler.splitTop(argRaw).size != 1) return None
+    if (SqlLex.splitTop(argRaw).size != 1) return None
     TsqlConcatFold.fold(argRaw).filter(noExecTower)
   }
 

@@ -79,34 +79,7 @@ object IfLadderSqlCompiler {
 
   /** Is the statement IF-headed (comments and literals aside)? */
   private[patterns] def isIf(stmt: String): Boolean =
-    ifHeadRe.findFirstIn(UpdateSqlCompiler.masked(
-      SqlText.stripComments(stmt))).isDefined
-
-  /** The literal-masked twin with `[bracketed]` identifier content
-    * masked too (length-preserving; `]]` is the escaped bracket). */
-  private def mask(s: String): String =
-    "\\[(?:[^\\]]|\\]\\])*\\]".r.replaceAllIn(UpdateSqlCompiler.masked(s),
-      b => "[" + "x" * (b.matched.length - 2) + "]")
-
-  /** Index just past the paren matching the one before `from`, or -1. */
-  private def closeParen(msk: String, from: Int): Int = {
-    var depth = 1
-    var j = from
-    while (j < msk.length && depth > 0) {
-      val c = msk.charAt(j)
-      if (c == '(') depth += 1 else if (c == ')') depth -= 1
-      j += 1
-    }
-    if (depth == 0) j else -1
-  }
-
-  /** Split on the `;`s of the masked twin (none inside literals or
-    * brackets), slicing the original. */
-  private def splitMasked(text: String, msk: String): List[String] = {
-    val cuts = -1 +: msk.indices.filter(msk.charAt(_) == ';') :+ msk.length
-    cuts.sliding(2).map { case Seq(a, b) => text.substring(a + 1, b).trim }
-      .filter(_.nonEmpty).toList
-  }
+    ifHeadRe.findFirstIn(SqlLex.mask(SqlText.stripComments(stmt))).isDefined
 
   private val existsHeadRe = "(?is)^(not\\s+)?exists\\s*\\(".r
   private val selectHeadRe = "(?is)^\\s*select\\b".r
@@ -153,9 +126,10 @@ object IfLadderSqlCompiler {
     * downstream would compile both under the guard where T-SQL guards
     * only the first: decline, never a silent divergence. */
   private def fusedDml(msk: String): Boolean =
-    "(?is)^\\s*(truncate|delete)\\b".r.findFirstIn(msk).isDefined &&
-      "(?i)\\binsert\\b".r.findAllMatchIn(msk)
-        .exists(m => WindowSqlLowering.depthAt(msk, m.start) == 0)
+    "(?is)^\\s*(truncate|delete)\\b".r.findFirstIn(msk).isDefined && {
+      val depth = SqlLex.depths(msk)
+      "(?i)\\binsert\\b".r.findAllMatchIn(msk).exists(m => depth(m.start) == 0)
+    }
 
   /** Re-join the fragments the `;` splitter shredded an
     * `IF … BEGIN <stmts> END [ELSE …]` block into: while an IF-headed
@@ -170,12 +144,12 @@ object IfLadderSqlCompiler {
     val out = ListBuffer.empty[String]
     stmts.foreach { s =>
       val joined = out.lastOption.flatMap { prev =>
-        val pm = mask(prev)
+        val pm = SqlLex.mask(prev)
         if (ifHeadRe.findFirstIn(pm).isEmpty) None
         else {
           val b = balance(pm)
           if (b > 0) Some(prev + "; " + s)
-          else if (b == 0 && elseHeadRe.findFirstIn(mask(s)).isDefined)
+          else if (b == 0 && elseHeadRe.findFirstIn(SqlLex.mask(s)).isDefined)
             Some(prev + " " + s)
           else None
         }
@@ -192,7 +166,8 @@ object IfLadderSqlCompiler {
     * ladder. None = not a shape this compiler can state — the caller
     * declines the statement to manual review. */
   def parse(text: String): Option[Ladder] = {
-    val msk = mask(text)
+    val msk = SqlLex.mask(text)
+    val depth = SqlLex.depths(msk)
     // the whole text must be ONE ladder: a trailing `;` is tolerated;
     // any other trailing content declines
     var i = 0
@@ -223,8 +198,7 @@ object IfLadderSqlCompiler {
       // the same CASE-WHEN fold as any other boolean expression.
       def scalarPred(): Option[Pred] = {
         val verb = openerRe.findAllMatchIn(msk)
-          .find(m => m.start >= i &&
-            WindowSqlLowering.depthAt(msk, m.start) == 0)
+          .find(m => m.start >= i && depth(m.start) == 0)
           .getOrElse(return None)
         val predTxt = text.substring(i, verb.start).trim
         if (predTxt.isEmpty) return None
@@ -239,9 +213,10 @@ object IfLadderSqlCompiler {
       }
       existsHeadRe.findFirstMatchIn(msk.substring(i)) match {
         case Some(h) =>
-          val j = closeParen(msk, i + h.end)
-          if (j < 0) None
+          val c = SqlLex.close(msk, i + h.end)
+          if (c < 0) None
           else {
+            val j = c + 1
             // peek past the close paren: a branch opener means the
             // predicate was EXACTLY the EXISTS probe (the LIMIT-1
             // path); anything else (AND/OR connectives) makes the
@@ -253,7 +228,7 @@ object IfLadderSqlCompiler {
             if (!branchFollows) scalarPred()
             else {
               val probe = text.substring(i + h.end, j - 1).trim
-              if (selectHeadRe.findFirstIn(mask(probe)).isEmpty) None
+              if (selectHeadRe.findFirstIn(SqlLex.mask(probe)).isEmpty) None
               else {
                 i = j
                 Some(ExistsPred(h.group(1) != null, probe))
@@ -267,7 +242,7 @@ object IfLadderSqlCompiler {
     // one branch statement: ownable head, no nested control flow, no
     // fused-refresh text
     def stmtOk(s: String): Boolean = {
-      val m = mask(s)
+      val m = SqlLex.mask(s)
       stmtHeadRe.findFirstIn(m).isDefined &&
         stmtControlRe.findFirstIn(m).isEmpty && !fusedDml(m)
     }
@@ -277,11 +252,11 @@ object IfLadderSqlCompiler {
     def raiseCall(): Option[Raise] = {
       i += "raiserror".length; ws()
       if (i >= msk.length || msk.charAt(i) != '(') return None
-      val j = closeParen(msk, i + 1)
-      if (j < 0) None
+      val c = SqlLex.close(msk, i + 1)
+      if (c < 0) None
       else {
-        val args = text.substring(i + 1, j - 1).trim
-        if (args.isEmpty) None else { i = j; Some(Raise(args)) }
+        val args = text.substring(i + 1, c).trim
+        if (args.isEmpty) None else { i = c + 1; Some(Raise(args)) }
       }
     }
 
@@ -294,18 +269,18 @@ object IfLadderSqlCompiler {
         // match this block's END by token walk (BEGIN/CASE push, END
         // pops) — CASE expressions inside the body pair away
         val bodyStart = i + 5
-        var depth = 1
+        var blocks = 1
         var endTok: Option[scala.util.matching.Regex.Match] = None
         blockTokRe.findAllMatchIn(msk).filter(_.start >= bodyStart)
-          .takeWhile(_ => depth > 0).foreach { m =>
+          .takeWhile(_ => blocks > 0).foreach { m =>
             m.group(1).toLowerCase match {
               case "begin" =>
                 if (tranDressRe.findFirstIn(msk.substring(m.end)).isEmpty)
-                  depth += 1
-              case "case" => depth += 1
+                  blocks += 1
+              case "case" => blocks += 1
               case "end" =>
-                depth -= 1
-                if (depth == 0) endTok = Some(m)
+                blocks -= 1
+                if (blocks == 0) endTok = Some(m)
             }
           }
         endTok.flatMap { e =>
@@ -315,8 +290,7 @@ object IfLadderSqlCompiler {
             if (!kwAt("raiserror")) None
             else raiseCall().filter(_ => i <= e.start && msk.substring(
               i, e.start).forall(c => c == ';' || c.isWhitespace))
-          val stmts = splitMasked(text.substring(bodyStart, e.start),
-            msk.substring(bodyStart, e.start))
+          val stmts = SqlText.splitStatements(text.substring(bodyStart, e.start))
           i = e.end
           raise.orElse(
             if (stmts.nonEmpty && stmts.forall(stmtOk)) Some(Stmts(stmts))
@@ -328,8 +302,7 @@ object IfLadderSqlCompiler {
         // ELSE mis-cuts here and the ladder then fails to parse —
         // decline; wrap it in BEGIN…END)
         val cut = elseTokRe.findAllMatchIn(msk)
-          .find(m => m.start >= i &&
-            WindowSqlLowering.depthAt(msk, m.start) == 0)
+          .find(m => m.start >= i && depth(m.start) == 0)
           .map(_.start).getOrElse(msk.length)
         val stmt = text.substring(i, cut).trim.replaceAll("[;\\s]+$", "")
         if (stmt.isEmpty || !stmtOk(stmt)) None
@@ -371,7 +344,7 @@ object IfLadderSqlCompiler {
       !(l.legs.map(_._2) ++ l.otherwise).exists {
         case ReturnExit => true
         case Stmts(ss) => ss.exists(s =>
-          assignHeadRe.findFirstIn(UpdateSqlCompiler.masked(s)).isDefined)
+          assignHeadRe.findFirstIn(SqlLex.mask(s)).isDefined)
         case _ => false
       }
     }
@@ -392,7 +365,7 @@ object IfLadderSqlCompiler {
       // but @@ROWCOUNT is allowed INSIDE branches, where it composes
       // off an earlier branch statement's count at run time
       "(?<!@)@\\w+".r.findFirstIn(
-        UpdateSqlCompiler.masked(stmts.head)).isEmpty &&
+        SqlLex.mask(stmts.head)).isEmpty &&
       parse(stmts.head).exists(_.legs.forall { case (p, _) =>
         val predTxt = p match {
           case ExistsPred(_, probe) => probe
@@ -400,7 +373,7 @@ object IfLadderSqlCompiler {
         }
         // a PREDICATE @@read has no countable predecessor at
         // whole-task level — the executor declines it
-        !UpdateSqlCompiler.masked(predTxt).contains("@@")
+        !SqlLex.mask(predTxt).contains("@@")
       })
   }
 }

@@ -35,8 +35,6 @@ object InsertValuesSqlCompiler {
 
   private val nextRowRe = "(?s)^\\s*,\\s*\\(".r
 
-  private val getDateRe = "(?i)\\bgetdate\\s*\\(\\s*\\)".r
-
   private val valuesKeywordRe = "(?i)\\bselect\\b".r
   private def disqualified(body: String): Boolean =
     MergeSqlCompiler.bodyDisqualified(body, valuesKeywordRe)
@@ -45,33 +43,30 @@ object InsertValuesSqlCompiler {
       resolve: String => DataFrame): Option[SqlOutcome] = {
     // translate GETDATE() in UNQUOTED segments only — the text
     // 'via GETDATE() nightly' inside a literal is data, not a call
-    val sql = MergeSqlCompiler
-      .segments(SqlText.stripComments(task.sqlStatement)).map {
-        case (seg, true) => seg
-        case (seg, false) =>
-          getDateRe.replaceAllIn(seg, "current_timestamp()")
-      }.mkString
+    val sql = SqlText.translateGetdate(SqlText.stripComments(task.sqlStatement))
     prefixRe.findFirstMatchIn(sql).flatMap { m =>
       // collect every balanced (row) group: (a, b), (c, d), ... ;?
       val rows = scala.collection.mutable.ListBuffer.empty[String]
+      val msk = SqlLex.mask(sql)
       var pos = m.end
       var ok = true
       var done = false
       while (ok && !done) {
-        MergeSqlCompiler.balanced(sql, pos) match {
-          case Some((row, after)) =>
-            rows += row
+        SqlLex.close(msk, pos) match {
+          case c if c >= 0 =>
+            rows += sql.substring(pos, c)
+            val after = c + 1
             nextRowRe.findPrefixMatchOf(sql.substring(after)) match {
               case Some(nm) => pos = after + nm.end
               case None =>
                 done = true
                 ok = sql.substring(after).matches("(?s)\\s*;?\\s*")
             }
-          case None => ok = false; done = true
+          case _ => ok = false; done = true
         }
       }
       val colList = Option(m.group(2))
-        .map(MergeSqlCompiler.splitTop(_).map(_.trim)).getOrElse(Nil)
+        .map(SqlLex.splitTop(_).map(_.trim)).getOrElse(Nil)
       if (!ok || rows.isEmpty || rows.exists(disqualified) ||
         colList.exists(c => !c.matches("[A-Za-z_][A-Za-z0-9_]*"))) None
       else Some {
@@ -81,13 +76,13 @@ object InsertValuesSqlCompiler {
           s"INSERT names column(s) more than once: ${dup.keys.mkString(", ")}")
         colList.headOption.foreach { _ =>
           rows.foreach(r => require(
-            MergeSqlCompiler.splitTop(r).length == colList.length,
+            SqlLex.splitTop(r).length == colList.length,
             s"INSERT arity mismatch: ${colList.length} columns, row ($r)"))
         }
         val alias =
           if (colList.nonEmpty) colList.mkString("__graft_v(", ", ", ")")
           else {
-            val n = MergeSqlCompiler.splitTop(rows.head).length
+            val n = SqlLex.splitTop(rows.head).length
             (1 to n).map("c" + _).mkString("__graft_v(", ", ", ")")
           }
         val values = spark.sql("SELECT * FROM VALUES " +

@@ -44,7 +44,7 @@ import org.apache.spark.sql.functions._
 object MergeSqlCompiler {
 
   /** Everything through `INSERT (` — the column and VALUES lists are
-    * scanned by [[balanced]] (depth-tracking, quote-aware) instead of a
+    * scanned by [[SqlLex.enclosed]] (paren-matched on the mask) instead of a
     * `[^)]*` regex so a VALUES list containing function calls
     * (`VALUES (UPPER(s.name), ...)`) still parses.
     *
@@ -97,7 +97,7 @@ object MergeSqlCompiler {
   private def bySourceClause(sql: String, from: Int)
       : Option[(Option[BySourceSpec], Int)] = {
     val tail = sql.substring(from)
-    val msk = UpdateSqlCompiler.masked(tail)
+    val msk = SqlLex.mask(tail)
     if (bySourceOpenRe.findPrefixMatchOf(msk).isEmpty) return Some((None, from))
     bySourceRe.findPrefixMatchOf(msk).flatMap { m =>
       def g(i: Int): Option[String] =
@@ -147,10 +147,11 @@ object MergeSqlCompiler {
     * extracted from the ORIGINAL text (masking is length-exact). */
   private def spliceUsingSubquery(sql: String)
       : (String, Option[(String, String, Option[String])]) = {
-    usingOpenRe.findPrefixMatchOf(UpdateSqlCompiler.masked(sql)) match {
-      case Some(pm) => balanced(sql, pm.end) match {
+    val msk = SqlLex.mask(sql)
+    usingOpenRe.findPrefixMatchOf(msk) match {
+      case Some(pm) => SqlLex.enclosed(sql, msk, pm.end) match {
         case Some((sub, after)) =>
-          val mskSub = UpdateSqlCompiler.masked(sub)
+          val mskSub = msk.substring(pm.end, after - 1)
           simpleSelectRe.findFirstMatchIn(mskSub) match {
             case Some(sm) =>
               def g(i: Int): Option[String] = Option(sm.group(i))
@@ -158,7 +159,7 @@ object MergeSqlCompiler {
               val (list, tbl, whereOpt) = (g(1).get, g(2).get, g(3))
               val ok = !bodyDisqualified(list, subqueryKeywordRe) &&
                 !whereOpt.exists(bodyDisqualified(_, subqueryKeywordRe)) &&
-                splitTop(list).nonEmpty
+                SqlLex.splitTop(list).nonEmpty
               if (ok)
                 (sql.substring(0, pm.end - 1) + " " + SyntheticSrc + " " +
                   sql.substring(after), Some((list, tbl, whereOpt)))
@@ -183,7 +184,7 @@ object MergeSqlCompiler {
       srcName: String): Option[Option[(String, String, Option[String])]] = {
     val tail = sql.substring(from)
     if (tail.matches("(?s)\\s*;?\\s*")) Some(None)
-    else outputTailRe.findFirstMatchIn(UpdateSqlCompiler.masked(tail))
+    else outputTailRe.findFirstMatchIn(SqlLex.mask(tail))
       .flatMap { m =>
         def g(i: Int): Option[String] =
           Option(m.group(i)).map(_ => tail.substring(m.start(i), m.end(i)))
@@ -193,7 +194,7 @@ object MergeSqlCompiler {
           !audit.equalsIgnoreCase(tgtName) &&
           !audit.equalsIgnoreCase(srcName) &&
           colList.forall(cl =>
-            splitTop(cl).forall(_.matches("[A-Za-z_]\\w*")))
+            SqlLex.splitTop(cl).forall(_.matches("[A-Za-z_]\\w*")))
         if (ok) Some(Some((items, audit, colList))) else None
       }
   }
@@ -202,11 +203,12 @@ object MergeSqlCompiler {
     * carry a canonical MERGE OUTPUT…INTO change feed? */
   private[graft] def outputShape(sqlRaw: String): Boolean = {
     val sql = spliceUsingSubquery(SqlText.stripComments(sqlRaw))._1
+    val msk = SqlLex.mask(sql)
     (for {
       m <- mergePrefixRe.findFirstMatchIn(sql)
-      (_, afterCols) <- balanced(sql, m.end)
+      (_, afterCols) <- SqlLex.enclosed(sql, msk, m.end)
       vm <- valuesOpenRe.findPrefixMatchOf(sql.substring(afterCols))
-      (_, afterVals) <- balanced(sql, afterCols + vm.end)
+      (_, afterVals) <- SqlLex.enclosed(sql, msk, afterCols + vm.end)
       (_, afterBySrc) <- bySourceClause(sql, afterVals)
       spec <- outputTail(sql, afterBySrc, m.group(1), m.group(3))
     } yield spec.isDefined).getOrElse(false)
@@ -216,45 +218,14 @@ object MergeSqlCompiler {
     * carry a canonical `WHEN NOT MATCHED BY SOURCE` clause? */
   private[graft] def bySourceShape(sqlRaw: String): Boolean = {
     val sql = spliceUsingSubquery(SqlText.stripComments(sqlRaw))._1
+    val msk = SqlLex.mask(sql)
     (for {
       m <- mergePrefixRe.findFirstMatchIn(sql)
-      (_, afterCols) <- balanced(sql, m.end)
+      (_, afterCols) <- SqlLex.enclosed(sql, msk, m.end)
       vm <- valuesOpenRe.findPrefixMatchOf(sql.substring(afterCols))
-      (_, afterVals) <- balanced(sql, afterCols + vm.end)
+      (_, afterVals) <- SqlLex.enclosed(sql, msk, afterCols + vm.end)
       (spec, _) <- bySourceClause(sql, afterVals)
     } yield spec.isDefined).getOrElse(false)
-  }
-
-  /** Scan from `from` (just past an opening paren) to the MATCHING close
-    * paren, skipping parens inside single-quoted literals; returns the
-    * enclosed content and the index just past the close, or None when
-    * unbalanced. */
-  private[patterns] def balanced(s: String, from: Int): Option[(String, Int)] = {
-    var depth = 1
-    var inQ = false
-    var i = from
-    val sb = new StringBuilder
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQ) {
-        if (c == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'') {
-          sb.append("''"): Unit; i += 1
-        } else {
-          if (c == '\'') inQ = false
-          sb.append(c): Unit
-        }
-      } else c match {
-        case '\'' => inQ = true; sb.append(c): Unit
-        case '(' => depth += 1; sb.append(c): Unit
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return Some((sb.toString, i + 1))
-          sb.append(c): Unit
-        case other => sb.append(other): Unit
-      }
-      i += 1
-    }
-    None
   }
 
   /** T-SQL QUOTED_IDENTIFIER forms (`[s].[name]`, `"s.name"`) are
@@ -262,10 +233,10 @@ object MergeSqlCompiler {
     * rewritten (or left untranslated) into a confusing `expr()` failure.
     * A clause body containing one outside a string literal makes the
     * whole statement a clean manual-review skip instead. */
-  private[patterns] def hasQuotedIdentifier(e: String): Boolean =
-    segments(e).exists { case (seg, quoted) =>
-      !quoted && (seg.contains('[') || seg.contains('"'))
-    }
+  private[patterns] def hasQuotedIdentifier(e: String): Boolean = {
+    val msk = SqlLex.mask(e)
+    msk.contains('[') || msk.contains('"')
+  }
 
   /** Shared clause-body disqualifier for the sibling DML compilers: a
     * bracketed/double-quoted identifier, a top-level `;` (a trailing
@@ -275,69 +246,19 @@ object MergeSqlCompiler {
     * have to land three times. */
   private[patterns] def bodyDisqualified(body: String,
       keywordRe: scala.util.matching.Regex): Boolean =
-    hasQuotedIdentifier(body) ||
-      segments(body).exists { case (seg, quoted) =>
-        !quoted && (seg.contains(';') || keywordRe.findFirstIn(seg).isDefined)
-      }
-
-  /** Split `s` into alternating unquoted/quoted segments ('' escapes a
-    * quote inside a literal, SQL-style); quoted segments INCLUDE their
-    * delimiters. Both [[xlate]] and [[splitTop]] must never look inside
-    * a string literal — `'see s.op docs'` is text, not a reference. */
-  private[patterns] def segments(s: String): List[(String, Boolean)] = {
-    val out = scala.collection.mutable.ListBuffer.empty[(String, Boolean)]
-    val cur = new StringBuilder
-    var inQ = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (!inQ && c == '\'') {
-        if (cur.nonEmpty) out += ((cur.toString, false)); cur.clear()
-        inQ = true; cur.append(c): Unit
-      } else if (inQ && c == '\'') {
-        if (i + 1 < s.length && s.charAt(i + 1) == '\'') {
-          cur.append("''"): Unit; i += 1
-        } else {
-          cur.append(c): Unit; out += ((cur.toString, true)); cur.clear()
-          inQ = false
-        }
-      } else cur.append(c): Unit
-      i += 1
+    hasQuotedIdentifier(body) || {
+      val msk = SqlLex.mask(body)
+      msk.contains(';') || keywordRe.findFirstIn(msk).isDefined
     }
-    if (cur.nonEmpty) out += ((cur.toString, inQ))
-    out.toList
-  }
 
   /** Translate alias-qualified references: `s.col` → `__src_col` (the
     * renamed source frame), `t.col` → `col` (the target frame). String
     * literals pass through untouched. */
   private[patterns] def xlate(e: String, tgtAlias: String, srcAlias: String): String = {
     val q = java.util.regex.Pattern.quote _
-    segments(e).map {
-      case (seg, true) => seg
-      case (seg, false) =>
-        seg.replaceAll("(?i)\\b" + q(srcAlias) + "\\.", SrcPrefix)
-          .replaceAll("(?i)\\b" + q(tgtAlias) + "\\.", "")
-    }.mkString
-  }
-
-  /** Split on top-level commas only — commas inside parens (function
-    * calls) or inside string literals do not split. */
-  private[patterns] def splitTop(s: String): List[String] = {
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    var depth = 0
-    val cur = new StringBuilder
-    segments(s).foreach {
-      case (seg, true) => cur.append(seg): Unit
-      case (seg, false) => seg.foreach {
-        case '(' => depth += 1; cur.append('('): Unit
-        case ')' => depth -= 1; cur.append(')'): Unit
-        case ',' if depth == 0 => out += cur.toString.trim; cur.clear()
-        case c => cur.append(c): Unit
-      }
-    }
-    if (cur.nonEmpty) out += cur.toString.trim
-    out.toList.filter(_.nonEmpty)
+    SqlLex.mapCode(e)(
+      _.replaceAll("(?i)\\b" + q(srcAlias) + "\\.", SrcPrefix)
+        .replaceAll("(?i)\\b" + q(tgtAlias) + "\\.", ""))
   }
 
   /** Compile the statement if it is the canonical three-verb shape.
@@ -354,23 +275,22 @@ object MergeSqlCompiler {
         val (list, tbl, whereOpt) = subSpec.get
         val base = resolve(tbl)
         whereOpt.map(w => base.filter(expr(w))).getOrElse(base)
-          .selectExpr(splitTop(list): _*)
+          .selectExpr(SqlLex.splitTop(list): _*)
       } else resolve(name)
+    val msk = SqlLex.mask(sql)
     val parsed = for {
       m <- mergePrefixRe.findFirstMatchIn(sql)
-      (colsStr, afterCols) <- balanced(sql, m.end)
+      (colsStr, afterCols) <- SqlLex.enclosed(sql, msk, m.end)
       vm <- valuesOpenRe.findPrefixMatchOf(sql.substring(afterCols))
-      (valsStr, afterVals) <- balanced(sql, afterCols + vm.end)
+      (valsStr, afterVals) <- SqlLex.enclosed(sql, msk, afterCols + vm.end)
       // optional full-sync clause; an off-shape BY SOURCE declines
       (bySrcOpt, afterBySrc) <- bySourceClause(sql, afterVals)
       // T-SQL forbids source references inside BY SOURCE bodies (the
       // source side IS null there) — a package carrying one never
       // compiled on SQL Server; decline rather than bind NULLs
       if bySrcOpt.forall(bs => !(bs.pred.toList ++ bs.set).exists(b =>
-        segments(b).exists { case (seg, quoted) =>
-          !quoted && ("(?i)\\b" + java.util.regex.Pattern.quote(m.group(4)) +
-            "\\.").r.findFirstIn(seg).isDefined
-        }))
+        ("(?i)\\b" + java.util.regex.Pattern.quote(m.group(4)) + "\\.").r
+          .findFirstIn(SqlLex.mask(b)).isDefined))
       // the tail must be a bare terminator or a canonical OUTPUT…INTO
       // change feed — anything else declines the whole statement
       outSpec <- outputTail(sql, afterBySrc, m.group(1), m.group(3))
@@ -397,13 +317,13 @@ object MergeSqlCompiler {
       // no UPDATE condition = every surviving match updates
       val deletePredOpt = Option(m.group(6)).map(t => expr(xlate(t, tA, sA)))
       val updatePredOpt = Option(m.group(7)).map(t => expr(xlate(t, tA, sA)))
-      val setMap = splitTop(m.group(8)).map { a =>
+      val setMap = SqlLex.splitTop(m.group(8)).map { a =>
         val i = a.indexOf('=')
         require(i > 0, s"MERGE SET assignment has no '=': $a")
         xlate(a.take(i).trim, tA, sA) -> expr(xlate(a.drop(i + 1).trim, tA, sA))
       }.toMap
-      val insertCols = splitTop(colsStr).map(c => xlate(c, tA, sA))
-      val insertVals = splitTop(valsStr).map(v => expr(xlate(v, tA, sA)))
+      val insertCols = SqlLex.splitTop(colsStr).map(c => xlate(c, tA, sA))
+      val insertVals = SqlLex.splitTop(valsStr).map(v => expr(xlate(v, tA, sA)))
       require(insertCols.length == insertVals.length,
         s"MERGE INSERT arity mismatch: ${insertCols.length} cols, " +
           s"${insertVals.length} values")
@@ -435,7 +355,7 @@ object MergeSqlCompiler {
       // or duplicated target columns abort, never silently no-op
       val bsSetMapLc: Map[String, Column] =
         bySrcOpt.flatMap(_.set).map { sl =>
-          val pairs = splitTop(sl).map { a =>
+          val pairs = SqlLex.splitTop(sl).map { a =>
             val i = a.indexOf('=')
             require(i > 0, s"MERGE BY SOURCE SET assignment has no '=': $a")
             xlate(a.take(i).trim, tA, sA) -> expr(xlate(a.drop(i + 1).trim, tA, sA))

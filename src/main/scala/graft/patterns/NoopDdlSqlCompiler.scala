@@ -69,7 +69,7 @@ object NoopDdlSqlCompiler {
 
   /** Parse-only classification twin of [[rewrite]]. */
   private[graft] def shapeMatches(sqlRaw: String): Boolean = {
-    val msk = UpdateSqlCompiler.masked(SqlText.stripComments(sqlRaw))
+    val msk = SqlLex.mask(SqlText.stripComments(sqlRaw))
     createIndexRe.findFirstMatchIn(msk).isDefined ||
       dropIndexRe.findFirstMatchIn(msk).isDefined ||
       updateStatsRe.findFirstMatchIn(msk).isDefined ||
@@ -77,7 +77,7 @@ object NoopDdlSqlCompiler {
   }
 
   def rewrite(task: ExecuteSqlTask): Option[SqlOutcome] = {
-    val msk = UpdateSqlCompiler.masked(
+    val msk = SqlLex.mask(
       SqlText.stripComments(task.sqlStatement))
     if (waitforRe.findFirstMatchIn(msk).isDefined)
       // no rows-affected thunk: a following @@ROWCOUNT read declines

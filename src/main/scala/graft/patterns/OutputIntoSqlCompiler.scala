@@ -71,7 +71,7 @@ object OutputIntoSqlCompiler {
 
   private[patterns] def parseItems(items: String,
       allowAction: Boolean = false): Option[List[Item]] = {
-    val parsed = MergeSqlCompiler.splitTop(items).map {
+    val parsed = SqlLex.splitTop(items).map {
       case itemRe(img, c, al) =>
         val item = Item(img.toLowerCase, c, Option(al))
         // `deleted.* AS x` is not a shape
@@ -117,7 +117,7 @@ object OutputIntoSqlCompiler {
           c.cast(f.dataType).as(f.name)
         }: _*)
       case Some(cl) =>
-        val names = MergeSqlCompiler.splitTop(cl)
+        val names = SqlLex.splitTop(cl)
         require(names.size == itemCols.size,
           s"OUTPUT INTO $auditName(${names.mkString(", ")}): " +
             s"${itemCols.size} output column(s) for ${names.size} named " +
@@ -150,7 +150,7 @@ object OutputIntoSqlCompiler {
         MergeSqlCompiler.bodyDisqualified(_, setKeywordRe)) &&
       !whereOpt.exists(MergeSqlCompiler.bodyDisqualified(_, whereKeywordRe))
     val colsOk = colList.forall(cl =>
-      MergeSqlCompiler.splitTop(cl).forall(identRe.findFirstIn(_).isDefined))
+      SqlLex.splitTop(cl).forall(identRe.findFirstIn(_).isDefined))
     bodiesOk && colsOk && !auditName.equalsIgnoreCase(tgtName) &&
       parseItems(items).exists(is =>
         !(isDelete && is.exists(_.image == "inserted")))
@@ -159,7 +159,7 @@ object OutputIntoSqlCompiler {
   /** Parse-only classification twin of [[rewrite]] (no frames touched). */
   private[graft] def shapeMatches(sqlRaw: String): Boolean = {
     val sql = SqlText.stripComments(sqlRaw)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     def g(m: scala.util.matching.Regex.Match, i: Int): Option[String] =
       Option(m.group(i)).map(_ => sql.substring(m.start(i), m.end(i)))
     updateRe.findFirstMatchIn(msk).exists { m =>
@@ -174,7 +174,7 @@ object OutputIntoSqlCompiler {
   def rewrite(spark: SparkSession, task: ExecuteSqlTask,
       resolve: String => DataFrame): Option[SqlOutcome] = {
     val sql = SqlText.stripComments(task.sqlStatement)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     def g(m: scala.util.matching.Regex.Match, i: Int): Option[String] =
       Option(m.group(i)).map(_ => sql.substring(m.start(i), m.end(i)))
 

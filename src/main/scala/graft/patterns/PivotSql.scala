@@ -77,20 +77,9 @@ object PivotSql {
   private def soleTopLevelRelation(preMsk: String, introStart: Int,
       introTok: String): Boolean = {
     if (!introTok.equalsIgnoreCase("from")) return false
-    val depthAt = new Array[Int](preMsk.length)
-    var d = 0
-    var k = 0
-    while (k < preMsk.length) {
-      depthAt(k) = d
-      preMsk.charAt(k) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ => ()
-      }
-      k += 1
-    }
+    val depth = SqlLex.depths(preMsk)
     "(?i)\\b(from|join|apply)\\b".r.findAllMatchIn(preMsk)
-      .forall(tk => tk.start >= introStart || depthAt(tk.start) > 0)
+      .forall(tk => tk.start >= introStart || depth(tk.start) > 0)
   }
 
   /** Wrap the relation immediately before the PIVOT head in the
@@ -124,29 +113,17 @@ object PivotSql {
     //    (SELECT * FROM <rel> UNPIVOT (…))) `
     // (an UNPIVOT that is NOT the pre's tail — e.g. inside a derived
     // table — is not the chain; fall through to the plain shapes)
-    unpivotHeadRe.findFirstMatchIn(preMsk).filter { um =>
-      val close = balancedClose(preMsk, um.end)
-      close >= 0 && preMsk.substring(close).trim.isEmpty
-    } match {
-      case Some(um) =>
-        val close = balancedClose(preMsk, um.end)
+    unpivotHeadRe.findFirstMatchIn(preMsk)
+      .map(um => (um, SqlLex.close(preMsk, um.end) + 1))
+      .filter { case (_, close) => close > 0 && preMsk.substring(close).trim.isEmpty } match {
+      case Some((um, close)) =>
         val prefix = preMsk.substring(0, um.start)
         val relStart = subTailRe.findFirstMatchIn(prefix) match {
           case Some(tm) =>
             if (Option(tm.group(1)).exists(a => stopWords(a.toLowerCase)))
               return None
-            var depth = 1
-            var j = tm.start - 1
-            while (depth > 0 && j >= 0) {
-              prefix.charAt(j) match {
-                case ')' => depth += 1
-                case '(' => depth -= 1
-                case _ => ()
-              }
-              j -= 1
-            }
-            if (depth != 0) return None
-            val openIdx = j + 1
+            val openIdx = SqlLex.open(prefix, tm.start)
+            if (openIdx < 0) return None
             val intro = "(?is)\\b(from|join)\\s*$".r
               .findFirstMatchIn(prefix.substring(0, openIdx))
               .getOrElse(return None)
@@ -169,19 +146,8 @@ object PivotSql {
       case Some(tm) =>
         val alias = Option(tm.group(1))
         if (alias.exists(a => stopWords(a.toLowerCase))) return None
-        // balance backwards from the closing paren to its opener
-        var depth = 1
-        var j = tm.start - 1
-        while (depth > 0 && j >= 0) {
-          preMsk.charAt(j) match {
-            case ')' => depth += 1
-            case '(' => depth -= 1
-            case _ => ()
-          }
-          j -= 1
-        }
-        if (depth != 0) return None
-        val openIdx = j + 1
+        val openIdx = SqlLex.open(preMsk, tm.start)
+        if (openIdx < 0) return None
         // the derived table must sit directly in the statement's sole
         // top-level FROM slot (never a join tail)
         val intro = "(?is)\\b(from|join)\\s*$".r
@@ -220,24 +186,17 @@ object PivotSql {
     val heads = unpivotHeadRe.findAllMatchIn(msk0).toList
     if (heads.length != 1) return Left(())
     val h = heads.head
-    var depth = 1
-    var i = h.end
-    while (depth > 0 && i < msk0.length) {
-      msk0.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    if (depth != 0) return Left(())
+    val i = SqlLex.close(msk0, h.end) + 1
+    if (i == 0) return Left(())
     val argsRaw = sqlRaw.substring(h.end, i - 1)
     val m = unpivotInnerRe.findFirstMatchIn(
       msk0.substring(h.end, i - 1)).getOrElse(return Left(()))
     def g(k: Int): String =
       argsRaw.substring(m.start(k), m.end(k)).trim.replaceAll("[\\[\\]]", "")
     val (vcol, ncol) = (g(1), g(2))
-    val items = MergeSqlCompiler.splitTop(g(3)).map(_.trim)
+    // the mask shows `[a b]` as `[axb]`: check the names as written
+    if (!Seq(vcol, ncol).forall(_.matches("\\w+"))) return Left(())
+    val items = SqlLex.splitTop(g(3)).map(_.trim)
     val cols = items.map(it => itemRe.findFirstMatchIn(it)
       .map(im => Option(im.group(1)).getOrElse(im.group(2)))
       .filter(c => plainIdentRe.findFirstIn(c).isDefined))
@@ -251,16 +210,12 @@ object PivotSql {
         after0.substring(am.end)
       case _ => after0
     }
-    var out = sqlRaw.substring(0, h.start) +
+    val out = sqlRaw.substring(0, h.start) +
       s"UNPIVOT (($vcol) FOR $ncol IN ($inList))" + after
     // debracket [X] references to the unpivoted names elsewhere
     val names = cols.flatten ++ Seq(vcol, ncol)
-    out = MergeSqlCompiler.segments(out).map {
-      case (seg, true) => seg
-      case (seg, false) =>
-        names.foldLeft(seg)((s, v) => s.replace(s"[$v]", v))
-    }.mkString
-    Right(out)
+    Right(SqlLex.mapCode(out)(seg =>
+      names.foldLeft(seg)((s, v) => s.replace(s"[$v]", v))))
   }
 
   /** None = no PIVOT and no UNPIVOT (text untouched); Right =
@@ -273,7 +228,7 @@ object PivotSql {
     * pivot source is the chained UNPIVOT wraps the WHOLE
     * `<rel> UNPIVOT (…)` span — r17; wrapSource's chained case). */
   def translate(sqlRaw: String): Option[Either[Unit, String]] = {
-    val msk0 = UpdateSqlCompiler.masked(sqlRaw)
+    val msk0 = SqlLex.mask(sqlRaw)
     val unpivotHeads = unpivotHeadRe.findAllMatchIn(msk0).toList
     val hasUnpivot = unpivotRe.findFirstIn(msk0).isDefined
     val heads = pivotHeadRe.findAllMatchIn(msk0).toList
@@ -293,41 +248,25 @@ object PivotSql {
     if (unpivotHeads.length != 1) return Some(Left(()))
     val (p, u) = (heads.head, unpivotHeads.head)
     val (first, second) = if (u.start > p.start) (p, u) else (u, p)
-    val firstClose = balancedClose(msk0, first.end)
-    if (firstClose < 0 ||
+    val firstClose = SqlLex.close(msk0, first.end) + 1
+    if (firstClose == 0 ||
         !chainGapRe.matches(msk0.substring(firstClose, second.start)))
       return Some(Left(()))
-    val secondClose = balancedClose(msk0, second.end)
-    if (secondClose < 0 ||
+    val secondClose = SqlLex.close(msk0, second.end) + 1
+    if (secondClose == 0 ||
         !chainTailRe.matches(msk0.substring(secondClose)))
       return Some(Left(()))
     Some(if (u.start > p.start)
       translatePivot(sqlRaw, msk0, p).flatMap(t1 =>
-        translateUnpivot(t1, UpdateSqlCompiler.masked(t1)))
+        translateUnpivot(t1, SqlLex.mask(t1)))
     else
       translateUnpivot(sqlRaw, msk0).flatMap { t1 =>
-        val m1 = UpdateSqlCompiler.masked(t1)
+        val m1 = SqlLex.mask(t1)
         pivotHeadRe.findAllMatchIn(m1).toList match {
           case h1 :: Nil => translatePivot(t1, m1, h1)
           case _ => Left(())
         }
       })
-  }
-
-  /** Index just past the ')' closing the paren opened before
-    * `openEnd`, or -1 when unbalanced. */
-  private def balancedClose(msk: String, openEnd: Int): Int = {
-    var depth = 1
-    var i = openEnd
-    while (depth > 0 && i < msk.length) {
-      msk.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    if (depth == 0) i else -1
   }
 
   // between the chain's two operators: at most the first's result alias
@@ -341,24 +280,16 @@ object PivotSql {
   private def translatePivot(sqlRaw: String, msk0: String,
       h: scala.util.matching.Regex.Match): Either[Unit, String] = {
     // balanced span of the PIVOT argument list
-    var depth = 1
-    var i = h.end
-    while (depth > 0 && i < msk0.length) {
-      msk0.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    if (depth != 0) return Left(())
+    val i = SqlLex.close(msk0, h.end) + 1
+    if (i == 0) return Left(())
     val argsRaw = sqlRaw.substring(h.end, i - 1)
     val argsMsk = msk0.substring(h.end, i - 1)
     val m = innerRe.findFirstMatchIn(argsMsk).getOrElse(return Left(()))
     def g(k: Int): String = argsRaw.substring(m.start(k), m.end(k)).trim
     val agg = g(1)
     val pcol = g(2).replaceAll("[\\[\\]]", "")
-    val items = MergeSqlCompiler.splitTop(g(3)).map(_.trim)
+    if (!pcol.matches("[\\w.]+")) return Left(()) // `[a b]`: not a plain name
+    val items = SqlLex.splitTop(g(3)).map(_.trim)
     val names = items.map(it => itemRe.findFirstMatchIn(it)
       .map(im => Option(im.group(1)).getOrElse(im.group(2)))
       .filter(v => aliasOf(v).isDefined))
@@ -391,12 +322,8 @@ object PivotSql {
         after0.substring(am.end)
       case _ => after0
     }
-    var out = pre + s"PIVOT ($agg FOR $pcol IN ($inList))" + after
     // rewrite [X] references to the pivoted columns elsewhere
-    out = MergeSqlCompiler.segments(out).map {
-      case (seg, true) => seg
-      case (seg, false) => vals.foldLeft(seg)(deref)
-    }.mkString
-    Right(out)
+    Right(SqlLex.mapCode(pre + s"PIVOT ($agg FOR $pcol IN ($inList))" + after)(
+      vals.foldLeft(_)(deref)))
   }
 }

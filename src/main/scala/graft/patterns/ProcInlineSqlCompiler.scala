@@ -168,7 +168,7 @@ object ProcInlineSqlCompiler {
     * one is a T-SQL type error this gate must not admit. */
   private def declaredNames(stmt: String, msk: String): List[String] =
     declareStmtRe.findFirstMatchIn(msk).toList.flatMap { m =>
-      MergeSqlCompiler.splitTop(stmt.substring(m.start(1), m.end(1)))
+      SqlLex.splitTop(stmt.substring(m.start(1), m.end(1)))
         .flatMap(i => declareItemRe.findFirstMatchIn(i.trim)
           .filterNot(im => "(?i)^table\\b".r
             .findFirstIn(im.group(2)).isDefined)
@@ -177,7 +177,7 @@ object ProcInlineSqlCompiler {
 
   /** Parse the CREATE batch → the helper, or None (decline). */
   private def parseCreate(batch: String): Option[(String, Helper)] = {
-    val msk = UpdateSqlCompiler.masked(batch)
+    val msk = SqlLex.mask(batch)
     val m = createProcHeadRe.findFirstMatchIn(msk).getOrElse(return None)
     def g(i: Int): String = batch.substring(m.start(i), m.end(i))
     val name = bare(g(1))
@@ -187,21 +187,14 @@ object ProcInlineSqlCompiler {
     // length like `@t VARCHAR(1)` must keep its closing paren.
     val paramsTxt = {
       val p0 = g(2).trim
-      val outerPair = p0.startsWith("(") && p0.endsWith(")") && {
-        var d = 0
-        var inner = true
-        for (i <- 0 until p0.length - 1) {
-          if (p0(i) == '(') d += 1 else if (p0(i) == ')') d -= 1
-          if (d == 0) inner = false
-        }
-        inner
-      }
+      val outerPair = p0.startsWith("(") &&
+        SqlLex.close(SqlLex.mask(p0), 1) == p0.length - 1
       (if (outerPair) p0.substring(1, p0.length - 1) else p0).trim
     }
     val params =
       if (paramsTxt.isEmpty) Nil
       else {
-        val items = MergeSqlCompiler.splitTop(paramsTxt).map { i0 =>
+        val items = SqlLex.splitTop(paramsTxt).map { i0 =>
           val i = i0.trim
           // a trailing OUTPUT/OUT marks the parameter for post-call
           // write-back; READONLY still fails paramDeclRe below
@@ -213,14 +206,14 @@ object ProcInlineSqlCompiler {
           // takes only constants there, so the value gate is the
           // literal recognizer. The '=' is found on the MASKED core —
           // a '=' inside a string default is data.
-          val coreMsk = UpdateSqlCompiler.masked(core0)
+          val coreMsk = SqlLex.mask(core0)
           val (core, dflt) =
             "^([^=]*?)\\s*=\\s*(\\S[\\s\\S]*?)\\s*$".r
               .findFirstMatchIn(coreMsk) match {
               case Some(dm) =>
                 val d = core0.substring(dm.start(2), dm.end(2))
                 if (ExecLiteralSqlCompiler.litArgMskRe.findFirstIn(
-                    UpdateSqlCompiler.masked(d).trim).isEmpty)
+                    SqlLex.mask(d).trim).isEmpty)
                   return None // non-constant default: T-SQL syntax error
                 (core0.substring(dm.start(1), dm.end(1)).trim, Some(d))
               case None => (core0, None)
@@ -238,13 +231,13 @@ object ProcInlineSqlCompiler {
     if (params.map(_._1).distinct.size != params.size) return None
     // body: everything after AS; one optional outer BEGIN…END wrapper
     var body = g(3).trim
-    val bMsk0 = UpdateSqlCompiler.masked(body)
+    val bMsk0 = SqlLex.mask(body)
     if ("(?is)^begin\\b".r.findFirstIn(bMsk0).isDefined &&
         "(?is)\\bend\\s*;?\\s*$".r.findFirstIn(bMsk0).isDefined)
       body = body.replaceFirst("(?is)^begin\\b", "")
         .replaceFirst("(?is)\\bend\\s*;?\\s*$", "").trim
     if (body.isEmpty) return None
-    val bMsk = UpdateSqlCompiler.masked(body)
+    val bMsk = SqlLex.mask(body)
     // a body DECLARE is owned (hygienic rename isolates it); every
     // OTHER banned keyword keeps the decline
     if (bodyBanRe.findFirstIn(bMsk).isDefined) return None
@@ -263,10 +256,10 @@ object ProcInlineSqlCompiler {
     if (bodyStmts0.isEmpty) return None
     val retHere = "(?i)\\breturn\\b".r
     if (bodyStmts0.init.exists(s =>
-        retHere.findFirstIn(UpdateSqlCompiler.masked(s)).isDefined))
+        retHere.findFirstIn(SqlLex.mask(s)).isDefined))
       return None
     val ret = bodyStmts0.lastOption.flatMap { last =>
-      val lMsk = UpdateSqlCompiler.masked(last)
+      val lMsk = SqlLex.mask(last)
       if (retHere.findFirstIn(lMsk).isEmpty) None
       else returnStmtRe.findFirstMatchIn(lMsk) match {
         case Some(rm) => Some(Option(rm.group(1))
@@ -285,9 +278,9 @@ object ProcInlineSqlCompiler {
     // the classification twin must agree)
     val locals = scala.collection.mutable.LinkedHashSet.empty[String]
     for (stmt <- SqlText.splitStatements(body)) {
-      val sMsk = UpdateSqlCompiler.masked(stmt)
+      val sMsk = SqlLex.mask(stmt)
       declareStmtRe.findFirstMatchIn(sMsk).foreach { dm =>
-        val items = MergeSqlCompiler.splitTop(
+        val items = SqlLex.splitTop(
           stmt.substring(dm.start(1), dm.end(1)))
         for (i <- items) {
           val im = declareItemRe.findFirstMatchIn(i.trim)
@@ -318,7 +311,7 @@ object ProcInlineSqlCompiler {
       argsTxt: String, declared: Set[String],
       rcTarget: Option[String] = None): Option[Bound] = {
     val t = argsTxt.trim
-    val argsRaw = if (t.isEmpty) Nil else MergeSqlCompiler.splitTop(t)
+    val argsRaw = if (t.isEmpty) Nil else SqlLex.splitTop(t)
     // fewer args than params is legal when the unbound TRAILING params
     // (positional) / unbound params (named) carry defaults (r17);
     // more args than params stays the arity decline
@@ -328,7 +321,7 @@ object ProcInlineSqlCompiler {
     // keyword is always last); the flag rides beside the bare text
     def splitOut(a0: String): (String, Boolean) = {
       val a = a0.trim
-      outSuffixRe.findFirstMatchIn(UpdateSqlCompiler.masked(a)) match {
+      outSuffixRe.findFirstMatchIn(SqlLex.mask(a)) match {
         case Some(om) => (a.substring(0, om.end(1)).trim, true)
         case None => (a, false)
       }
@@ -346,14 +339,14 @@ object ProcInlineSqlCompiler {
           declared(aMsk.trim.substring(1).toLowerCase))
     val named = stripped.map { case (a, _) =>
       namedArgRe.findFirstMatchIn(
-        UpdateSqlCompiler.masked(a).trim).isDefined }
+        SqlLex.mask(a).trim).isDefined }
     if (named.distinct.size > 1) return None // mixed positional+named
     // (param name, argument text, call-site OUTPUT flag), param order;
     // an unbound param takes its declared default (or declines)
     val triples: List[(String, String, Boolean)] =
       if (named.headOption.contains(true)) {
         val bound = stripped.map { case (a, o) =>
-          val am = UpdateSqlCompiler.masked(a).trim
+          val am = SqlLex.mask(a).trim
           namedArgRe.findFirstMatchIn(am).flatMap { nm =>
             val vMsk = am.substring(nm.start(2)).trim
             if (!argOk(vMsk)) None
@@ -367,7 +360,7 @@ object ProcInlineSqlCompiler {
           !byName.keySet.subsetOf(h.params.map(_._1).toSet)) return None
         h.params.map { case (n, _, _, dflt) =>
           byName.get(n) match {
-            case Some((v, o)) if isDefaultKw(UpdateSqlCompiler.masked(v)) =>
+            case Some((v, o)) if isDefaultKw(SqlLex.mask(v)) =>
               (n, dflt.getOrElse(return None), o)
             case Some((v, o)) => (n, v, o)
             case None => (n, dflt.getOrElse(return None), false)
@@ -375,13 +368,13 @@ object ProcInlineSqlCompiler {
         }
       } else {
         if (stripped.exists { case (a, _) =>
-            !argOk(UpdateSqlCompiler.masked(a).trim) }) return None
+            !argOk(SqlLex.mask(a).trim) }) return None
         // positional args bind the params PREFIX; the tail defaults,
         // and an explicit DEFAULT keyword substitutes in place
         h.params.zipWithIndex.map { case ((n, _, _, dflt), i) =>
           if (i < stripped.size) {
             val (a, o) = stripped(i)
-            if (isDefaultKw(UpdateSqlCompiler.masked(a)))
+            if (isDefaultKw(SqlLex.mask(a)))
               (n, dflt.getOrElse(return None), o)
             else (n, a, o)
           } else (n, dflt.getOrElse(return None), false)
@@ -395,7 +388,7 @@ object ProcInlineSqlCompiler {
     for ((n, a, o) <- triples if o) {
       if (!outParams(n)) return None
       if (varArgRe.findFirstMatchIn(
-          UpdateSqlCompiler.masked(a).trim).isEmpty) return None
+          SqlLex.mask(a).trim).isEmpty) return None
     }
     // call number FIRST: it is the unique per-call token and contains
     // no underscores, so the first '_'-delimited segment alone
@@ -419,14 +412,12 @@ object ProcInlineSqlCompiler {
     // rename params AND body-locals into the call's namespace (masked
     // segments — a literal containing '@x' is data, not a reference)
     val renames = h.params.map(_._1).toSet ++ h.locals
-    def rename(txt: String): String = MergeSqlCompiler.segments(txt).map {
-      case (seg, true) => seg
-      case (seg, false) => scalarVarRe.replaceAllIn(seg, rm =>
+    def rename(txt: String): String =
+      SqlLex.mapCode(txt)(scalarVarRe.replaceAllIn(_, rm =>
         if (renames(rm.group(1).toLowerCase))
           java.util.regex.Matcher.quoteReplacement(
             s"@${prefix}_${rm.group(1).toLowerCase}")
-        else rm.matched)
-    }.mkString
+        else rm.matched))
     val renamed = rename(h.body)
     // copy-out: the renamed local's FINAL value flows back to the
     // caller's variable through the executor's SET path (cast to the
@@ -457,7 +448,7 @@ object ProcInlineSqlCompiler {
     * None. */
   private[graft] def rewriteToScript(textRaw: String): Option[List[String]] = {
     val text = SqlText.stripComments(textRaw)
-    val textMsk = UpdateSqlCompiler.masked(text)
+    val textMsk = SqlLex.mask(text)
     if (anyCreateProcRe.findFirstIn(textMsk).isEmpty) return None
     // mirror the dispatcher's conditional-undo gates (see scaladoc)
     if (outerGateRe.findFirstIn(textMsk).isDefined) return None
@@ -466,7 +457,7 @@ object ProcInlineSqlCompiler {
     val out = scala.collection.mutable.ListBuffer.empty[String]
     var any = false
     for (batch <- SqlText.splitBatches(text)) {
-      val batchMsk = UpdateSqlCompiler.masked(batch)
+      val batchMsk = SqlLex.mask(batch)
       // scalar variables are batch-scoped: reset per batch
       val declared = scala.collection.mutable.Set.empty[String]
       if (createProcHeadRe.findFirstMatchIn(batchMsk).isDefined) {
@@ -481,7 +472,7 @@ object ProcInlineSqlCompiler {
           case None => return None // half a proc is no proc
         }
       } else for (stmt <- SqlText.splitStatements(batch)) {
-        val sMsk = UpdateSqlCompiler.masked(stmt)
+        val sMsk = SqlLex.mask(stmt)
         if (anyCreateProcRe.findFirstIn(sMsk).isDefined) return None
         val execM = execStmtRe.findFirstMatchIn(sMsk)
           .filter(m => procs.contains(
@@ -540,7 +531,7 @@ object ProcInlineSqlCompiler {
             val nm = bare(stmt.substring(m.start(3), m.end(3)))
             val h = procs(nm)
             val bodyStmts = SqlText.splitStatements(h.body)
-            def sm(s: String) = UpdateSqlCompiler.masked(s).trim
+            def sm(s: String) = SqlLex.mask(s).trim
             val assignShapeRe =
               "(?is)^(?:declare\\b|set\\s+@|select\\s+@\\w+\\s*=)".r
             def isResultSelect(msk: String): Boolean =

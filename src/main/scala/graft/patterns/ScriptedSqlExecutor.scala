@@ -101,7 +101,7 @@ object ScriptedSqlExecutor {
 
   /** Does the statement reference a `#temp` (outside literals)? */
   private def hasTempRef(s: String): Boolean =
-    tempRefRe.findFirstIn(UpdateSqlCompiler.masked(s)).isDefined
+    tempRefRe.findFirstIn(SqlLex.mask(s)).isDefined
 
   // temp-table DDL heads over a name pattern: `#\w+` for the task's
   // scope scan ([[outOfTempScope]]), [[TempPrefix]]`\w+` for the
@@ -131,7 +131,7 @@ object ScriptedSqlExecutor {
     * a script a DROP is no read: a never-created temp is absent there
     * (plain DROP aborts with 3701, IF EXISTS is a no-op). */
   private[patterns] def outOfTempScope(text: String): Boolean = {
-    val msk = UpdateSqlCompiler.masked(text)
+    val msk = SqlLex.mask(text)
     tempRefRe.findFirstIn(msk).isDefined && {
       val made = tempCreatorRes
         .flatMap(_.findAllMatchIn(msk).map(_.group(1).toLowerCase)).toSet
@@ -154,10 +154,11 @@ object ScriptedSqlExecutor {
 
   /** Rewrite every `#name` to [[TempPrefix]]`name` (case-folded — T-SQL
     * temp names are case-insensitive), splicing at masked-twin spans so
-    * literal content survives verbatim. Returns the rewritten text and
-    * the rewritten names it saw. */
+    * literal content survives verbatim; a bracketed `[#name]` loses its
+    * brackets with the `#`. Returns the rewritten text and the rewritten
+    * names it saw. */
   private def detemp(s: String): (String, Set[String]) = {
-    val msk = UpdateSqlCompiler.masked(s)
+    val msk = SqlLex.mask(s)
     val ms = tempRefRe.findAllMatchIn(msk).toList
     if (ms.isEmpty) (s, Set.empty)
     else {
@@ -165,12 +166,14 @@ object ScriptedSqlExecutor {
       var pos = 0
       val names = Set.newBuilder[String]
       ms.foreach { m =>
-        sb.append(s.substring(pos, m.start))
+        val br = if (m.start > 0 && msk.charAt(m.start - 1) == '[' &&
+          m.end < msk.length && msk.charAt(m.end) == ']') 1 else 0
+        sb.append(s.substring(pos, m.start - br))
         val nm = TempPrefix + s.substring(m.start, m.end)
           .dropWhile(_ == '#').toLowerCase
         names += nm
         sb.append(nm)
-        pos = m.end
+        pos = m.end + br
       }
       sb.append(s.substring(pos))
       (sb.toString, names.result())
@@ -197,14 +200,14 @@ object ScriptedSqlExecutor {
     * statements and the overlay names. */
   private def detv(ss: List[String]): (List[String], Set[String]) = {
     val names = ss.flatMap { s =>
-      tableVarDeclRe.findFirstMatchIn(UpdateSqlCompiler.masked(s))
+      tableVarDeclRe.findFirstMatchIn(SqlLex.mask(s))
         .map(m => s.substring(m.start(1), m.end(1)).toLowerCase)
     }.toSet
     if (names.isEmpty) (ss, Set.empty)
     else {
       val tokRe = "@(\\w+)".r
       val rewritten = ss.map { s =>
-        val msk = UpdateSqlCompiler.masked(s)
+        val msk = SqlLex.mask(s)
         val ms = tokRe.findAllMatchIn(msk)
           .filter(m => names(m.group(1).toLowerCase)).toList
         if (ms.isEmpty) s
@@ -233,7 +236,7 @@ object ScriptedSqlExecutor {
   /** Substitute every `@@ROWCOUNT` read with the literal `n`, splicing
     * at masked-twin spans (a literal containing "@@ROWCOUNT" is data). */
   private def substRowcount(s: String, n: Long): String = {
-    val msk = UpdateSqlCompiler.masked(s)
+    val msk = SqlLex.mask(s)
     val ms = rowcountRe.findAllMatchIn(msk).toList
     if (ms.isEmpty) s
     else {
@@ -271,7 +274,7 @@ object ScriptedSqlExecutor {
     * quoted literal (masked spans — a literal containing the call text
     * is data). */
   private def substErrMsg(s: String, msg: String): String = {
-    val msk = UpdateSqlCompiler.masked(s)
+    val msk = SqlLex.mask(s)
     val ms = errMsgRe.findAllMatchIn(msk).toList
     if (ms.isEmpty) s
     else {
@@ -366,7 +369,7 @@ object ScriptedSqlExecutor {
     * clauses, unmapped types) declines the script to manual review. */
   private def emptyFrameFor(spark: SparkSession, colDefs: String)
       : Option[DataFrame] = {
-    val cols = MergeSqlCompiler.splitTop(colDefs).map(_.trim)
+    val cols = SqlLex.splitTop(colDefs).map(_.trim)
     if (cols.isEmpty || cols.exists(_.isEmpty)) return None
     val fields = cols.map { c =>
       val m = "(?is)^([A-Za-z_][A-Za-z0-9_]*)\\s+(.+?)(?:\\s+(?:not\\s+)?null)?\\s*$"
@@ -483,7 +486,7 @@ object ScriptedSqlExecutor {
     if (!leadName.contains(spName)) return None
     // the catch-leading named rollback must be the ONLY rollback
     val rollbacks = (tsRaw ++ csRaw.tail).count(s =>
-      rollbackRe.findFirstIn(UpdateSqlCompiler.masked(s)).isDefined)
+      rollbackRe.findFirstIn(SqlLex.mask(s)).isDefined)
     if (rollbacks != 0) return None
     if (!tranBracketsTryBody(tryBody)) return None
     if (!csRaw.lastOption.exists(s =>
@@ -507,7 +510,7 @@ object ScriptedSqlExecutor {
     val catchStmts = SqlText.splitBatches(text.substring(m.start(2), m.end(2)))
       .flatMap(SqlText.splitStatements)
     val catchRollbacks = catchStmts.zipWithIndex.filter { case (s, _) =>
-      rollbackRe.findFirstIn(UpdateSqlCompiler.masked(s)).isDefined
+      rollbackRe.findFirstIn(SqlLex.mask(s)).isDefined
     }
     !inTry && catchRollbacks.forall { case (s, i) =>
       i == 0 && bareRollbackRe.findFirstMatchIn(s).isDefined
@@ -543,7 +546,7 @@ object ScriptedSqlExecutor {
   /** Parse-only TRY/CATCH classification (ledger / dry run). */
   private[graft] def tryCatchShape(sqlRaw: String): Boolean = {
     val text = SqlText.stripComments(sqlRaw)
-    val msk = UpdateSqlCompiler.masked(text)
+    val msk = SqlLex.mask(text)
     tryCatchRe.findFirstMatchIn(msk).exists(m =>
       "(?is)begin\\s+try".r
         .findFirstIn(msk.substring(m.start(1), m.end(1))).isEmpty &&
@@ -580,12 +583,12 @@ object ScriptedSqlExecutor {
     * still fail to compile at run time. */
   private[graft] def scriptFeatures(sqlRaw: String): Option[String] = {
     val text = SqlText.stripComments(sqlRaw)
-    if (rollbackRe.findFirstIn(UpdateSqlCompiler.masked(text)).isDefined)
+    if (rollbackRe.findFirstIn(SqlLex.mask(text)).isDefined)
       return None
     if (outOfTempScope(text)) return None
     val (stmts, hadTxn) = statements(text)
     if (stmts.length < 2) return None
-    def m(s: String) = UpdateSqlCompiler.masked(s)
+    def m(s: String) = SqlLex.mask(s)
     if (stmts.exists(s => otherSysVarRe.findFirstIn(m(s)).isDefined))
       return None
     val temp = stmts.exists(hasTempRef)
@@ -782,15 +785,13 @@ object ScriptedSqlExecutor {
       // binding uses the shared typed-literal form; a value with no
       // safe spelling (SqlText.sqlLit → None) throws UnbindableLiteral
       // and runSeq declines the script — never a toString splice
-      def bindVars(e: String): String = MergeSqlCompiler.segments(e).map {
-        case (seg, true) => seg
-        case (seg, false) => scalarVarRe.replaceAllIn(seg, m =>
+      def bindVars(e: String): String =
+        SqlLex.mapCode(e)(scalarVarRe.replaceAllIn(_, m =>
           vars.get(m.group(1).toLowerCase) match {
             case Some(v) => java.util.regex.Matcher
               .quoteReplacement(SqlText.sqlLitOrDecline(v))
             case None => m.matched // undeclared: left for the gate below
-          })
-      }.mkString
+          }))
       def evalScalar(boundExpr: String): Any =
         graft.expr.LocalEval.sql(spark, boundExpr)
       // T-SQL `+` over string fragments is CONCATENATION; Spark's `+`
@@ -813,7 +814,7 @@ object ScriptedSqlExecutor {
         if (v == null) null
         else evalScalar(s"CAST(${SqlText.sqlLitOrDecline(v)} AS $tpe)")
       def compileOne(s0: String): Option[SqlOutcome] = {
-        val msk0 = UpdateSqlCompiler.masked(s0)
+        val msk0 = SqlLex.mask(s0)
         // @@IDENTITY/@@ERROR/@@TRANCOUNT…: state this replay cannot
         // produce — decline the whole script, never substitute garbage
         if (otherSysVarRe.findFirstIn(msk0).isDefined) return None
@@ -828,7 +829,7 @@ object ScriptedSqlExecutor {
             // ends only the dynamic batch — an inner text naming any
             // @variable or @@read, or carrying a RETURN leg, declines:
             // never the caller's state, never the caller's batch exit
-            if (UpdateSqlCompiler.masked(in).contains('@') ||
+            if (SqlLex.mask(in).contains('@') ||
                 IfLadderSqlCompiler.parse(in).forall(_.hasReturn))
               return None
             return compileOne(in)
@@ -860,7 +861,7 @@ object ScriptedSqlExecutor {
               if (l.hasReturn && !allowEarlyExit) return None
               def foldPredText(raw: String): String =
                 if (rowcountRe.findFirstIn(
-                    UpdateSqlCompiler.masked(raw)).isEmpty) raw
+                    SqlLex.mask(raw)).isEmpty) raw
                 else lastAffected match {
                   case Some(f) => substRowcount(raw, f())
                   case None => return null // no countable predecessor
@@ -874,7 +875,7 @@ object ScriptedSqlExecutor {
                 if (rc == null) return None
                 val b = bindVars(rc)
                 if (scalarVarRe.findFirstIn(
-                    UpdateSqlCompiler.masked(b)).isDefined) None
+                    SqlLex.mask(b)).isDefined) None
                 else p match {
                   case IfLadderSqlCompiler.ExistsPred(neg, _) =>
                     Some((!SqlPatternRewriter.runSelect(spark, b)
@@ -912,9 +913,9 @@ object ScriptedSqlExecutor {
                   // is informational and the batch continues
                   val bound = bindVars(args)
                   if (scalarVarRe.findFirstIn(
-                      UpdateSqlCompiler.masked(bound)).isDefined)
+                      SqlLex.mask(bound)).isDefined)
                     return None
-                  val parts = MergeSqlCompiler.splitTop(bound)
+                  val parts = SqlLex.splitTop(bound)
                   val severity = parts.lift(1)
                     .flatMap(_.trim.toIntOption).getOrElse(16)
                   if (severity >= 11)
@@ -954,9 +955,9 @@ object ScriptedSqlExecutor {
             case Some(f) => substRowcount(s0, f())
             case None => return None // read with no countable predecessor
           }
-        val mskRc = UpdateSqlCompiler.masked(sRc)
+        val mskRc = SqlLex.mask(sRc)
         declareStmtRe.findFirstMatchIn(mskRc).foreach { m =>
-          val items = MergeSqlCompiler.splitTop(
+          val items = SqlLex.splitTop(
             sRc.substring(m.start(1), m.end(1)))
           // every item must parse as @name TYPE [= init] with a MAPPED
           // type or the whole script declines (half a DECLARE is no
@@ -975,7 +976,7 @@ object ScriptedSqlExecutor {
           parsed.flatten.foreach { case (nm, tpe, rawType, initOpt) =>
             val bound = initOpt.map(bindVars)
             if (bound.exists(b =>
-                scalarVarRe.findFirstIn(UpdateSqlCompiler.masked(b)).isDefined))
+                scalarVarRe.findFirstIn(SqlLex.mask(b)).isDefined))
               return None // init references an undeclared variable
             varTypes(nm) = tpe
             // re-DECLARE replaces the cap wholesale: a second DECLARE
@@ -1003,7 +1004,7 @@ object ScriptedSqlExecutor {
           if (!vars.contains(nm) ||
             innerAssignRe.findFirstIn(rhsMsk).isDefined) return None
           val bound = bindVars(rhsRaw)
-          if (scalarVarRe.findFirstIn(UpdateSqlCompiler.masked(bound))
+          if (scalarVarRe.findFirstIn(SqlLex.mask(bound))
               .isDefined) return None
           if (fromKeywordRe.findFirstIn(rhsMsk).isEmpty) {
             // pure expression assign — FROM-less, one row by construction
@@ -1034,7 +1035,7 @@ object ScriptedSqlExecutor {
             fromKeywordRe.findFirstIn(rhsMsk).isDefined ||
             innerAssignRe.findFirstIn(rhsMsk).isDefined) return None
           val bound = bindVars(rhsRaw)
-          if (scalarVarRe.findFirstIn(UpdateSqlCompiler.masked(bound))
+          if (scalarVarRe.findFirstIn(SqlLex.mask(bound))
               .isDefined) return None
           vars(nm) = capVal(nm, evalAssign(bound, varTypes(nm)))
           lastAffected = Some(() => 1L)
@@ -1090,7 +1091,7 @@ object ScriptedSqlExecutor {
           val inBind = pe.args.filterNot(a => outNames(a._1)).map {
             case (n, vTxt, _) =>
               val bound = bindVars(vTxt).trim
-              val bm = UpdateSqlCompiler.masked(bound).trim
+              val bm = SqlLex.mask(bound).trim
               if (ExecLiteralSqlCompiler.litArgMskRe.findFirstIn(bm).isEmpty)
                 return None
               val (_, tpe, cap, _) = declsByName(n)
@@ -1122,18 +1123,15 @@ object ScriptedSqlExecutor {
           val allBind = inBind ++ copyIns.map { case (n, v) =>
             n -> SqlText.sqlLitOrDecline(v) }
           def bindOut(txt: String): String =
-            MergeSqlCompiler.segments(txt).map {
-              case (seg, true) => seg
-              case (seg, false) => "@(\\w+)".r.replaceAllIn(seg, rm =>
-                allBind.get(rm.group(1).toLowerCase) match {
-                  case Some(b) => java.util.regex.Matcher.quoteReplacement(b)
-                  case None => rm.matched
-                })
-            }.mkString
+            SqlLex.mapCode(txt)("@(\\w+)".r.replaceAllIn(_, rm =>
+              allBind.get(rm.group(1).toLowerCase) match {
+                case Some(b) => java.util.regex.Matcher.quoteReplacement(b)
+                case None => rm.matched
+              }))
           val boundRhs = assigns.map { case (nm, rhs) =>
             val b = bindOut(rhs)
             if ("@\\w+".r.findFirstIn(
-                UpdateSqlCompiler.masked(b)).isDefined) return None
+                SqlLex.mask(b)).isDefined) return None
             nm -> b
           }
           def writeBack(outName: String, v: Any): Unit = {
@@ -1159,7 +1157,7 @@ object ScriptedSqlExecutor {
             case Some(fromRaw) =>
               val boundFrom = bindOut(fromRaw)
               if ("@\\w+".r.findFirstIn(
-                  UpdateSqlCompiler.masked(boundFrom)).isDefined) return None
+                  SqlLex.mask(boundFrom)).isDefined) return None
               val rows = SqlPatternRewriter.runSelect(spark,
                   "SELECT " + boundRhs.map(_._2).mkString(", ") +
                     " " + boundFrom)
@@ -1187,9 +1185,9 @@ object ScriptedSqlExecutor {
           case Some(inner) => inner
           case None => sV
         }
-        if (scalarVarRe.findFirstIn(UpdateSqlCompiler.masked(s)).isDefined)
+        if (scalarVarRe.findFirstIn(SqlLex.mask(s)).isDefined)
           return None
-        dropTempRe.findFirstMatchIn(UpdateSqlCompiler.masked(s)) match {
+        dropTempRe.findFirstMatchIn(SqlLex.mask(s)) match {
           case Some(d) if tempNames(d.group(2).toLowerCase) =>
             val nm = d.group(2).toLowerCase
             // a plain DROP of a temp that is not live errors in T-SQL;
@@ -1204,7 +1202,7 @@ object ScriptedSqlExecutor {
             return Some(SqlOutcome(None, None))
           case _ => ()
         }
-        createTempRe.findFirstMatchIn(UpdateSqlCompiler.masked(s)) match {
+        createTempRe.findFirstMatchIn(SqlLex.mask(s)) match {
           case Some(c) if tempNames(c.group(1).toLowerCase) =>
             val nm = c.group(1).toLowerCase
             require(!overlay.contains(nm),
@@ -1330,6 +1328,8 @@ object ScriptedSqlExecutor {
 
     bound => {
       val text = SqlText.stripComments(bound.sqlStatement)
+      val msk = SqlLex.mask(text)
+      val tryM = tryCatchRe.findFirstMatchIn(msk)
       // temp state never crosses task boundaries
       if (outOfTempScope(text)) None
       // conditional undo is control flow — manual review, EXCEPT the
@@ -1338,17 +1338,12 @@ object ScriptedSqlExecutor {
       // discards the TRY's staged effects before the rest of the
       // CATCH runs), and the savepoint-suffix form (ROLLBACK TRAN sp
       // discarding only the effects after SAVE TRAN sp)
-      else if (rollbackRe.findFirstIn(UpdateSqlCompiler.masked(text)).isDefined
-          && !tryCatchRe.findFirstMatchIn(UpdateSqlCompiler.masked(text))
-            .exists(m => rollbackOnlyCatchLeading(text,
-                UpdateSqlCompiler.masked(text), m) ||
-              savepointSuffixOwned(text,
-                UpdateSqlCompiler.masked(text), m).isDefined))
+      else if (rollbackRe.findFirstIn(msk).isDefined
+          && !tryM.exists(m => rollbackOnlyCatchLeading(text, msk, m) ||
+            savepointSuffixOwned(text, msk, m).isDefined))
         None
-      else if (tryCatchRe.findFirstMatchIn(UpdateSqlCompiler.masked(text))
-          .isDefined) {
-        val msk = UpdateSqlCompiler.masked(text)
-        val m = tryCatchRe.findFirstMatchIn(msk).get
+      else if (tryM.isDefined) {
+        val m = tryM.get
         val tryBody = text.substring(m.start(1), m.end(1))
         val catchBody = text.substring(m.start(2), m.end(2))
         // nested TRY blocks would mis-split on the lazy matcher — decline
@@ -1441,7 +1436,7 @@ object ScriptedSqlExecutor {
         // review, never a guess. An IF (bare or EXEC-wrapped) runs
         // through the script overlay instead, where the ladder lives.
         else if (stmts.length == 1 && runsIf(stmts.head).isEmpty) {
-          if (UpdateSqlCompiler.masked(stmts.head).contains("@@")) None
+          if (SqlLex.mask(stmts.head).contains("@@")) None
           else single(stmts.head)
         }
         // a #temp-bearing refresh shape must still run SEQUENTIALLY

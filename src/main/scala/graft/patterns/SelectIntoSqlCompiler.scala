@@ -29,10 +29,10 @@ object SelectIntoSqlCompiler {
     * no 2714 probe): the mapping ledger reports target + strategy. */
   private[graft] def shapeTarget(sqlRaw: String): Option[String] = {
     val sql = SqlText.stripComments(sqlRaw)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     if (selectHeadRe.findFirstIn(msk).isEmpty) return None
-    intoRe.findAllMatchIn(msk)
-      .filter(m => WindowSqlLowering.depthAt(msk, m.start) == 0).toList match {
+    val depth = SqlLex.depths(msk)
+    intoRe.findAllMatchIn(msk).filter(m => depth(m.start) == 0).toList match {
       case m :: Nil =>
         val target = sql.substring(m.start(1), m.end(1))
         if (MergeSqlCompiler.hasQuotedIdentifier(target) ||
@@ -45,10 +45,10 @@ object SelectIntoSqlCompiler {
   def rewrite(spark: SparkSession, task: ExecuteSqlTask,
       resolve: String => DataFrame): Option[SqlOutcome] = {
     val sql = SqlText.stripComments(task.sqlStatement)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     if (selectHeadRe.findFirstIn(msk).isEmpty) return None
-    val intos = intoRe.findAllMatchIn(msk)
-      .filter(m => WindowSqlLowering.depthAt(msk, m.start) == 0).toList
+    val depth = SqlLex.depths(msk)
+    val intos = intoRe.findAllMatchIn(msk).filter(m => depth(m.start) == 0).toList
     intos match {
       case m :: Nil =>
         val target = sql.substring(m.start(1), m.end(1))

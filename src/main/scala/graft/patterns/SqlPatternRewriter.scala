@@ -135,7 +135,7 @@ object SqlPatternRewriter {
     // / `WITH … SELECT`) belongs to the SELECT the statement carries —
     // T-SQL's other staging spelling; without the re-attachment the
     // extracted select would reference CTE names that no longer exist
-    val msk = graft.patterns.UpdateSqlCompiler.masked(sql)
+    val msk = graft.patterns.SqlLex.mask(sql)
     val withLead = "(?is)^\\s*with\\b".r.findFirstIn(msk).isDefined
 
     val inserts = insertSelectRe.findAllMatchIn(sql).toList
@@ -143,7 +143,7 @@ object SqlPatternRewriter {
       case m :: Nil =>
         val target = m.group(1)
         val ctePrefix =
-          if (withLead && WindowSqlLowering.depthAt(msk, m.start) == 0)
+          if (withLead && SqlLex.depths(msk)(m.start) == 0)
             sql.substring(0, m.start).trim + " "
           else ""
         val select0 = ctePrefix + m.group(2).trim

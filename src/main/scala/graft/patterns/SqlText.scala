@@ -17,6 +17,9 @@ package graft.patterns
   * capitalized keyword). A lowercase-keyword statement behind a
   * normalized leading comment stays conservative: it strips to nothing
   * and classifies as manual-review rather than executing half a comment.
+  * `/* … */` comments strip in both forms. Which characters start or
+  * sit in a comment is [[SqlLex]]'s call: a `--` inside a literal, a
+  * `[bracketed]` identifier or a block comment is not a comment start.
   */
 object SqlText {
 
@@ -25,7 +28,8 @@ object SqlText {
       "CREATE|ALTER|DROP|EXEC|EXECUTE|BEGIN|SET|RAISERROR|GRANT|USE)\\b").r
 
   def stripComments(sql: String): String =
-    (if (sql.contains('\n')) stripToEol(sql) else stripNormalized(sql)).trim
+    (if (sql.contains('\n')) dropComments(sql, SqlLex.kinds(sql))
+     else stripNormalized(sql)).trim
 
   /** Typed SQL literal for a driver-evaluated scalar binding back into
     * statement text — the WHILE unroll, guard block, and script
@@ -113,40 +117,13 @@ object SqlText {
 
   def splitBatches(sql: String): List[String] =
     if (!sql.contains('\n')) List(sql)
-    else {
-      val msk = UpdateSqlCompiler.masked(sql)
-      val cuts = goLineRe.findAllMatchIn(msk).map(m => (m.start, m.end)).toList
-      val (parts, last) = cuts.foldLeft((List.empty[String], 0)) {
-        case ((acc, from), (s, e)) => (sql.substring(from, s) :: acc, e)
-      }
-      (sql.substring(last) :: parts).reverse.map(_.trim).filter(_.nonEmpty)
-    }
+    else SqlLex.pieces(sql, goLineRe, top = false).map(_.trim).filter(_.nonEmpty)
 
-  /** Split a script into its `;`-separated statements, quote-aware (a
-    * `;` inside a string literal never splits; `''` escapes survive).
-    * Empty fragments (trailing `;`, `;;`) are dropped. */
-  def splitStatements(sql: String): List[String] = {
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var inQ = false
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inQ) {
-        if (c == '\'' && i + 1 < sql.length && sql.charAt(i + 1) == '\'') {
-          cur.append("''"): Unit; i += 1
-        } else {
-          if (c == '\'') inQ = false
-          cur.append(c): Unit
-        }
-      } else if (c == '\'') { inQ = true; cur.append(c): Unit }
-      else if (c == ';') { out += cur.toString; cur.clear() }
-      else cur.append(c): Unit
-      i += 1
-    }
-    out += cur.toString
-    out.toList.map(_.trim).filter(_.nonEmpty)
-  }
+  /** Split a script into its `;`-separated statements: only a code
+    * `;` splits (never one inside a literal, a `[bracketed]` identifier
+    * or a comment). Empty fragments (trailing `;`, `;;`) are dropped. */
+  def splitStatements(sql: String): List[String] =
+    SqlLex.pieces(sql, ";".r, top = false).map(_.trim).filter(_.nonEmpty)
 
   /** T-SQL `CONVERT(type, expr [, style])` → Spark — the other
     * cast-spelling half of real estates' SQL beside `CAST` (the
@@ -176,25 +153,18 @@ object SqlText {
     var rounds = 0
     while (rounds < 64) { // nesting bound; each round rewrites one call
       rounds += 1
-      val msk = UpdateSqlCompiler.masked(cur)
+      val msk = SqlLex.mask(cur)
       val heads = convertHeadRe.findAllMatchIn(msk).toList
       // a LEAF call's argument span contains no other CONVERT head —
       // walking right-to-left finds one whenever any call is left
       val rewritten = heads.reverseIterator.map { h =>
-        var depth = 1
-        var i = h.end
-        while (i < msk.length && depth > 0) {
-          val c = msk.charAt(i)
-          if (c == '(') depth += 1 else if (c == ')') depth -= 1
-          i += 1
-        }
-        if (depth != 0) None // unbalanced — leave for spark.sql to reject
+        val close = SqlLex.close(msk, h.end)
+        if (close < 0) None // unbalanced — leave for spark.sql to reject
         else {
-          val close = i - 1
           val inner = cur.substring(h.end, close)
           if (convertHeadRe.findFirstIn(msk.substring(h.end, close)).isDefined)
             None // not a leaf this round
-          else MergeSqlCompiler.splitTop(inner).map(_.trim) match {
+          else SqlLex.splitTop(inner) match {
             case tpe :: args if args.nonEmpty && args.length <= 2 =>
               val style = args.lift(1).flatMap(_.trim.toIntOption)
               val repl =
@@ -221,48 +191,34 @@ object SqlText {
     * [[InsertValuesSqlCompiler]] mapping, shared with the SELECT path. */
   private val getDateRe = "(?i)\\bgetdate\\s*\\(\\s*\\)".r
   def translateGetdate(sql: String): String =
-    MergeSqlCompiler.segments(sql).map {
-      case (seg, true) => seg
-      case (seg, false) => getDateRe.replaceAllIn(seg, "current_timestamp()")
-    }.mkString
+    SqlLex.mapCode(sql)(getDateRe.replaceAllIn(_, "current_timestamp()"))
 
-  /** Newlines present: strip `--` to end-of-line — but only a `--` OUTSIDE
-    * a single-quoted literal starts a comment (`WHERE note <> '--x'` must
-    * survive intact). Quote state persists across newlines, so a literal
-    * that legally spans lines can't hide a fake comment start either.
-    * A doubled `''` escape reads as close-then-reopen: same net state. */
-  private def stripToEol(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var inQ = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inQ) { out += c; if (c == '\'') inQ = false; i += 1 }
-      else if (c == '\'') { out += c; inQ = true; i += 1 }
-      else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-        while (i < sql.length && sql.charAt(i) != '\n') i += 1
-      } else { out += c; i += 1 }
+  /** `text` without its comments (`kinds` covers at least `text`): a
+    * line comment goes (its newline stays), a block comment leaves one
+    * space, since it separates the tokens around it. */
+  private def dropComments(text: String, kinds: Array[Int]): String = {
+    val sb = new StringBuilder(text.length)
+    for (i <- text.indices) kinds(i) match {
+      case SqlLex.LineComment =>
+      case SqlLex.BlockComment =>
+        if (i == 0 || kinds(i - 1) != SqlLex.BlockComment) sb += ' '
+      case _ => sb += text.charAt(i)
     }
-    out.result()
+    sb.result()
   }
 
-  /** Normalized (newline-free) case: the keyword heuristic, applied only
-    * to a `--` outside single-quoted literals. */
+  /** Normalized (newline-free) case: a `--` the lexer reads as a comment
+    * start ends at the first statement keyword after it (the heuristic
+    * above); lexing resumes there. */
   private def stripNormalized(sql: String): String = {
     val out = new StringBuilder
-    var i = 0
-    var inQ = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inQ) { out += c; if (c == '\'') inQ = false; i += 1 }
-      else if (c == '\'') { out += c; inQ = true; i += 1 }
-      else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-        val after = sql.substring(i + 2)
-        stmtKeyword.findFirstMatchIn(after) match {
-          case Some(m) => i = i + 2 + m.start
-          case None => i = sql.length
-        }
-      } else { out += c; i += 1 }
+    var rest = sql
+    while (rest.nonEmpty) {
+      val kinds = SqlLex.kinds(rest)
+      val c = kinds.indexOf(SqlLex.LineComment)
+      out ++= dropComments(if (c < 0) rest else rest.substring(0, c), kinds)
+      rest = if (c < 0) "" else stmtKeyword.findFirstMatchIn(rest.substring(c + 2))
+        .fold("")(m => rest.substring(c + 2 + m.start))
     }
     out.result()
   }

@@ -59,7 +59,7 @@ object TsqlConcatFold {
   /** Render `<inner>` as T-SQL text → (text, cameFromString). */
   private def renderInner(raw: String): Option[(String, Boolean)] = {
     val t = raw.trim
-    val msk = UpdateSqlCompiler.masked(t)
+    val msk = SqlLex.mask(t)
     if (strLitRe.findFirstIn(msk).isDefined &&
         !msk.substring(msk.indexOf('\'') + 1, msk.lastIndexOf('\''))
           .contains('\''))
@@ -85,7 +85,7 @@ object TsqlConcatFold {
   /** One fragment → its folded text, or None. */
   private def foldFragment(raw: String): Option[String] = {
     val t = raw.trim
-    val msk = UpdateSqlCompiler.masked(t)
+    val msk = SqlLex.mask(t)
     def toChar(inner: String, lenSpec: Option[String]): Option[String] =
       renderInner(inner).flatMap { case (txt, fromString) =>
         lenSpec.map(_.toLowerCase) match {
@@ -109,37 +109,19 @@ object TsqlConcatFold {
         case Some(m) =>
           val inner = t.substring(m.start(3), m.end(3))
           // a top-level comma in the value slot is a STYLE argument
-          if (MergeSqlCompiler.splitTop(inner).size != 1) None
+          if (SqlLex.splitTop(inner).size != 1) None
           else toChar(inner, Option(m.group(2)))
         case None => None
       }
     }
   }
 
-  /** Split `raw` at top-level `+` (outside literals and parens). */
-  private def splitPlus(raw: String): List[String] = {
-    val msk = UpdateSqlCompiler.masked(raw)
-    val cuts = scala.collection.mutable.ListBuffer.empty[Int]
-    var depth = 0
-    var i = 0
-    while (i < msk.length) {
-      msk.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case '+' if depth == 0 => cuts += i
-        case _ => ()
-      }
-      i += 1
-    }
-    val bounds = (-1 +: cuts.toList) :+ raw.length
-    bounds.zip(bounds.tail).map { case (a, b) => raw.substring(a + 1, b) }
-  }
-
   /** Fold a top-level `+` concatenation (TWO or more fragments — a
     * single literal is [[ExecLiteralSqlCompiler]]'s existing class) to
     * the exact T-SQL result text, or None. */
   def fold(raw: String): Option[String] = {
-    val parts = splitPlus(raw)
+    // top-level `+` cuts (outside literals and parens)
+    val parts = SqlLex.pieces(raw, "\\+".r)
     if (parts.size < 2) return None
     // a unary `+`/empty slice means the `+` was arithmetic, not concat
     if (parts.exists(_.trim.isEmpty)) return None

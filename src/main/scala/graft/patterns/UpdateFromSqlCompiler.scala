@@ -103,7 +103,7 @@ object UpdateFromSqlCompiler {
         val audit = g(4)
         OutputIntoSqlCompiler.parseItems(items).isDefined &&
           !audit.equalsIgnoreCase(g(6)) && !audit.equalsIgnoreCase(g(9)) &&
-          gOpt(5).forall(cl => MergeSqlCompiler.splitTop(cl)
+          gOpt(5).forall(cl => SqlLex.splitTop(cl)
             .forall(_.matches("[A-Za-z_]\\w*")))
     }
     namesTarget && !tA.equalsIgnoreCase(sA) && outputOk &&
@@ -113,7 +113,7 @@ object UpdateFromSqlCompiler {
   /** Parse-only classification twin of [[rewrite]] (no frames touched). */
   private[graft] def shapeMatches(sqlRaw: String): Boolean = {
     val sql = SqlText.stripComments(sqlRaw)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     if (offShapeJoinRe.findFirstIn(msk).isDefined) return false
     updateFromRe.findFirstMatchIn(msk).exists(groupsOk(sql, _))
   }
@@ -121,7 +121,7 @@ object UpdateFromSqlCompiler {
   def rewrite(spark: SparkSession, task: ExecuteSqlTask,
       resolve: String => DataFrame): Option[SqlOutcome] = {
     val sql = SqlText.stripComments(task.sqlStatement)
-    val msk = UpdateSqlCompiler.masked(sql)
+    val msk = SqlLex.mask(sql)
     if (offShapeJoinRe.findFirstIn(msk).isDefined) return None
     updateFromRe.findFirstMatchIn(msk).flatMap { m =>
       // match on the masked twin, slice the ORIGINAL by group spans
@@ -147,7 +147,7 @@ object UpdateFromSqlCompiler {
             d.withColumnRenamed(c, MergeSqlCompiler.SrcPrefix + c))
           .withColumn("__graft_smatch", lit(true))
         val joinCond = expr(MergeSqlCompiler.xlate(onBody, tA, sA))
-        val assignments = MergeSqlCompiler.splitTop(setList).map { a =>
+        val assignments = SqlLex.splitTop(setList).map { a =>
           val i = a.indexOf('=')
           require(i > 0, s"UPDATE SET assignment has no '=': $a")
           MergeSqlCompiler.xlate(a.take(i).trim, tA, sA) ->

@@ -30,25 +30,6 @@ object UpdateSqlCompiler {
     ("(?is)^\\s*update\\s+([^\\s;]+)\\s+set\\s+(.+?)" +
       "(?:\\s+where\\s+(.+?))?\\s*;?\\s*$").r
 
-  /** `sql` with every single-quoted literal's content replaced by `x`s
-    * of the same length: keyword scans on the masked text can never
-    * match inside a literal (`SET note = 'applies where stated'` must
-    * not split at the literal's "where"), while every match span maps
-    * 1:1 onto the original string for slicing. Length preservation
-    * holds for MALFORMED input too: an unterminated trailing literal
-    * (`… 'abc` or a lone `'`) masks to an open literal of the same
-    * length — the naive closed-quote form would shift every span after
-    * it (only the FINAL segment can be unterminated, but the 1:1
-    * contract should not depend on that). */
-  private[patterns] def masked(sql: String): String =
-    MergeSqlCompiler.segments(sql).map {
-      case (seg, true) =>
-        if (seg.length >= 2 && seg.endsWith("'"))
-          "'" + "x" * (seg.length - 2) + "'"
-        else "'" + "x" * (seg.length - 1)
-      case (seg, false) => seg
-    }.mkString
-
   /** A clause body that leaves the canonical contract: a FROM/JOIN leg
     * (the T-SQL correlated-update form), a subquery, a trailing script
     * statement, or a quoted identifier ([[MergeSqlCompiler.bodyDisqualified]]). */
@@ -61,7 +42,7 @@ object UpdateSqlCompiler {
     * statements the run executes. */
   private[graft] def shapeMatches(sqlRaw: String): Boolean = {
     val sql = SqlText.stripComments(sqlRaw)
-    updateRe.findFirstMatchIn(masked(sql)).exists { m =>
+    updateRe.findFirstMatchIn(SqlLex.mask(sql)).exists { m =>
       val setList = sql.substring(m.start(2), m.end(2))
       val whereOpt =
         if (m.group(3) == null) None
@@ -78,7 +59,7 @@ object UpdateSqlCompiler {
     * OUTPUT-clause form validates identically. */
   private[patterns] def parsedAssignments(setList: String, tgt: DataFrame,
       tgtName: String): Map[String, org.apache.spark.sql.Column] = {
-    val assignments = MergeSqlCompiler.splitTop(setList).map { a =>
+    val assignments = SqlLex.splitTop(setList).map { a =>
       val i = a.indexOf('=')
       require(i > 0, s"UPDATE SET assignment has no '=': $a")
       a.take(i).trim -> expr(a.drop(i + 1).trim)
@@ -100,7 +81,7 @@ object UpdateSqlCompiler {
       resolve: String => DataFrame): Option[SqlOutcome] = {
     val sql = SqlText.stripComments(task.sqlStatement)
     // match on the masked text, slice the ORIGINAL by group spans
-    updateRe.findFirstMatchIn(masked(sql)).flatMap { m =>
+    updateRe.findFirstMatchIn(SqlLex.mask(sql)).flatMap { m =>
       val tgtName = sql.substring(m.start(1), m.end(1))
       val setList = sql.substring(m.start(2), m.end(2))
       val whereOpt =

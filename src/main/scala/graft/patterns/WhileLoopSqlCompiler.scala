@@ -62,7 +62,7 @@ object WhileLoopSqlCompiler {
     * masked twin (BEGIN/END/WHILE inside string literals are data);
     * slices come from the original text. Nested BEGIN declines. */
   private def parse(text: String): Option[Parsed] = {
-    val msk = UpdateSqlCompiler.masked(text)
+    val msk = SqlLex.mask(text)
     whileRe.findFirstMatchIn(msk).flatMap { m =>
       def g(i: Int) = text.substring(m.start(i), m.end(i))
       val preamble = SqlText.splitStatements(g(1))
@@ -77,7 +77,7 @@ object WhileLoopSqlCompiler {
       def bodyStmtOk(s: String): Boolean =
         if (IfLadderSqlCompiler.isIf(s)) IfLadderSqlCompiler.loopBodySafe(s)
         else "(?i)\\b(begin|while)\\b".r
-          .findFirstIn(UpdateSqlCompiler.masked(s)).isEmpty
+          .findFirstIn(SqlLex.mask(s)).isEmpty
       if (body.isEmpty || !body.forall(bodyStmtOk)) None
       else Some(Parsed(preamble, g(2), body))
     }
@@ -95,9 +95,9 @@ object WhileLoopSqlCompiler {
 
   private def declaredOf(preamble: List[String]): Set[String] =
     preamble.flatMap { s =>
-      val msk = UpdateSqlCompiler.masked(s)
+      val msk = SqlLex.mask(s)
       declareRe.findFirstMatchIn(msk).toList.flatMap { m =>
-        MergeSqlCompiler.splitTop(s.substring(m.start(1), m.end(1)))
+        SqlLex.splitTop(s.substring(m.start(1), m.end(1)))
           .flatMap(item => declareItemRe.findFirstMatchIn(item.trim)
             .map(_.group(1).toLowerCase))
       }
@@ -106,7 +106,7 @@ object WhileLoopSqlCompiler {
   /** Every preamble statement is DECLARE/SET, control expressions are
     * FROM-less, and every @var anywhere in control is declared. */
   private def controlOk(p: Parsed, declared: Set[String]): Boolean = {
-    def msk(s: String) = UpdateSqlCompiler.masked(s)
+    def msk(s: String) = SqlLex.mask(s)
     val preOk = p.preamble.forall { s =>
       declareRe.findFirstIn(msk(s)).isDefined ||
         setRe.findFirstIn(msk(s)).isDefined
@@ -117,7 +117,7 @@ object WhileLoopSqlCompiler {
           s.substring(m.start(2), m.end(2)))))
     val controlExprs = p.pred :: sets.map(_._2) ++
       p.preamble.flatMap(s => declareRe.findFirstMatchIn(msk(s)).toList
-        .flatMap(m => MergeSqlCompiler.splitTop(s.substring(m.start(1), m.end(1)))
+        .flatMap(m => SqlLex.splitTop(s.substring(m.start(1), m.end(1)))
           .flatMap(item => declareItemRe.findFirstMatchIn(item.trim)
             .flatMap(im => Option(im.group(2))))))
     val controlVars = (controlExprs.flatMap(e =>
@@ -152,13 +152,9 @@ object WhileLoopSqlCompiler {
     // a value with no safe literal form (SqlText.sqlLit → None, e.g. a
     // binary) throws UnbindableLiteral and the whole loop DECLINES —
     // a toString splice of a Date is integer arithmetic, silently wrong
-    def bind(e: String): String = MergeSqlCompiler.segments(e).map {
-      case (seg, true) => seg
-      case (seg, false) =>
-        varRe.replaceAllIn(seg, m =>
-          java.util.regex.Matcher.quoteReplacement(
-            SqlText.sqlLitOrDecline(vals(m.group(1).toLowerCase))))
-    }.mkString
+    def bind(e: String): String = SqlLex.mapCode(e)(varRe.replaceAllIn(_, m =>
+      java.util.regex.Matcher.quoteReplacement(
+        SqlText.sqlLitOrDecline(vals(m.group(1).toLowerCase)))))
     def eval(e: String): Any = LocalEval.sql(spark, bind(e))
     def predTrue: Boolean = LocalEval.sql(spark,
       s"CASE WHEN ${bind(p.pred)} THEN true ELSE false END") == true
@@ -166,9 +162,9 @@ object WhileLoopSqlCompiler {
     try {
       // preamble: DECLARE inits and SETs in order
       p.preamble.foreach { s =>
-        val msk = UpdateSqlCompiler.masked(s)
+        val msk = SqlLex.mask(s)
         declareRe.findFirstMatchIn(msk).foreach { m =>
-          MergeSqlCompiler.splitTop(s.substring(m.start(1), m.end(1)))
+          SqlLex.splitTop(s.substring(m.start(1), m.end(1)))
             .foreach(item => declareItemRe.findFirstMatchIn(item.trim)
               .foreach { im =>
                 Option(im.group(2)).foreach(init =>
@@ -187,7 +183,7 @@ object WhileLoopSqlCompiler {
         iters += 1
         if (iters > MaxIterations) return None // manual review, not a bomb
         p.body.foreach { s =>
-          val msk = UpdateSqlCompiler.masked(s)
+          val msk = SqlLex.mask(s)
           setRe.findFirstMatchIn(msk) match {
             case Some(m) =>
               vals(s.substring(m.start(1), m.end(1)).toLowerCase) =

@@ -55,36 +55,13 @@ object WindowSqlLowering {
   private val itemAliasRe = "(?is)^(.+?)\\s+as\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
   private val identRe = "[A-Za-z_][A-Za-z0-9_]*".r
 
-  /** Depth of nesting parens at `pos`, counting only parens outside
-    * single-quoted literals; 0 = the top-level select list. */
-  private[patterns] def depthAt(s: String, pos: Int): Int = {
-    var depth = 0
-    var inQ = false
-    var i = 0
-    while (i < pos) {
-      val c = s.charAt(i)
-      if (inQ) { if (c == '\'') inQ = false }
-      else c match {
-        case '\'' => inQ = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    depth
-  }
-
   /** Case-fold and space-collapse UNQUOTED segments only: two items
     * differing solely inside a string literal (`coalesce(seg,'A')` vs
     * `coalesce(seg,'a')`) are DIFFERENT expressions — folding literal
     * content would alias one to the other and silently change the rank
     * order the lowering must preserve. */
   private def norm(s: String): String =
-    MergeSqlCompiler.segments(s).map {
-      case (seg, true) => seg
-      case (seg, false) => seg.toLowerCase.replaceAll("\\s+", " ")
-    }.mkString.trim
+    SqlLex.mapCode(s)(_.toLowerCase.replaceAll("\\s+", " ")).trim
 
   def lower(spark: SparkSession, select: String): Option[DataFrame] = {
     // ALL keyword/position scans run on a literal-MASKED twin of the
@@ -92,26 +69,27 @@ object WindowSqlLowering {
     // a ' from ' or ';' or 'order by' INSIDE a string literal must
     // never count as structure. Content is always sliced from the
     // ORIGINAL text by the masked match's span.
-    val msk = UpdateSqlCompiler.masked(select)
+    val msk = SqlLex.mask(select)
+    val depth = SqlLex.depths(msk)
     if (distinctRe.findFirstIn(msk).isDefined) return None
     // LIMIT bounds the ranked output, not the rank's input; a top-level
     // ORDER BY's row order would be destroyed by the offsets join. The
     // OVER clause's own ORDER BY sits inside parens (depth >= 1), so a
     // depth-0 hit is always the outer statement's.
     if (limitOrOrderRe.findAllMatchIn(msk)
-        .exists(m => depthAt(msk, m.start) == 0)) return None
+        .exists(m => depth(m.start) == 0)) return None
     val matches = rankFnOpenRe.findAllMatchIn(msk).toList
     matches match {
-      case m :: Nil if depthAt(msk, m.start) == 0 =>
+      case m :: Nil if depth(m.start) == 0 =>
         val fn = Option(m.group(1)).getOrElse(m.group(2)).toLowerCase
         val fnArg = Option(m.group(3)).map(_.toInt)
         for {
-          (overBody, afterOver) <- MergeSqlCompiler.balanced(select, m.end)
+          (overBody, afterOver) <- SqlLex.enclosed(select, msk, m.end)
           am <- asAliasRe.findPrefixMatchOf(msk.substring(afterOver))
           alias = am.group(1)
           itemEnd = afterOver + am.end
           ob <- overBodyRe.findFirstMatchIn(
-            UpdateSqlCompiler.masked(overBody))
+            SqlLex.mask(overBody))
           // the window expr must be a WHOLE select-list item: preceded by
           // a top-level comma (or the SELECT keyword), followed by one
           // (or the FROM clause)
@@ -137,12 +115,13 @@ object WindowSqlLowering {
     * FROM), or None when the list can't be delimited. Keyword positions
     * are found on the masked twin; items slice the original. */
   private def selectItems(baseText: String): Option[List[String]] = {
-    val msk = UpdateSqlCompiler.masked(baseText)
+    val msk = SqlLex.mask(baseText)
+    val depth = SqlLex.depths(msk)
     for {
       sel <- "(?is)^\\s*select\\s+".r.findFirstMatchIn(msk)
       from <- "(?i)\\bfrom\\b".r.findAllMatchIn(msk)
-        .find(m => m.start >= sel.end && depthAt(msk, m.start) == 0)
-    } yield MergeSqlCompiler.splitTop(baseText.substring(sel.end, from.start))
+        .find(m => m.start >= sel.end && depth(m.start) == 0)
+    } yield SqlLex.splitTop(baseText.substring(sel.end, from.start))
   }
 
   private def lowerParsed(spark: SparkSession, fn: String,
@@ -183,8 +162,8 @@ object WindowSqlLowering {
           }
           if (shadowed) None else Some(expr(t))
       }
-    val partItems = partList.toList.flatMap(MergeSqlCompiler.splitTop)
-    val orderItems = MergeSqlCompiler.splitTop(orderList)
+    val partItems = partList.toList.flatMap(SqlLex.splitTop(_))
+    val orderItems = SqlLex.splitTop(orderList)
     def split(it: String): (String, Boolean) =
       dirSuffixRe.findFirstMatchIn(it) match {
         case Some(dm) =>

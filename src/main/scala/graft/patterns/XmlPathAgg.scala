@@ -42,32 +42,23 @@ object XmlPathAgg {
     * off-shape FOR XML survives → the statement must decline. */
   def translate(sqlRaw: String): Option[Either[Unit, String]] = {
     var cur = sqlRaw
-    if (forXmlRe.findFirstIn(UpdateSqlCompiler.masked(cur)).isEmpty)
+    if (forXmlRe.findFirstIn(SqlLex.mask(cur)).isEmpty)
       return None
     var rounds = 0
     var changed = true
     while (changed && rounds < 16) {
       rounds += 1
       changed = false
-      val msk = UpdateSqlCompiler.masked(cur)
+      val msk = SqlLex.mask(cur)
       // innermost-first: walk heads right-to-left; a head whose span
       // still contains another STUFF is skipped this round
       val heads = stuffHeadRe.findAllMatchIn(msk).toList.reverseIterator
       for (h <- heads if !changed) {
         // balanced span of STUFF's argument list on the masked twin
-        var depth = 1
-        var i = h.end
-        while (depth > 0 && i < msk.length) {
-          msk.charAt(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ => ()
-          }
-          i += 1
-        }
-        if (depth == 0) {
-          val argsMsk = msk.substring(h.end, i - 1)
-          val argsRaw = cur.substring(h.end, i - 1)
+        val close = SqlLex.close(msk, h.end)
+        if (close >= 0) {
+          val argsMsk = msk.substring(h.end, close)
+          val argsRaw = cur.substring(h.end, close)
           innerRe.findFirstMatchIn(argsMsk).foreach { m =>
             def g(k: Int): String =
               argsRaw.substring(m.start(k), m.end(k)).trim
@@ -83,13 +74,7 @@ object XmlPathAgg {
             // concat Spark would read as arithmetic)
             val exprMsk = argsMsk.substring(m.start(2), m.end(2))
             val ordMsk = argsMsk.substring(m.start(4), m.end(4))
-            def plusFree(s: String): Boolean = {
-              var d = 0
-              s.forall { c =>
-                if (c == '(') d += 1 else if (c == ')') d -= 1
-                c != '+' || d > 0
-              }
-            }
+            def plusFree(s: String): Boolean = SqlLex.pieces(s, "\\+".r).size == 1
             if (strip == sep.length && sep.nonEmpty &&
                 plusFree(exprMsk) && plusFree(ordMsk) &&
                 !ordMsk.contains(",") &&
@@ -99,14 +84,14 @@ object XmlPathAgg {
               val repl = s"(SELECT array_join(transform(array_sort(" +
                 s"collect_list(struct($ord AS __gxo, $expr AS __gxe)))," +
                 s" s -> s.__gxe), $sepSpark) FROM $fromWhere)"
-              cur = cur.substring(0, h.start) + repl + cur.substring(i)
+              cur = cur.substring(0, h.start) + repl + cur.substring(close + 1)
               changed = true
             }
           }
         }
       }
     }
-    if (forXmlRe.findFirstIn(UpdateSqlCompiler.masked(cur)).isDefined)
+    if (forXmlRe.findFirstIn(SqlLex.mask(cur)).isDefined)
       Some(Left(()))
     else Some(Right(cur))
   }

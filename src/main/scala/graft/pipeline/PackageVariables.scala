@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.expr.{LocalEval, SsisExprCompiler}
 import graft.ir.Ir._
+import graft.patterns.SqlLex
 import graft.types.SsisTypes
 import graft.types.SsisTypes.SsisColumnType
 import org.apache.spark.sql.SparkSession
@@ -135,44 +136,28 @@ object PackageVariables {
     case other => other.toString
   }
 
-  /** Walk `sql` emitting each character with an "active SQL" flag:
-    * characters inside single-quoted literals, `--` line comments, and
-    * slash-star block comments are INACTIVE — a `?` there is text, never
-    * a positional parameter (a comment `?` would otherwise consume a
-    * parameter and silently shift every later placeholder to the wrong
-    * variable; dtsx attribute normalization makes `--` comments in
-    * extracted SQL especially common). */
-  private def scanSql(sql: String)(emit: (Char, Boolean) => Unit): Unit = {
-    var i = 0; var inStr = false; var inLine = false; var inBlock = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inLine) { emit(c, false); if (c == '\n') inLine = false; i += 1 }
-      else if (inBlock) {
-        if (c == '*' && i + 1 < sql.length && sql.charAt(i + 1) == '/') {
-          emit('*', false); emit('/', false); inBlock = false; i += 2
-        } else { emit(c, false); i += 1 }
-      } else if (inStr) { emit(c, false); if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { emit(c, false); inStr = true; i += 1 }
-      else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-        emit('-', false); emit('-', false); inLine = true; i += 2
-      } else if (c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') {
-        emit('/', false); emit('*', false); inBlock = true; i += 2
-      } else { emit(c, true); i += 1 }
-    }
+  /** Positions of the positional `?` placeholders: code characters
+    * only ([[graft.patterns.SqlLex]]) — a `?` inside a literal, a
+    * `[bracketed]` identifier or a comment is text (a comment `?` would
+    * otherwise consume a parameter and silently shift every later
+    * placeholder to the wrong variable; dtsx attribute normalization
+    * makes `--` comments in extracted SQL especially common). */
+  private def placeholders(sql: String): Seq[Int] = {
+    val kinds = SqlLex.kinds(sql)
+    sql.indices.filter(i => sql.charAt(i) == '?' && kinds(i) == SqlLex.Code)
   }
 
-  /** Substitute positional `?` placeholders (quote- AND comment-aware). */
+  /** Substitute positional `?` placeholders ([[placeholders]]). */
   def bindSql(sql: String, params: Seq[Any]): String = {
+    val at = placeholders(sql)
+    if (at.length > params.length)
+      throw new IllegalArgumentException(
+        s"SQL has more `?` placeholders than bound parameters (${params.length})")
     val out = new StringBuilder(sql.length + 32)
-    var p = 0
-    scanSql(sql) { (ch, active) =>
-      if (active && ch == '?') {
-        if (p >= params.length)
-          throw new IllegalArgumentException(
-            s"SQL has more `?` placeholders than bound parameters (${params.length})")
-        out.append(renderLiteral(params(p))); p += 1
-      } else out.append(ch)
-    }
+    var from = 0
+    at.zip(params).foreach { case (i, v) =>
+      out ++= sql.substring(from, i) ++= renderLiteral(v); from = i + 1 }
+    out ++= sql.substring(from)
     out.toString
   }
 
@@ -190,12 +175,8 @@ object PackageVariables {
       pkg.variables.map(v => values.getOrElse(v.qualifiedName,
         parseValue(v.ssisType, v.value)))))
 
-  /** Count active (unquoted, uncommented) `?` placeholders. */
-  def placeholderCount(sql: String): Int = {
-    var n = 0
-    scanSql(sql) { (ch, active) => if (active && ch == '?') n += 1 }
-    n
-  }
+  /** Count active (code) `?` placeholders. */
+  def placeholderCount(sql: String): Int = placeholders(sql).length
 
   private val VarRef = """@\[(\w+)::(\w+)\]""".r
 

@@ -2,11 +2,11 @@ package graft.patterns
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property coverage for the quote-aware text machinery every SQL
-  * compiler stands on (segments / masked / splitTop / splitStatements /
-  * splitBatches): a bug here silently re-shapes statements — the
-  * worst failure class the frontend has. Deterministic sampling, the
-  * SsisExprPropertySpec convention. */
+/** Property coverage for the one T-SQL lexer ([[SqlLex]]) and the text
+  * machinery every SQL compiler stands on (mask / depths / splitTop /
+  * mapCode / splitStatements / splitBatches): a bug here silently
+  * re-shapes statements — the worst failure class the frontend has.
+  * Deterministic sampling, the SsisExprPropertySpec convention. */
 class SqlTextPropertySpec extends AnyFunSuite {
 
   private def forAll[A](g: Gen[A], n: Int = 200)(f: A => Unit): Unit =
@@ -23,79 +23,149 @@ class SqlTextPropertySpec extends AnyFunSuite {
       "= 1", "-- note", "?"),
     Gen.oneOf("'", "''").map(identity),
     Gen.alphaNumStr.map(_.take(6)))
-  private val genSoup: Gen[String] =
-    Gen.listOfN(24, genPiece).map(_.mkString(" "))
+  // the lexer's other states: comment and identifier delimiters, the
+  // N'' prefix, a temp name's `#`, and a text that ends inside a
+  // literal, an identifier or a comment
+  private val genLexPiece: Gen[String] = Gen.oneOf("/*", "*/", "--", "\n",
+    "[", "]", "]]", "N'", "#")
+  private val genTail: Gen[String] = Gen.oneOf("", "", "'open lit",
+    "[open id", "/* open comment", "-- open line")
+  private val genSoup: Gen[String] = for {
+    pieces <- Gen.listOfN(24, Gen.frequency(3 -> genPiece, 1 -> genLexPiece))
+    tail <- genTail
+  } yield pieces.mkString(" ") + tail
 
-  test("segments reassemble to the input exactly; flags alternate sanely") {
-    forAll(genSoup) { s =>
-      val segs = MergeSqlCompiler.segments(s)
-      assert(segs.map(_._1).mkString === s,
-        s"segments lost characters on: ${s.take(120)}")
-      // a quoted segment opens with a quote; every NON-FINAL quoted
-      // segment is terminated (only end-of-input can leave one open)
-      segs.filter(_._2).foreach { case (q, _) =>
-        assert(q.startsWith("'"), s"quoted segment without open quote: $q")
+  /** Reference lexer for the properties: an independent walk that finds
+    * each literal / identifier / comment SPAN and masks it whole (an
+    * identifier keeps its letters, digits, `_` and `#`), and counts paren
+    * depth over the code characters it passes. */
+  private def refLex(s: String): (String, Array[Int]) = {
+    val out = new StringBuilder
+    val depth = new Array[Int](s.length + 1)
+    var i = 0
+    // end (exclusive) of a delimited body starting at `from`, and
+    // whether it was closed: a doubled delimiter is an escape
+    def body(from: Int, q: Char): (Int, Boolean) = {
+      var j = from
+      while (j < s.length) {
+        if (s(j) != q) j += 1
+        else if (j + 1 < s.length && s(j + 1) == q) j += 2
+        else return (j + 1, true)
       }
-      segs.dropRight(1).filter(_._2).foreach { case (q, _) =>
-        assert(q.length >= 2 && q.endsWith("'"),
-          s"non-final quoted segment unterminated: $q")
-      }
+      (s.length, false)
     }
-  }
-
-  test("masked is length-preserving and leaks no literal content") {
-    forAll(genSoup) { s =>
-      val m = UpdateSqlCompiler.masked(s)
-      assert(m.length === s.length, s"masked changed length of: ${s.take(120)}")
-      // every character position that sits INSIDE a literal in the
-      // original is an 'x' or a quote in the mask
-      val segs = MergeSqlCompiler.segments(s)
-      var pos = 0
-      segs.foreach { case (seg, quoted) =>
-        if (quoted) {
-          val masked = m.substring(pos, pos + seg.length)
-          assert(masked.forall(c => c == 'x' || c == '\''),
-            s"literal content leaked into mask: '$seg' -> '$masked'")
-        } else
-          assert(m.substring(pos, pos + seg.length) === seg,
-            "mask altered unquoted text")
-        pos += seg.length
+    def blockEnd(from: Int): Int = {
+      var nest = 1
+      var j = from
+      while (j < s.length) {
+        if (s.startsWith("*/", j)) { nest -= 1; j += 2; if (nest == 0) return j }
+        else if (s.startsWith("/*", j)) { nest += 1; j += 2 }
+        else j += 1
       }
+      s.length
     }
-  }
-
-  test("splitTop never splits inside parens or literals; rejoin preserves content") {
-    forAll(genSoup) { s =>
-      val parts = MergeSqlCompiler.splitTop(s)
-      parts.foreach { p =>
-        // balanced parens per part (when the input was balanced)
-        val depthOk = {
-          var d = 0; var ok = true
-          MergeSqlCompiler.segments(p).foreach {
-            case (seg, false) => seg.foreach {
-              case '(' => d += 1
-              case ')' => d -= 1; if (d < 0) ok = false
-              case _ =>
-            }
-            case _ =>
-          }
-          ok || {
-            // inputs with unbalanced parens are allowed to yield
-            // unbalanced parts — only flag when the INPUT was balanced
-            var dIn = 0; var okIn = true
-            MergeSqlCompiler.segments(s).foreach {
-              case (seg, false) => seg.foreach {
-                case '(' => dIn += 1
-                case ')' => dIn -= 1; if (dIn < 0) okIn = false
-                case _ =>
-              }
-              case _ =>
-            }
-            !(okIn && dIn == 0)
-          }
+    while (i < s.length) {
+      val c = s(i)
+      var delta = 0
+      val end =
+        if (c == '\'' || c == '[') {
+          val q = if (c == '[') ']' else c
+          val (e, closed) = body(i + 1, q)
+          val inner = s.substring(i + 1, e - (if (closed) 1 else 0))
+          val shown = if (c == '[') inner.map(ch =>
+            if (ch.isLetterOrDigit || ch == '_' || ch == '#') ch else 'x')
+            else "x" * inner.length
+          out += c ++= shown ++= (if (closed) q.toString else "")
+          e
+        } else if (s.startsWith("--", i)) {
+          val e = if (s.indexOf('\n', i) < 0) s.length else s.indexOf('\n', i)
+          out ++= " " * (e - i); e
+        } else if (s.startsWith("/*", i)) {
+          val e = blockEnd(i + 2)
+          out ++= " " * (e - i); e
+        } else {
+          out += c
+          delta = if (c == '(') 1 else if (c == ')') -1 else 0
+          i + 1
         }
-        assert(depthOk, s"splitTop cut inside parens: '$p' from '${s.take(120)}'")
+      (i + 1 to end).foreach(depth(_) = depth(i))
+      depth(end) = depth(i) + delta
+      i = end
+    }
+    (out.result(), depth)
+  }
+
+  test("the lexer agrees with the reference lexer on mask and paren depth") {
+    forAll(genSoup, 400) { s =>
+      val (refMask, refDepth) = refLex(s)
+      val msk = SqlLex.mask(s)
+      assert(msk === refMask, s"mask differs on: ${s.take(160)}")
+      assert(SqlLex.depths(msk).toSeq === refDepth.toSeq,
+        s"depth differs on: ${s.take(160)}")
+    }
+  }
+
+  test("mapCode runs reassemble the input exactly; literal runs are quote-delimited") {
+    forAll(genSoup) { s =>
+      assert(SqlLex.mapCode(s)(identity) === s,
+        s"mapCode lost characters on: ${s.take(120)}")
+      // f sees exactly the characters outside string literals
+      val kinds = SqlLex.kinds(s)
+      val marked = SqlLex.mapCode(s)(r => "\u0000" * r.length)
+      assert(marked.indices.forall(i =>
+        (marked(i) == '\u0000') == (kinds(i) != SqlLex.Lit)),
+        s"mapCode handed literal text to f on: ${s.take(120)}")
+      // a literal run opens with a quote; every run the text does not
+      // end inside is terminated by one
+      val runs = s.indices.filter(i => kinds(i) == SqlLex.Lit &&
+        (i == 0 || kinds(i - 1) != SqlLex.Lit))
+      runs.foreach { a =>
+        assert(s(a) == '\'', s"literal without open quote at $a: ${s.take(120)}")
+        val e = (a until s.length).find(kinds(_) != SqlLex.Lit)
+        e.foreach(e => assert(e - a >= 2 && s(e - 1) == '\'',
+          s"non-final literal unterminated at $a: ${s.take(120)}"))
       }
+    }
+  }
+
+  test("mask is length-preserving and leaks no literal or comment content, nor an identifier's non-name characters") {
+    forAll(genSoup) { s =>
+      val m = SqlLex.mask(s)
+      assert(m.length === s.length, s"mask changed length of: ${s.take(120)}")
+      val kinds = SqlLex.kinds(s)
+      s.indices.foreach { i =>
+        kinds(i) match {
+          case SqlLex.Code => assert(m(i) === s(i), "mask altered code")
+          case SqlLex.Lit => assert("x'".contains(m(i)),
+            s"literal content leaked into mask: ${s.take(120)}")
+          case SqlLex.Ident => assert(m(i) == s(i) &&
+              (s(i).isLetterOrDigit || "_#[]".contains(s(i))) ||
+              m(i) == 'x' && !s(i).isLetterOrDigit && !"_#".contains(s(i)),
+            s"identifier mask neither a name character nor x: ${s.take(120)}")
+          case _ => assert(m(i) === ' ', s"comment leaked into mask: ${s.take(120)}")
+        }
+      }
+    }
+  }
+
+  test("splitTop never splits inside parens, literals, identifiers or comments") {
+    def balancedFromZero(t: String): (Boolean, Int) = {
+      val d = SqlLex.depths(SqlLex.mask(t))
+      (d.forall(_ >= 0), d.last)
+    }
+    forAll(genSoup) { s =>
+      // inputs with unbalanced parens may yield unbalanced parts — only
+      // flag a part when the INPUT was balanced
+      val (inOk, inEnd) = balancedFromZero(s)
+      SqlLex.splitTop(s).foreach { p =>
+        assert(balancedFromZero(p)._1 || !(inOk && inEnd == 0),
+          s"splitTop cut inside parens: '$p' from '${s.take(120)}'")
+      }
+      // no piece boundary lands on a comma that is not top-level code
+      val msk = SqlLex.mask(s)
+      val d = SqlLex.depths(msk)
+      val topCommas = s.indices.count(i => msk(i) == ',' && d(i) == 0)
+      assert(SqlLex.pieces(s, ",".r).size === topCommas + 1)
     }
   }
 
@@ -103,23 +173,16 @@ class SqlTextPropertySpec extends AnyFunSuite {
     forAll(genSoup) { s =>
       val stmts = SqlText.splitStatements(s)
       stmts.foreach { st =>
-        MergeSqlCompiler.segments(st).foreach { case (seg, quoted) =>
-          if (!quoted)
-            assert(!seg.contains(';'),
-              s"active ';' survived inside a statement: '$st'")
-        }
+        assert(!SqlLex.mask(st).contains(';'),
+          s"active ';' survived inside a statement: '$st'")
       }
-      // no non-whitespace content is lost by splitting
+      // no non-whitespace content is lost by splitting: only the ACTIVE
+      // semicolons (code, not literal / identifier / comment) go
+      val msk = SqlLex.mask(s)
       val joined = stmts.mkString.replaceAll("\\s", "")
-      val original = s.replace(";", "").replaceAll("\\s", "")
-      // quoted semicolons stay; unquoted ones are delimiters — compare
-      // after removing BOTH kinds from the original only when no
-      // literal contains one
-      val hasQuotedSemi = MergeSqlCompiler.segments(s)
-        .exists { case (seg, q) => q && seg.contains(';') }
-      if (!hasQuotedSemi)
-        assert(joined === original,
-          s"splitStatements lost content on: ${s.take(120)}")
+      val original = s.indices.filter(msk(_) != ';').map(s(_)).mkString
+        .replaceAll("\\s", "")
+      assert(joined === original, s"splitStatements lost content on: ${s.take(120)}")
     }
   }
 
@@ -130,11 +193,13 @@ class SqlTextPropertySpec extends AnyFunSuite {
       // masked spans must never shear characters
       batches.foreach(b => assert(s.contains(b),
         s"batch is not a substring: '$b' of '${s.take(120)}'"))
-      // and no batch retains a full-line GO outside a literal
-      batches.foreach { b =>
-        val msk = UpdateSqlCompiler.masked(b)
+      // and no batch retains a full-line GO outside a literal (a
+      // newline-free text is one batch by policy: there GO cannot be
+      // told from an identifier)
+      if (s.contains('\n')) batches.foreach { b =>
+        val msk = SqlLex.mask(b)
         assert("(?im)^[ \\t]*go[ \\t]*;?[ \\t]*$".r.findFirstIn(msk).isEmpty,
-          s"a GO line survived inside a batch: '$b'")
+          s"a GO line survived inside a batch: '$b' of '$s'")
       }
     }
   }
@@ -271,16 +336,15 @@ class SqlTextPropertySpec extends AnyFunSuite {
   }
   test("IfLadder parse: keywords and `;` in literals and [bracketed] identifiers never change the legs") {
     // the soup generator above plus the block/ladder keywords; a
-    // literal escapes its quotes, an identifier drops them (a quote
-    // inside brackets is outside what the literal masker models) and
-    // escapes `]` as `]]`
+    // literal escapes its quotes, an identifier keeps them (a quote
+    // inside brackets is identifier text) and escapes `]` as `]]`
     val hostile: Gen[String] = Gen.listOfN(6, Gen.oneOf(genPiece,
       Gen.oneOf("IF", "else", "BEGIN", "end", "RAISERROR(", "raiserror",
         ";", "exists (", "case", "return", "]", "[")))
       .map(_.mkString(" "))
     forAll(Gen.zip(hostile, hostile)) { case (litRaw, brRaw) =>
       val lit = litRaw.replace("'", "''")
-      val br = brRaw.replace("'", "").replace("]", "]]")
+      val br = brRaw.replace("]", "]]")
       val text = s"IF @s = '$lit' AND [$br] = 1 BEGIN UPDATE t SET [$br] = " +
         s"'$lit'; DELETE FROM t WHERE c = '$lit'; END " +
         s"ELSE IF EXISTS (SELECT 1 FROM u WHERE [$br] = '$lit') " +
