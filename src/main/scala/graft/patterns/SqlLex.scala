@@ -4,13 +4,15 @@ import scala.util.matching.Regex
 
 /** The one T-SQL lexer: which characters of a statement are code.
   *
-  * One state machine over five states: code, a `'…'` string literal
+  * One state machine over six states: code, a `'…'` string literal
   * (`''` escapes a quote; `N'…'` is the code char `N`, then a literal),
-  * a `[…]` identifier (`]]` escapes a bracket), a `--` line comment (the
-  * newline that ends it is code) and a `/* … */` block comment, nested
-  * as T-SQL nests them. An unterminated literal, identifier or comment
-  * runs to the end of the text. A `"double-quoted"` identifier is code
-  * ([[MergeSqlCompiler.hasQuotedIdentifier]] declines it).
+  * a `[…]` identifier (`]]` escapes a bracket), a `"…"` identifier (`""`
+  * escapes a quote: QUOTED_IDENTIFIER ON, the T-SQL default), a `--` line
+  * comment (the newline that ends it is code) and a `/* … */` block
+  * comment, nested as T-SQL nests them. An unterminated literal,
+  * identifier or comment runs to the end of the text. Both identifier
+  * forms keep their delimiters in the mask
+  * ([[MergeSqlCompiler.hasQuotedIdentifier]] declines on them).
   *
   * Compilers scan the [[mask]] for keywords and structure and slice the
   * original text by the same spans; paren depth is counted only here,
@@ -22,6 +24,7 @@ object SqlLex {
   final val Ident = 2
   final val LineComment = 3
   final val BlockComment = 4
+  final val QuotedIdent = 5
 
   /** A character an identifier keeps visible in the mask: name
     * lookups (`[#t]`, a cursor's `[main].[ord]`) read it there. */
@@ -44,12 +47,13 @@ object SqlLex {
         case Code =>
           if (c == '\'') { st = Lit; put(c) }
           else if (c == '[') { st = Ident; put(c) }
+          else if (c == '"') { st = QuotedIdent; put(c) }
           else if (c == '-' && at(i + 1, '-')) { st = LineComment; put(' ', 2) }
           else if (c == '/' && at(i + 1, '*')) { st = BlockComment; nest = 1; put(' ', 2) }
           else put(c)
-        case Lit | Ident =>
-          val q = if (st == Lit) '\'' else ']'
-          if (c != q) put(if (st == Ident && nameChar(c)) c else 'x')
+        case Lit | Ident | QuotedIdent =>
+          val q = st match { case Lit => '\'' case Ident => ']' case _ => '"' }
+          if (c != q) put(if (st != Lit && nameChar(c)) c else 'x')
           else if (at(i + 1, q)) put('x', 2)
           else { put(c); st = Code }
         case LineComment =>
@@ -65,8 +69,8 @@ object SqlLex {
     (k, new String(m))
   }
 
-  /** The state (Code, Lit, Ident, LineComment, BlockComment) of every
-    * character of `text`. */
+  /** The state (Code, Lit, Ident, LineComment, BlockComment, QuotedIdent)
+    * of every character of `text`. */
   def kinds(text: String): Array[Int] = scan(text)._1
 
   /** `text` with the content of every literal replaced by `x`s, every

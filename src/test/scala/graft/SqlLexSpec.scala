@@ -21,6 +21,14 @@ class SqlLexSpec extends AnyFunSuite {
     assert(ScriptedSqlExecutor.statements(script)._1 === two)
   }
 
+  test("an apostrophe inside a \"double-quoted\" identifier never opens a literal") {
+    val script = "SELECT \"it's\" AS a FROM t; DELETE FROM t WHERE id = 1"
+    assert(SqlText.splitStatements(script) ===
+      List("SELECT \"it's\" AS a FROM t", "DELETE FROM t WHERE id = 1"))
+    // `""` escapes a quote; the delimiters stay visible in the mask
+    assert(SqlLex.mask("SELECT \"a\"\"b;c\" FROM t") === "SELECT \"axxbxc\" FROM t")
+  }
+
   test("a '--' inside a [bracketed] identifier never starts a comment") {
     assert(SqlText.stripComments("SELECT [a--b] FROM t\nWHERE id = 1") ===
       "SELECT [a--b] FROM t\nWHERE id = 1")

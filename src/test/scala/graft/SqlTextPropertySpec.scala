@@ -23,22 +23,22 @@ class SqlTextPropertySpec extends AnyFunSuite {
       "= 1", "-- note", "?"),
     Gen.oneOf("'", "''").map(identity),
     Gen.alphaNumStr.map(_.take(6)))
-  // the lexer's other states: comment and identifier delimiters, the
-  // N'' prefix, a temp name's `#`, and a text that ends inside a
-  // literal, an identifier or a comment
+  // the lexer's other states: comment and identifier delimiters (both
+  // identifier forms), the N'' prefix, a temp name's `#`, and a text that
+  // ends inside a literal, an identifier or a comment
   private val genLexPiece: Gen[String] = Gen.oneOf("/*", "*/", "--", "\n",
-    "[", "]", "]]", "N'", "#")
+    "[", "]", "]]", "\"", "\"\"", "N'", "#")
   private val genTail: Gen[String] = Gen.oneOf("", "", "'open lit",
-    "[open id", "/* open comment", "-- open line")
+    "[open id", "\"open id", "/* open comment", "-- open line")
   private val genSoup: Gen[String] = for {
     pieces <- Gen.listOfN(24, Gen.frequency(3 -> genPiece, 1 -> genLexPiece))
     tail <- genTail
   } yield pieces.mkString(" ") + tail
 
   /** Reference lexer for the properties: an independent walk that finds
-    * each literal / identifier / comment SPAN and masks it whole (an
-    * identifier keeps its letters, digits, `_` and `#`), and counts paren
-    * depth over the code characters it passes. */
+    * each literal / identifier (`[…]` or `"…"`) / comment SPAN and masks
+    * it whole (an identifier keeps its letters, digits, `_` and `#`), and
+    * counts paren depth over the code characters it passes. */
   private def refLex(s: String): (String, Array[Int]) = {
     val out = new StringBuilder
     val depth = new Array[Int](s.length + 1)
@@ -68,11 +68,11 @@ class SqlTextPropertySpec extends AnyFunSuite {
       val c = s(i)
       var delta = 0
       val end =
-        if (c == '\'' || c == '[') {
+        if (c == '\'' || c == '[' || c == '"') {
           val q = if (c == '[') ']' else c
           val (e, closed) = body(i + 1, q)
           val inner = s.substring(i + 1, e - (if (closed) 1 else 0))
-          val shown = if (c == '[') inner.map(ch =>
+          val shown = if (c != '\'') inner.map(ch =>
             if (ch.isLetterOrDigit || ch == '_' || ch == '#') ch else 'x')
             else "x" * inner.length
           out += c ++= shown ++= (if (closed) q.toString else "")
@@ -138,8 +138,8 @@ class SqlTextPropertySpec extends AnyFunSuite {
           case SqlLex.Code => assert(m(i) === s(i), "mask altered code")
           case SqlLex.Lit => assert("x'".contains(m(i)),
             s"literal content leaked into mask: ${s.take(120)}")
-          case SqlLex.Ident => assert(m(i) == s(i) &&
-              (s(i).isLetterOrDigit || "_#[]".contains(s(i))) ||
+          case SqlLex.Ident | SqlLex.QuotedIdent => assert(m(i) == s(i) &&
+              (s(i).isLetterOrDigit || "_#[]\"".contains(s(i))) ||
               m(i) == 'x' && !s(i).isLetterOrDigit && !"_#".contains(s(i)),
             s"identifier mask neither a name character nor x: ${s.take(120)}")
           case _ => assert(m(i) === ' ', s"comment leaked into mask: ${s.take(120)}")

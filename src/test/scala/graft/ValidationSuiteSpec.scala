@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `rowCountMatch` and `checksum` read both sides in ONE query: every
-  * CheckResult equals what one aggregation per side computes (the
-  * reference below), over the degenerate and tolerance-edge cases. */
+/** `rowCountMatch` and `checksum` read both sides of a table pair in ONE
+  * query: every CheckResult equals what one aggregation per side computes
+  * (the reference below), over the degenerate and tolerance-edge cases,
+  * and a pair's row count plus all its checksums cost that one query. */
 class ValidationSuiteSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.get
 
@@ -63,7 +64,7 @@ class ValidationSuiteSpec extends AnyFunSuite {
       side(money, Seq(-5.25, -100.11, 3.07).map(Some(_)))),
     ("a 1.5% row drift in the warn band", side(money, drift.take(197)), side(money, drift)))
 
-  test("each check's results equal the per-side computation, one query per check") {
+  test("each check's results equal the per-side computation, one query per pair") {
     cases.foreach { case (name, actual, expected) =>
       val (rc, rcQueries) = SparkTestSession.queriesIn(
         ValidationSuite.rowCountMatch(actual, expected, name))
@@ -72,8 +73,85 @@ class ValidationSuiteSpec extends AnyFunSuite {
       val (cs, csQueries) = SparkTestSession.queriesIn(
         ValidationSuite.checksum(actual, expected, "amount", name))
       assert(cs === refChecksum(actual, expected, "amount", name), name)
-      assert(csQueries === 1, s"$name: checksum ran $csQueries queries")
+      assert(csQueries === 0, s"$name: checksum after rowCountMatch ran $csQueries queries")
     }
+  }
+
+  // one partition of (id, qty int, amount decimal(12,2), rate double)
+  private def wide(rows: Seq[(Int, Double)]): DataFrame = spark.createDataFrame(
+    java.util.Arrays.asList(rows.map { case (q, x) =>
+      org.apache.spark.sql.Row(q, x, x * 1.5) }: _*),
+    StructType(Seq(StructField("qty", IntegerType), StructField("amount", DoubleType),
+      StructField("rate", DoubleType))))
+    .select(col("qty"), col("amount").cast(money).as("amount"), col("rate")).coalesce(1)
+  private val numericCols = List("qty", "amount", "rate")
+
+  test("a row count and three checksums of one pair cost exactly one query") {
+    val actual = wide(Seq((1, 10.10), (2, -3.25), (7, 1234.56)))
+    val expected = wide(Seq((1, 10.10), (2, -3.26), (7, 1234.56), (4, 0.01)))
+    val (out, queries) = SparkTestSession.queriesIn(
+      ValidationSuite.rowCountMatch(actual, expected, "w") ::
+        numericCols.flatMap(c => ValidationSuite.checksum(actual, expected, c, "w")))
+    assert(queries === 1)
+    assert(out === refRowCount(actual, expected, "w") ::
+      numericCols.flatMap(c => refChecksum(actual, expected, c, "w")))
+  }
+
+  test("a re-read table is a new pair: its new rows' results come back") {
+    val path = java.nio.file.Files.createTempDirectory("graft-validate").resolve("t").toString
+    val expected = wide(Seq((1, 1.0), (2, 2.0)))
+    def validate() = {
+      val actual = spark.read.parquet(path)
+      val got = ValidationSuite.rowCountMatch(actual, expected, "t") ::
+        numericCols.flatMap(c => ValidationSuite.checksum(actual, expected, c, "t"))
+      assert(got === refRowCount(actual, expected, "t") ::
+        numericCols.flatMap(c => refChecksum(actual, expected, c, "t")))
+      got
+    }
+    wide(Seq((1, 1.0), (2, 2.0))).write.parquet(path)
+    val first = validate()
+    assert(first.forall(_.passed))
+    wide(Seq((5, 50.0), (6, 60.0), (7, 70.0))).write.mode("overwrite").parquet(path)
+    val second = validate()
+    assert(second.head.actual === "3" && second.tail.forall(!_.passed), second)
+  }
+
+  test("swapping the sides or changing one side runs a new query") {
+    val a = wide(Seq((1, 1.0), (2, 2.0)))
+    val b = wide(Seq((1, 1.0), (3, 2.5)))
+    val c = wide(Seq((9, 9.0)))
+    ValidationSuite.rowCountMatch(a, b, "t")
+    def costs(actual: DataFrame, expected: DataFrame) = {
+      val (out, n) = SparkTestSession.queriesIn(
+        ValidationSuite.checksum(actual, expected, "amount", "t"))
+      assert(out === refChecksum(actual, expected, "amount", "t"))
+      n
+    }
+    assert(costs(b, a) === 1, "swapped sides")
+    assert(costs(b, a) === 0, "the swapped pair is now the slot's")
+    assert(costs(b, c) === 1, "a changed expected side")
+    assert(costs(a, c) === 1, "a changed actual side")
+  }
+
+  test("a checksum outside the shared numeric columns behaves as the per-side query") {
+    val a = wide(Seq((1, 1.0), (2, 2.5)))
+    val e = wide(Seq((1, 1.0), (2, 2.5)))
+    ValidationSuite.rowCountMatch(a, e, "t")
+    // absent from expected: the same AnalysisException as the per-side query
+    val extra = a.withColumn("extra", col("qty") * 2)
+    ValidationSuite.rowCountMatch(extra, e, "t")
+    val thrown = intercept[org.apache.spark.sql.AnalysisException](
+      ValidationSuite.checksum(extra, e, "extra", "t"))
+    val refThrown = intercept[org.apache.spark.sql.AnalysisException](
+      refChecksum(extra, e, "extra", "t"))
+    assert(thrown.getCondition === refThrown.getCondition)
+    // a string on one side: the per-side result, from a query of its own
+    // that leaves the slot holding the pair
+    val text = e.withColumn("amount", col("amount").cast(StringType))
+    ValidationSuite.rowCountMatch(a, text, "t")
+    val (cs, n) = SparkTestSession.queriesIn(ValidationSuite.checksum(a, text, "amount", "t"))
+    assert(cs === refChecksum(a, text, "amount", "t") && n === 1)
+    assert(SparkTestSession.queriesIn(ValidationSuite.checksum(a, text, "rate", "t"))._2 === 0)
   }
 
   test("pinned edge results: empty sides, warn band, decimal against double") {
