@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Staged
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{SessionEvent, SessionSummary}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -38,13 +39,11 @@ object QueriesStreaming {
     * In production this is just `readStream.parquet(tableDir)`.
     * `copies > 1` stages the SAME file that many times — a deliberately
     * duplicated (at-least-once) stream for the dedup gate (q55).
-    * Staging is cached per (dir, copies): bench iteration loops must not
-    * re-copy the file per call or bill that I/O to the measured run. The
-    * event-time derivation is Tables.withEventTimeCols — the SAME
+    * The copy is a [[graft.ops.Staged]] artifact keyed on the table's
+    * content: bench iteration loops must not re-copy the file per call or
+    * bill that I/O to the measured run, and a rewritten table restages.
+    * The event-time derivation is Tables.withEventTimeCols — the SAME
     * definition the batch twins read through (parity is the gate). */
-  private val stagedEvents =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), java.nio.file.Path]()
-
   private def eventsStream(spark: SparkSession, dir: String,
       copies: Int = 1): DataFrame = {
     // same best-effort legacy enablement as Tables.eventsNs: ≤4.0 needs it
@@ -52,15 +51,13 @@ object QueriesStreaming {
     // withEventTimeCols handles both read shapes)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = java.nio.file.Path.of(s"$dir/events.parquet")
-    val stage = stagedEvents.computeIfAbsent((dir, copies), _ => {
-      val p = QueriesRelational.tempDirCleanedOnExit("graft-events-stream")
+    val stage = Staged.artifact(Staged.Stage(s"eventstream$copies", dir,
+        Seq("events.parquet"))) { p =>
       (1 to copies).foreach(i =>
-        java.nio.file.Files.copy(src, p.resolve(s"events_$i.parquet")))
-      p
-    })
+        java.nio.file.Files.copy(src, java.nio.file.Path.of(p, s"events_$i.parquet")))
+    }
     val schema = Tables.open(spark, src.toString).schema
-    Tables.withEventTimeCols(
-      StreamingOps.fileStream(spark, stage.toString, schema))
+    Tables.withEventTimeCols(StreamingOps.fileStream(spark, stage, schema))
   }
 
   private def ckpt(): String =
@@ -250,22 +247,16 @@ object QueriesStreaming {
     StreamingOps.drainToMemory(survivors, "q67_out", ckpt(), OutputMode.Complete)
   }
 
-  /** Staged copy of the x40/x42 document delta (ids ≡7 mod 10) for the
-    * FileStreamSource, cached per testdata dir (same lifecycle as
-    * [[stagedEvents]]). */
-  private val stagedDocsDelta =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
+  /** The x40/x42 document delta (ids ≡7 mod 10) for the
+    * FileStreamSource, staged as [[eventsStream]]'s copy is. */
   private def docsDeltaStream(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stagedDocsDelta.computeIfAbsent(dir, _ => {
-      val p = QueriesRelational.tempDirCleanedOnExit("graft-docs-delta")
+    val stage = Staged.artifact(Staged.Stage("docsdelta", dir, Seq("documents.parquet"))) { p =>
       Tables.documents(spark, dir)
         .filter(pmod(col("doc_id"), lit(10)) === 7)
-        .write.mode("overwrite").parquet(p.toString)
-      p
-    })
-    val schema = Tables.open(spark, stage.toString).schema
-    StreamingOps.fileStream(spark, stage.toString, schema)
+        .write.mode("overwrite").parquet(p)
+    }
+    val schema = Tables.open(spark, stage).schema
+    StreamingOps.fileStream(spark, stage, schema)
   }
 
   val q67Oracle: String =
@@ -302,16 +293,12 @@ object QueriesStreaming {
     StreamingOps.drainToMemory(compacted, "q81_out", ckpt(), OutputMode.Complete)
   }
 
-  /** Staged two-wave CDC feed parquet for the FileStreamSource, cached
-    * per testdata dir (same lifecycle as [[stagedEvents]]). seq is the
-    * change-log order; keys may appear in both waves. */
-  private val stagedCdcFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
+  /** Two-wave CDC feed parquet for the FileStreamSource, staged as
+    * [[eventsStream]]'s copy is. seq is the change-log order; keys may
+    * appear in both waves. */
   private def stagedCdcFeed(spark: SparkSession, dir: String): String = {
     val money = DecimalType(12, 2)
-    stagedCdcFeedDirs.computeIfAbsent(dir, _ => {
-      val p = QueriesRelational.tempDirCleanedOnExit("graft-cdc-feed")
+    Staged.artifact(Staged.Stage("cdcfeed", dir, Seq("customer.parquet"))) { p =>
       val cust = Tables.customer(spark, dir).select(col("c_custkey"),
         col("c_name"), col("c_acctbal").cast(money).as("c_acctbal"))
       val base = cust.filter(pmod(col("c_custkey"), lit(10)) =!= 7)
@@ -329,9 +316,8 @@ object QueriesStreaming {
         .withColumn("c_acctbal", (col("c_acctbal") + lit(5)).cast(money))
         .withColumn("op", lit("U"))
         .withColumn("seq", lit(2))
-      w1.unionByName(w2).write.mode("overwrite").parquet(p.toString)
-      p
-    }).toString
+      w1.unionByName(w2).write.mode("overwrite").parquet(p)
+    }
   }
 
   val q81Oracle: String =
@@ -384,10 +370,7 @@ object QueriesStreaming {
           lit(86400000000L)).cast(IntegerType)))
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts_us"), col("value").cast(DoubleType).as("value"), col("day"))
-    StreamingOps.withStatePartitions(spark, 8) {
-      val q = StreamingOps.toPartitionedParquet(src, out, ckpt(), Seq("day"))
-      q.awaitTermination()
-    }
+    StreamingOps.toPartitionedParquet(src, out, ckpt(), Seq("day"))
     Tables.open(spark, out)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts_us"), col("value"),

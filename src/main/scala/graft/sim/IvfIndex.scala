@@ -104,22 +104,26 @@ object IvfIndex {
   def search(spark: SparkSession, model: Model, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int): DataFrame = {
     import spark.implicits._
-    // centroid table is tiny → broadcast; distance = negative dot on the
-    // quantized vectors (cosine ranking needs no exact centroid metric)
-    val cents = model.centroids.toSeq
-      .map { case (i, arr) => (i, arr) }.toDF("cell", "centroid")
-
     val q = SimilarityOps.withQuantized(queries, vecCol)
       .select(col(idCol).as("query_id"), col("qvec").as("qv"), col("qn2").as("qn"))
-    // query → nProbe nearest cells by centroid dot product
-    val qCells = q.crossJoin(broadcast(cents))
-      .withColumn("cscore",
-        aggregate(zip_with(col("qv"), col("centroid"),
-          (a, c) => a.cast(DoubleType) * c), lit(0.0), (acc, x) => acc + x))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cscore").desc, col("cell"))))
-      .filter(col("crank") <= nProbe)
-      .select(col("query_id"), col("qv"), col("qn"), col("cell"))
+    val qCells =
+      // a full probe pairs every query with every cell: nothing to rank
+      if (nProbe >= model.centroids.length)
+        q.crossJoin(broadcast(model.centroids.map(_._1).toSeq.toDF("cell")))
+      else {
+        // query → nProbe nearest cells by centroid dot product on the
+        // quantized vectors (cosine ranking needs no exact centroid
+        // metric); the centroid table is tiny → broadcast
+        val cents = model.centroids.toSeq.toDF("cell", "centroid")
+        q.crossJoin(broadcast(cents))
+          .withColumn("cscore",
+            aggregate(zip_with(col("qv"), col("centroid"),
+              (a, c) => a.cast(DoubleType) * c), lit(0.0), (acc, x) => acc + x))
+          .withColumn("crank", row_number().over(
+            Window.partitionBy(col("query_id")).orderBy(col("cscore").desc, col("cell"))))
+          .filter(col("crank") <= nProbe)
+          .select(col("query_id"), col("qv"), col("qn"), col("cell"))
+      }
 
     val cands = SimilarityOps.withQuantized(model.assigned, vecCol)
       .select(col(idCol).as("neighbor_id"), col("cell"),

@@ -1,8 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming face of the incremental semantics (SURVEY.md §2.7).
@@ -115,84 +120,125 @@ object StreamingOps {
       }
   }
 
-  /** Runs `body` (which must both START its streaming query AND await
-    * its termination inside — restoring the conf while microbatch
-    * planning is still in flight would race the override) with
-    * `spark.sql.shuffle.partitions` = `n`, restoring the previous value
-    * after. Streaming state-store cardinality — shuffle partitions at
-    * query start — is a VOLUME knob, not a semantics knob: a
-    * stream-stream join materializes FOUR state stores per partition,
-    * so per-partition provider setup dominates wall time whenever the
-    * drained volume is small (measured on q60: 12.4 s at 32 partitions
-    * → 3.2 s at 8, identical output). Size to stream volume: thousands
-    * of partitions for a firehose, single digits for a bounded drain.
-    * NOT thread-safe — the session conf is global; callers are the
-    * serial gate/bench paths. */
-  def withStatePartitions[A](spark: org.apache.spark.sql.SparkSession, n: Int)(
-      body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    // getAll carries only EXPLICIT settings — conf.get would materialize
-    // the registered default (200) and the restore would then pin a value
-    // for a key the caller never set, subtly changing later conf
-    // resolution; an unset key must be restored by unsetting it
-    val prev = spark.conf.getAll.get(key)
-    spark.conf.set(key, n.toString)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
-  /** Run a streaming frame to completion over existing data and stop —
-    * incremental-batch semantics (`Trigger.AvailableNow`). Results land in
-    * an in-memory table named `queryName`. The whole start-and-await runs
-    * under [[withStatePartitions]] sized by `statePartitions` (default 8:
-    * a bounded drain, not a firehose — a forgotten override must not
-    * silently pay 4× state-store setup per partition). */
   /** Peak state-store row count (summed across the last drain's
     * stateful operators, max over its microbatches) — the
     * state-growth audit surface: a Complete-mode aggregate must hold
     * exactly one register per live group, a watermarked join at most
-    * its watermark-deep tail. -1 until a drain with state has run.
-    * Written by [[drainToMemory]]; read by StreamingOpsSpec's floor
-    * audit. NOT thread-safe (like withStatePartitions — callers are
-    * the serial gate/bench paths). */
+    * its watermark-deep tail. 0 after a stateless drain, -1 before the
+    * first drain or after one that ran no batch. Written by [[drain]];
+    * read by StreamingOpsSpec's floor audit. NOT thread-safe (like
+    * [[drain]] — callers are the serial gate/bench paths). */
   @volatile private[graft] var lastDrainStateRows: Long = -1L
 
+  /** Run a streaming frame to completion over existing data and stop —
+    * incremental-batch semantics (`Trigger.AvailableNow`, through
+    * [[drain]]). Results land in an in-memory table named `queryName`,
+    * which is returned. */
   def drainToMemory(df: DataFrame, queryName: String, checkpoint: String,
-      outputMode: OutputMode = OutputMode.Append,
-      statePartitions: Int = 8): DataFrame =
-    withStatePartitions(df.sparkSession, statePartitions) {
-      // re-running under the same name must not accumulate driver memory:
-      // drop the previous drain's memory table (a terminated query has
-      // already freed the query name)
-      df.sparkSession.catalog.dropTempView(queryName): Unit
-      val q = df.writeStream
-        .outputMode(outputMode)
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
+      outputMode: OutputMode = OutputMode.Append): DataFrame = {
+    // re-running under the same name must not accumulate driver memory:
+    // drop the previous drain's memory table (a terminated query has
+    // already freed the query name)
+    df.sparkSession.catalog.dropTempView(queryName): Unit
+    drain(df, df.writeStream
+      .outputMode(outputMode)
+      .format("memory")
+      .queryName(queryName)
+      .option("checkpointLocation", checkpoint))
+    df.sparkSession.table(queryName)
+  }
+
+  /** Drain a streaming frame into partitioned parquet — the production
+    * write path (date-partitioned sinks are the 100 TB posture; partition
+    * pruning on read comes free). Runs through [[drain]]. */
+  def toPartitionedParquet(df: DataFrame, path: String, checkpoint: String,
+      partitionCols: Seq[String]): Unit =
+    drain(df, df.writeStream
+      .format("parquet")
+      .option("path", path)
+      .option("checkpointLocation", checkpoint)
+      .partitionBy(partitionCols: _*))
+
+  /** The one start path of a bounded drain: starts `writer` (over `df`)
+    * with `Trigger.AvailableNow`, waits for it to end and records
+    * [[lastDrainStateRows]].
+    *
+    * The stream runs on a session cloned from this one at `start()`, so
+    * two session settings are scoped around the start and the wait, each
+    * restored exactly afterwards (an unset key comes back unset):
+    *
+    *  - `spark.sql.artifact.isolation.enabled = false`: the clone then
+    *    runs its tasks on the executors' shared classloader instead of a
+    *    new per-session one. Spark's codegen cache is keyed by
+    *    (classloader, code), so a later drain of the same shape compiles
+    *    nothing, and a drain no longer evicts batch queries' classes from
+    *    the cache. Precondition: this program adds no session artifacts
+    *    (no `addArtifact`/`addJar`), so both loaders see the same classes;
+    *    StreamingOpsSpec pins it. No check or checksum is disabled.
+    *  - `spark.sql.shuffle.partitions` = [[statePartitions]]`(df)`: the
+    *    state-store count is fixed at a query's first start, and every
+    *    store is a task with its own checkpoint and checksum files (and a
+    *    four-thread checksum pool that outlives the query), so the count
+    *    is sized to the drain's input.
+    *
+    * NOT thread-safe — the session conf is global; callers are the serial
+    * gate/bench paths. */
+  private def drain(df: DataFrame, writer: DataStreamWriter[Row]): Unit =
+    withConfs(df.sparkSession,
+      SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false",
+      SQLConf.SHUFFLE_PARTITIONS.key -> statePartitions(df).toString) {
+      val q = writer.trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       lastDrainStateRows = q.recentProgress.toSeq
         .map(_.stateOperators.map(_.numRowsTotal).sum)
         .foldLeft(-1L)(math.max)
-      df.sparkSession.table(queryName)
     }
 
-  /** Streaming sink to partitioned parquet — the production write path
-    * (date-partitioned sinks are the 100 TB posture; partition pruning on
-    * read comes free). */
-  def toPartitionedParquet(df: DataFrame, path: String, checkpoint: String,
-      partitionCols: Seq[String], trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy(partitionCols: _*)
-      .trigger(trigger)
-      .start()
+  /** State partitions for a drain of `df`: AQE's partition-coalescing
+    * rule, applied up front because AQE is off for streaming —
+    * `clamp(ceil(sourceBytes / advisoryPartitionSizeInBytes), 1, session
+    * shuffle partitions)`, where `sourceBytes` is the size of every file
+    * source the plan reads, streamed or static. */
+  private def statePartitions(df: DataFrame): Int = {
+    val conf = df.sparkSession.sessionState.conf
+    val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val wanted = (sourceBytes(df) + advisory - 1) / advisory
+    math.max(1L, math.min(wanted, conf.defaultNumShufflePartitions.toLong)).toInt
+  }
+
+  private def sourceBytes(df: DataFrame): Long = {
+    lazy val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
+    def pathBytes(p: String): Long = {
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoopConf)
+      Option(fs.globStatus(path)).getOrElse(Array.empty)
+        .map(s => fs.getContentSummary(s.getPath).getLength).sum
+    }
+    df.queryExecution.analyzed.collect {
+      case StreamingRelation(ds, _, _) =>
+        (ds.paths ++ ds.options.collect { case (k, v) if k.equalsIgnoreCase("path") => v })
+          .distinct.map(pathBytes).sum
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation => fs.location.sizeInBytes
+        case _ => 0L
+      }
+    }.sum
+  }
+
+  /** Runs `body` with each of `settings` set on the session, then
+    * restores every key exactly. */
+  private def withConfs[A](spark: SparkSession, settings: (String, String)*)(body: => A): A = {
+    // getAll carries only EXPLICIT settings — conf.get would materialize
+    // the registered default and the restore would then pin a value for a
+    // key the caller never set, subtly changing later conf resolution; an
+    // unset key must be restored by unsetting it
+    val explicit = spark.conf.getAll
+    val prev = settings.map { case (k, _) => k -> explicit.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

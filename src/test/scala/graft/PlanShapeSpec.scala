@@ -917,6 +917,13 @@ class PlanShapeSpec extends AnyFunSuite {
       "centroid assignment must be a narrow map — plan literals, no shuffle")
   }
 
+  test("x48: a full probe ranks no cells — no crank window, one top-k window") {
+    val plan = executedPlan("x48_ann_ivf_persisted")
+    assert(!plan.contains("crank"), "a full probe must not score or rank centroids")
+    assert("(?m)^\\W*Window ".r.findAllIn(plan).length === 1,
+      s"only the neighbor top-k window may remain: ${plan.take(2000)}")
+  }
+
   test("q86: the compiled DELETE is a narrow filter over the staged frame") {
     // the state replacement is filter + overwrite: the returned frame's
     // plan must carry the NOT-TRUE predicate and no join

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
@@ -91,6 +92,18 @@ object SparkTestSession {
   def queriesIn[A](f: => A): (A, Int) = {
     val (out, ended) = endedIn(f)
     (out, ended.size)
+  }
+
+  /** Run `f` and count the classes Spark's code generator compiled while
+    * it ran (the samples of `CodegenMetrics`' compile-time histogram; a
+    * codegen-cache hit compiles nothing). Driver and local executors
+    * share the JVM, so this counts both; like [[queriesIn]] it assumes
+    * nothing else runs meanwhile. */
+  def compilesIn[A](f: => A): (A, Long) = {
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val out = f
+    (out, compiles.getCount - before)
   }
 
   /** Run `f` and count the query executions that FAILED while it ran

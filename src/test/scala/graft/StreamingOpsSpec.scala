@@ -4,38 +4,139 @@ import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{SessionEvent, SessionSummary}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingOpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.get
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
+  private val sf = "/root/testdata/sf0.001"
 
-  test("withStatePartitions restores explicit values and UNSETS unset keys") {
-    val key = "spark.sql.shuffle.partitions"
-    val original = spark.conf.getAll.get(key)
+  private def tmp(name: String): String =
+    QueriesRelational.tempDirCleanedOnExit(name).toString
+
+  private val shuffleKey = SQLConf.SHUFFLE_PARTITIONS.key
+  private val isolationKey = SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key
+
+  /** A Complete-mode aggregate drained from a fresh staged copy of the
+    * sf0.001 events table into `checkpoint`. */
+  private def eventsDrain(name: String, checkpoint: String = ""): Unit = {
+    val stage = java.nio.file.Path.of(tmp("events-drain"), "events.parquet")
+    java.nio.file.Files.copy(
+      java.nio.file.Path.of(s"$sf/events.parquet"), stage)
+    val agg = spark.readStream
+      .schema(spark.read.parquet(stage.toString).schema)
+      .parquet(stage.getParent.toString)
+      .filter(col("value") > 0)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"), max(col("user_id")).as("u"))
+    StreamingOps.drainToMemory(agg, name,
+      if (checkpoint.isEmpty) tmp(s"ckpt-$name") else checkpoint, OutputMode.Complete): Unit
+  }
+
+  test("a drain restores the settings it scopes exactly, an unset key unset") {
+    val original = Seq(shuffleKey, isolationKey).map(k => k -> spark.conf.getAll.get(k))
     try {
       // explicitly-set before: restored to that exact explicit value
-      spark.conf.set(key, "13")
-      StreamingOps.withStatePartitions(spark, 5) {
-        assert(spark.conf.get(key) === "5")
-      }
-      assert(spark.conf.getAll.get(key) === Some("13"))
+      spark.conf.set(shuffleKey, "13")
+      spark.conf.unset(isolationKey)
+      eventsDrain("scoped_a")
+      assert(spark.conf.getAll.get(shuffleKey) === Some("13"))
       // unset before: must come back UNSET (resolving to the session
       // default), never pinned to a materialized default value
-      spark.conf.unset(key)
-      StreamingOps.withStatePartitions(spark, 5) {
-        assert(spark.conf.get(key) === "5")
-      }
-      assert(spark.conf.getAll.get(key) === None,
+      assert(spark.conf.getAll.get(isolationKey) === None,
         "an unset key must not be pinned by the restore")
-    } finally original match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+      spark.conf.unset(shuffleKey)
+      spark.conf.set(isolationKey, "true")
+      eventsDrain("scoped_b")
+      assert(spark.conf.getAll.get(shuffleKey) === None)
+      assert(spark.conf.getAll.get(isolationKey) === Some("true"))
+    } finally original.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  test("a drain over sf0.001 input writes exactly one state-partition dir") {
+    // AQE's rule up front: ceil(sourceBytes / advisory size) = 1 for a
+    // 28 KB table, whatever the session's shuffle partitions (4 here)
+    val ckpt = tmp("ckpt-state-dirs")
+    eventsDrain("state_dirs", ckpt)
+    val parts = new java.io.File(ckpt, "state/0").listFiles()
+      .filter(d => d.isDirectory && d.getName.forall(_.isDigit))
+    assert(parts.map(_.getName).toSeq === Seq("0"))
+  }
+
+  test("a second identical drain compiles no class") {
+    eventsDrain("compile_first")
+    val (_, compiles) = SparkTestSession.compilesIn(eventsDrain("compile_second"))
+    assert(compiles === 0L,
+      "a drain of the same shape must reuse the first drain's generated classes")
+  }
+
+  test("a batch query's generated classes survive 12 drains: it recompiles nothing") {
+    def batch() = spark.range(0, 5000)
+      .selectExpr("id % 13 AS k", "id * 3 AS v", "CAST(id AS STRING) AS s")
+      .filter(col("v") > 7)
+      .groupBy(col("k")).agg(sum(col("v")), max(col("s")), count(lit(1)))
+      .collect()
+    batch(): Unit
+    (1 to 12).foreach(i => eventsDrain(s"evict_$i"))
+    val (_, compiles) = SparkTestSession.compilesIn(batch())
+    assert(compiles === 0L,
+      "drains must not push a batch query's classes out of the codegen cache")
+  }
+
+  test("src/main adds no session artifacts (drains share the executor classloader)") {
+    // the drains turn artifact isolation off for their cloned sessions;
+    // that is only equivalent while no session ever adds an artifact
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
+      else Seq(f)
+    val call = """\.(addArtifacts?|addJar)\s*\(""".r
+    val offenders = walk(new java.io.File("src/main")).filter(_.getName.endsWith(".scala"))
+      .filter { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try call.findFirstIn(src.mkString).isDefined finally src.close()
+      }
+    assert(offenders.isEmpty, s"session artifacts added in: ${offenders.mkString(", ")}")
+  }
+
+  test("x117 restages a documents table rewritten in place: the drain sees the new delta") {
+    import graft.text.TextOps
+    val ds = tmp("x117-rewrite")
+    val docs = java.nio.file.Path.of(ds, "documents.parquet")
+    java.nio.file.Files.copy(
+      java.nio.file.Path.of(s"$sf/documents.parquet"), docs)
+    def drained(): Map[String, Long] = QueriesStreaming.x117_stream_mixture_drift(spark, ds)
+      .collect().map(r => r.getAs[String]("source") -> r.getAs[Long]("n_delta")).toMap
+    // the batch twin: tokens of the delta documents (ids ≡7 mod 10) per source
+    def expected(): Map[String, Long] = Tables.documents(spark, ds)
+      .select(col("source"), col("doc_id"), explode(TextOps.tokens(col("text"))).as("t"))
+      .filter(col("t") =!= "")
+      .groupBy(col("source"))
+      .agg(sum(when(pmod(col("doc_id"), lit(10)) === 7, 1L).otherwise(0L)).as("n"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val before = drained()
+    assert(before === expected())
+    // rewrite the table in place: every delta document's text doubled
+    val out = tmp("x117-rewrite-out")
+    Tables.documents(spark, ds)
+      .withColumn("text", when(pmod(col("doc_id"), lit(10)) === 7,
+        concat_ws(" ", col("text"), col("text"))).otherwise(col("text")))
+      .coalesce(1).write.mode("overwrite").parquet(out)
+    val part = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath, docs,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val after = drained()
+    assert(after === expected())
+    assert(after !== before, "the rewritten delta must change the drained counts")
+    // the stage of a throwaway dataset is never evicted by a later run
+    val stage = graft.ops.Staged.Stage("docsdelta", ds, Seq("documents.parquet")).path
+    assert(stage.isDirectory)
+    org.apache.commons.io.FileUtils.deleteDirectory(stage)
   }
 
   test("windowed aggregation with watermark over a memory stream") {
@@ -124,7 +225,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   test("toPartitionedParquet writes a date-partitioned streaming sink") {
     val stage = java.nio.file.Path.of(tmp("events-psink"), "events.parquet")
     java.nio.file.Files.copy(
-      java.nio.file.Path.of("/root/testdata/sf0.001/events.parquet"), stage)
+      java.nio.file.Path.of(s"$sf/events.parquet"), stage)
     val raw = spark.readStream
       .schema(spark.read.parquet(stage.toString).schema)
       .parquet(stage.getParent.toString)
@@ -132,13 +233,12 @@ class StreamingOpsSpec extends AnyFunSuite {
       .withColumn("day", to_date(col("ts_t")))
       .select("event_id", "user_id", "value", "day")
     val out = tmp("psink-out")
-    val q = StreamingOps.toPartitionedParquet(withDay, out, tmp("ckpt-psink"), Seq("day"))
-    q.awaitTermination()
+    StreamingOps.toPartitionedParquet(withDay, out, tmp("ckpt-psink"), Seq("day"))
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)
       .filterNot(_ == "_spark_metadata") // the sink's transaction log
     assert(dirs.nonEmpty && dirs.forall(_.startsWith("day=")),
       s"expected hive day= partitions, got ${dirs.mkString(",")}")
-    val expected = spark.read.parquet("/root/testdata/sf0.001/events.parquet").count()
+    val expected = spark.read.parquet(s"$sf/events.parquet").count()
     assert(spark.read.parquet(out).count() === expected)
   }
 
@@ -177,7 +277,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   test("x117: streaming mixture drift is a zero-sum ppm balance over bounded state") {
     val rows = QueriesStreaming
-      .x117_stream_mixture_drift(spark, "/root/testdata/sf0.001").collect()
+      .x117_stream_mixture_drift(spark, sf).collect()
     assert(rows.length > 1, "need several sources to monitor")
     // both share columns are normalized mixtures (truncation band), so
     // the drift column must sum inside ±|sources| of zero
@@ -199,14 +299,14 @@ class StreamingOpsSpec extends AnyFunSuite {
     // FileStreamSource needs a directory: stage the events file into one
     val stage = java.nio.file.Path.of(tmp("events-stage"), "events.parquet")
     java.nio.file.Files.copy(
-      java.nio.file.Path.of("/root/testdata/sf0.001/events.parquet"), stage)
+      java.nio.file.Path.of(s"$sf/events.parquet"), stage)
     val raw = spark.readStream
       .schema(spark.read.parquet(stage.toString).schema)
       .parquet(stage.getParent.toString)
     val out = raw.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("value"))
     val drained = StreamingOps.drainToMemory(out, "drain_out", tmp("ckpt-drain"))
-    val expected = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val expected = spark.read.parquet(s"$sf/events.parquet")
       .filter(col("event_type") === "purchase").count()
     assert(drained.count() === expected)
     assert(expected > 0)
