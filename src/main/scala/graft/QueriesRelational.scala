@@ -3674,9 +3674,9 @@ object QueriesRelational {
   def q50_bucketed_join(spark: SparkSession, dir: String): DataFrame = {
     val stage = q50Stage(dir)
     graft.ops.Staged.tables(spark, stage)(
-      new graft.ops.Staged.Table("lineitem", 8, "l_orderkey",
+      new graft.ops.Staged.Table("lineitem", "l_orderkey",
         lineitem(spark, dir).select(col("l_orderkey"), col("l_quantity"))),
-      new graft.ops.Staged.Table("orders", 8, "o_orderkey",
+      new graft.ops.Staged.Table("orders", "o_orderkey",
         orders(spark, dir).select(col("o_orderkey"), col("o_orderpriority")))): Unit
     graft.ops.Bucketing.bucketedJoin(spark, stage.table("lineitem"),
         stage.table("orders"), "l_orderkey", "o_orderkey")

@@ -1,9 +1,11 @@
 package graft
 
+import java.util.concurrent.{ExecutionException, FutureTask}
+
 import graft.ops.Staged
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{SessionEvent, SessionSummary}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -482,36 +484,69 @@ object QueriesStreaming {
   /** STREAMING mixture-drift monitor — x116's domain-mixture plane
     * watched from the ingest stream: the delta documents stream into a
     * per-source token-mass aggregate (Complete mode, one register per
-    * source — bounded state by construction), and the post-drain batch
+    * source — bounded state by construction), and the post-drain epilogue
     * compares the arriving mix against the STANDING corpus's mix on
     * the ppm grid. Drift is pure BIGINT subtraction (sign-safe across
     * engines — no division ever touches a negative), so an alerting
     * job can threshold `abs(drift_ppm)` exactly. This is the monitor a
-    * curation pipeline runs ON the feed that x116 retunes FROM. */
+    * curation pipeline runs ON the feed that x116 retunes FROM.
+    *
+    * The standing aggregate is independent of the drain, so it runs
+    * alongside it from a driver thread (as `PqIndex.ivfPqTopK` overlaps
+    * its two trainings), on a session of its own
+    * ([[StreamingOps.sideSession]]). Both sides are sources-sized, so the
+    * epilogue folds on the driver ([[mixtureDrift]]). */
   def x117_stream_mixture_drift(spark: SparkSession, dir: String): DataFrame = {
     import graft.text.TextOps
-    val standing = Tables.documents(spark, dir)
-      .filter(pmod(col("doc_id"), lit(10)) =!= 7)
+    def tokensBySource(docs: DataFrame, n: String): DataFrame = docs
       .select(col("source"), explode(TextOps.tokens(col("text"))).as("t"))
       .filter(col("t") =!= "")
-      .groupBy(col("source")).agg(count(lit(1)).as("n_standing"))
-    val delta = docsDeltaStream(spark, dir)
-      .select(col("source"), explode(TextOps.tokens(col("text"))).as("t"))
-      .filter(col("t") =!= "")
-      .groupBy(col("source")).agg(count(lit(1)).as("n_delta"))
-    val counts =
-      StreamingOps.drainToMemory(delta, "x117_out", ckpt(), OutputMode.Complete)
-    // batch epilogue on sources-sized frames: shares on the ppm grid
-    val j = counts.join(standing, Seq("source"), "full_outer")
-      .select(col("source"),
-        coalesce(col("n_delta"), lit(0L)).as("n_delta"),
-        coalesce(col("n_standing"), lit(0L)).as("n_standing"))
-    j.crossJoin(broadcast(
-        j.agg(sum(col("n_delta")).as("td"), sum(col("n_standing")).as("ts"))))
-      .select(col("source"), col("n_delta"), col("n_standing"),
-        expr("n_delta * 1000000 div td").as("delta_ppm"),
-        expr("n_standing * 1000000 div ts").as("standing_ppm"))
-      .withColumn("drift_ppm", col("delta_ppm") - col("standing_ppm"))
+      .groupBy(col("source")).agg(count(lit(1)).as(n))
+    val side = StreamingOps.sideSession(spark)
+    val standing = new FutureTask[Array[Row]](() => tokensBySource(
+      Tables.documents(side, dir).filter(pmod(col("doc_id"), lit(10)) =!= 7),
+      "n_standing").collect())
+    // a new thread inherits the caller's job group and local properties
+    new Thread(standing, "x117-standing").start()
+    val delta = StreamingOps.drainToMemory(
+      tokensBySource(docsDeltaStream(spark, dir), "n_delta"),
+      "x117_out", ckpt(), OutputMode.Complete).collect()
+    val stand = try standing.get() catch { case e: ExecutionException => throw e.getCause }
+    def counts(rows: Array[Row]) = rows.toSeq.map(r => r.getString(0) -> r.getLong(1))
+    mixtureDrift(spark, counts(delta), counts(stand))
+  }
+
+  /** x117's epilogue on the driver: the full outer join of the per-source
+    * delta and standing counts (a NULL source matches nothing, as in SQL),
+    * then each side's share `n * 1000000 div total` in exact `Long` math —
+    * an overflow raises, as ANSI arithmetic does — NULL when the side's
+    * total is 0 (the oracle's `//` by zero), and their difference. One
+    * local frame in one partition: a sources-sized result is one task and
+    * one file when written, not one per core. */
+  private def mixtureDrift(spark: SparkSession, delta: Seq[(String, Long)],
+      standing: Seq[(String, Long)]): DataFrame = {
+    val (d, s) = (delta.toMap, standing.toMap)
+    val joined = (delta ++ standing).map(_._1).filter(_ != null).distinct
+      .map(k => (k, d.getOrElse(k, 0L), s.getOrElse(k, 0L))) ++
+      delta.collect { case (null, n) => (null: String, n, 0L) } ++
+      standing.collect { case (null, n) => (null: String, 0L, n) }
+    val td = joined.map(_._2).foldLeft(0L)(Math.addExact)
+    val ts = joined.map(_._3).foldLeft(0L)(Math.addExact)
+    def ppm(n: Long, total: Long): java.lang.Long =
+      if (total == 0L) null else Math.multiplyExact(n, 1000000L) / total
+    val rows = joined.map { case (k, nd, ns) =>
+      val (dp, sp) = (ppm(nd, td), ppm(ns, ts))
+      val drift: java.lang.Long =
+        if (dp == null || sp == null) null else Math.subtractExact(dp.longValue, sp.longValue)
+      Row(k, nd, ns, dp, sp, drift)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("source", StringType),
+      StructField("n_delta", LongType, nullable = false),
+      StructField("n_standing", LongType, nullable = false),
+      StructField("delta_ppm", LongType),
+      StructField("standing_ppm", LongType),
+      StructField("drift_ppm", LongType)))).coalesce(1)
   }
 
   val x117Oracle: String =

@@ -2103,7 +2103,7 @@ object QueriesTrainingData {
     * co-locate without an exchange on the staged side. */
   def stagedLshScoredPairs(spark: SparkSession, dir: String): DataFrame =
     Staged.tables(spark, Staged.Stage("lshpairs", dir, Seq("documents.parquet")))(
-      new Staged.Table("pairs", 8, "doc_a", x06_dedup_minhash_lsh(spark, dir))).head
+      new Staged.Table("pairs", "doc_a", x06_dedup_minhash_lsh(spark, dir))).head
 
   /** Split-leakage audit — measures the contamination x36 exists to
     * prevent: take the near-dup pairs ([[stagedLshScoredPairs]],
@@ -2395,10 +2395,10 @@ object QueriesTrainingData {
     lazy val d = documents(spark, dir) // read only when a table is built
     val Seq(oldT, newT) =
       Staged.tables(spark, Staged.Stage("diffstage", dir, Seq("documents.parquet")))(
-        new Staged.Table("old", 8, "doc_id",
+        new Staged.Table("old", "doc_id",
           d.filter(pmod(col("doc_id"), lit(10)) =!= 7)
             .select(col("doc_id"), TextOps.fingerprint64(col("text")).as("fp"))),
-        new Staged.Table("new", 8, "doc_id",
+        new Staged.Table("new", "doc_id",
           d.filter(pmod(col("doc_id"), lit(10)) =!= 3)
             .select(col("doc_id"), TextOps.fingerprint64(
               when(pmod(col("doc_id"), lit(5)) === 0, concat(col("text"), lit(" rev2")))
@@ -3314,7 +3314,7 @@ object QueriesTrainingData {
     * vocabulary joins co-locate without an exchange on the staged side. */
   def stagedWordFreq(spark: SparkSession, dir: String): DataFrame =
     Staged.tables(spark, Staged.Stage("wordfreq", dir, Seq("documents.parquet")))(
-      new Staged.Table("wf", 8, "w",
+      new Staged.Table("wf", "w",
         graft.text.Bpe.wordFrequency(documents(spark, dir)))).head
 
   /** BPE merge APPLY — closes the tokenization loop x55 opened: learn the
@@ -5526,7 +5526,7 @@ object QueriesTrainingData {
       m: Int, sd: Int, ncw: Int): DataFrame = {
     val k = if (tag == "m32_d2_k64") 100 else 5
     Staged.tables(spark, Staged.Stage(s"adc_${tag}_k$k", dir, Seq("embeddings.parquet")))(
-      new Staged.Table("topk", 4, "query_id",
+      new Staged.Table("topk", "query_id",
         graft.sim.PqIndex.adcTopK(embeddings(spark, dir), "vec_id",
           "embedding", queryPred = col("vec_id") < 10, k = k,
           m = m, subDim = sd, nCw = ncw))).head
@@ -5556,7 +5556,7 @@ object QueriesTrainingData {
         .select(col("query_id"), col("neighbor_id"))
     }
     Staged.tables(spark, Staged.Stage("exacttop5", dir, Seq("embeddings.parquet")))(
-      new Staged.Table("top5", 4, "query_id", build)).head
+      new Staged.Table("top5", "query_id", build)).head
   }
 
   /** [[graft.ops.Staged]] staging of the bigram term-frequency table
@@ -5579,7 +5579,7 @@ object QueriesTrainingData {
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
     Staged.tables(spark, Staged.Stage("bigramtf", dir, Seq("documents.parquet")))(
-      new Staged.Table("tf", 4, "term", build)).head
+      new Staged.Table("tf", "term", build)).head
   }
 
   /** The shared doc-to-doc BM25 sparse leg over [[stagedBigramTf]]

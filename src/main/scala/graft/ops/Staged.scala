@@ -7,6 +7,7 @@ import java.security.MessageDigest
 import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Cross-run staging of intermediate artifacts — the reference's
   * materialized staging tables (dbt `{{ config(materialized='table') }}`):
@@ -37,15 +38,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      scratch dir dropped.
   *
   * Stale generations. Each published dir carries a marker recording its
-  * (family, source dir, build). Every call evicts the other `graft_*` dirs
-  * whose marker records the same family and source — older data or another
-  * build — so tmpdir holds one generation per (family, dataset). Matching is
-  * on the marker, never on a name prefix, and hidden scratch dirs are never
-  * candidates: one application's cleanup cannot touch another's in-flight
-  * write. An evicted dir is renamed to a hidden trash name before it is
+  * (family, source dir, build, layout). Every call evicts the other
+  * `graft_*` dirs whose marker records the same family and source — older
+  * data or another build — so tmpdir holds one generation per (family,
+  * dataset). Matching is on the marker, never on a name prefix, and hidden
+  * scratch dirs are never candidates: one application's cleanup cannot
+  * touch another's in-flight write. An evicted dir is renamed to a hidden trash name before it is
   * deleted, so a `graft_*` dir is either whole or absent.
   *
-  * Caveat: two different builds running at once over the same dataset evict
+  * Layout. A staging's bucketed tables share one bucket count, derived from
+  * the stage's input bytes ([[buckets]]), so joins between them stay
+  * co-located. The marker records it; a published dir laid out for another
+  * count (the session's file-split settings changed) counts as stale.
+  *
+  * Caveat: two different builds, or two sessions whose settings give
+  * different bucket counts, running at once over the same dataset evict
   * each other's generation; a scan already reading the evicted files then
   * fails with FileNotFoundException — the contract of replacing any
   * external table's files under a live reader.
@@ -53,10 +60,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Staged {
 
   /** One bucketed, bucket-sorted parquet table of a staging: subdirectory
-    * `name`, `nBuckets` buckets on column `key`. `build` is evaluated at
-    * most once, and only when the table is not already in the catalog. */
-  final class Table(val name: String, val nBuckets: Int, val key: String,
-      build: => DataFrame) {
+    * `name`, bucketed on column `key` into the stage's [[buckets]]. `build`
+    * is evaluated at most once, and only when the table is not already in
+    * the catalog. */
+  final class Table(val name: String, val key: String, build: => DataFrame) {
     lazy val df: DataFrame = build
   }
 
@@ -65,7 +72,10 @@ object Staged {
     * would publish. */
   final case class Stage(family: String, dir: String, inputs: Seq[String],
       build: String = buildId) {
-    lazy val key: String = digest(s"${datasetKey(dir, inputs)}|$family|$build")
+    private lazy val files = inputFiles(dir, inputs)
+    lazy val key: String = digest(s"${fingerprint(dir, files)}|$family|$build")
+    /** Total size of the input files. */
+    lazy val bytes: Long = files.map(_.length).sum
     def path: File = new File(System.getProperty("java.io.tmpdir"), s"graft_${family}_$key")
     def table(name: String): String = s"graft_${family}_${name}_$key"
   }
@@ -73,16 +83,18 @@ object Staged {
   /** Stage bucketed tables together under one key; returns them in the
     * order given. */
   def tables(spark: SparkSession, stage: Stage)(ts: Table*): Seq[DataFrame] = {
-    evictStale(stage)
+    val nBuckets = buckets(spark, stage.bytes)
+    val layout = s"buckets=$nBuckets"
+    evictStale(stage, layout)
     val names = ts.map(t => stage.table(t.name))
     if (stage.path.isDirectory && names.forall(n => spark.catalog.tableExists(n)))
       return names.map(spark.table)
-    publish(stage) { scratch =>
+    publish(stage, layout) { scratch =>
       ts.foreach { t =>
         val tmp = "graft_scratch_" + UUID.randomUUID.toString.replace("-", "")
         t.df.write.format("parquet")
           .option("path", new File(scratch, t.name).getAbsolutePath)
-          .bucketBy(t.nBuckets, t.key).sortBy(t.key)
+          .bucketBy(nBuckets, t.key).sortBy(t.key)
           .saveAsTable(tmp)
         spark.sql(s"DROP TABLE IF EXISTS `$tmp`") // external: files stay
       }
@@ -92,7 +104,7 @@ object Staged {
       spark.sql(
         s"""CREATE TABLE `$n` (${t.df.schema.toDDL})
            |USING PARQUET
-           |CLUSTERED BY (`${t.key}`) SORTED BY (`${t.key}`) INTO ${t.nBuckets} BUCKETS
+           |CLUSTERED BY (`${t.key}`) SORTED BY (`${t.key}`) INTO $nBuckets BUCKETS
            |LOCATION '${new File(stage.path, t.name).getAbsolutePath}'""".stripMargin)
       spark.table(n)
     }
@@ -101,9 +113,27 @@ object Staged {
   /** Stage an artifact `write` lays out under the path it is given (e.g.
     * [[graft.sim.IvfIndex.save]]); returns the published path. */
   def artifact(stage: Stage)(write: String => Unit): String = {
-    evictStale(stage)
-    publish(stage)(scratch => write(scratch.getAbsolutePath))
+    evictStale(stage, "")
+    publish(stage, "")(scratch => write(scratch.getAbsolutePath))
     stage.path.getAbsolutePath
+  }
+
+  /** Bucket count for a staging over `bytes` of input: the number of
+    * splits Spark's `FilePartition.maxSplitBytes` would cut a plain scan of
+    * those bytes into, `ceil(bytes / min(maxPartitionBytes,
+    * max(openCostInBytes, bytes / minPartitionNum)))`, clamped to
+    * `[1, spark.sql.sources.bucketing.maxBuckets]`. A bucket is then one
+    * scan split's worth of data: small inputs get one bucket, a task and a
+    * file per table instead of a fixed fan-out. */
+  def buckets(spark: SparkSession, bytes: Long): Int = {
+    val conf = spark.sessionState.conf
+    val minPartitionNum = conf.filesMinPartitionNum
+      .orElse(conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val split = math.min(conf.filesMaxPartitionBytes,
+      math.max(conf.filesOpenCostInBytes, bytes / minPartitionNum))
+    val wanted = (bytes + split - 1) / split
+    math.max(1L, math.min(wanted, conf.bucketingMaxBuckets.toLong)).toInt
   }
 
   /** This program's build: a digest of its code source (class directory or
@@ -131,22 +161,28 @@ object Staged {
     * walked recursively (a partitioned dataset keeps its data in
     * subdirectories). Same bytes on disk → same key; touched or replaced
     * data → new key. */
-  def datasetKey(dir: String, inputs: Seq[String]): String = {
-    val stats = inputs.sorted.flatMap(in => walk(new File(dir, in)))
+  def datasetKey(dir: String, inputs: Seq[String]): String =
+    fingerprint(dir, inputFiles(dir, inputs))
+
+  private def inputFiles(dir: String, inputs: Seq[String]): Seq[File] =
+    inputs.sorted.flatMap(in => walk(new File(dir, in)))
+
+  private def fingerprint(dir: String, files: Seq[File]): String = {
+    val stats = files
       .map(f => s"${f.getAbsolutePath}:${f.length}:${f.lastModified}:${edgeBlockCrc(f)}")
     digest(dir + "|" + stats.mkString(","))
   }
 
   private val Marker = "_graft_stage"
 
-  private def publish(stage: Stage)(write: File => Unit): Unit =
+  private def publish(stage: Stage, layout: String)(write: File => Unit): Unit =
     if (!stage.path.isDirectory) {
       val scratch = new File(stage.path.getParentFile, ".graft-scratch-" + UUID.randomUUID)
       try {
         scratch.mkdirs()
         write(scratch)
         Files.write(new File(scratch, Marker).toPath,
-          s"${stage.family}\n${stage.dir}\n${stage.build}".getBytes(UTF_8))
+          s"${stage.family}\n${stage.dir}\n${stage.build}\n$layout".getBytes(UTF_8))
         // a rename onto a published dir fails (ENOTEMPTY): the race was lost
         // to the same build publishing the same data, whose copy is used
         try Files.move(scratch.toPath, stage.path.toPath, StandardCopyOption.ATOMIC_MOVE)
@@ -154,12 +190,16 @@ object Staged {
       } finally deleteRecursively(scratch)
     }
 
-  private def evictStale(stage: Stage): Unit = {
+  /** Evicts the other generations of `stage`'s (family, source), and the
+    * current one too when it was laid out other than `layout`. */
+  private def evictStale(stage: Stage, layout: String): Unit = {
     val root = stage.path.getParentFile
     val current = stage.path.getName
     Option(root.listFiles()).getOrElse(Array.empty).filter { d =>
-      d.getName.startsWith("graft_") && d.getName != current &&
-        markerOf(d).exists(_.take(2) == Seq(stage.family, stage.dir))
+      d.getName.startsWith("graft_") && markerOf(d).exists { m =>
+        m.take(2) == Seq(stage.family, stage.dir) &&
+          (d.getName != current || m.lift(3).getOrElse("") != layout)
+      }
     }.foreach { d =>
       val trash = new File(root, ".graft-trash-" + UUID.randomUUID)
       if (d.renameTo(trash)) deleteRecursively(trash)

@@ -56,13 +56,17 @@ object IvfIndex {
     * on its nProbe cells prunes every other cell's files at planning
     * time (the on-disk analog of the inverted file: a 1%-probe search
     * opens ~1% of the index bytes). Train once, probe nightly — at
-    * 100 TB the KMeans fit amortizes across every subsequent search. */
+    * 100 TB the KMeans fit amortizes across every subsequent search.
+    * The assignments are hash-partitioned on `cell` before the write, so
+    * each cell dir holds one file, not one per writer task: a search
+    * opens one file per probed cell. */
   def save(model: Model, dir: String): Unit = {
     val spark = model.assigned.sparkSession
     import spark.implicits._
     model.centroids.toSeq.toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    model.assigned.write.mode("overwrite").partitionBy("cell")
+    model.assigned.repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/assigned")
   }
 

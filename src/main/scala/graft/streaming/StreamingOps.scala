@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+import org.apache.spark.sql.execution.streaming.state.StateStoreRelease
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
@@ -159,8 +160,22 @@ object StreamingOps {
       .option("checkpointLocation", checkpoint)
       .partitionBy(partitionCols: _*))
 
+  /** A session for work that runs alongside a drain from another driver
+    * thread. It is a new session, so the settings [[drain]] scopes on the
+    * caller's session never reach it, and like the drain's own clone it
+    * runs on the executors' shared classloader: with artifact isolation on,
+    * a new session's artifact state puts its tasks on a new classloader,
+    * and every generated class is compiled again. */
+  def sideSession(spark: SparkSession): SparkSession = {
+    val side = spark.newSession()
+    side.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, "false")
+    side
+  }
+
   /** The one start path of a bounded drain: starts `writer` (over `df`)
-    * with `Trigger.AvailableNow`, waits for it to end and records
+    * with `Trigger.AvailableNow`, waits for it to end, closes the state
+    * stores it loaded (`StateStoreRelease`: their checksum thread pools
+    * would otherwise outlive the query) and records
     * [[lastDrainStateRows]].
     *
     * The stream runs on a session cloned from this one at `start()`, so
@@ -178,8 +193,8 @@ object StreamingOps {
     *  - `spark.sql.shuffle.partitions` = [[statePartitions]]`(df)`: the
     *    state-store count is fixed at a query's first start, and every
     *    store is a task with its own checkpoint and checksum files (and a
-    *    four-thread checksum pool that outlives the query), so the count
-    *    is sized to the drain's input.
+    *    four-thread checksum pool while it is loaded), so the count is
+    *    sized to the drain's input.
     *
     * NOT thread-safe — the session conf is global; callers are the serial
     * gate/bench paths. */
@@ -188,7 +203,7 @@ object StreamingOps {
       SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false",
       SQLConf.SHUFFLE_PARTITIONS.key -> statePartitions(df).toString) {
       val q = writer.trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      try q.awaitTermination() finally StateStoreRelease.close(q)
       lastDrainStateRows = q.recentProgress.toSeq
         .map(_.stateOperators.map(_.numRowsTotal).sum)
         .foldLeft(-1L)(math.max)

@@ -101,4 +101,35 @@ class LocalEvalSpec extends AnyFunSuite {
         "INSERT INTO le_cnt (n, m) VALUES (@n, @m)")).nonEmpty)
     assert(w("le_cnt").as[(Int, Int)].collect().toList === List((3, 300)))
   }
+
+  test("a fold reads the optimized plan: no query execution, today's values and classes") {
+    // the reference is the query path a fold replaces: the same
+    // projection over a one-row relation, collected with head()
+    def viaQuery(e: String): Any = {
+      val row = spark.createDataFrame(java.util.Collections.singletonList(
+          org.apache.spark.sql.Row()), org.apache.spark.sql.types.StructType(Nil))
+        .selectExpr(s"$e AS v").head()
+      if (row.isNullAt(0)) null else row.get(0)
+    }
+    val exprs = Seq("1 < 2", "CAST(12.345 AS DECIMAL(12,3)) * 2",
+      "DATE'2024-02-29' + 1", "TIMESTAMP'2024-01-01 10:11:12.5'",
+      "concat('a', CAST(7 AS STRING))", "CAST(NULL AS INT)", "CAST(NULL AS STRING)",
+      "CAST('2024-03-01' AS DATE)")
+    exprs.foreach { e =>
+      val (got, queries) = SparkTestSession.queriesIn(LocalEval.sql(spark, e))
+      assert(queries === 0, s"$e ran $queries query execution(s)")
+      val want = viaQuery(e)
+      assert(got === want, e)
+      assert(Option(got).map(_.getClass) === Option(want).map(_.getClass), e)
+    }
+  }
+
+  test("a fold raises the error class the query would: 1/0 and a bad CAST") {
+    Seq("1 / 0", "CAST('x' AS INT)", "CAST('2024-13-45' AS DATE)").foreach { e =>
+      val folded = intercept[Exception](LocalEval.sql(spark, e))
+      val queried = intercept[Exception](spark.sql(s"SELECT $e AS v").collect())
+      assert(conditions(folded).nonEmpty, s"$e: $folded")
+      assert(conditions(folded).head === conditions(queried).head, e)
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Skew
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -321,6 +322,43 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("q50 and x45: stages sized to several buckets still join with ZERO exchange") {
+    // small file splits in this session size both stages past one bucket;
+    // every table of a stage gets the same count, so the joins co-locate
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    def noExchange(df: DataFrame, what: String): Unit = {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"$what shuffles:\n$plan")
+      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
+        s"$what: ${plan.take(400)}")
+    }
+    def numBuckets(t: String) = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
+      .bucketSpec.map(_.numBuckets)
+    val q50 = QueriesRelational.q50Stage(sf)
+    val x45 = graft.ops.Staged.Stage("diffstage", sf, Seq("documents.parquet"))
+    val expect50 = rows(QueriesRelational.q50_bucketed_join(spark, sf))
+    val expect45 = rows(SparkEntry.queries("x45_bucketed_snapshot_diff")(spark, sf))
+    val keys = Seq("spark.sql.files.maxPartitionBytes" -> "32k",
+      "spark.sql.files.openCostInBytes" -> "4k",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      keys.foreach { case (k, v) => spark.conf.set(k, v) }
+      val n50 = graft.ops.Staged.buckets(spark, q50.bytes)
+      val n45 = graft.ops.Staged.buckets(spark, x45.bytes)
+      assert(n50 > 1 && n45 > 1, s"q50 $n50, x45 $n45 buckets")
+      assert(rows(QueriesRelational.q50_bucketed_join(spark, sf)) === expect50)
+      Seq("lineitem", "orders").foreach(t => assert(numBuckets(q50.table(t)) === Some(n50)))
+      noExchange(graft.ops.Bucketing.bucketedJoin(spark, q50.table("lineitem"),
+        q50.table("orders"), "l_orderkey", "o_orderkey"), "q50's staged join")
+      val diff = SparkEntry.queries("x45_bucketed_snapshot_diff")(spark, sf)
+      assert(rows(diff) === expect45)
+      Seq("old", "new").foreach(t => assert(numBuckets(x45.table(t)) === Some(n45)))
+      noExchange(diff, "x45's diff")
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("q50: staged files survive catalog loss — fresh app reuses them metadata-only") {
     // simulate a NEW application over unchanged data: same staged files on
     // disk, empty catalog. Staged must register an external bucketed
@@ -360,8 +398,8 @@ class PlanShapeSpec extends AnyFunSuite {
     val li = Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_quantity"))
     val od = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_orderpriority"))
     graft.ops.Staged.tables(spark, other)(
-      new graft.ops.Staged.Table("lineitem", 8, "l_orderkey", li.limit(3)),
-      new graft.ops.Staged.Table("orders", 8, "o_orderkey", od.limit(3))): Unit
+      new graft.ops.Staged.Table("lineitem", "l_orderkey", li.limit(3)),
+      new graft.ops.Staged.Table("orders", "o_orderkey", od.limit(3))): Unit
     assert(other.path.isDirectory)
     Seq(mine.table("lineitem"), mine.table("orders")).foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS `$t`"))

@@ -227,6 +227,21 @@ class SourcesAndIvfSpec extends AnyFunSuite {
         "instead of the metadata-only reuse path")
   }
 
+  test("x48 and x85: every cell dir of a persisted index holds exactly one parquet file") {
+    val sf = "/root/testdata/sf0.001"
+    Seq("x48_ann_ivf_persisted" -> QueriesTrainingData.x48Stage(sf),
+      "x85_ivf_delta_append" -> QueriesTrainingData.x85Stage(sf)).foreach { case (q, st) =>
+      SparkEntry.queries(q)(spark, sf).count(): Unit
+      val cells = new java.io.File(st.path, "assigned").listFiles()
+        .filter(d => d.isDirectory && d.getName.startsWith("cell="))
+      assert(cells.length === 16, s"$q: ${cells.map(_.getName).mkString(", ")}")
+      cells.foreach { d =>
+        val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+        assert(files.length === 1, s"$q ${d.getName}: ${files.mkString(", ")}")
+      }
+    }
+  }
+
   test("x108: PQ recall audit vs exact L2, code-range and code-width facts") {
     val sf = "/root/testdata/sf0.001"
     import spark.implicits._

@@ -84,7 +84,7 @@ class StagedSpec extends AnyFunSuite {
     val a = source()
     val st = Stage("spectables", a.toString, Seq("t"))
     var builds = 0
-    def table = new Table("t", 2, "k", {
+    def table = new Table("t", "k", {
       builds += 1; Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v")
     })
     try {
@@ -101,6 +101,62 @@ class StagedSpec extends AnyFunSuite {
       assert(builds === 2, "the build is analyzed once for its schema")
       assert(again.as[(Int, String)].collect().toSet === Set((1, "a"), (2, "b"), (3, "c")))
     } finally {
+      spark.sql(s"DROP TABLE IF EXISTS `${st.table("t")}`")
+      Seq(st.path, a).foreach(rm)
+    }
+  }
+
+  private def numBuckets(table: String): Option[Int] =
+    spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .bucketSpec.map(_.numBuckets)
+
+  test("a stage's bucket count is Spark's split count for its input bytes; its tables share it") {
+    val sf = "/root/testdata/sf0.001"
+    val conf = spark.sessionState.conf
+    // FilePartition.maxSplitBytes over the stage's bytes, then the split count
+    def rule(bytes: Long): Int = {
+      val split = math.min(conf.filesMaxPartitionBytes, math.max(conf.filesOpenCostInBytes,
+        bytes / spark.sparkContext.defaultParallelism))
+      math.max(1L, math.min((bytes + split - 1) / split, conf.bucketingMaxBuckets.toLong)).toInt
+    }
+    assert(Staged.buckets(spark, 0L) === 1)
+    assert(Staged.buckets(spark, 10L << 30) === rule(10L << 30))
+    assert(rule(10L << 30) === 80, "10 GiB at 128 MiB splits")
+    Seq(
+      (QueriesRelational.q50Stage(sf), "q50_bucketed_join", Seq("lineitem", "orders")),
+      (Stage("diffstage", sf, Seq("documents.parquet")), "x45_bucketed_snapshot_diff",
+        Seq("old", "new"))).foreach { case (st, q, names) =>
+      val bytes = st.inputs.map(in => new File(sf, in).length).sum
+      assert(st.bytes === bytes)
+      SparkEntry.queries(q)(spark, sf).count(): Unit
+      names.foreach(t => assert(numBuckets(st.table(t)) === Some(rule(bytes)), s"$q $t"))
+    }
+  }
+
+  test("a published staging laid out for another bucket count is restaged, not re-registered") {
+    val a = source()
+    val st = Stage("speclayout", a.toString, Seq("t"))
+    def table = new Table("t", "k", Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.as[(Int, String)].collect().toSet
+    val splitKeys = Seq("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
+    val prev = splitKeys.map(k => k -> spark.conf.getOption(k))
+    // a 3-byte input: one bucket by default, three at 1-byte splits
+    Files.write(Paths.get(a.toString, "t", "a.bin"), "xyz".getBytes)
+    try {
+      Staged.tables(spark, st)(table): Unit
+      assert(numBuckets(st.table("t")) === Some(1))
+      splitKeys.foreach(spark.conf.set(_, "1"))
+      val three = Staged.tables(spark, st)(table).head
+      assert(numBuckets(st.table("t")) === Some(3))
+      assert(rows(three) === Set((1, "a"), (2, "b"), (3, "c")))
+      splitKeys.foreach(spark.conf.unset)
+      val one = Staged.tables(spark, st)(table).head
+      assert(numBuckets(st.table("t")) === Some(1))
+      assert(rows(one) === Set((1, "a"), (2, "b"), (3, "c")))
+      assert(st.path.isDirectory)
+    } finally {
+      prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       spark.sql(s"DROP TABLE IF EXISTS `${st.table("t")}`")
       Seq(st.path, a).foreach(rm)
     }

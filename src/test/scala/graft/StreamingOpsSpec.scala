@@ -89,6 +89,13 @@ class StreamingOpsSpec extends AnyFunSuite {
       "drains must not push a batch query's classes out of the codegen cache")
   }
 
+  test("a second x117 call compiles no class: its side session shares the executor classloader") {
+    QueriesStreaming.x117_stream_mixture_drift(spark, sf).collect(): Unit
+    val (_, compiles) = SparkTestSession.compilesIn(
+      QueriesStreaming.x117_stream_mixture_drift(spark, sf).collect())
+    assert(compiles === 0L, "the standing aggregate or the drain recompiled its classes")
+  }
+
   test("src/main adds no session artifacts (drains share the executor classloader)") {
     // the drains turn artifact isolation off for their cloned sessions;
     // that is only equivalent while no session ever adds an artifact
@@ -136,6 +143,47 @@ class StreamingOpsSpec extends AnyFunSuite {
     // the stage of a throwaway dataset is never evicted by a later run
     val stage = graft.ops.Staged.Stage("docsdelta", ds, Seq("documents.parquet")).path
     assert(stage.isDirectory)
+    org.apache.commons.io.FileUtils.deleteDirectory(stage)
+  }
+
+  test("drains close their state stores: checksum threads stay flat over 20 x117 drains") {
+    import scala.jdk.CollectionConverters._
+    def checksumThreads(): Int = Thread.getAllStackTraces.keySet.asScala
+      .count(_.getName.startsWith("ChecksumCheckpointFileManager-Thread-"))
+    QueriesStreaming.x117_stream_mixture_drift(spark, sf).collect(): Unit
+    val before = checksumThreads()
+    (1 to 20).foreach(_ => QueriesStreaming.x117_stream_mixture_drift(spark, sf).collect())
+    val after = checksumThreads()
+    assert(after <= before, s"checksum threads grew from $before to $after over 20 drains")
+  }
+
+  test("x117 on a delta-empty corpus matches the DuckDB oracle: NULL delta shares") {
+    // the variant is written by DuckDB itself (every doc_id ≡7 mod 10
+    // dropped), and the oracle runs over the same file; `//` by a zero
+    // delta total is NULL there, so the fold must not raise DIVIDE_BY_ZERO
+    val ds = tmp("x117-no-delta")
+    val script =
+      s"""import duckdb, sys
+         |con = duckdb.connect()
+         |con.execute("COPY (SELECT * FROM read_parquet('$sf/documents.parquet') "
+         |  "WHERE doc_id % 10 <> 7) TO '$ds/documents.parquet' (FORMAT parquet)")
+         |con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet('$ds/documents.parquet')")
+         |for r in con.execute(sys.stdin.read()).fetchall():
+         |    print("\\t".join("NULL" if v is None else str(v) for v in r))
+         |""".stripMargin
+    val oracle = try {
+      val p = new ProcessBuilder("python3", "-c", script).redirectErrorStream(true).start()
+      p.getOutputStream.write(QueriesStreaming.x117Oracle.getBytes("UTF-8"))
+      p.getOutputStream.close()
+      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+      assume(p.waitFor() == 0, s"no DuckDB to build the variant with: $out")
+      out.linesIterator.filter(_.nonEmpty).map(_.split("\t", -1).toSeq).toSet
+    } catch { case e: java.io.IOException => cancel(s"no python3: $e") }
+    val got = QueriesStreaming.x117_stream_mixture_drift(spark, ds).collect()
+      .map(_.toSeq.map(v => if (v == null) "NULL" else v.toString)).toSet
+    assert(oracle.nonEmpty && oracle.forall(_(3) == "NULL"), oracle.mkString("\n"))
+    assert(got === oracle)
+    val stage = graft.ops.Staged.Stage("docsdelta", ds, Seq("documents.parquet")).path
     org.apache.commons.io.FileUtils.deleteDirectory(stage)
   }
 
