@@ -72,7 +72,8 @@ object Bench {
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       var err: Option[String] = None
       val compiles0 = compileCount.getCount
-      val times = (1 to iterations).flatMap { _ =>
+      // processes launched over the timed iterations
+      val (times, forks) = Forks.in((1 to iterations).flatMap { _ =>
         val t = if (err.isDefined) None else {
           val t0 = System.nanoTime()
           // a failed query must be VISIBLE: full trace to stderr, an "err"
@@ -93,12 +94,12 @@ object Bench {
         // braces so a future cache leak never skews the next iteration
         spark.sharedState.cacheManager.clearCache()
         t
-      }
+      })
       val compiles = compileCount.getCount - compiles0
       val sorted = times.sorted
       val median = sorted(sorted.length / 2)
       val min = sorted.head
-      (name, median, min, err, times.head, compiles)
+      (name, median, min, err, times.head, compiles, forks.size)
     }
     // timings rounded to 0.1ms — full-double precision is noise (PERF.md
     // records 1.3-2x environment drift). The FINAL stdout line is the lean
@@ -110,14 +111,15 @@ object Bench {
     // Locale.ROOT: a comma-decimal default locale (de_DE …) would render
     // "1,2345" and break the driver's JSON parse
     def f(v: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v, _, _, _, _) => s"\"" + k + "\":" + f(v) }
+    val qs = results.map { case (k, v, _, _, _, _, _) => s"\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
-    val mins = results.map { case (k, _, v, _, _, _) => s"\"" + k + "\":" + f(v) }
+    val mins = results.map { case (k, _, v, _, _, _, _) => s"\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
     // the first iteration of each query: the cold figure the median hides
-    val cold = Json.obj(results.map { case (k, _, _, _, v, _) => k -> f(v) }: _*)
-    val compiles = Json.obj(results.map { case (k, _, _, _, _, n) => k -> n.toString }: _*)
-    val errs = results.collect { case (k, _, _, Some(e), _, _) => s"\"" + k + "\":\"" + e + "\"" }
+    val cold = Json.obj(results.map { case (k, _, _, _, v, _, _) => k -> f(v) }: _*)
+    val compiles = Json.obj(results.map { case (k, _, _, _, _, n, _) => k -> n.toString }: _*)
+    val forks = Json.obj(results.map { case (k, _, _, _, _, _, n) => k -> n.toString }: _*)
+    val errs = results.collect { case (k, _, _, Some(e), _, _, _) => s"\"" + k + "\":\"" + e + "\"" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // sum-of-mins rides beside the median headline: the min is far less
@@ -129,7 +131,7 @@ object Bench {
     val errField = if (errs == "{}") "" else s""","errors":$errs"""
     val envEnd = envProbe()
     val detail =
-      s"""{"metric":"queries_detail","queries":$qs,"queries_min":$mins,"queries_cold":$cold,"compiles":$compiles,"n":${results.size}$errField,"env":{"start":$envStart,"end":$envEnd},"sf":"$sfDir"}"""
+      s"""{"metric":"queries_detail","queries":$qs,"queries_min":$mins,"queries_cold":$cold,"compiles":$compiles,"forks":$forks,"n":${results.size}$errField,"env":{"start":$envStart,"end":$envEnd},"sf":"$sfDir"}"""
     try java.nio.file.Files.write(
       java.nio.file.Path.of("/tmp/bench_queries.json"),
       detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -141,11 +141,10 @@ object StreamingOps {
     // drop the previous drain's memory table (a terminated query has
     // already freed the query name)
     df.sparkSession.catalog.dropTempView(queryName): Unit
-    drain(df, df.writeStream
+    drain(df, checkpoint, df.writeStream
       .outputMode(outputMode)
       .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint))
+      .queryName(queryName))
     df.sparkSession.table(queryName)
   }
 
@@ -154,10 +153,9 @@ object StreamingOps {
     * pruning on read comes free). Runs through [[drain]]. */
   def toPartitionedParquet(df: DataFrame, path: String, checkpoint: String,
       partitionCols: Seq[String]): Unit =
-    drain(df, df.writeStream
+    drain(df, checkpoint, df.writeStream
       .format("parquet")
       .option("path", path)
-      .option("checkpointLocation", checkpoint)
       .partitionBy(partitionCols: _*))
 
   /** A session for work that runs alongside a drain from another driver
@@ -172,14 +170,14 @@ object StreamingOps {
     side
   }
 
-  /** The one start path of a bounded drain: starts `writer` (over `df`)
-    * with `Trigger.AvailableNow`, waits for it to end, closes the state
-    * stores it loaded (`StateStoreRelease`: their checksum thread pools
-    * would otherwise outlive the query) and records
-    * [[lastDrainStateRows]].
+  /** The one start path of a bounded drain: starts `writer` (over `df`,
+    * checkpointed at `checkpoint`) with `Trigger.AvailableNow`, waits for
+    * it to end, closes the state stores it loaded (`StateStoreRelease`:
+    * their checksum thread pools would otherwise outlive the query) and
+    * records [[lastDrainStateRows]].
     *
     * The stream runs on a session cloned from this one at `start()`, so
-    * two session settings are scoped around the start and the wait, each
+    * three session settings are scoped around the start and the wait, each
     * restored exactly afterwards (an unset key comes back unset):
     *
     *  - `spark.sql.artifact.isolation.enabled = false`: the clone then
@@ -195,19 +193,29 @@ object StreamingOps {
     *    store is a task with its own checkpoint and checksum files (and a
     *    four-thread checksum pool while it is loaded), so the count is
     *    sized to the drain's input.
+    *  - `spark.sql.streaming.checkpointFileManagerClass` =
+    *    [[LocalCheckpointFileManager]] for a checkpoint on the `file` scheme:
+    *    every drain writes a fresh checkpoint, and Spark's default manager
+    *    launches processes for each file it writes there. Scoped, so a
+    *    user's own streams and other file systems keep Spark's default.
     *
     * NOT thread-safe — the session conf is global; callers are the serial
     * gate/bench paths. */
-  private def drain(df: DataFrame, writer: DataStreamWriter[Row]): Unit =
-    withConfs(df.sparkSession,
-      SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false",
-      SQLConf.SHUFFLE_PARTITIONS.key -> statePartitions(df).toString) {
-      val q = writer.trigger(Trigger.AvailableNow()).start()
+  private def drain(df: DataFrame, checkpoint: String, writer: DataStreamWriter[Row]): Unit = {
+    val manager = LocalCheckpointFileManager.forLocation(checkpoint,
+      df.sparkSession.sessionState.newHadoopConf())
+    withConfs(df.sparkSession, Seq(
+        SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false",
+        SQLConf.SHUFFLE_PARTITIONS.key -> statePartitions(df).toString) ++
+      manager.map(SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS.parent.key -> _)) {
+      val q = writer.option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow()).start()
       try q.awaitTermination() finally StateStoreRelease.close(q)
       lastDrainStateRows = q.recentProgress.toSeq
         .map(_.stateOperators.map(_.numRowsTotal).sum)
         .foldLeft(-1L)(math.max)
     }
+  }
 
   /** State partitions for a drain of `df`: AQE's partition-coalescing
     * rule, applied up front because AQE is off for streaming —
@@ -242,7 +250,7 @@ object StreamingOps {
 
   /** Runs `body` with each of `settings` set on the session, then
     * restores every key exactly. */
-  private def withConfs[A](spark: SparkSession, settings: (String, String)*)(body: => A): A = {
+  private def withConfs[A](spark: SparkSession, settings: Seq[(String, String)])(body: => A): A = {
     // getAll carries only EXPLICIT settings — conf.get would materialize
     // the registered default and the restore would then pin a value for a
     // key the caller never set, subtly changing later conf resolution; an

@@ -106,6 +106,12 @@ object SparkTestSession {
     (out, compiles.getCount - before)
   }
 
+  /** Run `f` and return the processes launched while it ran (JFR
+    * `jdk.ProcessStart` events: command and thread), complete on return.
+    * Counts the whole JVM, so like [[compilesIn]] it assumes nothing else
+    * runs meanwhile. */
+  def forksIn[A](f: => A): (A, Seq[Forks.Start]) = Forks.in(f)
+
   /** Run `f` and count the query executions that FAILED while it ran
     * (a failed analysis counts: Spark posts it to every listener). */
   def failuresIn[A](f: => A): (A, Int) = {

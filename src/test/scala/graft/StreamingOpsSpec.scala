@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingOps
+import graft.streaming.{LocalCheckpointFileManager, StreamingOps}
 import graft.streaming.StreamingOps.{SessionEvent, SessionSummary}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -19,6 +19,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   private val shuffleKey = SQLConf.SHUFFLE_PARTITIONS.key
   private val isolationKey = SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key
+  private val managerKey = SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS.parent.key
 
   /** A Complete-mode aggregate drained from a fresh staged copy of the
     * sf0.001 events table into `checkpoint`. */
@@ -37,26 +38,74 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("a drain restores the settings it scopes exactly, an unset key unset") {
-    val original = Seq(shuffleKey, isolationKey).map(k => k -> spark.conf.getAll.get(k))
+    val original = Seq(shuffleKey, isolationKey, managerKey).map(k => k -> spark.conf.getAll.get(k))
+    val sparkDefault = "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "FileContextBasedCheckpointFileManager"
     try {
       // explicitly-set before: restored to that exact explicit value
       spark.conf.set(shuffleKey, "13")
       spark.conf.unset(isolationKey)
+      spark.conf.set(managerKey, sparkDefault)
       eventsDrain("scoped_a")
       assert(spark.conf.getAll.get(shuffleKey) === Some("13"))
       // unset before: must come back UNSET (resolving to the session
       // default), never pinned to a materialized default value
       assert(spark.conf.getAll.get(isolationKey) === None,
         "an unset key must not be pinned by the restore")
+      assert(spark.conf.getAll.get(managerKey) === Some(sparkDefault))
       spark.conf.unset(shuffleKey)
       spark.conf.set(isolationKey, "true")
+      spark.conf.unset(managerKey)
       eventsDrain("scoped_b")
       assert(spark.conf.getAll.get(shuffleKey) === None)
       assert(spark.conf.getAll.get(isolationKey) === Some("true"))
+      assert(spark.conf.getAll.get(managerKey) === None,
+        "the checkpoint manager must not outlive the drain")
     } finally original.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  test("one x117 drain launches no process that names its checkpoint dir") {
+    // Spark's default manager forks readlink per rename and Hadoop's local
+    // file system chmod per created file, .crc and dir without libhadoop
+    QueriesStreaming.x117_stream_mixture_drift(spark, sf).collect(): Unit
+    val (_, forks) = SparkTestSession.forksIn(
+      QueriesStreaming.x117_stream_mixture_drift(spark, sf).collect())
+    val inCheckpoint = forks.filter(_.command.contains("graft-ckpt"))
+    assert(inCheckpoint.isEmpty, s"${inCheckpoint.size} launches, first: " +
+      inCheckpoint.take(3).mkString("; "))
+  }
+
+  test("drained checkpoint files keep their .crc sidecars and state checksums") {
+    val ckpt = tmp("ckpt-crc")
+    eventsDrain("crc", ckpt)
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
+      else Seq(f)
+    // Hadoop's sidecar of `name` is `.name.crc`; Spark's state-store
+    // checksum of `1.delta` is the file `1.delta.crc`, with a sidecar of its own
+    val (sidecars, files) = walk(new java.io.File(ckpt))
+      .partition(f => f.getName.startsWith(".") && f.getName.endsWith(".crc"))
+    val missing = files.filterNot(f => new java.io.File(f.getParentFile, s".${f.getName}.crc").isFile)
+    assert(files.exists(_.getPath.contains("/offsets/")) && files.exists(_.getPath.contains("/state/")))
+    assert(missing.isEmpty, s"no .crc sidecar for: ${missing.mkString(", ")}")
+    assert(sidecars.size === files.size)
+    assert(files.exists(f => f.getPath.contains("/state/") && f.getName.endsWith(".delta.crc")),
+      files.map(_.getPath.stripPrefix(ckpt)).sorted.mkString(" "))
+  }
+
+  test("only a checkpoint on the file scheme gets the local checkpoint manager") {
+    val conf = spark.sessionState.newHadoopConf()
+    val local = Some(classOf[LocalCheckpointFileManager].getName)
+    assert(LocalCheckpointFileManager.forLocation(tmp("ckpt-scheme"), conf) === local)
+    assert(LocalCheckpointFileManager.forLocation("file:///tmp/ckpt", conf) === local)
+    assert(LocalCheckpointFileManager.forLocation("hdfs://namenode:8020/ckpt", conf) === None)
+    // a path without a scheme takes the default file system's
+    conf.set("fs.defaultFS", "hdfs://namenode:8020")
+    assert(LocalCheckpointFileManager.forLocation("/ckpt", conf) === None)
+    assert(LocalCheckpointFileManager.forLocation("file:///ckpt", conf) === local)
   }
 
   test("a drain over sf0.001 input writes exactly one state-partition dir") {
