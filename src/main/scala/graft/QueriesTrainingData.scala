@@ -816,10 +816,10 @@ object QueriesTrainingData {
 
   /** IVF (k-means coarse quantizer) ANN search — the scale path past
     * x09's brute force. Probing ALL cells makes IVF exact (every vector
-    * lives in exactly one cell), so the full machinery — quantizer build,
-    * cell assignment, probe ranking, per-cell candidate join — is
-    * oracle-checked against the brute-force SQL; the approximate
-    * nProbe < k mode is spec-tested (SourcesAndIvfSpec). */
+    * lives in exactly one cell), so the quantizer build, cell assignment
+    * and full-probe scoring are oracle-checked against the brute-force
+    * SQL; the approximate nProbe < k mode (probe ranking, per-cell
+    * candidate join) is spec-tested (SourcesAndIvfSpec). */
   def x11_ann_ivf(spark: SparkSession, dir: String): DataFrame = {
     val emb = embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism).cache()
@@ -2559,8 +2559,8 @@ object QueriesTrainingData {
     * neighbors. In production the append writes into the cell-partitioned
     * parquet ([[graft.sim.IvfIndex.save]]'s layout) instead of a union.
     * Scale shape: delta work is delta-sized (assign is one codegen'd
-    * projection); the search join shuffles on `cell`, never the cross
-    * product; re-clustering cost is amortized to zero per batch. */
+    * projection); a sub-full probe's search join shuffles on `cell`, never
+    * the cross product; re-clustering cost is amortized to zero per batch. */
   def x85_ivf_delta_append(spark: SparkSession, dir: String): DataFrame = {
     val index = Staged.artifact(x85Stage(dir)) { path =>
       val base = embeddings(spark, dir)

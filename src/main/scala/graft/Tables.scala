@@ -24,14 +24,14 @@ object Tables {
 
   /** Open a parquet file or directory with the schema Spark's inference
     * would give it, read from one footer on the driver
-    * ([[org.apache.spark.sql.execution.datasources.parquet.FooterSchema]]):
+    * ([[org.apache.spark.sql.execution.datasources.parquet.DriverParquet.schema]]):
     * no schema-inference job. Partition columns are still discovered from
     * the directory names. Nothing is memoized — every call reads the
     * footer again, so a rewritten path is never opened with a stale
     * schema. A missing path or one with no data file falls back to
     * Spark's read and its error. */
   def open(spark: SparkSession, path: String): DataFrame =
-    org.apache.spark.sql.execution.datasources.parquet.FooterSchema.of(spark, path)
+    org.apache.spark.sql.execution.datasources.parquet.DriverParquet.schema(spark, path)
       .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   /** `events.ts` is parquet TIMESTAMP(NANOS). How Spark surfaces that type
@@ -97,6 +97,4 @@ object Tables {
 
   /** DECIMAL(12,2) cast used at scan boundaries for measure columns. */
   val Money: DecimalType = DecimalType(12, 2)
-  /** Wide target for sums so Spark and DuckDB agree on the output type. */
-  val MoneySum: DecimalType = DecimalType(38, 2)
 }

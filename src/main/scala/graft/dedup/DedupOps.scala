@@ -30,30 +30,11 @@ object DedupOps {
     * the split isn't re-evaluated per consumer (see
     * [[graft.text.TextOps.stopwordCountOf]]). Backed by the native
     * codegen'd [[graft.functions.Shingles]] (ShingleHashSpec pins parity
-    * with [[shinglesOfHof]]); the coalesce keeps the HOF chain's NULL-
+    * with the HOF chain); the coalesce keeps the HOF chain's NULL-
     * toks contract (the single "" shingle, never NULL). */
   def shinglesOf(ws: Column, n: Int): Column =
     coalesce(graft.functions.NativeFunctions.shingles(ws, n),
       typedLit(Seq("")))
-
-  /** The pre-r18 HOF spelling of [[shinglesOf]] — the parity
-    * reference. */
-  private[graft] def shinglesOfHof(ws: Column, n: Int): Column =
-    array_distinct(
-      transform(
-        sequence(lit(1), greatest(size(ws) - (n - 1), lit(1))),
-        i => concat_ws(" ", slice(ws, i, lit(n)))))
-
-  /** One MinHash value: lexicographic min of seed-prefixed md5 over the
-    * shingle set. min(md5) over a set is a valid permutation-min family.
-    * Costs one md5 per (seed × shingle) — prefer the numeric family below
-    * in hot paths. */
-  def minhash(shingleSet: Column, seed: Int): Column =
-    array_min(transform(shingleSet, s => md5(concat(lit(s"$seed|"), s))))
-
-  /** MinHash signature of `k` hashes as separate columns sig0..sig{k-1}. */
-  def minhashSignature(shingleSet: Column, k: Int): Seq[(String, Column)] =
-    (0 until k).map(i => s"sig$i" -> minhash(shingleSet, i))
 
   /** Mersenne prime 2³¹−1: the universal-hash modulus. */
   val HashPrime = 2147483647L
@@ -102,25 +83,11 @@ object DedupOps {
     * the (md5-heavy) shingle hashing by the signature width — the single
     * pass keeps it at one. Backed by the native codegen'd
     * [[graft.functions.MinHashSig]] expression (a primitive `long[]` loop
-    * inside whole-stage codegen); [[minhashSignatureArrayHof]] is the
-    * higher-order-function twin kept for parity testing. */
+    * inside whole-stage codegen); DedupPropertySpec pins it against an
+    * interpreted higher-order-function fold. */
   def minhashSignatureArray(hashedSet: Column,
       perms: Seq[(Long, Long)] = DefaultPerms): Column =
     graft.functions.NativeFunctions.minhashSig(hashedSet, perms)
-
-  /** Interpreted `aggregate(transform(...))` fold with identical
-    * semantics — the reference implementation the native expression is
-    * spec-checked against. */
-  def minhashSignatureArrayHof(hashedSet: Column,
-      perms: Seq[(Long, Long)] = DefaultPerms): Column = {
-    val aArr = array(perms.map(p => lit(p._1)): _*)
-    val bArr = array(perms.map(p => lit(p._2)): _*)
-    aggregate(
-      hashedSet,
-      array(perms.map(_ => lit(HashPrime)): _*),
-      (acc, h) => transform(acc, (m, i) =>
-        least(m, (h * element_at(aArr, i + 1) + element_at(bArr, i + 1)) % HashPrime)))
-  }
 
   /** Band keys from a signature array: md5 of the '|'-joined slice per
     * band. Same key material as [[bandKeysNumeric]]. `nBands×rowsPerBand`
@@ -198,16 +165,10 @@ object DedupOps {
     * hash-set pass computes |∩| and |∪| without materializing either
     * array — the HOF spelling pays three hash structures and two output
     * arrays per candidate pair only to take their sizes. Bit-identical
-    * to [[jaccardHof]] (JaccardSpec pins it, incl. the empty∪empty →
+    * to that spelling (JaccardSpec pins it, incl. the empty∪empty →
     * NULL divide edge and NULL/duplicate elements). */
   def jaccard(a: Column, b: Column): Column =
     graft.functions.NativeFunctions.jaccardSim(a, b)
-
-  /** The pre-r19 intersect/union spelling of [[jaccard]] — the parity
-    * reference. */
-  private[graft] def jaccardHof(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast(DoubleType) /
-      size(array_union(a, b)).cast(DoubleType)
 
   /** SimHash over the distinct token set, `bits` wide (bit b of the
     * signature = sign of Σ_tokens (2·bit_b(h(token)) − 1)). md5-derived

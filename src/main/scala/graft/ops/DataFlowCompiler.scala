@@ -476,7 +476,6 @@ object DataFlowCompiler {
     val splitInput = produced.getOrElse((splitName, Some(SplitInputKey)),
       return None)
     val tagged = applySplitTag(splitInput, cs, vars)
-    val byRoute = chains.map(c => c.route -> c.defs).toMap
     val fused = chains.head.defs.map(_.name).zipWithIndex
       .foldLeft(tagged) { case (acc, (colName, idx)) =>
         val types = acc.schema.fields.map(f => f.name -> f.dataType).toMap

@@ -15,7 +15,8 @@ import org.apache.spark.sql.types._
   * assigning each vector to its nearest centroid. Search: queries score
   * only the vectors inside their `nProbe` nearest cells — the join
   * shuffles on `cell`, never the cross product. Recall < 1.0 by
-  * construction; raise `nProbe` to trade speed for recall.
+  * construction; raise `nProbe` to trade speed for recall (a full probe
+  * is exact: the broadcast queries against the whole index).
   */
 object IvfIndex {
 
@@ -110,10 +111,18 @@ object IvfIndex {
     import spark.implicits._
     val q = SimilarityOps.withQuantized(queries, vecCol)
       .select(col(idCol).as("query_id"), col("qvec").as("qv"), col("qn2").as("qn"))
-    val qCells =
-      // a full probe pairs every query with every cell: nothing to rank
+    val cands = SimilarityOps.withQuantized(model.assigned, vecCol)
+      .select(col(idCol).as("neighbor_id"), col("cell"),
+        col("qvec").as("cv"), col("qn2").as("cn"))
+
+    val pairs =
+      // a full probe pairs every query with every vector of every cell:
+      // nothing to rank and no cell join (nor the dynamic-pruning
+      // subquery a cell-partitioned index adds to it), just the index
+      // against the broadcast queries
       if (nProbe >= model.centroids.length)
-        q.crossJoin(broadcast(model.centroids.map(_._1).toSeq.toDF("cell")))
+        cands.filter(col("cell").isin(model.centroids.map(_._1): _*))
+          .crossJoin(broadcast(q))
       else {
         // query → nProbe nearest cells by centroid dot product on the
         // quantized vectors (cosine ranking needs no exact centroid
@@ -127,13 +136,10 @@ object IvfIndex {
             Window.partitionBy(col("query_id")).orderBy(col("cscore").desc, col("cell"))))
           .filter(col("crank") <= nProbe)
           .select(col("query_id"), col("qv"), col("qn"), col("cell"))
+          .join(cands, Seq("cell"))
       }
 
-    val cands = SimilarityOps.withQuantized(model.assigned, vecCol)
-      .select(col(idCol).as("neighbor_id"), col("cell"),
-        col("qvec").as("cv"), col("qn2").as("cn"))
-
-    val scored = qCells.join(cands, Seq("cell"))
+    val scored = pairs
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine",
         SimilarityOps.qdot(col("qv"), col("cv")).cast(DoubleType) /

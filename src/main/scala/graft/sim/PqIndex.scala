@@ -55,15 +55,9 @@ object PqIndex {
     * the native codegen'd [[graft.functions.SqDistLong]] (the LUT/probe
     * legs were the one place the interpreted `aggregate(zip_with(...))`
     * HOF survived the r18 argmin rewrite; guide §4). PqArgminSpec pins
-    * bit-parity against the HOF fold on the real LUT shape. */
+    * bit-parity against that fold on the real LUT shape. */
   private def sqDist(a: Column, b: Column): Column =
     graft.functions.NativeFunctions.sqDist(a, b)
-
-  /** The pre-r19 interpreted HOF spelling of [[sqDist]] — the parity
-    * reference. */
-  private[graft] def sqDistHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
 
   /** Codebook grouped per subspace — (s, entries = ARRAY<STRUCT<cw, cv>>),
     * ≤ |subspaces| rows: the broadcast side of every argmin pass. The

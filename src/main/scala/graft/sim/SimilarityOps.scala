@@ -278,8 +278,8 @@ object SimilarityOps {
     * form ran the full quantize+signature+shuffle pipeline once PER
     * TABLE. Identical scored pairs across tables stay byte-identical
     * rows (cosine is deterministic), so the final distinct reproduces
-    * the SQL UNION exactly; [[nearDupPairsLshMultiUnion]] is kept as
-    * the spec-pinned reference (TrainingDataOpsSpec set-equality). */
+    * the SQL UNION exactly (TrainingDataOpsSpec pins set-equality with
+    * the union form). */
   def nearDupPairsLshMulti(df: DataFrame, idCol: String, vecCol: String,
       minCosine: Double, tables: Int = 2, targetBlock: Double = 256.0,
       maxBits: Int = 16, dim: Int = 64): DataFrame = {
@@ -311,39 +311,6 @@ object SimilarityOps {
       .filter(col("cosine") > minCosine)
       .select("id_a", "id_b", "cosine")
       .distinct()
-  }
-
-  /** The pre-r19 one-pipeline-per-table spelling — the parity
-    * reference. */
-  private[graft] def nearDupPairsLshMultiUnion(df: DataFrame, idCol: String,
-      vecCol: String, minCosine: Double, tables: Int = 2,
-      targetBlock: Double = 256.0, maxBits: Int = 16, dim: Int = 64): DataFrame =
-    (0 until tables)
-      .map(t => nearDupPairsLsh(df, idCol, vecCol, minCosine, targetBlock,
-        maxBits, dim, seed = if (t == 0) "" else s"t$t|"))
-      .reduce(_ union _)
-      .distinct()
-
-  /** Near-duplicate pairs by cosine threshold within a CALLER-SUPPLIED
-    * block column (doc_a < doc_b, deterministic). Generic primitive for
-    * precomputed assignments that already scale with the corpus (an IVF
-    * cell from [[IvfIndex]], a staged cluster id); for a semantic column
-    * of bounded cardinality prefer [[nearDupPairsLsh]] — fixed-cardinality
-    * blocks grow quadratic pair work with corpus size. */
-  def nearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-      blockCol: String, minCosine: Double): DataFrame = {
-    val a = withQuantized(df, vecCol).select(
-      col(idCol).as("id_a"), col(blockCol).as("blk"),
-      col("qvec").as("va"), col("qn2").as("na"))
-    val b = withQuantized(df, vecCol).select(
-      col(idCol).as("id_b"), col(blockCol).as("blk2"),
-      col("qvec").as("vb"), col("qn2").as("nb"))
-    a.join(b, col("blk") === col("blk2") && col("id_a") < col("id_b"))
-      .withColumn("cosine",
-        qdot(col("va"), col("vb")).cast(DoubleType) /
-          (sqrt(col("na").cast(DoubleType)) * sqrt(col("nb").cast(DoubleType))))
-      .filter(col("cosine") > minCosine)
-      .select("id_a", "id_b", "cosine")
   }
 
   /** SemDeDup-style semantic deduplication: cluster the corpus, prune

@@ -30,20 +30,11 @@ object TextOps {
     * parity: `list_transform(generate_series(1, len(w)-(n-1)), i ->
     * array_to_string(w[i:i+(n-1)], ' '))`. Backed by the native
     * codegen'd [[graft.functions.Ngrams]] — the interpreted HOF spelling
-    * ([[ngramsHof]], kept as the parity reference) paid a lambda frame +
+    * (the test-scope `ParityReferences.ngramsHof`) paid a lambda frame +
     * slice copy per gram per row on every corpus pass (r18 opt). */
   def ngrams(toks: Column, n: Int): Column =
     coalesce(graft.functions.NativeFunctions.ngrams(toks, n),
       array().cast(org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType)))
-
-  /** The pre-r18 HOF spelling of [[ngrams]] — the reference
-    * ShingleHashSpec pins the native expression against. */
-  private[graft] def ngramsHof(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-      .otherwise(array().cast(org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.StringType)))
 
   /** A BPE-ish subword proxy: count of alternating letter/digit boundary
@@ -124,22 +115,11 @@ object TextOps {
 
   /** Token-array variant of [[languageId]] (see [[stopwordCountOf]]).
     * Backed by the native codegen'd [[graft.functions.LangId]] — the
-    * fold spelling ([[languageIdOfHof]], the parity reference) paid 5
+    * fold spelling (`ParityReferences.languageIdOfHof`) paid 5
     * interpreted filter passes over the token array per row (r18 opt);
     * the coalesce keeps the old NULL-toks contract ("und", not NULL). */
   def languageIdOf(toks: Column): Column =
     coalesce(graft.functions.NativeFunctions.langId(toks), lit("und"))
-
-  /** The pre-r18 fold spelling of [[languageIdOf]] — the reference
-    * ShingleHashSpec pins the native expression against. */
-  private[graft] def languageIdOfHof(toks: Column): Column = {
-    val langs = languageMarkers.keys.toSeq.sorted
-    val scores = langs.map(l => languageScoreOf(toks, l))
-    val best = greatest(scores: _*)
-    langs.zip(scores).foldRight(lit("und"): Column) { case ((l, s), acc) =>
-      when(best > 0 && s === best, lit(l)).otherwise(acc)
-    }
-  }
 
   /** Canonical normalization for fingerprinting: lowercase, strip
     * non-alphanumerics, collapse whitespace. */

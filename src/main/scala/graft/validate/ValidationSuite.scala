@@ -3,7 +3,13 @@ package graft.validate
 import java.lang.ref.WeakReference
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.FileSourceOptions
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{DriverParquet, ParquetFileFormat}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** DataFrame-native migration validation (SURVEY.md §2.4 A3 / §5):
@@ -13,10 +19,12 @@ import org.apache.spark.sql.types._
   * (not_null / unique / accepted_values / between / relationships).
   *
   * 100 TB posture: every check is a single distributed aggregation
-  * returning scalars — no data ever collects to the driver, and multi-
-  * metric checks fuse into one pass (e.g. PK nulls+dups+count is one
-  * groupBy). A table pair is one pass over both sides ([[aggregate]]): both
-  * row counts and each shared numeric column's sum and avg. One slot keeps
+  * returning scalars, and multi-metric checks fuse into one pass (e.g. PK
+  * nulls+dups+count is one groupBy). A table pair is one pass over both
+  * sides ([[aggregate]]): both row counts and each shared numeric column's
+  * sum and avg. The only data read on the driver is a pair of bare parquet
+  * files no larger than Spark's own broadcast threshold, the size at which
+  * Spark already collects a relation to the driver. One slot keeps
   * the last pair's row, keyed on its two frames' identity (held weakly):
   * [[rowCountMatch]] runs the pass and refills it, a [[checksum]] on the
   * same frame objects reads it; a re-read table is a new frame. */
@@ -90,26 +98,73 @@ object ValidationSuite {
 
   /** ONE aggregation over both sides, tagged `is_actual` and unioned, the
     * values cast to DOUBLE (a decimal side unions with a double side). Row:
-    * both row counts, then per value each side's sum and avg, actual first. */
-  private def aggregate(actual: DataFrame, expected: DataFrame, values: Seq[String]): Row = {
-    def tagged(df: DataFrame, isActual: Boolean) = df.select(lit(isActual).as("is_actual") +:
-      values.zipWithIndex.map { case (v, i) => col(v).cast(DoubleType).as(s"v$i") }: _*)
-    val sides = Seq(col("is_actual"), !col("is_actual"))
-    val aggs = sides.map(count_if) ++ values.indices.flatMap(i =>
-      sides.flatMap(s => Seq(sum(when(s, col(s"v$i"))), avg(when(s, col(s"v$i"))))))
-    tagged(actual, isActual = true).union(tagged(expected, isActual = false))
-      .agg(aggs.head, aggs.tail: _*).head()
+    * both row counts, then per value each side's sum and avg, actual first.
+    * A small file pair is read on the driver instead ([[onDriver]]). */
+  private def aggregate(actual: DataFrame, expected: DataFrame, values: Seq[String]): Row =
+    onDriver(actual, expected, values).getOrElse {
+      def tagged(df: DataFrame, isActual: Boolean) = df.select(lit(isActual).as("is_actual") +:
+        values.zipWithIndex.map { case (v, i) => col(v).cast(DoubleType).as(s"v$i") }: _*)
+      val sides = Seq(col("is_actual"), !col("is_actual"))
+      val aggs = sides.map(count_if) ++ values.indices.flatMap(i =>
+        sides.flatMap(s => Seq(sum(when(s, col(s"v$i"))), avg(when(s, col(s"v$i"))))))
+      tagged(actual, isActual = true).union(tagged(expected, isActual = false))
+        .agg(aggs.head, aggs.tail: _*).head()
+    }
+
+  /** [[aggregate]]'s row with no query and no job, when both sides are bare
+    * scans of unpartitioned, unbucketed parquet files, every value is
+    * [[numeric]] on both, and the pair's `sizeInBytes` is at most
+    * `spark.sql.autoBroadcastJoinThreshold` (≤ 0 turns this off). Each side
+    * is read once ([[DriverParquet.foreachRow]]) and folded as the query
+    * folds: Spark's `Cast` to DOUBLE, a sum from 0.0 that stays NULL with
+    * no non-NULL value, avg = that sum / its count. Over one file per side
+    * the additions run in the query's order, so the row is the same; over
+    * several files the last bits of a sum can differ. A scan that skips
+    * corrupt or missing files keeps the query. */
+  private def onDriver(actual: DataFrame, expected: DataFrame, values: Seq[String]): Option[Row] = {
+    def bare(df: DataFrame) = Some(df.queryExecution.analyzed).collect {
+      case LogicalRelation(r: HadoopFsRelation, _, _, false, _)
+          if r.fileFormat.isInstanceOf[ParquetFileFormat] && r.partitionSchema.isEmpty &&
+            r.bucketSpec.isEmpty && values.forall(numeric(df, _)) &&
+            !SQLConf.withExistingConf(r.sparkSession.sessionState.conf) {
+              val o = new FileSourceOptions(CaseInsensitiveMap(r.options))
+              o.ignoreCorruptFiles || o.ignoreMissingFiles
+            } => r
+    }
+    def fold(r: HadoopFsRelation): (Long, Seq[Seq[Any]]) = {
+      val fields = values.map(r.dataSchema(_))
+      val casts = fields.zipWithIndex.map { case (f, i) =>
+        Cast(BoundReference(i, f.dataType, nullable = true), DoubleType) }
+      val (sums, counts) = (new Array[Double](values.size), new Array[Long](values.size))
+      var rows = 0L
+      DriverParquet.foreachRow(r, StructType(fields)) { row =>
+        rows += 1
+        for (i <- casts.indices) casts(i).eval(row) match {
+          case v: Double => sums(i) += v; counts(i) += 1
+          case _ =>
+        }
+      }
+      (rows, values.indices.map(i =>
+        if (counts(i) == 0) Seq(null, null) else Seq(sums(i), sums(i) / counts(i))))
+    }
+    val limit = actual.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    for (a <- bare(actual); e <- bare(expected)
+         if limit > 0 && BigInt(a.sizeInBytes) + e.sizeInBytes <= limit) yield {
+      val ((na, va), (ne, ve)) = (fold(a), fold(e))
+      Row.fromSeq(Seq(na, ne) ++ va.zip(ve).flatMap { case (x, y) => x ++ y })
+    }
   }
 
-  /** The columns numeric on both sides under a name `col()` reads as that
-    * field whatever `spark.sql.caseSensitive` says: no `.`, backquote or
-    * `*`, and no other field of the side equal to it ignoring case. */
-  private def shared(actual: DataFrame, expected: DataFrame): Seq[String] = {
-    def numeric(df: DataFrame, n: String) = !n.exists(".`*".contains(_)) &&
-      df.columns.count(_.equalsIgnoreCase(n)) == 1 &&
-      df.schema.exists(f => f.name == n && f.dataType.isInstanceOf[NumericType])
+  /** A value name `col()` reads as that field whatever
+    * `spark.sql.caseSensitive` says, of a numeric field: no `.`, backquote
+    * or `*`, and no other field of the side equal to it ignoring case. */
+  private def numeric(df: DataFrame, n: String) = !n.exists(".`*".contains(_)) &&
+    df.columns.count(_.equalsIgnoreCase(n)) == 1 &&
+    df.schema.exists(f => f.name == n && f.dataType.isInstanceOf[NumericType])
+
+  /** The columns [[numeric]] on both sides. */
+  private def shared(actual: DataFrame, expected: DataFrame): Seq[String] =
     actual.columns.toSeq.filter(n => numeric(actual, n) && numeric(expected, n))
-  }
 
   // the last pair's frames (weakly held), shared columns and row
   @volatile private var slot: Option[(Seq[WeakReference[DataFrame]], Seq[String], Row)] = None

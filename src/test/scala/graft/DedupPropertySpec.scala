@@ -70,20 +70,20 @@ class DedupPropertySpec extends AnyFunSuite {
     val df = docs.toDF("text")
       .withColumn("hs", DedupOps.hashedShingles(DedupOps.shingles(col("text"), 3)))
       .withColumn("native", DedupOps.minhashSignatureArray(col("hs")))
-      .withColumn("hof", DedupOps.minhashSignatureArrayHof(col("hs")))
+      .withColumn("hof", ParityReferences.minhashSignatureArrayHof(col("hs")))
     df.select("native", "hof").collect().foreach { r =>
       assert(r.getSeq[Long](0) === r.getSeq[Long](1))
     }
     // null array -> null signature, both paths
     val nulls = spark.sql("SELECT CAST(NULL AS ARRAY<BIGINT>) AS hs")
       .select(DedupOps.minhashSignatureArray(col("hs")).as("native"),
-        DedupOps.minhashSignatureArrayHof(col("hs")).as("hof"))
+        ParityReferences.minhashSignatureArrayHof(col("hs")).as("hof"))
       .collect().head
     assert(nulls.isNullAt(0) && nulls.isNullAt(1))
     // null ELEMENTS are skipped like least() skips them
     val withNull = spark.sql("SELECT array(5L, CAST(NULL AS BIGINT), 9L) AS hs")
       .select(DedupOps.minhashSignatureArray(col("hs")).as("native"),
-        DedupOps.minhashSignatureArrayHof(col("hs")).as("hof"))
+        ParityReferences.minhashSignatureArrayHof(col("hs")).as("hof"))
       .collect().head
     assert(withNull.getSeq[Long](0) === withNull.getSeq[Long](1))
   }

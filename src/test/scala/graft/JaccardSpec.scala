@@ -30,7 +30,7 @@ class JaccardSpec extends AnyFunSuite {
         col("b") === col("b2") && col("doc_id") < col("id2"))
       val both = pairs.select(col("doc_id"), col("id2"),
         DedupOps.jaccard(col("sh"), col("sh2")).as("got"),
-        DedupOps.jaccardHof(col("sh"), col("sh2")).as("ref"))
+        ParityReferences.jaccardHof(col("sh"), col("sh2")).as("ref"))
         .as[(Long, Long, Option[Double], Option[Double])].collect()
       assert(both.nonEmpty)
       both.foreach { case (a, b, got, ref) =>

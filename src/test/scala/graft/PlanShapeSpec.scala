@@ -926,24 +926,33 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("x85: delta assign is narrow; merged search joins on cell, no cartesian") {
-    val plan = executedPlan("x85_ivf_delta_append")
-    assert(!plan.contains("CartesianProduct"),
-      "candidate scoring must never cartesian")
-    // the query->cell probe crossJoins the broadcast 16-row CENTROID
-    // table by design (the subtree prints under several branches) —
-    // every nested-loop line must be that broadcast Cross shape; an
-    // Inner/conditioned BNLJ would mean a data-side join regressed off
-    // its equi-join
-    plan.linesIterator.filter(_.contains("BroadcastNestedLoopJoin"))
-      .foreach { l =>
-        assert(l.contains("BuildRight, Cross"),
-          s"non-centroid nested-loop join crept in: $l")
-      }
-    val cellJoin = plan.linesIterator.exists(l =>
+  test("x85: narrow delta assign; a full probe joins no cell, a partial one does") {
+    def cellJoin(plan: String) = plan.linesIterator.exists(l =>
       (l.contains("SortMergeJoin") || l.contains("HashJoin")) &&
         l.contains("cell"))
-    assert(cellJoin, "candidate scoring must be an equi-join keyed on cell")
+    // every nested-loop line must be a broadcast Cross: the full probe's
+    // index × broadcast queries, or the partial probe's queries × the
+    // broadcast centroid table; an Inner/conditioned BNLJ would mean a
+    // data-side join regressed off its equi-join
+    def crossOnly(plan: String) = {
+      assert(!plan.contains("CartesianProduct"), "candidate scoring must never cartesian")
+      plan.linesIterator.filter(_.contains("BroadcastNestedLoopJoin"))
+        .foreach(l => assert(l.contains("BuildRight, Cross"), s"nested-loop join crept in: $l"))
+    }
+    // x85 probes all 16 cells: the index is scored against the broadcast
+    // queries, with no cell join and no pruning subquery re-running them
+    val plan = executedPlan("x85_ivf_delta_append")
+    crossOnly(plan)
+    assert(!cellJoin(plan) && !plan.contains("dynamicpruning"), plan)
+    // a partial probe still joins its ranked cells to the index on cell
+    val twoCells = graft.sim.IvfIndex.Model(
+      Array(0 -> Array.fill(8)(0.0), 1 -> Array.fill(8)(1.0)),
+      Tables.embeddings(spark, sf).withColumn("cell", (col("vec_id") % 2).cast("int")))
+    val partial = graft.sim.IvfIndex.search(spark, twoCells,
+      Tables.embeddings(spark, sf).filter(col("vec_id") < 10), "vec_id", "embedding",
+      k = 5, nProbe = 1).queryExecution.executedPlan.toString
+    crossOnly(partial)
+    assert(cellJoin(partial), "candidate scoring must be an equi-join keyed on cell")
     val delta = graft.sim.IvfIndex.assign(
       Tables.embeddings(spark, sf).filter(col("vec_id") % 10 === 7),
       "embedding",
@@ -960,6 +969,17 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!plan.contains("crank"), "a full probe must not score or rank centroids")
     assert("(?m)^\\W*Window ".r.findAllIn(plan).length === 1,
       s"only the neighbor top-k window may remain: ${plan.take(2000)}")
+  }
+
+  test("x48: a full probe scores the index against the broadcast queries, one job fewer") {
+    SparkEntry.queries("x48_ann_ivf_persisted")(spark, sf).count(): Unit
+    val df = SparkEntry.queries("x48_ann_ivf_persisted")(spark, sf)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("dynamicpruning") && plan.contains("BroadcastNestedLoopJoin"), plan)
+    // 4 with the cell join, whose dynamic-pruning subquery re-ran the
+    // query side
+    val (rows, jobs) = SparkTestSession.jobsIn("x48-search")(df.collect())
+    assert(jobs === 3 && rows.length === 50)
   }
 
   test("q86: the compiled DELETE is a narrow filter over the staged frame") {

@@ -95,7 +95,7 @@ class PqArgminSpec extends AnyFunSuite {
         .join(broadcast(cb), Seq("s"))
       val both = lut.select(col("query_id"), col("s"), col("cw"),
         NativeFunctions.sqDist(col("qsv"), col("cv")).as("got"),
-        PqIndex.sqDistHof(col("qsv"), col("cv")).as("ref"))
+        ParityReferences.sqDistHof(col("qsv"), col("cv")).as("ref"))
         .as[(Long, Int, Long, Option[Long], Option[Long])].collect()
       assert(both.nonEmpty)
       both.foreach { case (q, s, cw, got, ref) =>

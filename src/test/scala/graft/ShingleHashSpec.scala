@@ -65,7 +65,7 @@ class ShingleHashSpec extends AnyFunSuite {
   test("TextOps.ngrams (native) equals the HOF spelling (real + edge docs, n=2,5,8)") {
     for (docs <- Seq(realDocs, edgeDocs); n <- Seq(2, 5, 8)) {
       val toks = TextOps.tokens(col("text"))
-      val ref = docs.select(col("doc_id"), TextOps.ngramsHof(toks, n).as("g"))
+      val ref = docs.select(col("doc_id"), ParityReferences.ngramsHof(toks, n).as("g"))
         .as[(Long, Seq[String])].collect().toMap
       val got = docs.select(col("doc_id"), TextOps.ngrams(toks, n).as("g"))
         .as[(Long, Seq[String])].collect().toMap
@@ -82,7 +82,7 @@ class ShingleHashSpec extends AnyFunSuite {
   test("DedupOps.shinglesOf (native) equals the HOF spelling (real + edge docs, n=2 and n=3)") {
     for (docs <- Seq(realDocs, edgeDocs); n <- Seq(2, 3)) {
       val toks = TextOps.tokens(col("text"))
-      val ref = docs.select(col("doc_id"), DedupOps.shinglesOfHof(toks, n).as("s"))
+      val ref = docs.select(col("doc_id"), ParityReferences.shinglesOfHof(toks, n).as("s"))
         .as[(Long, Seq[String])].collect().toMap
       val got = docs.select(col("doc_id"), DedupOps.shinglesOf(toks, n).as("s"))
         .as[(Long, Seq[String])].collect().toMap
@@ -99,7 +99,7 @@ class ShingleHashSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     for (docs <- Seq(realDocs, tricky)) {
       val toks = TextOps.tokens(col("text"))
-      val ref = docs.select(col("doc_id"), TextOps.languageIdOfHof(toks).as("l"))
+      val ref = docs.select(col("doc_id"), ParityReferences.languageIdOfHof(toks).as("l"))
         .as[(Long, String)].collect().toMap
       val got = docs.select(col("doc_id"), TextOps.languageIdOf(toks).as("l"))
         .as[(Long, String)].collect().toMap
@@ -156,8 +156,8 @@ class ShingleHashSpec extends AnyFunSuite {
       DedupOps.shinglesOf(col("toks"), 3).as("s"),
       NativeFunctions.cdcBounds(col("toks"), 64L).as("b")).head()
     val refNull = nulls.select(
-      DedupOps.hashedShingles(DedupOps.shinglesOfHof(col("toks"), 3)).as("h"),
-      DedupOps.shinglesOfHof(col("toks"), 3).as("s")).head()
+      DedupOps.hashedShingles(ParityReferences.shinglesOfHof(col("toks"), 3)).as("h"),
+      ParityReferences.shinglesOfHof(col("toks"), 3).as("s")).head()
     assert(out.getSeq[Long](0) === refNull.getSeq[Long](0))
     assert(out.getSeq[String](1) === refNull.getSeq[String](1))
     assert(out.isNullAt(2)) // x52 wraps the bounds in its own coalesce

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -22,6 +22,14 @@ object SparkTestSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Write `df` as ONE parquet file in a new temp dir and reopen the dir
+    * bare: `spark.read.parquet`, so its plan is a plain file scan. */
+  def singleFileParquet(df: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-single").resolve("t").toString
+    df.coalesce(1).write.parquet(dir)
+    get.read.parquet(dir)
   }
 
   // the job group of every job started, in listener-bus order

@@ -231,7 +231,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val tagged = rows(SimilarityOps.nearDupPairsLshMulti(
       emb, "vec_id", "embedding", 0.3, tables = 2))
-    val union = rows(SimilarityOps.nearDupPairsLshMultiUnion(
+    val union = rows(ParityReferences.nearDupPairsLshMultiUnion(
       emb, "vec_id", "embedding", 0.3, tables = 2))
     assert(tagged === union,
       "one tagged explode must emit exactly the per-table pipelines' union")

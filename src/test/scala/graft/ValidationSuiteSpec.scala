@@ -173,4 +173,117 @@ class ValidationSuiteSpec extends AnyFunSuite {
         ("checksum_sum(amount)", false, "-102.29", "-103.08000000000001"),
         ("checksum_avg(amount)", false, "-34.09666666666667", "-34.36000000000001")))
   }
+
+  // ---- the driver path: a small pair of bare parquet files ----
+
+  private def withConf[A](key: String, v: String)(f: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, v)
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+  private def withThreshold[A](v: String)(f: => A) =
+    withConf("spark.sql.autoBroadcastJoinThreshold", v)(f)
+  private def checks(actual: DataFrame, expected: DataFrame, target: String,
+      columns: Seq[String] = Seq("amount")) =
+    ValidationSuite.rowCountMatch(actual, expected, target) ::
+      columns.toList.flatMap(ValidationSuite.checksum(actual, expected, _, target))
+  // the same pair's checks on the query path: new frame objects (no slot
+  // hit) with the driver path turned off
+  private def viaQuery(actual: DataFrame, expected: DataFrame, target: String,
+      columns: Seq[String] = Seq("amount")) =
+    withThreshold("-1")(checks(actual.toDF(), expected.toDF(), target, columns))
+  // the driver path ran: no query, and no job when run again (each
+  // counter's own marker query or job would show in the other)
+  private def onDriver[A](f: => A): A = {
+    val (out, queries) = SparkTestSession.queriesIn(f)
+    val (again, jobs) = SparkTestSession.jobsIn("validate-driver")(f)
+    assert(queries === 0 && jobs === 0, s"$queries queries, $jobs jobs")
+    assert(again === out)
+    out
+  }
+  private val fileCases = cases ++ Seq(
+    ("a NULL among the values", side(money, Seq(Some(10.10), None, Some(20.20), Some(0.30))),
+      side(money, some)),
+    ("a NaN value", side(DoubleType, Seq(Some(1.5), Some(Double.NaN), None)),
+      side(DoubleType, some)))
+
+  test("each edge case as one parquet file per side: the query path's results, no query") {
+    fileCases.foreach { case (name, a, e) =>
+      val (actual, expected) =
+        (SparkTestSession.singleFileParquet(a), SparkTestSession.singleFileParquet(e))
+      assert(onDriver(checks(actual, expected, name)) === viaQuery(actual, expected, name), name)
+    }
+  }
+
+  test("a side of several files: the query path's flags, sums within 1e-12") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-multi").resolve("t").toString
+    wide((1 to 300).map(i => (i % 17, i * 0.37 - 40.0))).repartition(3).write.parquet(dir)
+    val actual = spark.read.parquet(dir)
+    assert(actual.inputFiles.length === 3)
+    val expected = SparkTestSession.singleFileParquet(
+      wide((1 to 299).map(i => (i % 17, i * 0.37 - 40.0))))
+    val got = onDriver(checks(actual, expected, "m", numericCols))
+    val ref = viaQuery(actual, expected, "m", numericCols)
+    assert(got.map(_.passed) === ref.map(_.passed))
+    assert(got.head === ref.head)
+    got.tail.zip(ref.tail).foreach { case (g, r) =>
+      Seq((g.actual, r.actual), (g.expected, r.expected)).foreach { case (x, y) =>
+        val (dx, dy) = (x.toDouble, y.toDouble)
+        assert(math.abs(dx - dy) <= 1e-12 * math.max(math.abs(dx), math.abs(dy)), g)
+      }
+    }
+  }
+
+  test("only a bare, unpartitioned file pair under the threshold skips the query") {
+    val rows = Seq((1, 1.0), (2, 2.5), (3, -4.0))
+    val a = SparkTestSession.singleFileParquet(wide(rows))
+    val e = SparkTestSession.singleFileParquet(wide(rows.take(2)))
+    val partitioned = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-part").resolve("t").toString
+      wide(rows).write.partitionBy("qty").parquet(dir)
+      spark.read.parquet(dir)
+    }
+    def queries(actual: DataFrame, expected: DataFrame) = {
+      val (out, n) = SparkTestSession.queriesIn(checks(actual, expected, "t"))
+      assert(out === refRowCount(actual, expected, "t") ::
+        refChecksum(actual, expected, "amount", "t"))
+      n
+    }
+    assert(queries(a, e) === 0, "a small bare pair")
+    assert(queries(a.select("qty", "amount"), e) === 1, "a projected frame")
+    assert(queries(a, e.filter(col("qty") > 0)) === 1, "a filtered frame")
+    assert(queries(partitioned, e) === 1, "a partitioned dir")
+    val size = Seq(a, e).map(_.queryExecution.analyzed.stats.sizeInBytes).sum
+    assert(withThreshold(size.toString)(queries(a.toDF(), e.toDF())) === 0, "at the threshold")
+    assert(withThreshold((size - 1).toString)(queries(a.toDF(), e.toDF())) === 1,
+      "a pair over the threshold")
+    assert(withThreshold("-1")(queries(a.toDF(), e.toDF())) === 1, "threshold -1")
+    assert(withConf("spark.sql.files.ignoreCorruptFiles", "true")(
+      queries(a.toDF(), e.toDF())) === 1, "a scan that skips corrupt files")
+  }
+
+  test("a driver-path pair raises the query path's errors and never swallows a read error") {
+    val a = SparkTestSession.singleFileParquet(wide(Seq((1, 1.0), (2, 2.5))))
+    val e = SparkTestSession.singleFileParquet(wide(Seq((1, 1.0), (2, 2.5))))
+    // a string column: row counts stay on the driver, its checksum is the
+    // per-side query's, error and all
+    val text = SparkTestSession.singleFileParquet(
+      wide(Seq((1, 1.0))).withColumn("amount", lit("n/a")))
+    assert(onDriver(ValidationSuite.rowCountMatch(a, text, "t")) ===
+      refRowCount(a, text, "t"))
+    def condition(f: => Any) = intercept[Throwable](f) match {
+      case t: org.apache.spark.SparkThrowable => (t.getClass, t.getCondition)
+      case t => (t.getClass, null)
+    }
+    assert(condition(ValidationSuite.checksum(a, text, "amount", "t")) ===
+      condition(refChecksum(a, text, "amount", "t")))
+    assert(condition(ValidationSuite.checksum(a, e, "missing", "t")) ===
+      condition(refChecksum(a, e, "missing", "t")))
+    // a file cut short after the frame was opened
+    assert(onDriver(ValidationSuite.rowCountMatch(a, e, "t")).passed)
+    val file = java.nio.file.Paths.get(new java.net.URI(a.inputFiles.head))
+    val bytes = java.nio.file.Files.readAllBytes(file)
+    java.nio.file.Files.write(file, bytes.take(bytes.length / 2))
+    intercept[Exception](ValidationSuite.rowCountMatch(a, e, "t"))
+  }
 }
