@@ -3247,10 +3247,9 @@ object QueriesRelational {
 
   /** An IF guard BLOCK inside a TRY/CATCH body through the dtsx
     * frontend (`TryIfETL.dtsx`) — the guarded-load-with-handler
-    * composition (r18): the TRY body's shredded `IF … BEGIN … END`
-    * regroups exactly like a top-level script's
-    * ([[graft.patterns.IfLadderSqlCompiler.regroup]] now runs in
-    * `stmtsOf`), the guard folds eagerly, both block statements run
+    * composition (r18): the TRY body's `IF … BEGIN … END` is one node
+    * of the task's block tree ([[graft.patterns.SqlBlocks]]), exactly
+    * like a top-level script's, the guard folds eagerly, both block statements run
     * through the overlay, and the CATCH — never fired here — would
     * see pre-failure staged state per the q107 contract. RETURN legs
     * inside TRY bodies stay manual review. Scale: identical to q149 —
@@ -3301,8 +3300,8 @@ object QueriesRelational {
 
   /** IF guard BLOCKS inside a counter WHILE body through the dtsx
     * frontend (`WhileIfETL.dtsx`) — the guarded monthly-backfill
-    * composition (r18): [[graft.patterns.WhileLoopSqlCompiler]] now
-    * regroups the body's shredded `IF … BEGIN … END` and validates it
+    * composition (r18): [[graft.patterns.WhileLoopSqlCompiler]] reads
+    * the body's `IF … BEGIN … END` off the block tree and validates it
     * loop-body-safe (no RETURN leg, no conditional assignment — a
     * `SET @v = …` branch would be invisible to the unroller's
     * driver-side variable model, so it declines rather than silently

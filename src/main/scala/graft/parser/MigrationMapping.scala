@@ -152,70 +152,164 @@ object MigrationMapping {
   }
 
   private def mapSqlTask(t: ExecuteSqlTask, variables: Seq[Variable]): TaskMapping = {
+    import graft.patterns.ScriptedSqlExecutor.Route
     val sql = stripComments(t.sqlStatement)
-    val upper = sql.toUpperCase
+    // keyword tests read the lexer's mask: a keyword inside a string
+    // literal, a [bracketed] identifier or a comment is data
+    val msk = graft.patterns.SqlLex.mask(sql)
+    val upper = msk.toUpperCase
+    def slice(m: scala.util.matching.Regex.Match) = sql.substring(m.start(1), m.end(1))
     val detection = LoadPatterns.detect(sql, variables)
     def signals = detection.signals.map(s => s"signal: $s")
+    def converted(note: String, plan: Option[String] = None) =
+      TaskMapping(t.name, "ExecuteSQLTask", "converted", plan, Some(note), Nil, signals)
+    def manual(note: String) =
+      TaskMapping(t.name, "ExecuteSQLTask", "manual_review", None, None, Nil,
+        note :: signals)
     val insertSelect = "(?is)insert\\s+into\\s+(\\S+)[\\s(].*?select\\b".r
     val insertValues = "(?is)insert\\s+into\\s+(\\S+)\\s*\\([^)]*\\)\\s*values\\b".r
+    val mergeRe = "(?is)\\bmerge\\s+(?:into\\s+)?(\\S+)".r
+    val cursorRe = "(?is)\\bdeclare\\b.{0,120}?\\bcursor\\b".r
+    // the executor's one parse of the task: the ledger claims exactly
+    // the shapes it runs
+    val route = graft.patterns.ScriptedSqlExecutor.route(sql)
+
+    // the statement chain: one statement, a refresh, or a script using
+    // no surface beyond the chain's own
+    def chain: TaskMapping =
+      if (mergeRe.findFirstIn(msk).isDefined && upper.contains("USING"))
+        converted(
+          "canonical MERGE executes (patterns/MergeSqlCompiler — one " +
+            "full-outer-join state replacement with the fused 8672 guard); " +
+            "dataflow SCD2 via patterns/ScdType2.merge" +
+            (if (graft.patterns.MergeSqlCompiler.bySourceShape(sql))
+               "; WHEN NOT MATCHED BY SOURCE retires/flags source-absent " +
+                 "target rows on the same frame's null-source leg"
+             else "") +
+            (if (graft.patterns.MergeSqlCompiler.outputShape(sql))
+               "; OUTPUT…INTO change feed rides the side append ($action + " +
+                 "deleted/inserted images from the same joined frame)"
+             else ""), mergeRe.findFirstMatchIn(msk).map(slice))
+      else if (insertSelect.findFirstMatchIn(msk).isDefined &&
+          !graft.patterns.XmlPathAgg.translate(sql).exists(_.isLeft) &&
+          !graft.patterns.PivotSql.translate(sql).exists(_.isLeft)) {
+        val mode =
+          if (upper.contains("DELETE FROM") || upper.contains("TRUNCATE TABLE"))
+            "overwrite (DELETE+INSERT refresh)"
+          else "append"
+        val xmlAgg =
+          if (graft.patterns.XmlPathAgg.translate(sql).isDefined)
+            "; STUFF(… FOR XML PATH('')) group-concat translates to a " +
+              "correlated collect_list subquery (patterns/XmlPathAgg)"
+          else ""
+        converted(s"refresh rewrite (patterns/SqlPatternRewriter): SELECT compiles " +
+          s"to a DataFrame, written $mode$xmlAgg",
+          insertSelect.findFirstMatchIn(msk).map(slice))
+      } else if (upper.startsWith("TRUNCATE TABLE") &&
+          !upper.contains("INSERT") && !upper.contains("SELECT"))
+        converted("empty overwrite, schema kept (patterns/DeleteSqlCompiler); " +
+          "a following reload's overwrite also recreates the table")
+      else if (insertValues.findFirstMatchIn(msk).isDefined) {
+        val handshake = "(?i)update\\s.{0,80}?processed.?flag".r.findFirstIn(msk).isDefined
+        converted("sync-log append (patterns/Incremental.syncLogEntry)" +
+          (if (handshake) " + processed-flag handshake (Incremental.unprocessed)"
+           else ""), insertValues.findFirstMatchIn(msk).map(slice))
+      } else if (graft.patterns.SelectIntoSqlCompiler.shapeTarget(sql).isDefined)
+        converted("SELECT INTO creates its target (patterns/SelectIntoSqlCompiler " +
+          "— INTO excised, pure SELECT runs, first generation written; " +
+          "pre-existing target aborts with T-SQL 2714 parity)",
+          graft.patterns.SelectIntoSqlCompiler.shapeTarget(sql))
+      else if (upper.startsWith("SELECT"))
+        converted("SELECT compiles to a DataFrame" + t.resultVariable.fold("")(v =>
+          s"; result set bound to $v (watermark read / ForEach ADO feed)"))
+      else if (graft.patterns.OutputIntoSqlCompiler.shapeMatches(sql))
+        converted("OUTPUT…INTO DML executes (patterns/OutputIntoSqlCompiler — " +
+            "audit/archive rows from the fired pre-state rows ride a side " +
+            "append before the state replacement; both frames are narrow " +
+            "projections of one scan)")
+      else if (graft.patterns.UpdateSqlCompiler.shapeMatches(sql))
+        converted("canonical UPDATE executes (patterns/UpdateSqlCompiler — " +
+            "CASE-projection state replacement, pre-update-row semantics)")
+      else if (graft.patterns.UpdateFromSqlCompiler.shapeMatches(sql))
+        converted("correlated UPDATE...FROM executes (patterns/" +
+            "UpdateFromSqlCompiler — one target-source join with the " +
+            "multi-match guard)")
+      else if (graft.patterns.DeleteFromSqlCompiler.shapeMatches(sql))
+        converted("correlated DELETE...FROM executes (patterns/" +
+            "DeleteFromSqlCompiler — one anti-join state replacement)")
+      else if (graft.patterns.DeleteSqlCompiler.shapeMatches(sql))
+        converted("canonical DELETE executes (patterns/DeleteSqlCompiler — " +
+            "keep-NOT-TRUE filter + overwrite)")
+      else if (upper.startsWith("UPDATE") &&
+          detection.pattern == LoadPatterns.LoadPattern.Incremental)
+        converted("processed-flag / watermark executor (patterns/Incremental)")
+      else if (graft.patterns.AlterTableSqlCompiler.shapeMatches(sql))
+        converted("migration DDL executes (patterns/AlterTableSqlCompiler — " +
+            "ADD appends the typed DEFAULT/NULL column as one narrow " +
+            "projection, DROP COLUMN projects it away, ALTER COLUMN " +
+            "re-types in place with lazy 245/8114/515 conversion guards; " +
+            "2705/4901/4924 T-SQL parity errors hold; constraints, " +
+            "COLLATE, and IDENTITY stay manual review)")
+      else if (graft.patterns.NoopDdlSqlCompiler.shapeMatches(sql))
+        converted("physical-tuning DDL / WAITFOR executes as a no-op (patterns/" +
+            "NoopDdlSqlCompiler — rowstore indexes and manual statistics " +
+            "have no relational content in a columnar engine; bucketing/" +
+            "z-order are this engine's explicit analogs and parquet " +
+            "gathers column stats at write time; WAITFOR DELAY/TIME is " +
+            "the orchestrator's job in a replay and the state is " +
+            "bit-identical)")
+      else if (graft.patterns.ExecLiteralSqlCompiler.unwrap(sql).isDefined ||
+          graft.patterns.ExecLiteralSqlCompiler.bindParameterized(sql).isDefined ||
+          graft.patterns.ExecLiteralSqlCompiler.foldConcatenated(sql).isDefined)
+        converted("literal dynamic SQL unwraps (patterns/ExecLiteralSqlCompiler" +
+            " — sp_executesql/EXEC('…') around a single static statement " +
+            "compiles inline, the parameterized sp_executesql form binds " +
+            "literal @p arguments as typed literals, and a constant `+` " +
+            "concatenation folds to its exact T-SQL text; expression " +
+            "args, OUTPUT params, and non-constant concatenation stay " +
+            "manual review)")
+      else if (cursorRe.findFirstIn(msk).isDefined) manual(cursorNote)
+      else manual("statement shape not auto-convertible")
 
     if (upper.contains("RAISERROR"))
       TaskMapping(t.name, "ExecuteSQLTask", "converted_to_tests", None,
         Some(
-          if (graft.patterns.ScriptedSqlExecutor.statements(sql)._1.exists(s =>
-              graft.patterns.IfLadderSqlCompiler.parse(s).exists(_.raises)))
+          if (route match {
+              case s: Route.Script => s.leaves.exists {
+                case graft.patterns.SqlBlocks.If(l, _) => l.raises
+                case _ => false
+              }
+              case _ => false
+            })
             "validation guard executes (patterns/IfLadderSqlCompiler " +
               "RAISERROR legs: severity >= 11 fails the task like SSIS); " +
               "also expressible as validate/ValidationSuite checks"
           else "validation aggregate guard (validate/ValidationSuite) — " +
             "RAISERROR becomes a failed check"), Nil, signals)
-    else if ("(?i)\\bmerge\\b\\s+(into\\s+)?\\S+".r.findFirstIn(sql).isDefined &&
-        upper.contains("USING"))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted",
-        "(?is)merge\\s+(?:into\\s+)?(\\S+)".r.findFirstMatchIn(sql).map(_.group(1)),
-        Some("canonical MERGE executes (patterns/MergeSqlCompiler — one " +
-          "full-outer-join state replacement with the fused 8672 guard); " +
-          "dataflow SCD2 via patterns/ScdType2.merge" +
-          (if (graft.patterns.MergeSqlCompiler.bySourceShape(sql))
-             "; WHEN NOT MATCHED BY SOURCE retires/flags source-absent " +
-               "target rows on the same frame's null-source leg"
-           else "") +
-          (if (graft.patterns.MergeSqlCompiler.outputShape(sql))
-             "; OUTPUT…INTO change feed rides the side append ($action + " +
-               "deleted/inserted images from the same joined frame)"
-           else "")), Nil, signals)
-    else if (graft.patterns.ScriptedSqlExecutor.tryCatchShape(sql))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("TRY/CATCH batch executes (patterns/ScriptedSqlExecutor — " +
+    else route match {
+      case Route.Decline(why) => manual(why)
+      case _: Route.TryCatch =>
+        converted("TRY/CATCH batch executes (patterns/ScriptedSqlExecutor — " +
           "T-SQL-catchable aborts are caught: the eager 2714/3701/arity " +
           "classes plus the lazy 8672 multi-match guards, forced at each " +
           "statement; pre-failure effects stay staged (T-SQL without " +
           "XACT_ABORT), ERROR_MESSAGE() binds the caught text; a CATCH " +
           "LEADING with a bare ROLLBACK discards the TRY's staged " +
           "effects first — the all-or-nothing idiom; any other " +
-          "rollback placement stays manual review)"),
-        Nil, signals)
-    else if (graft.patterns.IfLadderSqlCompiler.ownsWholeText(sql))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("IF ladder executes (patterns/IfLadderSqlCompiler — " +
+          "rollback placement stays manual review)")
+      case Route.Script(List(_: graft.patterns.SqlBlocks.If), _) =>
+        converted("IF ladder executes (patterns/IfLadderSqlCompiler — " +
           "multi-statement BEGIN…END branches, ELSE IF first-match " +
           "cascades, and mixed scalar/EXISTS predicates fold as eager " +
           "driver probes; the taken leg's statements run through the " +
-          "script overlay; nested control flow stays manual review)"),
-        Nil, signals)
-    else if (graft.patterns.WhileLoopSqlCompiler.shapeMatches(sql))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("counter WHILE loop unrolls (patterns/WhileLoopSqlCompiler " +
+          "script overlay; nested control flow stays manual review)")
+      case _: Route.CounterWhile =>
+        converted("counter WHILE loop unrolls (patterns/WhileLoopSqlCompiler " +
           "— driver-evaluated control flow, body statements execute " +
           "through the script overlay; data-dependent loops stay " +
-          "manual review)"), Nil, signals)
-    // the executable cursor test runs BEFORE the statement-fragment
-    // branches: an INSERT-body FETCH loop would otherwise classify as a
-    // bare INSERT…VALUES append — the whole-text anchors make this
-    // branch precise, so testing early is safe
-    else if (graft.patterns.ProcInlineSqlCompiler.rewriteToScript(sql).isDefined)
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("script-local stored procedure inlines (patterns/" +
+          "manual review)")
+      case _: Route.ProcCalls =>
+        converted("script-local stored procedure inlines (patterns/" +
           "ProcInlineSqlCompiler — the CREATE PROCEDURE batch's body is " +
           "IN the script, so each EXEC call expands hygienically: one " +
           "DECLARE per parameter in a per-call namespace (literal OR " +
@@ -224,144 +318,34 @@ object MigrationMapping {
           "batch; scalar OUTPUT parameters copy in and write back " +
           "post-body; INSERT INTO t EXEC helper inlines a single-" +
           "SELECT body as the INSERT source; procs created elsewhere " +
-          "keep the manual-review decline, their bodies are invisible)"),
-        Nil, signals)
-    else if (graft.patterns.CursorLoopSqlCompiler.rewriteToScript(sql).isDefined)
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("canonical CURSOR FETCH loop executes set-based (patterns/" +
+          "keep the manual-review decline, their bodies are invisible)")
+      case _: Route.Cursor =>
+        converted("canonical CURSOR FETCH loop executes set-based (patterns/" +
           "CursorLoopSqlCompiler — the cursor SELECT stages once, each " +
           "body DML becomes a join-update / anti-join delete / " +
           "insert-select (multi-statement bodies own when targets are " +
           "pairwise-distinct tables); an UPDATE whose target row two " +
-          "cursor rows would hit aborts via the multi-match guard)"),
-        Nil, signals)
-    else if (graft.patterns.BatchedDmlLoopSqlCompiler
-        .rewriteToStatement(sql).isDefined)
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("batched-DML purge loop executes as its set-based fixpoint " +
+          "cursor rows would hit aborts via the multi-match guard)")
+      case _: Route.Batched =>
+        converted("batched-DML purge loop executes as its set-based fixpoint " +
           "(patterns/BatchedDmlLoopSqlCompiler — TOP (n) chunking exists " +
           "for row-store log pressure, which state replacement has no " +
           "analog of; the UPDATE form compiles only when a SET literal " +
           "provably falsifies a WHERE conjunct, so every batch shrinks " +
-          "the pred-set)"), Nil, signals)
-    else if (graft.patterns.ScriptedSqlExecutor.scriptFeatures(sql).isDefined)
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("sequential shadow-overlay script (patterns/" +
-          "ScriptedSqlExecutor): " +
-          graft.patterns.ScriptedSqlExecutor.scriptFeatures(sql).get),
-        Nil, signals)
-    else if (insertSelect.findFirstMatchIn(sql).isDefined &&
-        !graft.patterns.XmlPathAgg.translate(sql).exists(_.isLeft) &&
-        !graft.patterns.PivotSql.translate(sql).exists(_.isLeft)) {
-      val target = insertSelect.findFirstMatchIn(sql).map(_.group(1))
-      val mode =
-        if (upper.contains("DELETE FROM") || upper.contains("TRUNCATE TABLE"))
-          "overwrite (DELETE+INSERT refresh)"
-        else "append"
-      val xmlAgg =
-        if (graft.patterns.XmlPathAgg.translate(sql).isDefined)
-          "; STUFF(… FOR XML PATH('')) group-concat translates to a " +
-            "correlated collect_list subquery (patterns/XmlPathAgg)"
-        else ""
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", target,
-        Some(s"refresh rewrite (patterns/SqlPatternRewriter): SELECT compiles " +
-          s"to a DataFrame, written $mode$xmlAgg"), Nil, signals)
-    } else if (upper.startsWith("TRUNCATE TABLE") &&
-        !upper.contains("INSERT") && !upper.contains("SELECT"))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("empty overwrite, schema kept (patterns/DeleteSqlCompiler); " +
-          "a following reload's overwrite also recreates the table"),
-        Nil, signals)
-    else if (insertValues.findFirstMatchIn(sql).isDefined) {
-      val target = insertValues.findFirstMatchIn(sql).map(_.group(1))
-      val handshake = "(?i)update\\s.{0,80}?processed.?flag".r.findFirstIn(sql).isDefined
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", target,
-        Some("sync-log append (patterns/Incremental.syncLogEntry)" +
-          (if (handshake) " + processed-flag handshake (Incremental.unprocessed)"
-           else "")), Nil, signals)
-    } else if (graft.patterns.SelectIntoSqlCompiler.shapeTarget(sql).isDefined)
-      TaskMapping(t.name, "ExecuteSQLTask", "converted",
-        graft.patterns.SelectIntoSqlCompiler.shapeTarget(sql),
-        Some("SELECT INTO creates its target (patterns/SelectIntoSqlCompiler " +
-          "— INTO excised, pure SELECT runs, first generation written; " +
-          "pre-existing target aborts with T-SQL 2714 parity)"), Nil, signals)
-    else if (upper.startsWith("SELECT"))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("SELECT compiles to a DataFrame" + t.resultVariable.fold("")(v =>
-          s"; result set bound to $v (watermark read / ForEach ADO feed)")),
-        Nil, signals)
-    else if (graft.patterns.OutputIntoSqlCompiler.shapeMatches(sql))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("OUTPUT…INTO DML executes (patterns/OutputIntoSqlCompiler — " +
-          "audit/archive rows from the fired pre-state rows ride a side " +
-          "append before the state replacement; both frames are narrow " +
-          "projections of one scan)"), Nil, signals)
-    else if (graft.patterns.UpdateSqlCompiler.shapeMatches(sql))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("canonical UPDATE executes (patterns/UpdateSqlCompiler — " +
-          "CASE-projection state replacement, pre-update-row semantics)"),
-        Nil, signals)
-    else if (graft.patterns.UpdateFromSqlCompiler.shapeMatches(sql))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("correlated UPDATE...FROM executes (patterns/" +
-          "UpdateFromSqlCompiler — one target-source join with the " +
-          "multi-match guard)"), Nil, signals)
-    else if (graft.patterns.DeleteFromSqlCompiler.shapeMatches(sql))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("correlated DELETE...FROM executes (patterns/" +
-          "DeleteFromSqlCompiler — one anti-join state replacement)"),
-        Nil, signals)
-    else if (graft.patterns.DeleteSqlCompiler.shapeMatches(sql))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("canonical DELETE executes (patterns/DeleteSqlCompiler — " +
-          "keep-NOT-TRUE filter + overwrite)"), Nil, signals)
-    else if (upper.startsWith("UPDATE") &&
-        detection.pattern == LoadPatterns.LoadPattern.Incremental)
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("processed-flag / watermark executor (patterns/Incremental)"),
-        Nil, signals)
-    else if (graft.patterns.AlterTableSqlCompiler.shapeMatches(sql))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("migration DDL executes (patterns/AlterTableSqlCompiler — " +
-          "ADD appends the typed DEFAULT/NULL column as one narrow " +
-          "projection, DROP COLUMN projects it away, ALTER COLUMN " +
-          "re-types in place with lazy 245/8114/515 conversion guards; " +
-          "2705/4901/4924 T-SQL parity errors hold; constraints, " +
-          "COLLATE, and IDENTITY stay manual review)"), Nil, signals)
-    else if (graft.patterns.NoopDdlSqlCompiler.shapeMatches(sql))
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("physical-tuning DDL / WAITFOR executes as a no-op (patterns/" +
-          "NoopDdlSqlCompiler — rowstore indexes and manual statistics " +
-          "have no relational content in a columnar engine; bucketing/" +
-          "z-order are this engine's explicit analogs and parquet " +
-          "gathers column stats at write time; WAITFOR DELAY/TIME is " +
-          "the orchestrator's job in a replay and the state is " +
-          "bit-identical)"), Nil, signals)
-    else if (graft.patterns.ExecLiteralSqlCompiler.unwrap(sql).isDefined ||
-        graft.patterns.ExecLiteralSqlCompiler.bindParameterized(sql).isDefined ||
-        graft.patterns.ExecLiteralSqlCompiler.foldConcatenated(sql).isDefined)
-      TaskMapping(t.name, "ExecuteSQLTask", "converted", None,
-        Some("literal dynamic SQL unwraps (patterns/ExecLiteralSqlCompiler" +
-          " — sp_executesql/EXEC('…') around a single static statement " +
-          "compiles inline, the parameterized sp_executesql form binds " +
-          "literal @p arguments as typed literals, and a constant `+` " +
-          "concatenation folds to its exact T-SQL text; expression " +
-          "args, OUTPUT params, and non-constant concatenation stay " +
-          "manual review)"),
-        Nil, signals)
-    else if ("(?is)\\bdeclare\\b.{0,120}?\\bcursor\\b".r
-        .findFirstIn(sql).isDefined)
-      TaskMapping(t.name, "ExecuteSQLTask", "manual_review", None, None, Nil,
-        List("CURSOR loop: row-at-a-time control flow this engine will " +
-          "not replay — rewrite set-based (a WHILE counter loop or one " +
-          "DML statement usually replaces it; the canonical FETCH-loop " +
-          "shape with distinct-target body DML converts automatically " +
-          "via CursorLoopSqlCompiler)") ++
-          signals)
-    else
-      TaskMapping(t.name, "ExecuteSQLTask", "manual_review", None, None, Nil,
-        List("statement shape not auto-convertible") ++ signals)
+          "the pred-set)")
+      case s: Route.Script if s.features.nonEmpty =>
+        converted("sequential shadow-overlay script (patterns/" +
+          "ScriptedSqlExecutor): " + s.features.mkString(" + "))
+      case _ => chain
+    }
   }
+
+  private val cursorNote =
+    "CURSOR loop: row-at-a-time control flow this engine will " +
+      "not replay — rewrite set-based (a WHILE counter loop or one " +
+      "DML statement usually replaces it; the canonical FETCH-loop " +
+      "shape with distinct-target body DML converts automatically " +
+      "via CursorLoopSqlCompiler)"
 
   /** Classify one top-level task (containers recurse into children for
     * notes but count once, like the reference's per-task ledger). */

@@ -82,11 +82,9 @@ package graft.patterns
   * contract (non-constant defaults are a T-SQL syntax error and
   * decline, as does DEFAULT against a parameter with no default).
   *
-  * Declined to manual review: rollback / TRY-CATCH / SAVE TRAN
-  * anywhere in the script (mirrors [[ScriptedSqlExecutor]]'s
-  * dispatcher gates, which run BEFORE this compiler — declining here
-  * keeps the classification ledger aligned with what actually
-  * executes), readonly parameters, mid-body RETURN or any
+  * Declined to manual review (ROLLBACK, TRY/CATCH and SAVE TRAN
+  * outside the body never reach this compiler: [[ScriptedSqlExecutor]]'s
+  * route declines them first): readonly parameters, mid-body RETURN or any
   * control flow in the body (IF/WHILE/BEGIN-END beyond the optional
   * outer wrapper, TRY/CATCH, transactions, cursors, nested EXEC),
   * `@@` system-variable reads in the body (at proc entry they see
@@ -123,13 +121,6 @@ object ProcInlineSqlCompiler {
       "open|close|deallocate|exec|execute|merge|tran|transaction|" +
       "rollback|commit|try|catch|output|out|readonly|default|" +
       "create|drop|alter|truncate|grant|revoke|use|waitfor)\\b").r
-  // the dispatcher's conditional-undo gates, mirrored: a script text
-  // carrying any of these never REACHES this compiler at runtime
-  // (ScriptedSqlExecutor declines first), so the classification twin
-  // must decline too — a ledger row must never say "converted" for a
-  // text the executor will refuse
-  private val outerGateRe =
-    "(?i)\\brollback\\b|\\bbegin\\s+try\\b|\\bsave\\s+tran(?:saction)?\\b".r
   private val declareStmtRe = "(?is)^\\s*declare\\s+(@.+)$".r
   private val declareItemRe =
     "(?is)^@(\\w+)\\s+([A-Za-z]\\w*(?:\\s*\\([^)]*\\))?)(?:\\s*=\\s*(.+))?\\s*$".r
@@ -230,12 +221,7 @@ object ProcInlineSqlCompiler {
       }
     if (params.map(_._1).distinct.size != params.size) return None
     // body: everything after AS; one optional outer BEGIN…END wrapper
-    var body = g(3).trim
-    val bMsk0 = SqlLex.mask(body)
-    if ("(?is)^begin\\b".r.findFirstIn(bMsk0).isDefined &&
-        "(?is)\\bend\\s*;?\\s*$".r.findFirstIn(bMsk0).isDefined)
-      body = body.replaceFirst("(?is)^begin\\b", "")
-        .replaceFirst("(?is)\\bend\\s*;?\\s*$", "").trim
+    var body = SqlBlocks.blockBody(g(3)).getOrElse(g(3).trim)
     if (body.isEmpty) return None
     val bMsk = SqlLex.mask(body)
     // a body DECLARE is owned (hygienic rename isolates it); every
@@ -450,8 +436,6 @@ object ProcInlineSqlCompiler {
     val text = SqlText.stripComments(textRaw)
     val textMsk = SqlLex.mask(text)
     if (anyCreateProcRe.findFirstIn(textMsk).isEmpty) return None
-    // mirror the dispatcher's conditional-undo gates (see scaladoc)
-    if (outerGateRe.findFirstIn(textMsk).isDefined) return None
     val procs = scala.collection.mutable.Map.empty[String, Helper]
     var callNo = 0
     val out = scala.collection.mutable.ListBuffer.empty[String]
@@ -578,10 +562,7 @@ object ProcInlineSqlCompiler {
             }
             if (otherExec) return None
             declared ++= declaredNames(stmt, sMsk)
-            val s2 = ScriptedSqlExecutor.beginTranPrefixRe
-              .replaceFirstIn(stmt, "")
-            if (ScriptedSqlExecutor.txnNoopRe
-                .findFirstMatchIn(s2).isEmpty) out += s2
+            out ++= SqlBlocks.undressed(stmt)
         }
       }
     }

@@ -11,9 +11,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Single statements route through the compiler chain (MERGE → UPDATE →
   * UPDATE…FROM → DELETE/TRUNCATE → DELETE…FROM → literal VALUES →
-  * SqlPatternRewriter). Scripts are split on quote-aware semicolons
-  * AND `GO` batch-separator lines of the comment-stripped text and
-  * routed by SHAPE:
+  * SqlPatternRewriter). A task's comment-stripped text is parsed ONCE
+  * into the [[SqlBlocks]] tree (GO batches, blocks, IF ladders, WHILE,
+  * TRY/CATCH, transaction statements) and [[route]]d by SHAPE — the
+  * same route the migration ledger reads:
   *
   *  - the canonical REFRESH script (clears followed by one
   *    INSERT…SELECT, a clear naming the insert target) keeps
@@ -34,13 +35,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    would execute the first INSERT…SELECT and silently drop the
   *    trailing statements — manual review beats a mangled half-run.
   *
-  * T-SQL transaction dressing is honored, not parsed around:
+  * T-SQL transaction dressing is honored as tree nodes:
   * `BEGIN TRAN[SACTION]` / `COMMIT` / `SET NOCOUNT ON|OFF` statements
-  * strip away (the overlay's commit-only-when-every-statement-compiles
-  * rule IS the transaction contract), a `BEGIN TRAN` fused onto the
-  * next statement by a missing `;` loses just the prefix, and any
-  * `ROLLBACK` — conditional undo this replay cannot express — declines
-  * the whole task to manual review.
+  * drop out of the sequenced statements (the overlay's
+  * commit-only-when-every-statement-compiles rule IS the transaction
+  * contract), a `BEGIN TRAN` fused onto the next statement by a missing
+  * `;` loses just the prefix, and any `ROLLBACK` outside the two owned
+  * TRY/CATCH forms — conditional undo this replay cannot express —
+  * declines the whole task to manual review.
   *
   * `#temp` TABLES live for exactly one script: every `#name` reference
   * (outside string literals) rewrites to an overlay-safe identifier,
@@ -130,18 +132,13 @@ object ScriptedSqlExecutor {
     * no plain statement: its branches sequence like a script's. Inside
     * a script a DROP is no read: a never-created temp is absent there
     * (plain DROP aborts with 3701, IF EXISTS is a no-op). */
-  private[patterns] def outOfTempScope(text: String): Boolean = {
-    val msk = SqlLex.mask(text)
+  private def outOfTempScope(msk: String, onePlain: Boolean): Boolean =
     tempRefRe.findFirstIn(msk).isDefined && {
       val made = tempCreatorRes
         .flatMap(_.findAllMatchIn(msk).map(_.group(1).toLowerCase)).toSet
-      (statements(text)._1 match {
-        case List(s) => !IfLadderSqlCompiler.isIf(s)
-        case _ => false
-      }) || tempRefRe.findAllIn(dropTempClauseRe.replaceAllIn(msk, ""))
+      onePlain || tempRefRe.findAllIn(dropTempClauseRe.replaceAllIn(msk, ""))
         .exists(r => !made(r.toLowerCase))
     }
-  }
 
   /** The IF text a statement runs: the statement itself when it is
     * IF-headed, else the inner text of a literal, parameterized or
@@ -265,9 +262,6 @@ object ScriptedSqlExecutor {
     * needing ROLLBACK still declines the whole task (the global
     * rollback rule); an exception INSIDE the catch body propagates as
     * T-SQL's does. */
-  private val tryCatchRe =
-    ("(?is)^\\s*begin\\s+try\\b(.*?)\\bend\\s+try\\s*;?\\s*" +
-      "begin\\s+catch\\b(.*?)\\bend\\s+catch\\s*;?\\s*$").r
   private val errMsgRe = "(?i)error_message\\s*\\(\\s*\\)".r
 
   /** Substitute every `ERROR_MESSAGE()` read with the caught text as a
@@ -380,143 +374,11 @@ object ScriptedSqlExecutor {
     Some(spark.sql("SELECT " + fields.mkString(", ")).filter("false"))
   }
 
-  /** T-SQL housekeeping statements that are semantic no-ops here: the
-    * shadow-overlay script already IS all-or-nothing (nothing commits
-    * unless every statement compiles), which is exactly the
-    * BEGIN TRAN … COMMIT contract, and NOCOUNT only suppresses
-    * rowcount chatter. The reference's own SQL parser tracks these
-    * keywords (ssis-to-dbt `src/parser/utils.py:45`). */
-  private[patterns] val txnNoopRe =
-    ("(?is)^\\s*(?:begin\\s+tran(?:saction)?(?:\\s+\\w+)?" +
-      "|commit(?:\\s+tran(?:saction)?(?:\\s+\\w+)?)?" +
-      "|set\\s+nocount\\s+(?:on|off))\\s*$").r
-
-  /** `BEGIN TRAN` fused onto the next statement by a missing `;`
-    * (`BEGIN TRANSACTION UPDATE t SET …`) — strip the prefix, keep the
-    * statement. */
-  private[patterns] val beginTranPrefixRe =
-    "(?is)^\\s*begin\\s+tran(?:saction)?\\s+(?=[A-Za-z])".r
-
-  /** A ROLLBACK anywhere is CONTROL FLOW (conditional undo this
-    * replay cannot express) — the whole task declines to manual
-    * review, never a half-honored transaction. */
+  /** A ROLLBACK anywhere outside the owned TRY/CATCH forms is CONTROL
+    * FLOW (conditional undo this replay cannot express) — the whole
+    * task declines to manual review, never a half-honored
+    * transaction. */
   private val rollbackRe = "(?i)\\brollback\\b".r
-
-  /** A bare `ROLLBACK [TRAN[SACTION]]` statement — the only rollback
-    * spelling the executor owns, and only as a CATCH body's FIRST
-    * statement (the all-or-nothing idiom). Savepoint/named rollbacks
-    * stay manual review. */
-  private val bareRollbackRe =
-    "(?is)^\\s*rollback(?:\\s+tran(?:saction)?)?\\s*;?\\s*$".r
-
-  private val beginTranStmtRe =
-    "(?is)^\\s*begin\\s+tran(?:saction)?(?:\\s+\\w+)?\\s*$".r
-  private val commitStmtRe =
-    "(?is)^\\s*commit(?:\\s+tran(?:saction)?(?:\\s+\\w+)?)?\\s*$".r
-
-  /** Does the TRY's transaction bracket EVERY TRY effect? The
-    * all-or-nothing replay is sound ONLY then: in T-SQL a ROLLBACK
-    * with no open transaction raises error 3903 (effects persist and
-    * the rest of the CATCH is skipped), and statements before a
-    * mid-TRY BEGIN TRAN are already committed — both diverge silently
-    * from a whole-TRY discard. Checked on the RAW statement list
-    * (before the txnNoop filter strips the very statements at issue):
-    * the TRY must LEAD with BEGIN TRAN (bare first statement, or
-    * fused onto it), open no second transaction, and COMMIT at most
-    * once and only as its last statement. */
-  private def tranBracketsTryBody(tryBody: String): Boolean = {
-    val raw = SqlText.splitBatches(tryBody).flatMap(SqlText.splitStatements)
-    def isBeginTran(s: String) =
-      beginTranStmtRe.findFirstMatchIn(s).isDefined ||
-        beginTranPrefixRe.findFirstMatchIn(s).isDefined
-    raw.headOption.exists(isBeginTran) &&
-      !raw.tail.exists(isBeginTran) && {
-        val commits = raw.zipWithIndex.filter { case (s, _) =>
-          commitStmtRe.findFirstMatchIn(s).isDefined }
-        commits.isEmpty ||
-          (commits.size == 1 && commits.head._2 == raw.size - 1)
-      }
-  }
-
-  private val saveTranStmtRe =
-    "(?is)^\\s*save\\s+tran(?:saction)?\\s+(\\w+)\\s*;?\\s*$".r
-  private val namedRollbackStmtRe =
-    "(?is)^\\s*rollback\\s+tran(?:saction)?\\s+(\\w+)\\s*;?\\s*$".r
-
-  /** The savepoint-suffix TRY/CATCH (the OTHER owned rollback shape
-    * beside the all-or-nothing q121 form): `BEGIN TRAN; <prefix>;
-    * SAVE TRAN sp; <suffix>; COMMIT` in the TRY, a CATCH LEADING with
-    * `ROLLBACK TRAN sp` and ENDING with COMMIT — the partial-undo
-    * idiom where the savepoint brackets a suffix of the TRY. Owned
-    * when: exactly ONE savepoint in the whole text; the catch-leading
-    * named rollback is the ONLY rollback and names that savepoint; the
-    * TRY's transaction brackets every TRY effect
-    * ([[tranBracketsTryBody]] — SAVE TRAN is not a bracket verb); and
-    * the CATCH's last raw statement is a COMMIT (T-SQL: after rolling
-    * back to the savepoint the outer transaction is still open — only
-    * an explicit COMMIT makes the kept prefix durable; a catch that
-    * leaves it open would roll back everything at connection close,
-    * which is a DIFFERENT meaning this replay will not guess).
-    * Returns the savepoint's index in the CLEANED TRY statement list
-    * (= how many executable statements precede it). Interleaved or
-    * repeated savepoints keep the decline. */
-  private def savepointSuffixOwned(text: String, msk: String,
-      m: scala.util.matching.Regex.Match): Option[Int] = {
-    val tryBody = text.substring(m.start(1), m.end(1))
-    val catchBody = text.substring(m.start(2), m.end(2))
-    def raw(body: String) = SqlText.splitBatches(body)
-      .flatMap(SqlText.splitStatements)
-    // positions are taken over the REGROUPED list — the same list
-    // [[statements]] hands the sequencer (r18: IF blocks in TRY bodies
-    // regroup; a SAVE TRAN fragment can only merge into a block when
-    // it sits textually INSIDE one, and then saveTranStmtRe no longer
-    // matches it → saves.size != 1 → decline, never a misaligned index)
-    val tsRaw = IfLadderSqlCompiler.regroup(raw(tryBody))
-    val csRaw = raw(catchBody)
-    val saves = tsRaw.zipWithIndex.flatMap { case (s, i) =>
-      saveTranStmtRe.findFirstMatchIn(s).map(mm =>
-        (mm.group(1).toLowerCase, i))
-    }
-    if (saves.size != 1) return None
-    if (csRaw.exists(s => saveTranStmtRe.findFirstMatchIn(s).isDefined))
-      return None
-    val (spName, spRawIdx) = saves.head
-    val leadName = csRaw.headOption.flatMap(s =>
-      namedRollbackStmtRe.findFirstMatchIn(s).map(_.group(1).toLowerCase))
-    if (!leadName.contains(spName)) return None
-    // the catch-leading named rollback must be the ONLY rollback
-    val rollbacks = (tsRaw ++ csRaw.tail).count(s =>
-      rollbackRe.findFirstIn(SqlLex.mask(s)).isDefined)
-    if (rollbacks != 0) return None
-    if (!tranBracketsTryBody(tryBody)) return None
-    if (!csRaw.lastOption.exists(s =>
-        commitStmtRe.findFirstMatchIn(s).isDefined)) return None
-    // index within the CLEANED list: executable statements before it
-    Some(tsRaw.take(spRawIdx)
-      .map(s => beginTranPrefixRe.replaceFirstIn(s, ""))
-      .count(s => txnNoopRe.findFirstMatchIn(s).isEmpty))
-  }
-
-  /** Is every ROLLBACK in the text the CATCH-leading bare statement of
-    * this TRY/CATCH match, with the TRY's transaction bracketing every
-    * TRY effect ([[tranBracketsTryBody]])? True enables the owned
-    * all-or-nothing form: a caught abort DISCARDS the TRY's staged
-    * effects before the rest of the CATCH runs. Any other rollback or
-    * BEGIN TRAN placement keeps the conditional-undo decline. */
-  private def rollbackOnlyCatchLeading(text: String, msk: String,
-      m: scala.util.matching.Regex.Match): Boolean = {
-    val inTry = rollbackRe.findFirstIn(
-      msk.substring(m.start(1), m.end(1))).isDefined
-    val catchStmts = SqlText.splitBatches(text.substring(m.start(2), m.end(2)))
-      .flatMap(SqlText.splitStatements)
-    val catchRollbacks = catchStmts.zipWithIndex.filter { case (s, _) =>
-      rollbackRe.findFirstIn(SqlLex.mask(s)).isDefined
-    }
-    !inTry && catchRollbacks.forall { case (s, i) =>
-      i == 0 && bareRollbackRe.findFirstMatchIn(s).isDefined
-    } && (catchRollbacks.isEmpty ||
-      tranBracketsTryBody(text.substring(m.start(1), m.end(1))))
-  }
 
   // ANCHORED per-statement twins of SqlPatternRewriter's order-blind
   // matchers (deleteTargetRe / truncateTargetRe / insertSelectRe): the
@@ -543,88 +405,225 @@ object ScriptedSqlExecutor {
         clears.flatten.exists(c => SqlPatternRewriter.sameTable(c, ins.get))
     }
 
-  /** Parse-only TRY/CATCH classification (ledger / dry run). */
-  private[graft] def tryCatchShape(sqlRaw: String): Boolean = {
-    val text = SqlText.stripComments(sqlRaw)
-    val msk = SqlLex.mask(text)
-    tryCatchRe.findFirstMatchIn(msk).exists(m =>
-      "(?is)begin\\s+try".r
-        .findFirstIn(msk.substring(m.start(1), m.end(1))).isEmpty &&
-        // a stray SAVE TRAN outside the owned savepoint form reaches
-        // the sequencer and declines there — classify identically
-        ((("(?i)\\bsave\\s+tran".r.findFirstIn(msk).isEmpty) &&
-          (rollbackRe.findFirstIn(msk).isEmpty ||
-            rollbackOnlyCatchLeading(text, msk, m))) ||
-          savepointSuffixOwned(text, msk, m).isDefined))
+  /** What the executor does with a task text: the one parse-only
+    * dispatch, read by the task function below and by the migration
+    * ledger ([[graft.parser.MigrationMapping]]), so the two cannot
+    * disagree about which tasks run. */
+  sealed trait Route
+  object Route {
+    /** Manual review, and why. */
+    final case class Decline(reason: String) extends Route
+    /** A whole-task TRY/CATCH: the executable statements of each body
+      * and what a caught abort undoes first. */
+    final case class TryCatch(tryStmts: List[String], catchStmts: List[String],
+        undo: Undo) extends Route
+    /** A WHILE loop that is neither a counter loop nor a rewriter's
+      * shape (a cursor loop the cursor compiler declines): the executor
+      * declines it; the ledger, which has no cursor node to read yet,
+      * classifies its text with the statement chain. */
+    final case class Unowned(reason: String) extends Route
+    /** A whole-text rewrite into the statements a script runs. */
+    sealed trait Rewritten extends Route { def stmts: List[String] }
+    /** [[CursorLoopSqlCompiler]]'s set-based FETCH loop. */
+    final case class Cursor(stmts: List[String]) extends Rewritten
+    /** [[BatchedDmlLoopSqlCompiler]]'s fixpoint of a batched purge. */
+    final case class Batched(stmts: List[String]) extends Rewritten
+    /** [[ProcInlineSqlCompiler]]'s inlined script-local procedures. */
+    final case class ProcCalls(stmts: List[String]) extends Rewritten
+    /** A counter WHILE, unrolled on the driver at run time. */
+    final case class CounterWhile(loop: WhileLoopSqlCompiler.Loop) extends Route
+    /** One plain statement for the compiler chain; `whole` when it is
+      * the task's entire (comment-stripped) text. */
+    final case class Single(stmt: String, whole: Boolean) extends Route
+    /** Clears then one INSERT…SELECT: [[SqlPatternRewriter]]'s
+      * overwrite, or the script when the rewriter declines. */
+    final case class Refresh(stmts: List[String]) extends Route
+    /** A sequenced script, and whether an explicit transaction bracket
+      * was among its statements; `features` names the surfaces it uses
+      * (read by the ledger only). */
+    final case class Script(leaves: List[SqlBlocks.Leaf], hadTxn: Boolean)
+        extends Route {
+      def stmts: List[String] = leaves.map(_.text)
+      lazy val features: List[String] = ScriptedSqlExecutor.features(leaves)
+    }
   }
 
-  /** A task text's executable statements — GO batches and `;`s split,
-    * IF…BEGIN…END blocks the splitter shredded regrouped into one
-    * statement (their internal `;`s are body separators), BEGIN TRAN/
-    * COMMIT/NOCOUNT dressing dropped — and whether an explicit
-    * transaction bracket was among them. */
-  private[graft] def statements(text: String): (List[String], Boolean) = {
-    val regrouped = IfLadderSqlCompiler.regroup(
-      SqlText.splitBatches(text).flatMap(SqlText.splitStatements))
-    val hadTxn = regrouped.exists(s =>
-      beginTranStmtRe.findFirstMatchIn(s).isDefined ||
-        beginTranPrefixRe.findFirstMatchIn(s).isDefined ||
-        commitStmtRe.findFirstMatchIn(s).isDefined)
-    (regrouped.map(s => beginTranPrefixRe.replaceFirstIn(s, ""))
-      .filterNot(s => txnNoopRe.findFirstMatchIn(s).isDefined), hadTxn)
+  /** What a TRY/CATCH's caught abort discards before its CATCH runs. */
+  sealed trait Undo
+  /** Nothing: pre-failure effects stay staged (no XACT_ABORT). */
+  case object NoUndo extends Undo
+  /** Every TRY effect: a CATCH leading with a bare ROLLBACK. */
+  case object UndoAll extends Undo
+  /** The effects after the TRY's `at`-th executable statement: a CATCH
+    * leading with `ROLLBACK TRAN sp` for the TRY's one `SAVE TRAN sp`. */
+  final case class UndoTo(at: Int) extends Undo
+
+  import SqlBlocks.{BeginTran, Commit, If, Leaf, Node, Rollback, SaveTran, Stmt, Txn}
+
+  /** A node list with every plain `BEGIN … END` block inlined (T-SQL
+    * runs a block's statements in order; it opens no scope). */
+  private def flatten(nodes: List[Node]): List[Node] = nodes.flatMap {
+    case SqlBlocks.Block(b) => flatten(b)
+    case n => List(n)
   }
 
-  /** Parse-only classification twin of the script dispatcher for the
-    * migration-mapping ledger / dry run: Some(description) when the
-    * text is a multi-statement script using the `#temp` and/or
-    * `@@ROWCOUNT` surfaces this executor models (and none of the
-    * disqualifiers — ROLLBACK, `##global`, other `@@vars`). Shape-level
-    * like every other `shapeMatches` twin: an individual statement may
-    * still fail to compile at run time. */
-  private[graft] def scriptFeatures(sqlRaw: String): Option[String] = {
-    val text = SqlText.stripComments(sqlRaw)
-    if (rollbackRe.findFirstIn(SqlLex.mask(text)).isDefined)
-      return None
-    if (outOfTempScope(text)) return None
-    val (stmts, hadTxn) = statements(text)
-    if (stmts.length < 2) return None
-    def m(s: String) = SqlLex.mask(s)
-    if (stmts.exists(s => otherSysVarRe.findFirstIn(m(s)).isDefined))
-      return None
+  /** Does the TRY's transaction bracket EVERY TRY effect? The
+    * all-or-nothing replay is sound ONLY then: in T-SQL a ROLLBACK
+    * with no open transaction raises error 3903 (effects persist and
+    * the rest of the CATCH is skipped), and statements before a
+    * mid-TRY BEGIN TRAN are already committed — both diverge silently
+    * from a whole-TRY discard. The TRY must LEAD with BEGIN TRAN (bare
+    * or fused onto its first statement), open no second transaction,
+    * and COMMIT at most once and only as its last statement. */
+  private def tranBrackets(tb: List[Node]): Boolean =
+    tb.headOption.contains(BeginTran) && !tb.tail.contains(BeginTran) && {
+      val commits = tb.indices.filter(tb(_) == Commit)
+      commits.isEmpty || commits == Seq(tb.size - 1)
+    }
+
+  /** The owned rollback forms of a TRY/CATCH (`rollbacks` counts every
+    * ROLLBACK word of the task):
+    *  - none at all, and no SAVE TRAN: nothing undone;
+    *  - the all-or-nothing idiom: the CATCH's first statement is a
+    *    bare ROLLBACK, the only one, and the TRY's transaction brackets
+    *    every TRY effect ([[tranBrackets]]);
+    *  - the savepoint suffix: `BEGIN TRAN; <prefix>; SAVE TRAN sp;
+    *    <suffix>; COMMIT` in the TRY (its only savepoint), a CATCH
+    *    leading with `ROLLBACK TRAN sp` (the only rollback) and ending
+    *    with COMMIT (T-SQL: after rolling back to the savepoint the
+    *    outer transaction is still open — only an explicit COMMIT makes
+    *    the kept prefix durable; a catch that leaves it open rolls back
+    *    everything at connection close, a meaning this replay will not
+    *    guess). The savepoint's position is the number of executable
+    *    TRY statements before it.
+    * Any other placement is conditional undo: None. */
+  private def undoOf(tb: List[Node], cb: List[Node], rollbacks: Int): Option[Undo] = {
+    val saves = tb.indices.collect { case k if tb(k).isInstanceOf[SaveTran] => k }
+    if (cb.exists(_.isInstanceOf[SaveTran])) None
+    else (cb.headOption, saves) match {
+      case (_, Seq()) if rollbacks == 0 => Some(NoUndo)
+      case (Some(Rollback(None)), Seq()) if rollbacks == 1 && tranBrackets(tb) =>
+        Some(UndoAll)
+      case (Some(Rollback(Some(nm))), Seq(k)) if rollbacks == 1 &&
+          tb(k) == SaveTran(nm) && tranBrackets(tb) && cb.lastOption.contains(Commit) =>
+        Some(UndoTo(tb.take(k).count(_.isInstanceOf[Leaf])))
+      case _ => None
+    }
+  }
+
+  /** The surfaces a sequenced script uses, for the ledger's note. */
+  private def features(leaves: List[Leaf]): List[String] = {
+    val stmts = leaves.map(_.text)
+    val msks = stmts.map(SqlLex.mask)
     val temp = stmts.exists(hasTempRef)
-    val rc = stmts.exists(s => rowcountRe.findFirstIn(m(s)).isDefined)
-    val sv = stmts.exists(s =>
-        declareStmtRe.findFirstMatchIn(m(s)).isDefined) &&
-      stmts.exists(s => selectAssignRe.findFirstMatchIn(m(s)).isDefined ||
-        setAssignRe.findFirstMatchIn(m(s)).isDefined)
+    val rc = msks.exists(rowcountRe.findFirstIn(_).isDefined)
+    val sv = msks.exists(declareStmtRe.findFirstMatchIn(_).isDefined) &&
+      msks.exists(m => selectAssignRe.findFirstMatchIn(m).isDefined ||
+        setAssignRe.findFirstMatchIn(m).isDefined)
     val ddl = stmts.exists(s => AlterTableSqlCompiler.shapeMatches(s) ||
       NoopDdlSqlCompiler.shapeMatches(s))
-    val tv = stmts.exists(s =>
-      tableVarDeclRe.findFirstMatchIn(m(s)).isDefined)
-    val spOut = stmts.exists(s =>
-      ExecLiteralSqlCompiler.ownsOutputShape(s))
-    // IF ladders — the RETURN early-exit stays manual review under an
-    // explicit transaction bracket (mirror the executor's gate)
-    val ladder = stmts.exists(s =>
-      IfLadderSqlCompiler.parse(s).exists(l => !(hadTxn && l.hasReturn)))
-    if (!temp && !rc && !sv && !ddl && !tv && !spOut && !ladder)
-      None
-    else Some(List(
-      if (temp) Some("#temp scope (script-lifetime overlay tables)") else None,
-      if (tv) Some("table variables (reduced to the temp overlay)")
-      else None,
-      if (rc) Some("@@ROWCOUNT substitution") else None,
-      if (sv) Some("script-scoped scalar @vars (typed-literal binding)")
-      else None,
-      if (ddl) Some("migration DDL (ALTER ADD/DROP COLUMN execute)")
-      else None,
-      if (spOut) Some("sp_executesql OUTPUT (scalar copy-out write-back)")
-      else None,
-      if (ladder) Some("IF ladders (BEGIN…END branches / ELSE IF " +
-        "cascade / conditional assignment / RETURN early-exit / " +
-        "RAISERROR guards)")
-      else None)
-      .flatten.mkString(" + "))
+    val tv = msks.exists(tableVarDeclRe.findFirstMatchIn(_).isDefined)
+    val spOut = stmts.exists(ExecLiteralSqlCompiler.ownsOutputShape)
+    val ladder = leaves.exists(_.isInstanceOf[If])
+    List(
+      temp -> "#temp scope (script-lifetime overlay tables)",
+      tv -> "table variables (reduced to the temp overlay)",
+      rc -> "@@ROWCOUNT substitution",
+      sv -> "script-scoped scalar @vars (typed-literal binding)",
+      ddl -> "migration DDL (ALTER ADD/DROP COLUMN execute)",
+      spOut -> "sp_executesql OUTPUT (scalar copy-out write-back)",
+      ladder -> ("IF ladders (BEGIN…END branches / ELSE IF cascade / " +
+        "conditional assignment / RETURN early-exit / RAISERROR guards)"))
+      .collect { case (true, f) => f }
+  }
+
+  private val scalarTokenRe = "(?<!@)@\\w+".r
+
+  /** Parse the task text once and say what the executor does with it.
+    * Shape-level: a statement may still fail to compile at run time
+    * (and a WHILE may unroll past its bound), but every decline the
+    * executor makes before running anything is a [[Route.Decline]]. */
+  def route(sqlRaw: String): Route = {
+    import Route._
+    val text = SqlText.stripComments(sqlRaw)
+    val msk = SqlLex.mask(text)
+    val tree = SqlBlocks.parse(text).map(_.flatMap(_.body))
+    val top = tree.map(flatten).getOrElse(Nil)
+    val onePlain = top.filterNot(_.isInstanceOf[Txn]) match {
+      case List(_: Stmt) => true
+      case _ => false
+    }
+    val rollbacks = rollbackRe.findAllIn(msk).size
+    def leavesOf(ns: List[Node]) = ns.collect { case l: Leaf => l }
+    if (outOfTempScope(msk, onePlain))
+      Decline("#temp state crosses the task boundary (a temp the task " +
+        "does not create, or one plain statement naming a temp)")
+    else tree match {
+      case Right(List(SqlBlocks.TryCatch(t, c))) =>
+        val (tb, cb) = (flatten(t), flatten(c))
+        (tb ++ cb).find(n => !n.isInstanceOf[Leaf] && !n.isInstanceOf[Txn]) match {
+          case Some(_) => Decline("nested control flow inside TRY/CATCH")
+          case None =>
+            val (ts, cs) = (leavesOf(tb), leavesOf(cb))
+            if ((ts ++ cs).exists { case If(l, _) => l.hasReturn; case _ => false })
+              Decline("RETURN inside TRY/CATCH: the batch exit is not this " +
+                "replay's to arbitrate")
+            else undoOf(tb, cb, rollbacks) match {
+              case Some(u) => TryCatch(ts.map(_.text), cs.map(_.text), u)
+              case None => Decline("ROLLBACK / SAVE TRAN outside the owned " +
+                "all-or-nothing and savepoint-suffix forms")
+            }
+        }
+      case _ if rollbacks > 0 =>
+        Decline("ROLLBACK outside TRY/CATCH: conditional undo")
+      case Right(ns) if SqlBlocks.walk(ns).exists(n =>
+          n.isInstanceOf[SqlBlocks.TryCatch] || n.isInstanceOf[SaveTran]) =>
+        Decline("TRY/CATCH or SAVE TRAN that is not the whole task")
+      case _ =>
+        CursorLoopSqlCompiler.rewriteToScript(text).map(Cursor(_))
+          .orElse(BatchedDmlLoopSqlCompiler.rewriteToStatement(text)
+            .map(s => Batched(List(s))))
+          .orElse(ProcInlineSqlCompiler.rewriteToScript(text).map(ProcCalls(_)))
+          .getOrElse(tree match {
+            case Left(why) => Decline(why)
+            case Right(ns) => WhileLoopSqlCompiler.loop(ns) match {
+              case Some(l) => CounterWhile(l)
+              case None if top.exists(_.isInstanceOf[SqlBlocks.While]) =>
+                Unowned("WHILE loop that is not a counter loop")
+              case None => plain(text, top)
+            }
+          })
+    }
+  }
+
+  /** A task of statements and IFs (transaction dressing dropped). */
+  private def plain(text: String, top: List[Node]): Route = {
+    import Route._
+    val hadTxn = top.exists(n => n == BeginTran || n == Commit)
+    val leaves = top.collect { case l: Leaf => l }
+    val ladders = leaves.collect { case If(l, _) => l }
+    def msk(s: String) = SqlLex.mask(s)
+    if (leaves.exists(l => otherSysVarRe.findFirstIn(msk(l.text)).isDefined))
+      Decline("@@ system variable this replay cannot produce")
+    else if (hadTxn && ladders.exists(_.hasReturn))
+      Decline("RETURN under an explicit transaction bracket")
+    else leaves match {
+      case List(Stmt(s)) if runsIf(s).isEmpty =>
+        // a lone @@ read has no predecessor to count
+        if (msk(s).contains("@@")) Decline("@@ROWCOUNT with no predecessor")
+        else Single(s, s == text)
+      case List(If(l, s)) if scalarTokenRe.findFirstIn(msk(s)).isDefined ||
+          l.legs.exists {
+            case (IfLadderSqlCompiler.ExistsPred(_, p), _) => msk(p).contains("@@")
+            case (IfLadderSqlCompiler.ScalarPred(p), _) => msk(p).contains("@@")
+          } =>
+        Decline("a lone IF reading @variables no DECLARE binds, or a " +
+          "predicate @@ROWCOUNT with no predecessor")
+      case _ if !leaves.exists(l => hasTempRef(l.text)) &&
+          isRefreshShape(leaves.map(_.text)) =>
+        Refresh(leaves.map(_.text))
+      case _ => Script(leaves, hadTxn)
+    }
   }
 
   /** Build a task executor over the caller's written-state: `written`
@@ -1327,125 +1326,37 @@ object ScriptedSqlExecutor {
     }
 
     bound => {
-      val text = SqlText.stripComments(bound.sqlStatement)
-      val msk = SqlLex.mask(text)
-      val tryM = tryCatchRe.findFirstMatchIn(msk)
-      // temp state never crosses task boundaries
-      if (outOfTempScope(text)) None
-      // conditional undo is control flow — manual review, EXCEPT the
-      // two owned shapes: a TRY/CATCH whose CATCH leads with a bare
-      // ROLLBACK (the all-or-nothing + log idiom — a caught abort
-      // discards the TRY's staged effects before the rest of the
-      // CATCH runs), and the savepoint-suffix form (ROLLBACK TRAN sp
-      // discarding only the effects after SAVE TRAN sp)
-      else if (rollbackRe.findFirstIn(msk).isDefined
-          && !tryM.exists(m => rollbackOnlyCatchLeading(text, msk, m) ||
-            savepointSuffixOwned(text, msk, m).isDefined))
-        None
-      else if (tryM.isDefined) {
-        val m = tryM.get
-        val tryBody = text.substring(m.start(1), m.end(1))
-        val catchBody = text.substring(m.start(2), m.end(2))
-        // nested TRY blocks would mis-split on the lazy matcher — decline
-        if ("(?is)begin\\s+try".r
-            .findFirstIn(msk.substring(m.start(1), m.end(1))).isDefined) None
-        else {
-          // IF…BEGIN…END blocks inside TRY/CATCH bodies regroup like
-          // the generic path's (r18): the ladder handler owns them in
-          // the sequencer. RETURN legs still decline here — script()
-          // is called without allowEarlyExit, because a batch exit
-          // from inside a TRY is not this replay's to arbitrate.
-          def stmtsOf(body: String) = statements(body)._1
-          val savepoint = savepointSuffixOwned(text, msk, m)
-          val ts0 = stmtsOf(tryBody)
-          // in the owned savepoint form the SAVE TRAN marker leaves
-          // the executable list (its position travels as savepointAt);
-          // in any other text a surviving SAVE TRAN reaches compileOne
-          // and declines the script
-          val ts =
-            if (savepoint.isDefined)
-              ts0.filterNot(s => saveTranStmtRe.findFirstMatchIn(s).isDefined)
-            else ts0
-          val cs = stmtsOf(catchBody)
-          val rollsBack = savepoint.isEmpty && cs.headOption
-            .exists(s => bareRollbackRe.findFirstMatchIn(s).isDefined)
-          val csRun =
-            if (rollsBack) cs.tail
-            else if (savepoint.isDefined)
-              // drop the leading ROLLBACK TRAN sp (the restore is the
-              // executor's savepoint machinery, not a statement)
-              cs.dropWhile(s =>
-                namedRollbackStmtRe.findFirstMatchIn(s).isDefined)
-            else cs
-          // the all-or-nothing replay is sound ONLY when the TRY's
-          // transaction brackets every TRY effect (see
-          // tranBracketsTryBody) — other placements decline to manual
-          // review like any other rollback
-          if (rollsBack && !tranBracketsTryBody(tryBody)) None
-          else if (ts.isEmpty) Some(SqlOutcome(None, None))
-          else script(bound, ts, Some(csRun),
-            catchRollsBack = rollsBack, savepointAt = savepoint)
-        }
-      }
-      // the canonical one-DML CURSOR FETCH loop is a whole-text shape
-      // too (its WHILE block would shred under statement splitting):
-      // CursorLoopSqlCompiler emits the equivalent two-statement #temp
-      // script, which runs through the same overlay as any hand-written
-      // batch; off-shape cursors fall through to the decline below.
-      // The batched-DML purge loop (WHILE 1=1 … DELETE/UPDATE TOP(n) …
-      // IF @@ROWCOUNT = 0 BREAK) likewise compiles to its set-based
-      // fixpoint. Each whole-text parse runs ONCE.
-      else CursorLoopSqlCompiler.rewriteToScript(text)
-        .orElse(BatchedDmlLoopSqlCompiler.rewriteToStatement(text)
-          .map(List(_)))
-        // a script carrying its OWN helper procedure (CREATE PROC
-        // batch + EXEC calls + DROP) inlines each call with literal
-        // args bound — the one EXEC class whose body IS visible
-        .orElse(ProcInlineSqlCompiler.rewriteToScript(text)) match {
-      case Some(Nil) => Some(SqlOutcome(None, None)) // create+drop only
-      case Some(ss) => script(bound, ss)
-      case None => WhileLoopSqlCompiler.unroll(spark, text) match {
-        // a counter WHILE loop is a WHOLE-text shape too: the driver
-        // evaluates its control flow, the emitted body statements run
-        // through the script overlay like any hand-written batch (so
-        // #temp / @@ROWCOUNT compose); predicate false at entry =
-        // vacuous success, T-SQL skips the body
-        case Some(Nil) => Some(SqlOutcome(None, None))
-        case Some(unrolled) => script(bound, unrolled)
-        case None =>
-        // GO batch separators split exactly like ';' — a batch boundary
-        // is always a statement boundary; IF…BEGIN…END blocks regroup
-        // (q149–q151). An explicit transaction bracket anywhere bars
-        // the RETURN early-exit leg: whether staged state commits at
-        // the exit point is the bracket's call, not this replay's
-        // (q151 keeps that decline) — NOCOUNT dressing does not count
-        val (stmts, hadTxn) = statements(text)
-        // a statement text that DIVERGED from the whole stripped text —
-        // by the transaction strip OR by GO-separator splitting — must
-        // be what the chain compiles (a trailing lone `GO` would fail
-        // the compilers' anchored shapes); only a truly untouched task
+      def run(ss: List[String], allowEarlyExit: Boolean = false) =
+        if (ss.isEmpty) Some(SqlOutcome(None, None)) // vacuous success
+        else script(bound, ss, allowEarlyExit = allowEarlyExit)
+      route(bound.sqlStatement) match {
+        case Route.Decline(_) | Route.Unowned(_) => None
+        case Route.TryCatch(Nil, _, _) => Some(SqlOutcome(None, None))
+        case Route.TryCatch(ts, cs, undo) =>
+          script(bound, ts, Some(cs), catchRollsBack = undo == UndoAll,
+            savepointAt = undo match {
+              case UndoTo(k) => Some(k)
+              case _ => None
+            })
+        case r: Route.Rewritten => run(r.stmts)
+        // the driver evaluates the loop's control flow; the emitted body
+        // statements run through the script overlay like any hand-written
+        // batch (so #temp / @@ROWCOUNT compose); predicate false at entry
+        // = vacuous success, T-SQL skips the body
+        case Route.CounterWhile(l) =>
+          WhileLoopSqlCompiler.unroll(spark, l).flatMap(run(_))
+        // a statement text that DIVERGED from the whole stripped text
+        // must be what the chain compiles; only a truly untouched task
         // keeps its ORIGINAL text (compilers strip comments themselves)
-        def single(s: String) =
-          chain(if (s.trim == text.trim) bound
-            else bound.copy(sqlStatement = s), resolveFrame)
-        if (stmts.isEmpty)
-          // a script of only BEGIN TRAN/COMMIT/NOCOUNT: vacuous success
-          Some(SqlOutcome(None, None))
-        // one plain statement runs through the chain; a lone @@ read has
-        // no predecessor and every other @@var is unproducible — manual
-        // review, never a guess. An IF (bare or EXEC-wrapped) runs
-        // through the script overlay instead, where the ladder lives.
-        else if (stmts.length == 1 && runsIf(stmts.head).isEmpty) {
-          if (SqlLex.mask(stmts.head).contains("@@")) None
-          else single(stmts.head)
-        }
-        // a #temp-bearing refresh shape must still run SEQUENTIALLY
-        // (the INSERT…SELECT reads a temp an earlier statement creates)
-        else if (!stmts.exists(hasTempRef) && isRefreshShape(stmts))
-          single(stmts.mkString(";\n"))
-            .orElse(script(bound, stmts, allowEarlyExit = !hadTxn))
-        else script(bound, stmts, allowEarlyExit = !hadTxn)
-      }
+        case Route.Single(s, whole) =>
+          chain(if (whole) bound else bound.copy(sqlStatement = s), resolveFrame)
+        case Route.Refresh(ss) =>
+          chain(bound.copy(sqlStatement = ss.mkString(";\n")), resolveFrame)
+            .orElse(script(bound, ss))
+        // an explicit transaction bracket anywhere bars the RETURN
+        // early-exit leg: whether staged state commits at the exit point
+        // is the bracket's call, not this replay's (q151)
+        case s: Route.Script => run(s.stmts, allowEarlyExit = !s.hadTxn)
       }
     }
   }

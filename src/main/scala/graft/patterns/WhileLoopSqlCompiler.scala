@@ -40,8 +40,6 @@ object WhileLoopSqlCompiler {
     * disguise, not a package-control loop — manual review owns it. */
   private[patterns] val MaxIterations = 1000
 
-  private val whileRe =
-    "(?is)^(.*?)\\bwhile\\s+(.+?)\\s+begin\\s+(.+?)\\s+end\\s*;?\\s*$".r
   private val declareRe =
     "(?is)^declare\\s+(.+)$".r
   private val declareItemRe =
@@ -54,44 +52,36 @@ object WhileLoopSqlCompiler {
   // a FROM/SELECT/EXISTS/JOIN or @@var in control expressions makes the
   // loop data-dependent — not unrollable
   private val dataDepRe = "(?i)\\b(select|from|exists|join)\\b|@@".r
+  private val nestedRe = "(?i)\\b(begin|while)\\b".r
 
-  private final case class Parsed(
-      preamble: List[String], pred: String, body: List[String])
+  /** A counter loop as its block tree spells it: the DECLARE/SET
+    * preamble, the predicate, and the body statements (an IF as its
+    * text), shape-checked but not evaluated. */
+  final case class Loop(preamble: List[String], pred: String, body: List[String])
 
-  /** Split the whole text into preamble / predicate / body on the
-    * masked twin (BEGIN/END/WHILE inside string literals are data);
-    * slices come from the original text. Nested BEGIN declines. */
-  private def parse(text: String): Option[Parsed] = {
-    val msk = SqlLex.mask(text)
-    whileRe.findFirstMatchIn(msk).flatMap { m =>
-      def g(i: Int) = text.substring(m.start(i), m.end(i))
-      val preamble = SqlText.splitStatements(g(1))
-      // body statements: IF…BEGIN…END blocks the splitter shredded
-      // regroup like everywhere else (r18), then validate PER
-      // STATEMENT — an IF-headed statement must be a loop-body-safe
-      // ladder (no RETURN, no conditional assignment the driver's
-      // variable model could not see); any other statement keeps the
-      // original no-BEGIN/no-WHILE nested-control decline
-      val body = graft.patterns.IfLadderSqlCompiler.regroup(
-        SqlText.splitStatements(g(3)))
-      def bodyStmtOk(s: String): Boolean =
-        if (IfLadderSqlCompiler.isIf(s)) IfLadderSqlCompiler.loopBodySafe(s)
-        else "(?i)\\b(begin|while)\\b".r
-          .findFirstIn(SqlLex.mask(s)).isEmpty
-      if (body.isEmpty || !body.forall(bodyStmtOk)) None
-      else Some(Parsed(preamble, g(2), body))
+  /** The counter loop of a task's top-level block-tree nodes —
+    * statements, then one WHILE last — or None. An IF in the body must
+    * be loop-body-safe ([[IfLadderSqlCompiler.loopBodySafe]]); any other
+    * body statement holds no nested BEGIN or WHILE. Parse-only: the
+    * executor [[unroll]]s it and the migration ledger reads it. */
+  private[patterns] def loop(nodes: List[SqlBlocks.Node]): Option[Loop] =
+    nodes.lastOption match {
+      case Some(SqlBlocks.While(pred, body)) =>
+        val preamble = nodes.init.map {
+          case SqlBlocks.Stmt(s) => s
+          case _ => return None
+        }
+        val stmts = body.map {
+          case SqlBlocks.Stmt(s) if nestedRe.findFirstIn(SqlLex.mask(s)).isEmpty => s
+          case SqlBlocks.If(l, t) if IfLadderSqlCompiler.loopBodySafe(l) => t
+          case _ => return None
+        }
+        val p = Loop(preamble, pred, stmts)
+        val declared = declaredOf(preamble)
+        if (stmts.nonEmpty && declared.nonEmpty && controlOk(p, declared)) Some(p)
+        else None
+      case _ => None
     }
-  }
-
-  /** Parse-only classification twin of [[unroll]] — shape checks only,
-    * no evaluation, no jobs (the migration-mapping ledger / dry run). */
-  private[graft] def shapeMatches(sqlRaw: String): Boolean = {
-    val text = SqlText.stripComments(sqlRaw)
-    parse(text).exists { p =>
-      val declared = declaredOf(p.preamble)
-      declared.nonEmpty && controlOk(p, declared)
-    }
-  }
 
   private def declaredOf(preamble: List[String]): Set[String] =
     preamble.flatMap { s =>
@@ -105,7 +95,7 @@ object WhileLoopSqlCompiler {
 
   /** Every preamble statement is DECLARE/SET, control expressions are
     * FROM-less, and every @var anywhere in control is declared. */
-  private def controlOk(p: Parsed, declared: Set[String]): Boolean = {
+  private def controlOk(p: Loop, declared: Set[String]): Boolean = {
     def msk(s: String) = SqlLex.mask(s)
     val preOk = p.preamble.forall { s =>
       declareRe.findFirstIn(msk(s)).isDefined ||
@@ -138,14 +128,10 @@ object WhileLoopSqlCompiler {
 
   /** Driver-evaluate the loop and return the flat statement list its
     * body expands to (possibly empty — predicate false at entry).
-    * None = not this shape / not unrollable → the caller's next
-    * compiler (ultimately manual review) owns the text. */
-  def unroll(spark: SparkSession, sqlRaw: String): Option[List[String]] = {
-    val text = SqlText.stripComments(sqlRaw)
-    val p = parse(text).getOrElse(return None)
+    * None = not unrollable (past [[MaxIterations]], or a value with no
+    * literal form) → manual review owns the text. */
+  def unroll(spark: SparkSession, p: Loop): Option[List[String]] = {
     val declared = declaredOf(p.preamble)
-    if (declared.isEmpty || !controlOk(p, declared)) return None
-
     val vals = scala.collection.mutable.Map.empty[String, Any]
     declared.foreach(v => vals(v) = null)
     // substitute current values as typed literals, literal-masked;

@@ -5,9 +5,8 @@ import graft.patterns.IfLadderSqlCompiler
 
 /** q149–q151: dispatcher-level IF ladders — multi-statement BEGIN…END
   * branches, conditional assignment legs, ELSE IF cascades, and the
-  * top-level early-exit RETURN leg — plus the regrouping pass that
-  * re-joins the fragments the `;` splitter shreds a block into, and
-  * the staged-state visibility invariant of the IF-EXISTS probe. */
+  * top-level early-exit RETURN leg — plus the block tree that keeps
+  * an IF block whole across its `;`s, and the staged-state visibility invariant of the IF-EXISTS probe. */
 class IfLadderSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.get
 
@@ -25,31 +24,34 @@ class IfLadderSpec extends AnyFunSuite {
   private def dropViews(names: String*): Unit =
     names.foreach(n => spark.catalog.dropTempView(n): Unit)
 
-  // ---- regroup: the splitter-shred repair ----------------------------
+  // ---- the block tree: IF blocks stay whole ------------------------
 
-  test("regroup re-joins shredded IF…BEGIN…END blocks and ELSE fragments") {
-    val shredded = SqlText_split(
+  /** The sequencer's statements of a text: the block tree's leaves. */
+  private def leaves(s: String): List[String] =
+    graft.patterns.SqlBlocks.parse(s).toOption.get.flatMap(_.body)
+      .collect { case l: graft.patterns.SqlBlocks.Leaf => l.text }
+
+  test("the block tree keeps IF…BEGIN…END blocks and ELSE legs whole") {
+    val g = leaves(
       "DECLARE @n INT; IF @n > 0 BEGIN TRUNCATE TABLE t; INSERT INTO t " +
         "SELECT 1 AS a; END ELSE BEGIN UPDATE t SET a = 0; DELETE FROM " +
         "u WHERE a = 1; END; UPDATE z SET b = 2")
-    val g = IfLadderSqlCompiler.regroup(shredded)
     assert(g.length === 3)
     assert(g(1).matches("(?is)^if @n > 0 begin.*end else begin.*end$"))
     // IF <stmt>; ELSE <stmt> — the `;` before ELSE terminates the THEN
-    val g2 = IfLadderSqlCompiler.regroup(SqlText_split(
-      "IF @n > 0 UPDATE t SET a = 1; ELSE UPDATE t SET a = 0; INSERT INTO l SELECT 1"))
+    val g2 = leaves(
+      "IF @n > 0 UPDATE t SET a = 1; ELSE UPDATE t SET a = 0; INSERT INTO l SELECT 1")
     assert(g2.length === 2)
     assert(g2.head.matches("(?is)^if .* else update.*"))
     // a CASE…END inside the block body pairs away — END matching holds
-    val g3 = IfLadderSqlCompiler.regroup(SqlText_split(
+    val g3 = leaves(
       "IF @n > 0 BEGIN UPDATE t SET a = CASE WHEN b > 0 THEN 1 ELSE 2 END; " +
-        "DELETE FROM t WHERE a = 2; END"))
+        "DELETE FROM t WHERE a = 2; END")
     assert(g3.length === 1)
-    // non-IF scripts regroup to themselves — including literals that
+    // non-IF scripts are their `;` statements — including literals that
     // contain the keywords (masked scan)
-    val plain = SqlText_split(
-      "INSERT INTO t VALUES ('begin'); UPDATE t SET a = 'if x begin'; DELETE FROM t")
-    assert(IfLadderSqlCompiler.regroup(plain) === plain)
+    val plain = "INSERT INTO t VALUES ('begin'); UPDATE t SET a = 'if x begin'; DELETE FROM t"
+    assert(leaves(plain) === SqlText_split(plain))
   }
   private def SqlText_split(s: String) =
     graft.patterns.SqlText.splitStatements(s)
@@ -69,8 +71,8 @@ class IfLadderSpec extends AnyFunSuite {
       "TRUNCATE TABLE t", "INSERT INTO t SELECT 1 AS a")))
     assert(l1.otherwise === Some(IfLadderSqlCompiler.Stmts(
       List("SET @s = 'none'"))))
-    // a single-statement block whose body carries a `;` (`BEGIN x; END`
-    // — the regrouped spelling) is the same one-statement branch
+    // a single-statement block whose body carries a `;` (`BEGIN x; END`)
+    // is the same one-statement branch
     assert(IfLadderSqlCompiler.parse(
       "IF @n > 0 BEGIN DELETE FROM t WHERE v < 1; END").get.legs.head._2 ===
       IfLadderSqlCompiler.Stmts(List("DELETE FROM t WHERE v < 1")))
@@ -358,8 +360,8 @@ class IfLadderSpec extends AnyFunSuite {
       .getOrElse(fail("WHILE-body IF did not compile"))
     assert(w1("wt").orderBy("id").as[(Long, Double)].collect().toList
       === List((1L, 0.0), (2L, 2.0), (3L, 3.0)))
-    // a multi-statement IF block inside a TRY body: stmtsOf regroups
-    // the shredded block exactly like the generic path (r18)
+    // a multi-statement IF block inside a TRY body: the block tree
+    // keeps it whole exactly like the generic path
     val w2 = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame](
       "tt" -> Seq((1L, 5.0), (2L, 50.0)).toDF("id", "v"),
       "tl" -> Seq.empty[String].toDF("s"))
@@ -374,8 +376,8 @@ class IfLadderSpec extends AnyFunSuite {
     assert(w2("tt").orderBy("id").as[(Long, Double)].collect().toList
       === List((1L, 5.0), (2L, 0.0)))
     assert(w2("tl").as[String].collect().toList === List("capped"))
-    // an IF BLOCK inside a WHILE body (r18): the unroller regroups the
-    // shredded block, validates it loop-body-safe, and emits it per
+    // an IF BLOCK inside a WHILE body: the loop's block tree holds the
+    // whole IF, validated loop-body-safe, and the unroller emits it per
     // iteration with the counter bound — the ladder executes each copy
     val w2b = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame](
       "wb" -> Seq((1L, 0.0, 0L), (2L, 0.0, 0L), (3L, 0.0, 0L))
@@ -668,32 +670,40 @@ class IfLadderSpec extends AnyFunSuite {
 
   // ---- ledger twins ----------------------------------------------------
 
-  test("ledger twins: ownsWholeText / scriptFeatures") {
-    // a one-statement IF with no @tokens owns whole-text, single-leg
-    // plain branches included; an unbindable @predicate does not
-    assert(IfLadderSqlCompiler.ownsWholeText(
-      "IF EXISTS (SELECT 1 FROM u) DELETE FROM t"))
-    assert(!IfLadderSqlCompiler.ownsWholeText(
-      "IF @n > 0 UPDATE t SET a = 1"))
-    assert(IfLadderSqlCompiler.ownsWholeText(
-      "IF (SELECT COUNT(*) FROM t) > 0 BEGIN TRUNCATE TABLE u; " +
-        "INSERT INTO u SELECT * FROM t; END"))
-    val feats = graft.patterns.ScriptedSqlExecutor.scriptFeatures(
-      "DECLARE @n INT = 1; IF @n > 0 BEGIN TRUNCATE TABLE t; " +
-        "INSERT INTO t SELECT 1 AS a; END")
-    assert(feats.exists(_.contains("IF ladders")))
+  test("route: lone IFs, ladder scripts and #temp scope as the ledger reads them") {
+    import graft.patterns.ScriptedSqlExecutor.{Route, route}
+    def status(sql: String) = graft.parser.MigrationMapping.mapTask(
+      graft.ir.Ir.ExecuteSqlTask("g", None, "conn", sql), Nil).status
+    def lone(sql: String) = route(sql) match {
+      case Route.Script(List(_: graft.patterns.SqlBlocks.If), _) => true
+      case _ => false
+    }
+    def feats(sql: String) = route(sql) match {
+      case s: Route.Script => Some(s.features.mkString(" + ")).filter(_.nonEmpty)
+      case _ => None
+    }
+    // a one-statement IF with no @tokens runs whole, single-leg plain
+    // branches included; an unbindable @predicate declines
+    assert(lone("IF EXISTS (SELECT 1 FROM u) DELETE FROM t"))
+    assert(route("IF @n > 0 UPDATE t SET a = 1").isInstanceOf[Route.Decline])
+    assert(lone("IF (SELECT COUNT(*) FROM t) > 0 BEGIN TRUNCATE TABLE u; " +
+      "INSERT INTO u SELECT * FROM t; END"))
+    assert(feats("DECLARE @n INT = 1; IF @n > 0 BEGIN TRUNCATE TABLE t; " +
+      "INSERT INTO t SELECT 1 AS a; END").exists(_.contains("IF ladders")))
     // RETURN under an explicit transaction bracket stays manual review
-    assert(graft.patterns.ScriptedSqlExecutor.scriptFeatures(
-      "BEGIN TRAN; DECLARE @n INT = 0; IF @n = 0 RETURN; " +
-        "INSERT INTO t SELECT 1 AS a; COMMIT").isEmpty)
+    val txnReturn = "BEGIN TRAN; DECLARE @n INT = 0; IF @n = 0 RETURN; " +
+      "INSERT INTO t SELECT 1 AS a; COMMIT"
+    assert(route(txnReturn).isInstanceOf[Route.Decline])
+    assert(status(txnReturn) === "manual_review")
     // a #temp the task does not create is another task's: the executor
-    // declines, so neither twin claims the task
-    assert(!IfLadderSqlCompiler.ownsWholeText(
-      "IF EXISTS (SELECT 1 FROM u) INSERT INTO t SELECT * FROM #stage"))
-    assert(graft.patterns.ScriptedSqlExecutor.scriptFeatures(
-      "INSERT INTO t SELECT * FROM #stage; DELETE FROM u").isEmpty)
-    assert(graft.patterns.ScriptedSqlExecutor.scriptFeatures(
-      "SELECT * INTO #stage FROM u; INSERT INTO t SELECT * FROM #stage")
+    // declines, and so does the ledger
+    for (sql <- Seq(
+        "IF EXISTS (SELECT 1 FROM u) INSERT INTO t SELECT * FROM #stage",
+        "INSERT INTO t SELECT * FROM #stage; DELETE FROM u")) {
+      assert(route(sql).isInstanceOf[Route.Decline], sql)
+      assert(status(sql) === "manual_review", sql)
+    }
+    assert(feats("SELECT * INTO #stage FROM u; INSERT INTO t SELECT * FROM #stage")
       .exists(_.contains("#temp scope")))
   }
 
@@ -702,14 +712,13 @@ class IfLadderSpec extends AnyFunSuite {
       graft.ir.Ir.ExecuteSqlTask("g", None, "conn", sql), Nil).strategy.get
     assert(note("DECLARE @n INT; SELECT @n = COUNT(*) FROM t; " +
       "IF @n = 0 BEGIN RAISERROR('m', 16, 1) END").contains("guard executes"))
-    // a CATCH re-raise is no ladder leg; neither is RAISERROR text in a
-    // literal — the ValidationSuite wording stays
-    for (sql <- Seq(
-      "BEGIN TRY DELETE FROM t END TRY BEGIN CATCH " +
-        "RAISERROR('failed', 16, 1) END CATCH",
-      "INSERT INTO log (msg) VALUES ('RAISERROR skipped')")) {
-      assert(note(sql).contains("validation aggregate guard"), sql)
-      assert(!note(sql).contains("executes"), sql)
-    }
+    // a CATCH re-raise is no ladder leg — the ValidationSuite wording
+    // stays; RAISERROR text in a literal is no guard at all
+    val reraise = "BEGIN TRY DELETE FROM t END TRY BEGIN CATCH " +
+      "RAISERROR('failed', 16, 1) END CATCH"
+    assert(note(reraise).contains("validation aggregate guard"))
+    assert(!note(reraise).contains("executes"))
+    val logged = "INSERT INTO log (msg) VALUES ('RAISERROR skipped')"
+    assert(!note(logged).contains("guard"))
   }
 }

@@ -27,10 +27,13 @@ class LocalEvalSpec extends AnyFunSuite {
 
   test("a FROM-less 50-iteration WHILE unrolls with zero Spark jobs") {
     val (out, jobs) = SparkTestSession.jobsIn("local-eval-while") {
-      WhileLoopSqlCompiler.unroll(spark,
+      ScriptedSqlExecutor.route(
         "DECLARE @i INT = 0; DECLARE @s BIGINT = 0; WHILE @i < 50 BEGIN " +
           "INSERT INTO le_t (k, s) VALUES (@i, @s); " +
-          "SET @s = @s + @i * 2; SET @i = @i + 1; END")
+          "SET @s = @s + @i * 2; SET @i = @i + 1; END") match {
+        case ScriptedSqlExecutor.Route.CounterWhile(l) => WhileLoopSqlCompiler.unroll(spark, l)
+        case r => fail(s"not a counter loop: $r")
+      }
     }
     val stmts = out.get
     assert(stmts.length === 50)

@@ -19,6 +19,14 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.get
   import spark.implicits._
 
+  /** The surfaces a script's route reports to the ledger, joined. */
+  private def features(sql: String): Option[String] =
+    graft.patterns.ScriptedSqlExecutor.route(sql) match {
+      case s: graft.patterns.ScriptedSqlExecutor.Route.Script =>
+        Some(s.features.mkString(" + ")).filter(_.nonEmpty)
+      case _ => None
+    }
+
   private def fixture(name: String): String =
     getClass.getResource(s"/dtsx/$name").getPath
 
@@ -983,8 +991,8 @@ class PipelineSpec extends AnyFunSuite {
         "DELETE FROM tgt WHERE v < @a")).isEmpty)
     // nothing committed by the declined scripts
     assert(w3("tgt").count() === 3L)
-    // ledger twin surfaces the feature
-    assert(graft.patterns.ScriptedSqlExecutor.scriptFeatures(
+    // the route surfaces the feature for the ledger
+    assert(features(
       "DECLARE @wm FLOAT; SELECT @wm = MAX(v) FROM src; " +
         "DELETE FROM tgt WHERE v <= @wm")
       .exists(_.contains("scalar @vars")))
@@ -2575,7 +2583,7 @@ class PipelineSpec extends AnyFunSuite {
       assert(mkExec(fresh())(task(sql)).isEmpty, s"should decline: $sql")
     // the two r17 decline classes the r18 ladder PROMOTED to owned:
     // a multi-statement BEGIN block executes through the dispatcher
-    // (q149 — the splitter shred regroups), and conditional SET
+    // (q149 — the block tree keeps it whole), and conditional SET
     // reaches the executor's variable state
     val wBlk = fresh()
     mkExec(wBlk)(task(
@@ -2599,7 +2607,7 @@ class PipelineSpec extends AnyFunSuite {
       graft.ir.Ir.ExecuteSqlTask("t", None, "conn",
         "IF @nope > 0 UPDATE ift SET v = 0"), Nil).status === "manual_review")
     // a SCRIPT whose only ownable feature is the variable-free IF
-    // classifies converted too (scriptFeatures' ifs flag)
+    // classifies converted too (the route's IF-ladder feature)
     assert(graft.parser.MigrationMapping.mapTask(
       graft.ir.Ir.ExecuteSqlTask("t", None, "conn",
         "UPDATE ift SET v = 1 WHERE id = 1;\n" +
@@ -3750,26 +3758,31 @@ class PipelineSpec extends AnyFunSuite {
       "BEGIN TRY BEGIN TRAN; UPDATE rbt SET v = 1; BEGIN TRAN; " +
         "UPDATE rbt SET v = 2; END TRY BEGIN CATCH ROLLBACK; END CATCH"))
       assert(mkExec(fresh())(task(sql)).isEmpty, s"should decline: $sql")
-    // ledger twin recognizes exactly the owned shape (including the
+    // the route recognizes exactly the owned shape (including the
     // BEGIN-TRAN-brackets-the-TRY requirement)
-    assert(graft.patterns.ScriptedSqlExecutor.tryCatchShape(
+    import graft.patterns.ScriptedSqlExecutor.{NoUndo, Route, UndoAll, route}
+    def undo(sql: String) = route(sql) match {
+      case Route.TryCatch(_, _, u) => Some(u)
+      case _ => None
+    }
+    assert(undo(
       "BEGIN TRY BEGIN TRAN; UPDATE t SET a = 1; COMMIT; END TRY " +
         "BEGIN CATCH ROLLBACK; " +
-        "INSERT INTO l (m) VALUES ('x'); END CATCH"))
+        "INSERT INTO l (m) VALUES ('x'); END CATCH") === Some(UndoAll))
     // a fused BEGIN TRAN prefix on the first statement also brackets
-    assert(graft.patterns.ScriptedSqlExecutor.tryCatchShape(
+    assert(undo(
       "BEGIN TRY BEGIN TRAN UPDATE t SET a = 1; END TRY " +
-        "BEGIN CATCH ROLLBACK; END CATCH"))
-    assert(!graft.patterns.ScriptedSqlExecutor.tryCatchShape(
+        "BEGIN CATCH ROLLBACK; END CATCH") === Some(UndoAll))
+    assert(undo(
       "BEGIN TRY UPDATE t SET a = 1; END TRY BEGIN CATCH ROLLBACK; " +
-        "INSERT INTO l (m) VALUES ('x'); END CATCH"))
-    assert(!graft.patterns.ScriptedSqlExecutor.tryCatchShape(
+        "INSERT INTO l (m) VALUES ('x'); END CATCH").isEmpty)
+    assert(undo(
       "BEGIN TRY BEGIN TRAN; UPDATE t SET a = 1; ROLLBACK; END TRY " +
-        "BEGIN CATCH END CATCH"))
+        "BEGIN CATCH END CATCH").isEmpty)
     // no-rollback CATCHes are untouched by the bracket rule
-    assert(graft.patterns.ScriptedSqlExecutor.tryCatchShape(
+    assert(undo(
       "BEGIN TRY UPDATE t SET a = 1; END TRY BEGIN CATCH " +
-        "INSERT INTO l (m) VALUES ('x'); END CATCH"))
+        "INSERT INTO l (m) VALUES ('x'); END CATCH") === Some(NoUndo))
   }
 
   test("savepoint-suffix TRY/CATCH: ROLLBACK TRAN sp discards only the suffix") {
@@ -3842,14 +3855,18 @@ class PipelineSpec extends AnyFunSuite {
       "BEGIN TRAN; UPDATE spt SET v = 1; SAVE TRAN sp1; " +
         "UPDATE spt SET v = 2; COMMIT"))
       assert(mkExec(fresh())(task(sql)).isEmpty, s"should decline: $sql")
-    // ledger twin recognizes exactly the owned shape
-    assert(graft.patterns.ScriptedSqlExecutor.tryCatchShape(
+    // the route recognizes exactly the owned shape: the savepoint sits
+    // after the TRY's first executable statement
+    import graft.patterns.ScriptedSqlExecutor.{Route, UndoTo, route}
+    assert(route(
       "BEGIN TRY BEGIN TRAN; UPDATE t SET a = 1; SAVE TRAN s; " +
         "UPDATE t SET a = 2; COMMIT; END TRY " +
-        "BEGIN CATCH ROLLBACK TRAN s; COMMIT; END CATCH"))
-    assert(!graft.patterns.ScriptedSqlExecutor.tryCatchShape(
+        "BEGIN CATCH ROLLBACK TRAN s; COMMIT; END CATCH") ===
+      Route.TryCatch(List("UPDATE t SET a = 1", "UPDATE t SET a = 2"), Nil, UndoTo(1)))
+    assert(route(
       "BEGIN TRY BEGIN TRAN; UPDATE t SET a = 1; SAVE TRAN s; " +
-        "COMMIT; END TRY BEGIN CATCH ROLLBACK TRAN s; END CATCH"))
+        "COMMIT; END TRY BEGIN CATCH ROLLBACK TRAN s; END CATCH")
+      .isInstanceOf[Route.Decline])
   }
 
   test("table variables reduce to the temp overlay; scope and declines hold") {
@@ -3904,8 +3921,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(mkExec(fresh())(task(
       "INSERT INTO @nope SELECT id AS id FROM tsrc; " +
         "INSERT INTO tvmart3 SELECT id AS id FROM @nope")).isEmpty)
-    // ledger twin reports the feature
-    assert(graft.patterns.ScriptedSqlExecutor.scriptFeatures(
+    // the route reports the feature for the ledger
+    assert(features(
       "DECLARE @b TABLE (id BIGINT); INSERT INTO @b SELECT 1 AS id; " +
         "INSERT INTO m SELECT id FROM @b")
       .exists(_.contains("table variables")))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.patterns.{ScriptedSqlExecutor, SqlLex, SqlText}
+import graft.patterns.{ScriptedSqlExecutor, SqlBlocks, SqlLex, SqlText}
 import graft.pipeline.PackageVariables
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,7 +18,8 @@ class SqlLexSpec extends AnyFunSuite {
     val two = List("UPDATE t SET [a;b] = 1 WHERE id = 2",
       "DELETE FROM u WHERE [x;y] = 3")
     assert(SqlText.splitStatements(script) === two)
-    assert(ScriptedSqlExecutor.statements(script)._1 === two)
+    assert(ScriptedSqlExecutor.route(script) ===
+      ScriptedSqlExecutor.Route.Script(two.map(SqlBlocks.Stmt), false))
   }
 
   test("an apostrophe inside a \"double-quoted\" identifier never opens a literal") {
@@ -146,6 +147,44 @@ class SqlLexSpec extends AnyFunSuite {
     val lex = scala.io.Source.fromFile(
       "src/main/scala/graft/patterns/SqlLex.scala", "UTF-8").mkString
     assert(lex.contains("'\\''") && lex.contains("'('"))
+  }
+
+  /** A regex literal matching T-SQL block keywords: `BEGIN`/`END`
+    * followed by `\\s` or `\\b` (`begin\\s+try`, `end\\s+catch`,
+    * `begin\\s+tran`, …), after `\\b`, or the BEGIN/CASE/END token
+    * class. */
+  private val blockKeywordRegex =
+    """(?i)\b(begin|end)\\\\[sb]|\\\\b(begin|end)\b|begin\|case\|end""".r
+
+  test("only the block parser matches block keywords in the T-SQL layer") {
+    // the detector itself, on the spellings the block parser retired
+    for (line <- Seq(
+        "\"(?is)^\\\\s*begin\\\\s+try\\\\b(.*?)\\\\bend\\\\s+try\"",
+        "\"(?is)begin\\\\s+catch\"", "\"(?i)\\\\bbegin\\\\s+try\"",
+        "\"(?is)^\\\\s*begin\\\\s+tran(?:saction)?\"",
+        "\"(?i)(?<![\\\\w])(begin|case|end)(?![\\\\w])\"",
+        "\"(?is)\\\\bend\\\\s*;?\\\\s*$\""))
+      assert(blockKeywordRegex.findFirstIn(line).isDefined, line)
+    // the cursor and batched-DML loops still match their whole WHILE …
+    // BEGIN … END shapes; they move onto the tree with a cursor /
+    // loop-body node
+    val allowed = Set("SqlBlocks.scala",
+      "CursorLoopSqlCompiler.scala", "BatchedDmlLoopSqlCompiler.scala")
+    val sources =
+      new java.io.File("src/main/scala/graft/patterns").listFiles().toSeq
+        .filter(f => f.getName.endsWith(".scala") && !allowed(f.getName)) ++
+        Seq("parser/MigrationMapping.scala", "pipeline/PackageVariables.scala",
+          "pipeline/PackageRunner.scala")
+          .map(f => new java.io.File(s"src/main/scala/graft/$f"))
+    assert(sources.size > 20, "source tree not found from the test's working directory")
+    val offenders = for {
+      f <- sources
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
+        .map(_.replaceAll("//.*$", "")).zipWithIndex
+      if !line.trim.startsWith("*") && blockKeywordRegex.findFirstIn(line).isDefined
+    } yield s"${f.getName}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "block-keyword regexes outside SqlBlocks:\n" + offenders.mkString("\n"))
   }
 
   test("depths, close and open agree on a mask") {

@@ -276,10 +276,14 @@ class SqlTextPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("IfLadder regroup: literal keyword content never joins fragments; real blocks always rejoin") {
+  /** The sequencer's statements of a text: the block tree's leaves. */
+  private def leaves(s: String): List[SqlBlocks.Leaf] =
+    SqlBlocks.parse(s).toOption.get.flatMap(_.body).collect { case l: SqlBlocks.Leaf => l }
+
+  test("block tree: literal keywords never join; blocks parse whole") {
     // hostile literals: BEGIN/END/CASE/IF/ELSE inside string content
     // must be data — a literal-borne keyword that changed the block
-    // balance would fuse unrelated statements (silent re-shaping, the
+    // structure would fuse unrelated statements (silent re-shaping, the
     // worst class). Generator: plain DML statements whose literal
     // payload is keyword soup.
     val kwSoup: Gen[String] = Gen.listOfN(4, Gen.oneOf(
@@ -291,23 +295,24 @@ class SqlTextPropertySpec extends AnyFunSuite {
         s"INSERT INTO t VALUES ('$lit')",
         s"UPDATE t SET c = '$lit' WHERE k = 1",
         "DELETE FROM t WHERE k = 2")
-      assert(IfLadderSqlCompiler.regroup(stmts) === stmts,
-        s"literal content changed regrouping for payload: $payload")
+      assert(leaves(stmts.mkString("; ")).map(_.text) === stmts,
+        s"literal content changed the statements for payload: $payload")
     }
     // the inverse property: a REAL block around arbitrary literal
-    // payload always regroups to exactly one statement, and the parse
-    // sees exactly the two body statements
+    // payload is always exactly one IF, whose branch holds exactly the
+    // two body statements
     forAll(kwSoup) { payload =>
       val lit = payload.replace("'", "''")
       val text = s"IF @n > 0 BEGIN UPDATE t SET c = '$lit'; " +
         s"DELETE FROM u WHERE k = '$lit'; END"
-      val g = IfLadderSqlCompiler.regroup(SqlText.splitStatements(text))
-      assert(g.length === 1, s"shredded block failed to rejoin: $payload")
-      val l = IfLadderSqlCompiler.parse(g.head)
-      assert(l.exists(_.legs.head._2 match {
-        case IfLadderSqlCompiler.Stmts(ss) => ss.length == 2
-        case _ => false
-      }), s"block body mis-parsed for payload: $payload")
+      leaves(text) match {
+        case List(SqlBlocks.If(l, t)) =>
+          assert(t === text)
+          assert(l.legs.head._2 === IfLadderSqlCompiler.Stmts(List(
+            s"UPDATE t SET c = '$lit'", s"DELETE FROM u WHERE k = '$lit'")),
+            s"block body mis-parsed for payload: $payload")
+        case other => fail(s"block did not parse whole for payload $payload: $other")
+      }
     }
   }
 
@@ -360,6 +365,34 @@ class SqlTextPropertySpec extends AnyFunSuite {
         (ScalarPred("@n > 1"), Raise(s"'$lit', 10, 1"))),
         Some(Stmts(List(s"UPDATE t SET c = '$lit'"))))),
         s"legs changed for literal <$lit> / identifier [$br]")
+    }
+  }
+
+  test("block tree: hostile soup never throws; leaves come out in text order") {
+    val blockPiece: Gen[String] = Gen.oneOf("BEGIN", "END", "IF", "ELSE",
+      "WHILE", "BEGIN TRY", "END TRY", "BEGIN CATCH", "END CATCH", "BEGIN TRAN",
+      "COMMIT", "ROLLBACK", "SAVE TRAN sp", "CASE", "RETURN", "RAISERROR(",
+      "@n > 0", "EXISTS (", "UPDATE t SET a = 1", "SET @n = 1")
+    val blockSoup: Gen[String] = for {
+      pieces <- Gen.listOfN(24, Gen.frequency(3 -> genPiece, 1 -> genLexPiece,
+        3 -> blockPiece))
+      tail <- genTail
+    } yield pieces.mkString(" ") + tail
+    forAll(Gen.oneOf(genSoup, blockSoup), 600) { s =>
+      SqlBlocks.parse(s) match {
+        case Left(why) => assert(why.nonEmpty)
+        case Right(bs) =>
+          // each batch's leaves are slices of it, left to right
+          SqlText.splitBatches(s).zip(bs).foreach { case (batch, b) =>
+            SqlBlocks.walk(b.body).collect { case l: SqlBlocks.Leaf => l.text }
+              .foldLeft(0) { (from, t) =>
+                val at = batch.indexOf(t, from)
+                assert(at >= from, s"leaf <$t> out of text order in: $batch")
+                at + t.length
+              }
+          }
+      }
+      ScriptedSqlExecutor.route(s) // never throws either
     }
   }
 }
