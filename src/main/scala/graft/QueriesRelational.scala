@@ -42,6 +42,10 @@ object QueriesRelational {
     dir
   }
 
+  /** `[schema].[table]`, group 1 the bare name: the package scaffolds
+    * below rewrite task SQL and key written frames by it. */
+  private[graft] val BracketedTable = """\[\w+\]\.\[(\w+)\]""".r
+
   /** Shared scaffold for the dtsx-package gate queries (q51/q52/q53):
     * parse the resource, optionally override variable literals (the
     * dtexec `/SET` idiom), run through [[graft.pipeline.PackageRunner]]
@@ -60,12 +64,11 @@ object QueriesRelational {
       if (overrideVars.isEmpty) parsed
       else parsed.copy(variables = parsed.variables.map(v =>
         overrideVars.get(v.qualifiedName).fold(v)(nv => v.copy(value = nv))))
-    val tableRe = """\[\w+\]\.\[(\w+)\]""".r
     val written = scala.collection.mutable.Map.empty[String, DataFrame]
     val env = graft.pipeline.PackageRunner.RuntimeEnv(
       resolver = graft.sources.Sources.testdataResolver(spark, dir, written.get),
       write = (table, df, _) => {
-        val bare = tableRe.findFirstMatchIn(table).map(_.group(1)).getOrElse(table)
+        val bare = BracketedTable.findFirstMatchIn(table).map(_.group(1)).getOrElse(table)
         written(bare) =
           if (accumulate) written.get(bare).map(_.unionByName(df)).getOrElse(df)
           else df
@@ -78,13 +81,13 @@ object QueriesRelational {
           // Register EVERY referenced table and rewrite each [x].[y]
           // to its OWN bare name — replacing all occurrences with the
           // first match silently corrupted multi-table statements.
-          val tables = tableRe.findAllMatchIn(t.sqlStatement)
+          val tables = BracketedTable.findAllMatchIn(t.sqlStatement)
             .map(_.group(1)).toSet
           require(tables.nonEmpty,
             s"no [schema].[table] in: ${t.sqlStatement}")
           tables.foreach(tbl => load(spark, dir, tbl)
             .createOrReplaceTempView(tbl))
-          val df = spark.sql(tableRe.replaceAllIn(t.sqlStatement,
+          val df = spark.sql(BracketedTable.replaceAllIn(t.sqlStatement,
             m => m.group(1)))
           Some(graft.pipeline.PackageRunner.SqlOutcome(Some(df), None))
         })
@@ -3499,12 +3502,11 @@ object QueriesRelational {
     val in = getClass.getResourceAsStream("/dtsx/SequenceMartETL.dtsx")
     val xml = scala.io.Source.fromInputStream(in, "UTF-8").mkString
     val pkg = graft.parser.DtsxParser.parseString(xml)
-    val tableRe = """\[\w+\]\.\[(\w+)\]""".r
     val written = scala.collection.mutable.Map.empty[String, DataFrame]
     val env = graft.pipeline.PackageRunner.RuntimeEnv(
       resolver = graft.sources.Sources.testdataResolver(spark, dir, written.get),
       write = (table, df, _) => {
-        val bare = tableRe.findFirstMatchIn(table).map(_.group(1)).getOrElse(table)
+        val bare = BracketedTable.findFirstMatchIn(table).map(_.group(1)).getOrElse(table)
         written(bare) = df
       })
     val run = graft.pipeline.PackageRunner.run(spark, pkg, env)
@@ -4664,7 +4666,6 @@ object QueriesRelational {
     val in = getClass.getResourceAsStream(s"/dtsx/$resource")
     val xml = scala.io.Source.fromInputStream(in, "UTF-8").mkString
     val pkg = graft.parser.DtsxParser.parseString(xml)
-    val tableRe = """\[\w+\]\.\[(\w+)\]""".r
     val written = scala.collection.mutable.Map.empty[String, DataFrame]
     // every temp view this run registers is dropped when the run ends:
     // a view outliving the run leaks into the NEXT package run's
@@ -4672,18 +4673,18 @@ object QueriesRelational {
     // an append onto the previous run's rows)
     val boundViews = scala.collection.mutable.Set.empty[String]
     def bind(sql: String): String = {
-      tableRe.findAllMatchIn(sql).map(_.group(1)).toSet[String].foreach { t =>
+      BracketedTable.findAllMatchIn(sql).map(_.group(1)).toSet[String].foreach { t =>
         written.get(t).orElse {
           val f = new java.io.File(s"$dir/$t.parquet")
           if (f.exists) Some(Tables.open(spark, f.getAbsolutePath)) else None
         }.foreach { df => df.createOrReplaceTempView(t); boundViews += t }
       }
-      tableRe.replaceAllIn(sql, m => m.group(1))
+      BracketedTable.replaceAllIn(sql, m => m.group(1))
     }
     val env = graft.pipeline.PackageRunner.RuntimeEnv(
       resolver = graft.sources.Sources.testdataResolver(spark, dir, written.get),
       write = (table, df, mode) => {
-        val bare = tableRe.findFirstMatchIn(table).map(_.group(1)).getOrElse(table)
+        val bare = BracketedTable.findFirstMatchIn(table).map(_.group(1)).getOrElse(table)
         written(bare) = mode match {
           case org.apache.spark.sql.SaveMode.Append =>
             // an Append to a parquet-backed table not yet in `written`
@@ -4702,7 +4703,7 @@ object QueriesRelational {
         val exec = graft.patterns.ScriptedSqlExecutor.executor(
           spark,
           written = written.get,
-          bareName = name => tableRe.findFirstMatchIn(name)
+          bareName = name => BracketedTable.findFirstMatchIn(name)
             .map(_.group(1)).getOrElse(name),
           commit = (k, v) => written(k) = v)
         t => exec(t.copy(sqlStatement = bind(t.sqlStatement)))

@@ -169,7 +169,6 @@ object MigrationMapping {
     val insertSelect = "(?is)insert\\s+into\\s+(\\S+)[\\s(].*?select\\b".r
     val insertValues = "(?is)insert\\s+into\\s+(\\S+)\\s*\\([^)]*\\)\\s*values\\b".r
     val mergeRe = "(?is)\\bmerge\\s+(?:into\\s+)?(\\S+)".r
-    val cursorRe = "(?is)\\bdeclare\\b.{0,120}?\\bcursor\\b".r
     // the executor's one parse of the task: the ledger claims exactly
     // the shapes it runs
     val route = graft.patterns.ScriptedSqlExecutor.route(sql)
@@ -268,7 +267,6 @@ object MigrationMapping {
             "concatenation folds to its exact T-SQL text; expression " +
             "args, OUTPUT params, and non-constant concatenation stay " +
             "manual review)")
-      else if (cursorRe.findFirstIn(msk).isDefined) manual(cursorNote)
       else manual("statement shape not auto-convertible")
 
     if (upper.contains("RAISERROR"))
@@ -339,13 +337,6 @@ object MigrationMapping {
       case _ => chain
     }
   }
-
-  private val cursorNote =
-    "CURSOR loop: row-at-a-time control flow this engine will " +
-      "not replay — rewrite set-based (a WHILE counter loop or one " +
-      "DML statement usually replaces it; the canonical FETCH-loop " +
-      "shape with distinct-target body DML converts automatically " +
-      "via CursorLoopSqlCompiler)"
 
   /** Classify one top-level task (containers recurse into children for
     * notes but count once, like the reference's per-task ledger). */

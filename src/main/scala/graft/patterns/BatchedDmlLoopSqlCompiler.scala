@@ -1,7 +1,5 @@
 package graft.patterns
 
-import scala.util.matching.Regex
-
 /** The batched-DML purge loop → its set-based fixpoint — the OTHER
   * canonical T-SQL loop beside the cursor ([[CursorLoopSqlCompiler]])
   * and the counter WHILE ([[WhileLoopSqlCompiler]]): operators batch
@@ -37,25 +35,18 @@ import scala.util.matching.Regex
   *    declines: a loop whose batches do not shrink the set never
   *    terminates in T-SQL either, and this engine will not guess.
   *
-  * Recognized frames (whole-text, masked scans): the `WHILE 1 = 1 …
-  * IF @@ROWCOUNT = 0 BREAK` form, with `;` or line breaks between the
-  * three parts. Everything else — EXISTS-guarded variants whose two
-  * predicates must be proven identical, WAITFOR DELAY throttles,
-  * TOP PERCENT, ORDER BY'd TOP (order-dependent slices), extra body
-  * statements — declines to manual review. */
+  * Recognized shape, read off the [[SqlBlocks]] tree: the whole task is
+  * `While(1 = 1, [Stmt(<TOP (n) DML>), If(@@ROWCOUNT = 0 → BREAK)])`.
+  * Everything else — EXISTS-guarded variants whose two predicates must
+  * be proven identical, WAITFOR DELAY throttles, TOP PERCENT, ORDER
+  * BY'd TOP (order-dependent slices), extra body statements — declines
+  * to manual review. */
 object BatchedDmlLoopSqlCompiler {
 
-  private val deleteLoopRe: Regex =
-    ("(?is)^\\s*while\\s+1\\s*=\\s*1\\s*begin\\s+" +
-      "delete\\s+top\\s*\\(\\s*\\d+\\s*\\)\\s+from\\s+([^\\s;@(]+)\\s+" +
-      "where\\s+(.+?)\\s*;\\s*" +
-      "if\\s+@@rowcount\\s*=\\s*0\\s*break\\s*;?\\s*end\\s*;?\\s*$").r
-
-  private val updateLoopRe: Regex =
-    ("(?is)^\\s*while\\s+1\\s*=\\s*1\\s*begin\\s+" +
-      "update\\s+top\\s*\\(\\s*\\d+\\s*\\)\\s+([^\\s;@(]+)\\s+" +
-      "set\\s+(.+?)\\s+where\\s+(.+?)\\s*;\\s*" +
-      "if\\s+@@rowcount\\s*=\\s*0\\s*break\\s*;?\\s*end\\s*;?\\s*$").r
+  private val deleteTopRe =
+    "(?is)^delete\\s+top\\s*\\(\\s*\\d+\\s*\\)\\s+from\\s+([^\\s;@(]+)\\s+where\\s+(.+)$".r
+  private val updateTopRe =
+    "(?is)^update\\s+top\\s*\\(\\s*\\d+\\s*\\)\\s+([^\\s;@(]+)\\s+set\\s+(.+?)\\s+where\\s+(.+)$".r
 
   private val bodyKeywordRe =
     ("(?i)\\b(select|insert|update|delete|merge|from|join|output|into|" +
@@ -144,19 +135,25 @@ object BatchedDmlLoopSqlCompiler {
   private def breaksConjunctTree(whereMsk: String): Boolean =
     "(?i)\\b(or|not|case|in|between)\\b".r.findFirstIn(whereMsk).isDefined
 
-  /** Whole-text recognizer: the batched purge loop → its one-statement
-    * set-based fixpoint, or None (manual review). */
-  private[graft] def rewriteToStatement(textRaw: String): Option[String] = {
-    val text = SqlText.stripComments(textRaw)
+  /** The batched purge loop of a task's top-level block-tree nodes →
+    * its one-statement set-based fixpoint, or None (manual review). */
+  private[patterns] def loop(nodes: List[SqlBlocks.Node]): Option[String] = {
+    import IfLadderSqlCompiler.{Break, Ladder, ScalarPred}
+    import SqlBlocks.{If, Stmt, While}
+    val text = nodes match {
+      case List(While(p, List(Stmt(s), If(Ladder(List((ScalarPred(rc), Break)), None), _))))
+          if p.matches("1\\s*=\\s*1") && rc.matches("(?i)@@rowcount\\s*=\\s*0") => s
+      case _ => return None
+    }
     val msk = SqlLex.mask(text)
-    deleteLoopRe.findFirstMatchIn(msk).flatMap { m =>
+    deleteTopRe.findFirstMatchIn(msk).flatMap { m =>
       def g(i: Int) = text.substring(m.start(i), m.end(i))
       val (tgt, where) = (g(1), g(2))
       if (clauseOk(msk.substring(m.start(2), m.end(2))))
         Some(s"DELETE FROM $tgt WHERE $where")
       else None
     }.orElse {
-      updateLoopRe.findFirstMatchIn(msk).flatMap { m =>
+      updateTopRe.findFirstMatchIn(msk).flatMap { m =>
         def g(i: Int) = text.substring(m.start(i), m.end(i))
         val (tgt, sets, where) = (g(1), g(2), g(3))
         val setsMsk = msk.substring(m.start(2), m.end(2))

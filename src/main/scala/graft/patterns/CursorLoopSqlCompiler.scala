@@ -16,7 +16,7 @@ import scala.util.matching.Regex
   * emits the set-based equivalent; every other cursor keeps the honest
   * decline.
   *
-  * Recognized whole-text shape (masked scan — literals never match):
+  * Recognized shape, read off the task's top-level [[SqlBlocks]] nodes:
   * {{{
   * DECLARE @a T1 [, @b T2 …];            -- one or more variable DECLAREs
   * DECLARE c [INSENSITIVE|SCROLL] CURSOR [LOCAL|FAST_FORWARD|…] FOR
@@ -109,8 +109,9 @@ import scala.util.matching.Regex
   * forward-only cursor whose body mutates not-yet-fetched rows'
   * MEMBERSHIP (e.g. `UPDATE t SET flag = 1 WHERE k = @k + 1` over a
   * cursor filtered on flag) sees its own writes and silently diverges
-  * from the one-scan staging — and any text outside the canonical
-  * frame. */
+  * from the one-scan staging — and any node outside the canonical
+  * frame. Brackets decline in body clauses only, as in
+  * [[UpdateSqlCompiler]]: a `[bracketed]` target is a name. */
 object CursorLoopSqlCompiler {
 
   /** Staged cursor rows live one script — tempdb session-scope parity. */
@@ -127,6 +128,9 @@ object CursorLoopSqlCompiler {
       "for\\b").r
 
   private val varDeclStmtRe = "(?is)^declare\\s+@.+$".r
+  private val cursorVerbRe = "(?is)^(open|close|deallocate)\\s+(\\w+)$".r
+  private val fetchRe =
+    "(?is)^fetch\\s+next\\s+from\\s+(\\w+)\\s+into\\s+(@\\w+(?:\\s*,\\s*@\\w+)*)$".r
   private val varNameRe = "^\\s*@(\\w+)".r
   private val scalarVarRe = "@(\\w+)".r
 
@@ -193,44 +197,51 @@ object CursorLoopSqlCompiler {
     }
   }
 
-  /** Whole-text recognizer: the canonical one-DML FETCH loop → the
-    * equivalent two-statement #temp script, or None (manual review). */
-  private[graft] def rewriteToScript(textRaw: String): Option[List[String]] = {
-    val text = SqlText.stripComments(textRaw)
-    val msk = SqlLex.mask(text)
-    val declM = cursorDeclRe.findAllMatchIn(msk).toList match {
-      case one :: Nil => one
-      case _ => return None // no cursor, or a second/nested cursor
+  /** The canonical FETCH loop of a task's top-level block-tree nodes →
+    * the equivalent set-based #temp script, or None (manual review). */
+  private[patterns] def loop(nodes: List[SqlBlocks.Node]): Option[List[String]] = {
+    import SqlBlocks.{Stmt, While}
+    // preamble: ONLY scalar-variable DECLAREs; then DECLARE c CURSOR …
+    // FOR <select>; OPEN c; FETCH …; WHILE @@FETCH_STATUS = 0 BEGIN
+    // <body>; FETCH … END; CLOSE c; DEALLOCATE c
+    val (pre, frame) = nodes.span {
+      case Stmt(s) => varDeclStmtRe.matches(s)
+      case _ => false
     }
-    val cur = text.substring(declM.start(1), declM.end(1))
-
-    // preamble: ONLY scalar-variable DECLAREs (each item must parse a
-    // name — half a DECLARE is no DECLARE); types are irrelevant to the
-    // rewrite (FETCH overwrites every value before first use)
-    val preStmts = SqlText.splitStatements(text.substring(0, declM.start))
-    if (!preStmts.forall(s => varDeclStmtRe.pattern.matcher(s).matches))
+    val (decl, open, f1, pred, body, f2, close, dealloc) = frame match {
+      case Stmt(d) :: Stmt(o) :: Stmt(f) :: While(p, b :+ Stmt(a)) ::
+          Stmt(c) :: Stmt(dl) :: Nil => (d, o, f, p, b, a, c, dl)
+      case _ => return None
+    }
+    val declM = cursorDeclRe.findPrefixMatchOf(SqlLex.mask(decl)).getOrElse(return None)
+    val cur = declM.group(1)
+    def verb(v: String, stmt: String): Boolean =
+      cursorVerbRe.findFirstMatchIn(stmt).exists(m =>
+        m.group(1).equalsIgnoreCase(v) && m.group(2).equalsIgnoreCase(cur))
+    def fetchOf(stmt: String): Option[String] =
+      fetchRe.findFirstMatchIn(stmt)
+        .filter(_.group(1).equalsIgnoreCase(cur)).map(_.group(2))
+    if (!verb("open", open) || !verb("close", close) ||
+        !verb("deallocate", dealloc) || !pred.matches("(?i)@@fetch_status\\s*=\\s*0"))
       return None
-    val preNames = preStmts.flatMap(s => SqlLex.splitTop(
+
+    // each preamble item must parse a name (half a DECLARE is no
+    // DECLARE); types are irrelevant to the rewrite (FETCH overwrites
+    // every value before first use)
+    val preNames = pre.collect { case Stmt(s) => s }.flatMap(s => SqlLex.splitTop(
         s.replaceFirst("(?is)^declare\\s+", ""))
       .map(i => varNameRe.findFirstMatchIn(i).map(_.group(1).toLowerCase)))
     if (preNames.exists(_.isEmpty)) return None
     val declared = preNames.flatten.toSet
 
-    // the cursor SELECT runs to OPEN; exactly one statement, item list
-    // explicit (no *), every item positional-bindable
-    val openRe = ("(?is)\\bopen\\s+" + q(cur) + "\\b").r
-    val openM = openRe.findFirstMatchIn(msk).getOrElse(return None)
-    if (openM.start < declM.end) return None
-    val selStmts = SqlText.splitStatements(
-      text.substring(declM.end, openM.start))
-    if (selStmts.length != 1) return None
-    // the cursor-level `FOR UPDATE [OF col,…]` tail (r14, positioned
-    // DML) is an updatability marker, not part of the query — strip it
-    // before any parsing (it is not Spark SQL either)
+    // the cursor SELECT (the rest of the DECLARE): item list explicit
+    // (no *), every item positional-bindable; the cursor-level `FOR
+    // UPDATE [OF col,…]` tail (positioned DML) is an updatability
+    // marker, not part of the query (nor Spark SQL) — strip it first
     val select = {
-      val s0 = selStmts.head
+      val s0 = decl.substring(declM.end).trim
       val m0 = SqlLex.mask(s0)
-      ("(?is)\\bfor\\s+update(?:\\s+of\\s+[\\w.,\\s\\[\\]]+?)?\\s*;?\\s*$").r
+      ("(?is)\\bfor\\s+update(?:\\s+of\\s+[\\w.,\\s\\[\\]]+?)?\\s*$").r
         .findFirstMatchIn(m0)
         .filter(m => SqlLex.depths(m0)(m.start) == 0)
         .map(m => s0.substring(0, m.start).trim).getOrElse(s0)
@@ -242,7 +253,7 @@ object CursorLoopSqlCompiler {
     // mapping already said "converted" (ledger/execution mismatch)
     if (scalarVarRe.findFirstIn(selMsk).isDefined) return None
     // snapshot-vs-dynamic adjudication needs the declared options
-    val declOptsMsk = msk.substring(declM.start, declM.end)
+    val declOptsMsk = declM.matched
     val staticCursor = "(?i)\\b(static|insensitive)\\b".r
       .findFirstIn(declOptsMsk).isDefined
     // positioned DML needs an UPDATABLE cursor (T-SQL: STATIC/
@@ -302,38 +313,11 @@ object CursorLoopSqlCompiler {
       "[A-Za-z_]\\w*".r.findAllIn(txt).map(_.toLowerCase).toSet
     }
 
-    // OPEN → FETCH → WHILE @@FETCH_STATUS = 0 BEGIN <body> FETCH → END
-    // → CLOSE → DEALLOCATE, each anchored at the previous match's end
-    var pos = openM.end
-    def prefix(re: Regex): Option[Regex.Match] = {
-      val m = re.findPrefixMatchOf(msk.subSequence(pos, msk.length))
-      m.foreach(mm => pos += mm.end)
-      m
-    }
-    val fetchHead = "(?is)^\\s*;?\\s*fetch\\s+next\\s+from\\s+" + q(cur) +
-      "\\s+into\\s+(@\\w+(?:\\s*,\\s*@\\w+)*)\\s*;?"
-    val f1 = prefix(fetchHead.r).getOrElse(return None)
-    if (prefix("(?is)^\\s*while\\s+@@fetch_status\\s*=\\s*0\\s*begin\\b".r)
-        .isEmpty) return None
-    val bodyStart = pos
-    // the loop-advance FETCH bounds the body: first occurrence wins (a
-    // body that itself FETCHes truncates here and the END anchor fails)
-    val fetch2Re = ("(?is)\\bfetch\\s+next\\s+from\\s+" + q(cur) +
-      "\\s+into\\s+(@\\w+(?:\\s*,\\s*@\\w+)*)\\s*;?").r
-    val adv = fetch2Re.findFirstMatchIn(msk.substring(pos))
-      .getOrElse(return None)
-    val body = text.substring(bodyStart, bodyStart + adv.start).trim
-    pos = bodyStart + adv.end
-    if (("(?is)^\\s*;?\\s*end\\s*;?\\s*close\\s+" + q(cur) +
-        "\\s*;?\\s*deallocate\\s+" + q(cur) + "\\s*;?\\s*$").r
-      .findPrefixMatchOf(msk.subSequence(pos, msk.length)).isEmpty)
-      return None
-
     // INTO lists: identical, no duplicates, all declared, one per item
     def varsOf(g: String): List[String] =
       scalarVarRe.findAllMatchIn(g).map(_.group(1).toLowerCase).toList
-    val fetchVars = varsOf(f1.group(1))
-    if (varsOf(adv.group(1)) != fetchVars) return None
+    val fetchVars = varsOf(fetchOf(f1).getOrElse(return None))
+    if (fetchOf(f2).map(varsOf) != Some(fetchVars)) return None
     if (fetchVars.distinct.size != fetchVars.size) return None
     if (!fetchVars.forall(declared)) return None
     if (fetchVars.size != items.size) return None
@@ -341,13 +325,12 @@ object CursorLoopSqlCompiler {
 
     // body: one or more DML statements, no control flow / cursor verbs
     // / @@state, @references only from the FETCH list
-    val bodyStmts = SqlText.splitStatements(body)
-    if (bodyStmts.isEmpty) return None
+    val bodyStmts = body.collect { case Stmt(b) => b }
+    if (bodyStmts.isEmpty || bodyStmts.size < body.size) return None
     for (b <- bodyStmts) {
       val bMsk = SqlLex.mask(b)
       if (bodyBanRe.findFirstIn(bMsk).isDefined) return None
       if (!varsOf(bMsk).toSet.subsetOf(fetchVars.toSet)) return None
-      if (MergeSqlCompiler.hasQuotedIdentifier(b)) return None
     }
 
     // staged cursor rows: one scan of the source, aliased positionally

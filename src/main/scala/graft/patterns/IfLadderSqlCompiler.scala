@@ -42,6 +42,9 @@ object IfLadderSqlCompiler {
   sealed trait Branch
   /** A bare `RETURN` leg — batch exit. */
   case object ReturnExit extends Branch
+  /** A bare `BREAK` leg — leaves the enclosing WHILE (Spark scripting's
+    * `LeaveStatement`); only [[BatchedDmlLoopSqlCompiler]] owns one. */
+  case object Break extends Branch
   /** A `RAISERROR(<args>)` leg, bare or as the whole of a `BEGIN … END`
     * body — the validation guard. Severity ≥ 11 aborts the task (and
     * is T-SQL-catchable, so a TRY/CATCH script catches it); ≤ 10 is
@@ -52,10 +55,9 @@ object IfLadderSqlCompiler {
 
   final case class Ladder(legs: List[(Pred, Branch)],
       otherwise: Option[Branch]) {
-    def hasReturn: Boolean =
-      (legs.map(_._2) ++ otherwise).contains(ReturnExit)
-    def raises: Boolean =
-      (legs.map(_._2) ++ otherwise).exists(_.isInstanceOf[Raise])
+    def branches: List[Branch] = legs.map(_._2) ++ otherwise
+    def hasReturn: Boolean = branches.contains(ReturnExit)
+    def raises: Boolean = branches.exists(_.isInstanceOf[Raise])
   }
 
   /** Render a RAISERROR message argument: `[N]'…'` literals unquote
@@ -90,15 +92,15 @@ object IfLadderSqlCompiler {
   }
 
   /** May this ladder be EMITTED inside an unrolled WHILE body
-    * ([[WhileLoopSqlCompiler]])? It must have no RETURN leg (a batch
-    * exit from inside a loop is not the unroller's to decide) and no
+    * ([[WhileLoopSqlCompiler]])? It must have no RETURN or BREAK leg (a
+    * batch or loop exit is not the unroller's to decide) and no
     * assignment branches (a conditional `SET @v = …` is invisible to
     * the unroller's driver-side variable model — the loop would diverge
     * silently from T-SQL); RAISERROR legs are fine (a fired guard
     * aborts the task at its emitted position). */
   private[graft] def loopBodySafe(l: Ladder): Boolean =
-    !(l.legs.map(_._2) ++ l.otherwise).exists {
-      case ReturnExit => true
+    !l.branches.exists {
+      case ReturnExit | Break => true
       case Stmts(ss) => ss.exists(s =>
         assignHeadRe.findFirstIn(SqlLex.mask(s)).isDefined)
       case _ => false

@@ -417,20 +417,19 @@ object ScriptedSqlExecutor {
       * and what a caught abort undoes first. */
     final case class TryCatch(tryStmts: List[String], catchStmts: List[String],
         undo: Undo) extends Route
-    /** A WHILE loop that is neither a counter loop nor a rewriter's
-      * shape (a cursor loop the cursor compiler declines): the executor
-      * declines it; the ledger, which has no cursor node to read yet,
-      * classifies its text with the statement chain. */
-    final case class Unowned(reason: String) extends Route
-    /** A whole-text rewrite into the statements a script runs. */
+    /** A task rewritten into the statements a script runs. */
     sealed trait Rewritten extends Route { def stmts: List[String] }
-    /** [[CursorLoopSqlCompiler]]'s set-based FETCH loop. */
+    /** [[CursorLoopSqlCompiler]]'s set-based FETCH loop: the tree's
+      * `DECLARE`s, `OPEN`, `FETCH`, `While(@@FETCH_STATUS = 0, body :+
+      * FETCH)`, `CLOSE`, `DEALLOCATE`. */
     final case class Cursor(stmts: List[String]) extends Rewritten
-    /** [[BatchedDmlLoopSqlCompiler]]'s fixpoint of a batched purge. */
+    /** [[BatchedDmlLoopSqlCompiler]]'s fixpoint of a batched purge: the
+      * tree's `While(1 = 1, [TOP (n) DML, If(@@ROWCOUNT = 0 → BREAK)])`. */
     final case class Batched(stmts: List[String]) extends Rewritten
     /** [[ProcInlineSqlCompiler]]'s inlined script-local procedures. */
     final case class ProcCalls(stmts: List[String]) extends Rewritten
-    /** A counter WHILE, unrolled on the driver at run time. */
+    /** A counter WHILE, unrolled on the driver at run time: the tree's
+      * statements then one `While` ([[WhileLoopSqlCompiler.loop]]). */
     final case class CounterWhile(loop: WhileLoopSqlCompiler.Loop) extends Route
     /** One plain statement for the compiler chain; `whole` when it is
       * the task's entire (comment-stripped) text. */
@@ -579,20 +578,16 @@ object ScriptedSqlExecutor {
       case Right(ns) if SqlBlocks.walk(ns).exists(n =>
           n.isInstanceOf[SqlBlocks.TryCatch] || n.isInstanceOf[SaveTran]) =>
         Decline("TRY/CATCH or SAVE TRAN that is not the whole task")
-      case _ =>
-        CursorLoopSqlCompiler.rewriteToScript(text).map(Cursor(_))
-          .orElse(BatchedDmlLoopSqlCompiler.rewriteToStatement(text)
-            .map(s => Batched(List(s))))
+      case Left(why) =>
+        ProcInlineSqlCompiler.rewriteToScript(text).map(ProcCalls(_)).getOrElse(Decline(why))
+      case Right(ns) =>
+        CursorLoopSqlCompiler.loop(ns).map(Cursor(_))
+          .orElse(BatchedDmlLoopSqlCompiler.loop(ns).map(s => Batched(List(s))))
           .orElse(ProcInlineSqlCompiler.rewriteToScript(text).map(ProcCalls(_)))
-          .getOrElse(tree match {
-            case Left(why) => Decline(why)
-            case Right(ns) => WhileLoopSqlCompiler.loop(ns) match {
-              case Some(l) => CounterWhile(l)
-              case None if top.exists(_.isInstanceOf[SqlBlocks.While]) =>
-                Unowned("WHILE loop that is not a counter loop")
-              case None => plain(text, top)
-            }
-          })
+          .orElse(WhileLoopSqlCompiler.loop(ns).map(CounterWhile(_)))
+          .getOrElse(if (top.exists(_.isInstanceOf[SqlBlocks.While]))
+            Decline("a WHILE that is no cursor FETCH loop, batched purge or counter loop")
+          else plain(text, top))
     }
   }
 
@@ -902,6 +897,7 @@ object ScriptedSqlExecutor {
                   // not this replay's to state
                   lastAffected = None
                   return Some(SqlOutcome(None, None))
+                case Some(IfLadderSqlCompiler.Break) => return None // only a batched purge owns one
                 case Some(IfLadderSqlCompiler.ReturnExit) =>
                   earlyExit = true
                   return Some(SqlOutcome(None, None))
@@ -1330,7 +1326,7 @@ object ScriptedSqlExecutor {
         if (ss.isEmpty) Some(SqlOutcome(None, None)) // vacuous success
         else script(bound, ss, allowEarlyExit = allowEarlyExit)
       route(bound.sqlStatement) match {
-        case Route.Decline(_) | Route.Unowned(_) => None
+        case Route.Decline(_) => None
         case Route.TryCatch(Nil, _, _) => Some(SqlOutcome(None, None))
         case Route.TryCatch(ts, cs, undo) =>
           script(bound, ts, Some(cs), catchRollsBack = undo == UndoAll,

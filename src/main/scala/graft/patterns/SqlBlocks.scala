@@ -15,16 +15,20 @@ import IfLadderSqlCompiler._
   * literals, `[bracketed]` identifiers and comments are data. A batch is
   * the text between `GO` lines ([[SqlText.splitBatches]]). A statement
   * ends at a `;`, at the end of its batch, at the `END` closing the
-  * block it sits in, or (a one-statement IF branch) at a depth-0 `ELSE`;
+  * block it sits in, (a one-statement IF branch) at a depth-0 `ELSE`,
+  * or at a depth-0 `WHILE`, `DECLARE`, `OPEN`, `CLOSE`, `DEALLOCATE` or
+  * cursor `FETCH`, where T-SQL starts the next statement without one.
   * `CASE … END` pairs, and a `BEGIN … END` inside a statement (a
   * procedure body) keeps its `;`s. Control keywords count only at a
   * statement's start: `DROP TABLE IF EXISTS` is one statement.
   *
   * Only an IF whose legs [[IfLadderSqlCompiler]] can state becomes a
-  * node: each branch is `RETURN`, one `RAISERROR(…)`, or ownable
-  * statements with no nested control. Any other IF, and any unbalanced
-  * block, fails the parse with a reason: the executor declines such a
-  * task as a whole. */
+  * node: each branch is `RETURN`, `BREAK` (inside a WHILE body only,
+  * as T-SQL requires), one `RAISERROR(…)`, or ownable statements with
+  * no nested control. Any other IF, and any unbalanced block, fails
+  * the parse with a reason: the executor declines such a task as a
+  * whole. The loop readers (cursor, batched purge, counter) read their
+  * loops off these nodes. */
 object SqlBlocks {
 
   sealed trait Node
@@ -87,7 +91,7 @@ object SqlBlocks {
   // tokens that OPEN a branch after a scalar predicate (word-bounded,
   // not part of an identifier / bracket / @var / #temp)
   private val openerRe = ("(?i)(?<![\\w\\[.@#$])(insert|update|delete|" +
-    "truncate|merge|select|begin|set|return|raiserror)(?![\\w\\]])").r
+    "truncate|merge|select|begin|set|return|break|raiserror)(?![\\w\\]])").r
   // control-flow keywords that may not appear inside a scalar predicate
   private val predControlRe = "(?i)\\b(if|else|while|begin|end|goto)\\b".r
   private val existsHeadRe = "(?is)^(not\\s+)?exists\\s*\\(".r
@@ -97,6 +101,9 @@ object SqlBlocks {
     "(?is)^\\s*(insert|update|delete|truncate|merge|select|set)\\b".r
   private val stmtControlRe = ("(?i)(?<![\\w\\[.@#$])(if|while|begin|" +
     "goto|return|break|continue)(?![\\w\\]])").r
+  // depth-0 statement starts (a FETCH after `ROW[S]` is OFFSET's)
+  private val stmtStarts = Set("while", "declare", "open", "close", "deallocate")
+  private val rowsRe = "(?i)\\brows?\\s*$".r
   private val truncDeleteHeadRe = "(?is)^\\s*(truncate|delete)\\b".r
   private val insertRe = "(?i)\\binsert\\b".r
 
@@ -122,6 +129,7 @@ object SqlBlocks {
     private val n = msk.length
     private lazy val depth = SqlLex.depths(msk)
     private var i = 0
+    private var loops = 0 // WHILE bodies open at i
 
     private def ws(): Unit = while (i < n && msk.charAt(i).isWhitespace) i += 1
     private def seps(): Unit =
@@ -258,6 +266,9 @@ object SqlBlocks {
               case "end" if blocks > 0 => blocks -= 1
               case "end" => done = true
               case "else" if stopAtElse && blocks == 0 && depth(i) == 0 => done = true
+              case _ if (stmtStarts(w) || w == "fetch" &&
+                  rowsRe.findFirstIn(msk.substring(start, i)).isEmpty) &&
+                  i > start && blocks == 0 && depth(i) == 0 => done = true
               case _ =>
             }
             if (!done) i += w.length
@@ -344,6 +355,7 @@ object SqlBlocks {
       ws()
       word(i) match {
         case "return" => i += 6; ReturnExit
+        case "break" => if (loops == 0) fail("BREAK outside a WHILE"); i += 5; Break
         case "raiserror" => raise()
         case "begin" if !notBlock(nextWord(i + 5)) =>
           i += 5
@@ -383,7 +395,9 @@ object SqlBlocks {
       val pred = text.substring(start, j).trim
       if (pred.isEmpty) fail("WHILE without a predicate")
       i = j + 5
+      loops += 1
       val body = seq(inBlock = true)
+      loops -= 1
       close(None)
       While(pred, body)
     }

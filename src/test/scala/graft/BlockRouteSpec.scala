@@ -50,6 +50,20 @@ class BlockRouteSpec extends AnyFunSuite {
       "BEGIN CATCH INSERT INTO rt_log (m) VALUES ('failed'); END CATCH")
   }
 
+  test("a BREAK outside a batched purge loop is manual review") {
+    declinedByBoth("IF @@ROWCOUNT = 0 BREAK")
+    declinedByBoth("INSERT INTO rt_t SELECT 3 AS a; IF @@ROWCOUNT = 0 BREAK")
+    // a counter loop's body may not leave the loop: the unroll cannot
+    for (sql <- Seq(
+        "DECLARE @i INT = 1; WHILE @i <= 3 BEGIN INSERT INTO rt_t SELECT @i AS a; " +
+          "IF @i = 2 BREAK; SET @i = @i + 1; END",
+        "DECLARE @i INT = 1; WHILE @i <= 3 BEGIN IF @@ROWCOUNT = 0 BREAK; " +
+          "SET @i = @i + 1; END")) {
+      assert(ScriptedSqlExecutor.route(sql).isInstanceOf[ScriptedSqlExecutor.Route.Decline], sql)
+      declinedByBoth(sql)
+    }
+  }
+
   test("ledger keyword tests read the mask: RAISERROR and MERGE in literals are data") {
     val log = mapping("INSERT INTO audit_log (msg) VALUES ('RAISERROR skipped')")
     assert(log.status === "converted")
@@ -64,12 +78,16 @@ class BlockRouteSpec extends AnyFunSuite {
   }
 
   /** Every Execute SQL text of the packaged and reference `.dtsx`. */
-  private def packagedSql: List[String] =
+  private def packagedSql: List[String] = packagedTasks.map(_._2)
+
+  /** Every Execute SQL task of the packaged and reference `.dtsx`, as
+    * (file/task, text). */
+  private def packagedTasks: List[(String, String)] =
     List("main", "test").flatMap { root =>
       new java.io.File(s"src/$root/resources/dtsx").listFiles()
         .filter(_.getName.endsWith(".dtsx")).toList.flatMap { f =>
-          def walk(t: Task): List[String] = t match {
-            case s: ExecuteSqlTask => List(s.sqlStatement)
+          def walk(t: Task): List[(String, String)] = t match {
+            case s: ExecuteSqlTask => List((s"${f.getName}/${s.name}", s.sqlStatement))
             case c: ContainerTask => c.children.flatMap(walk)
             case _ => Nil
           }
@@ -100,5 +118,19 @@ class BlockRouteSpec extends AnyFunSuite {
       mapping(sql).status == "converted" &&
         ScriptedSqlExecutor.route(sql).isInstanceOf[ScriptedSqlExecutor.Route.Decline])
     assert(overclaims.isEmpty, overclaims.mkString("\n"))
+  }
+
+  test("a packaged task routes alike raw and as the package runner executes it") {
+    // the package runner rewrites `[schema].[table]` to the bare name
+    // before the executor sees a task; the ledger reads the raw text
+    val tasks = packagedTasks
+    assert(tasks.size >= 90, s"packaged Execute SQL tasks not found: ${tasks.size}")
+    def kind(sql: String) = ScriptedSqlExecutor.route(sql).getClass.getSimpleName
+    val split = tasks.flatMap { case (name, sql) =>
+      val run = QueriesRelational.BracketedTable.replaceAllIn(sql, m => m.group(1))
+      val (a, b) = (kind(sql), kind(run))
+      if (a == b) None else Some(s"$name: $a raw, $b as run")
+    }
+    assert(split.isEmpty, split.mkString("\n"))
   }
 }

@@ -2016,6 +2016,12 @@ class PipelineSpec extends AnyFunSuite {
         bareName = identity,
         commit = (k, v) => written(k) = v)
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("cur", None, "conn", sql)
+    // the statements the route's cursor reader rewrites a text to
+    def cursorStmts(sql: String): Option[List[String]] =
+      graft.patterns.ScriptedSqlExecutor.route(sql) match {
+        case graft.patterns.ScriptedSqlExecutor.Route.Cursor(ss) => Some(ss)
+        case _ => None
+      }
     // the canonical frame, assembled so every case differs only where
     // the case is about
     def loop(decls: String, sel: String, into: String, body: String,
@@ -2039,7 +2045,7 @@ class PipelineSpec extends AnyFunSuite {
     val updSql = loop("@i INT, @nv FLOAT",
       "SELECT id, v * 2 FROM csrc WHERE v < 50 ORDER BY id", "@i, @nv",
       "UPDATE ctgt SET v = @nv, flag = 1 WHERE id = @i")
-    val staged = graft.patterns.CursorLoopSqlCompiler.rewriteToScript(updSql)
+    val staged = cursorStmts(updSql)
       .getOrElse(fail("canonical UPDATE cursor did not rewrite"))
     assert(staged.length === 2)
     assert(!staged.head.toUpperCase.contains("ORDER BY"))
@@ -2073,8 +2079,7 @@ class PipelineSpec extends AnyFunSuite {
       "SELECT id, v FROM csrc WHERE v < 50", "@i, @nv",
       "UPDATE ctgt SET flag = 1 WHERE id = @i; " +
         "INSERT INTO clog (id, v) VALUES (@i, @nv)")
-    val multiStaged = graft.patterns.CursorLoopSqlCompiler
-      .rewriteToScript(multiSql)
+    val multiStaged = cursorStmts(multiSql)
       .getOrElse(fail("multi-statement cursor did not rewrite"))
     assert(multiStaged.length === 3)
     val w3b = fresh()
@@ -2114,7 +2119,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(wp3("csrc").select("id").as[Long].collect().toList === List(1L))
     // positioned UPDATE + audit INSERT compose under the
     // distinct-target rule (the INSERT rides the staged scan)
-    val posStaged = graft.patterns.CursorLoopSqlCompiler.rewriteToScript(
+    val posStaged = cursorStmts(
       loop("@i INT, @nv FLOAT",
         "SELECT id, v FROM csrc WHERE v < 50", "@i, @nv",
         "UPDATE csrc SET id = @i WHERE CURRENT OF c; " +
@@ -2125,7 +2130,7 @@ class PipelineSpec extends AnyFunSuite {
     // r15: a PURELY positioned body emits NO staged scan — its
     // one-shot statements never read #graft_cursor_rows, and an
     // unused source scan at 100 TB is the entire cost of the task
-    val posOnly = graft.patterns.CursorLoopSqlCompiler.rewriteToScript(
+    val posOnly = cursorStmts(
       loop("@i INT", "SELECT id FROM csrc WHERE v > 30", "@i",
         "DELETE FROM csrc WHERE CURRENT OF c"))
       .getOrElse(fail("positioned-only body did not rewrite"))
@@ -2256,10 +2261,28 @@ class PipelineSpec extends AnyFunSuite {
     // nothing committed by the declined scripts
     assert(w5("ctgt").count() === 3L)
     // a TOP cursor keeps its ORDER BY (row-selecting, not cosmetic)
-    val topStaged = graft.patterns.CursorLoopSqlCompiler.rewriteToScript(
+    val topStaged = cursorStmts(
       loop("@i INT", "SELECT TOP 2 id FROM csrc ORDER BY v DESC", "@i",
         "DELETE FROM ctgt WHERE id = @i"))
     assert(topStaged.forall(_.head.toUpperCase.contains("ORDER BY")))
+    // a `;`-less frame parses as its statements: the block tree ends a
+    // statement where T-SQL starts the next cursor verb, and an
+    // OFFSET … FETCH NEXT n ROWS clause stays inside its SELECT
+    val bare = "DECLARE @i INT\nDECLARE c CURSOR FOR SELECT id FROM csrc\n" +
+      "OPEN c\nFETCH NEXT FROM c INTO @i\nWHILE @@FETCH_STATUS = 0\nBEGIN\n" +
+      "  DELETE FROM ctgt WHERE id = @i\n  FETCH NEXT FROM c INTO @i\nEND\n" +
+      "CLOSE c\nDEALLOCATE c"
+    val bareDelete =
+      "DELETE __t FROM ctgt __t INNER JOIN #graft_cursor_rows __s ON id = __s.__gc0"
+    assert(cursorStmts(bare) === Some(List(
+      "SELECT id AS __gc0 INTO #graft_cursor_rows FROM csrc", bareDelete)))
+    val offset = "SELECT id FROM csrc ORDER BY id OFFSET 1 ROWS FETCH NEXT 1 ROWS ONLY"
+    assert(cursorStmts(bare.replace("SELECT id FROM csrc", offset)) ===
+      Some(List(offset.replace("id FROM", "id AS __gc0 INTO #graft_cursor_rows FROM"),
+        bareDelete)))
+    val wb = fresh()
+    mkExec(wb)(task(bare)).getOrElse(fail("`;`-less cursor did not compile"))
+    assert(wb("ctgt").count() === 0L)
     // the mapping ledger reclassifies the executed shape
     val conv = graft.parser.MigrationMapping.mapTask(
       graft.ir.Ir.ExecuteSqlTask("t", None, "conn", updSql), Nil)
@@ -2282,6 +2305,12 @@ class PipelineSpec extends AnyFunSuite {
     def task(sql: String) = graft.ir.Ir.ExecuteSqlTask("bp", None, "conn", sql)
     def loop(body: String): String =
       s"WHILE 1 = 1 BEGIN $body; IF @@ROWCOUNT = 0 BREAK; END"
+    // the statement the route's batched-purge reader rewrites a text to
+    def batched(sql: String): Option[String] =
+      graft.patterns.ScriptedSqlExecutor.route(sql) match {
+        case graft.patterns.ScriptedSqlExecutor.Route.Batched(List(s)) => Some(s)
+        case _ => None
+      }
     def fresh() = {
       val w = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame](
         "bpt" -> Seq((1L, "O", 10.0, 0), (2L, "F", 200.0, 0),
@@ -2304,26 +2333,29 @@ class PipelineSpec extends AnyFunSuite {
       === List(1, 0, 1, 0))
     // the falsifying conjunct can also be <> or IS NULL — string
     // literal values compare on the RAW text (masking is located-only)
-    assert(graft.patterns.BatchedDmlLoopSqlCompiler.rewriteToStatement(loop(
-      "UPDATE TOP (5) bpt SET flg = 1 WHERE flg <> 1")).isDefined)
-    assert(graft.patterns.BatchedDmlLoopSqlCompiler.rewriteToStatement(loop(
-      "UPDATE TOP (5) bpt SET st = 'X' WHERE st <> 'X'")).isDefined)
+    assert(batched(loop(
+      "UPDATE TOP (5) bpt SET flg = 1 WHERE flg <> 1")) ===
+      Some("UPDATE bpt SET flg = 1 WHERE flg <> 1"))
+    assert(batched(loop(
+      "UPDATE TOP (5) bpt SET st = 'X' WHERE st <> 'X'")) ===
+      Some("UPDATE bpt SET st = 'X' WHERE st <> 'X'"))
     // same-LENGTH different strings mask identically — the raw-text
     // comparison must still see them as different (no false proof)
-    assert(graft.patterns.BatchedDmlLoopSqlCompiler.rewriteToStatement(loop(
+    assert(batched(loop(
       "UPDATE TOP (5) bpt SET st = 'X' WHERE st <> 'Y'")).isEmpty)
     // numeric literals compare as VALUES, not text: 1.0 = 1 stays true
     // in T-SQL, so `SET v = 1.0 WHERE v = 1` never terminates — the
     // textual difference must not count as a falsification proof
-    assert(graft.patterns.BatchedDmlLoopSqlCompiler.rewriteToStatement(loop(
+    assert(batched(loop(
       "UPDATE TOP (5) bpt SET v = 1.0 WHERE v = 1")).isEmpty)
-    assert(graft.patterns.BatchedDmlLoopSqlCompiler.rewriteToStatement(loop(
+    assert(batched(loop(
       "UPDATE TOP (5) bpt SET flg = 01 WHERE flg = 1")).isEmpty)
     // ...and value-equality across spellings DOES prove the <> form
-    assert(graft.patterns.BatchedDmlLoopSqlCompiler.rewriteToStatement(loop(
-      "UPDATE TOP (5) bpt SET v = 1.0 WHERE v <> 1")).isDefined)
+    assert(batched(loop(
+      "UPDATE TOP (5) bpt SET v = 1.0 WHERE v <> 1")) ===
+      Some("UPDATE bpt SET v = 1.0 WHERE v <> 1"))
     // cross-shape comparands (number vs string) prove nothing either way
-    assert(graft.patterns.BatchedDmlLoopSqlCompiler.rewriteToStatement(loop(
+    assert(batched(loop(
       "UPDATE TOP (5) bpt SET st = '1' WHERE st = 1")).isEmpty)
     // declines, never a guess
     for (sql <- Seq(
@@ -2355,8 +2387,9 @@ class PipelineSpec extends AnyFunSuite {
       // non-zero BREAK comparison
       loop("DELETE TOP (2) FROM bpt WHERE st = 'F'")
         .replace("@@ROWCOUNT = 0", "@@ROWCOUNT < 5")))
-      assert(graft.patterns.BatchedDmlLoopSqlCompiler
-        .rewriteToStatement(sql).isEmpty, s"should decline: $sql")
+      assert(graft.patterns.ScriptedSqlExecutor.route(sql)
+        .isInstanceOf[graft.patterns.ScriptedSqlExecutor.Route.Decline],
+        s"should decline: $sql")
     // the mapping ledger reclassifies the executed shape
     val conv = graft.parser.MigrationMapping.mapTask(
       graft.ir.Ir.ExecuteSqlTask("t", None, "conn",

@@ -98,7 +98,11 @@ class SqlLexSpec extends AnyFunSuite {
   }
 
   test("cursor gates read [bracketed] table and column names") {
-    import graft.patterns.CursorLoopSqlCompiler.rewriteToScript
+    def cursorStmts(sql: String): Option[List[String]] =
+      ScriptedSqlExecutor.route(sql) match {
+        case ScriptedSqlExecutor.Route.Cursor(ss) => Some(ss)
+        case _ => None
+      }
     def loop(opts: String, sel: String, into: String, body: String) =
       s"DECLARE @k INT, @p FLOAT; DECLARE c CURSOR $opts FOR $sel; OPEN c; " +
         s"FETCH NEXT FROM c INTO $into; WHILE @@FETCH_STATUS = 0 BEGIN " +
@@ -107,18 +111,33 @@ class SqlLexSpec extends AnyFunSuite {
     // the new rows: decline, however the FROM brackets the name
     for (src <- Seq("[main].[ord]", "main.[ord]", "[ord]")) {
       val sel = s"SELECT id FROM $src"
-      assert(rewriteToScript(loop("", sel, "@k",
+      assert(cursorStmts(loop("", sel, "@k",
         "INSERT INTO main.ord (id) VALUES (@k)")).isEmpty, s"self-append on $src")
-      assert(rewriteToScript(loop("", sel, "@k",
+      assert(cursorStmts(loop("", sel, "@k",
         "INSERT INTO main.log (id) VALUES (@k)")).nonEmpty, s"append from $src")
     }
     // a positioned UPDATE of a column the cursor's WHERE reads as
     // [price] can re-position the row mid-scan unless KEYSET freezes it
     val sel = "SELECT id, price FROM [main].[ord] WHERE [price] > 10"
     def upd(col: String) = s"UPDATE main.ord SET $col = @p * 2 WHERE CURRENT OF c"
-    assert(rewriteToScript(loop("", sel, "@k, @p", upd("price"))).isEmpty)
-    assert(rewriteToScript(loop("KEYSET", sel, "@k, @p", upd("price"))).nonEmpty)
-    assert(rewriteToScript(loop("", sel, "@k, @p", upd("qty"))).nonEmpty)
+    assert(cursorStmts(loop("", sel, "@k, @p", upd("price"))).isEmpty)
+    assert(cursorStmts(loop("KEYSET", sel, "@k, @p", upd("price"))).nonEmpty)
+    assert(cursorStmts(loop("", sel, "@k, @p", upd("qty"))).nonEmpty)
+    // a [bracketed] body TARGET is a name, not a clause: the cursor
+    // gate checks brackets in SET / WHERE / VALUES bodies only, as the
+    // UPDATE and DELETE compilers do, so the raw package text and the
+    // bracket-stripped text the package runner executes route alike
+    for (tgt <- Seq("[main].[log]", "main.log")) {
+      val ins = loop("", "SELECT id FROM [main].[ord]", "@k",
+        s"INSERT INTO $tgt (id) VALUES (@k)")
+      assert(cursorStmts(ins) === Some(List(
+        "SELECT id AS __gc0 INTO #graft_cursor_rows FROM [main].[ord]",
+        s"INSERT INTO $tgt SELECT __s.__gc0 AS id FROM #graft_cursor_rows __s")), tgt)
+    }
+    assert(cursorStmts(loop("", "SELECT id FROM [main].[ord]", "@k",
+      "INSERT INTO [main].[ord] (id) VALUES (@k)")).isEmpty, "bracketed self-append")
+    assert(cursorStmts(loop("", "SELECT id FROM main.ord", "@k",
+      "DELETE FROM [main].[log] WHERE [id] = @k")).isEmpty, "bracketed WHERE body")
   }
 
   test("only the lexer keeps quote state or counts paren depth in the T-SQL layer") {
@@ -165,14 +184,9 @@ class SqlLexSpec extends AnyFunSuite {
         "\"(?i)(?<![\\\\w])(begin|case|end)(?![\\\\w])\"",
         "\"(?is)\\\\bend\\\\s*;?\\\\s*$\""))
       assert(blockKeywordRegex.findFirstIn(line).isDefined, line)
-    // the cursor and batched-DML loops still match their whole WHILE …
-    // BEGIN … END shapes; they move onto the tree with a cursor /
-    // loop-body node
-    val allowed = Set("SqlBlocks.scala",
-      "CursorLoopSqlCompiler.scala", "BatchedDmlLoopSqlCompiler.scala")
     val sources =
       new java.io.File("src/main/scala/graft/patterns").listFiles().toSeq
-        .filter(f => f.getName.endsWith(".scala") && !allowed(f.getName)) ++
+        .filter(f => f.getName.endsWith(".scala") && f.getName != "SqlBlocks.scala") ++
         Seq("parser/MigrationMapping.scala", "pipeline/PackageVariables.scala",
           "pipeline/PackageRunner.scala")
           .map(f => new java.io.File(s"src/main/scala/graft/$f"))

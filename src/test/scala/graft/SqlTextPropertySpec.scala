@@ -372,7 +372,9 @@ class SqlTextPropertySpec extends AnyFunSuite {
     val blockPiece: Gen[String] = Gen.oneOf("BEGIN", "END", "IF", "ELSE",
       "WHILE", "BEGIN TRY", "END TRY", "BEGIN CATCH", "END CATCH", "BEGIN TRAN",
       "COMMIT", "ROLLBACK", "SAVE TRAN sp", "CASE", "RETURN", "RAISERROR(",
-      "@n > 0", "EXISTS (", "UPDATE t SET a = 1", "SET @n = 1")
+      "@n > 0", "EXISTS (", "UPDATE t SET a = 1", "SET @n = 1", "BREAK",
+      "DECLARE c CURSOR FOR", "OPEN c", "FETCH NEXT FROM c INTO @n",
+      "OFFSET 1 ROWS FETCH NEXT", "CLOSE c", "DEALLOCATE c")
     val blockSoup: Gen[String] = for {
       pieces <- Gen.listOfN(24, Gen.frequency(3 -> genPiece, 1 -> genLexPiece,
         3 -> blockPiece))
